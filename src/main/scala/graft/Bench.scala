@@ -2,7 +2,7 @@ package graft
 
 import graft.core.{Keys, KvIndexBuilder, NumericBins, Task}
 import graft.functions.Fns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): one JSON line with per-query
@@ -37,10 +37,6 @@ object Bench {
     val n = f
     ((System.nanoTime() - t0) / 1e9, n)
   }
-
-  /** min of `iters` timed runs (reference protocol: repeated runs). */
-  private def bestOf(iters: Int)(f: => Long): Double =
-    (1 to iters).map(_ => time(f)._1).min
 
   /** Per-query protocol: best-of-`iters` for sub-second rows, but any
     * row whose best run is ≥ 1 s gets a third shot and reports the
@@ -88,7 +84,6 @@ object Bench {
     val stageIters =
       sys.env.get("SPARK_GRAFT_BENCH_STAGE_ITERS").map(_.toInt).getOrElse(5)
     val spark = Sessions.local("graft-bench", defaultCpus = "32", dataDir = Some(sfDir))
-    import spark.implicits._
 
     // ---- stage decomposition on lineitem ----
     val li = Tables.lineitem(spark, sfDir)

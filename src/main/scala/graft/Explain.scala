@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for selected queries so
   * scan pushdown (`PushedFilters`/`ReadSchema`), join strategies
   * (BroadcastHashJoin vs SortMergeJoin) and WholeStageCodegen spans can

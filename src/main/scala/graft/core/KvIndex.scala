@@ -43,9 +43,11 @@ object Aggregates {
   * :1004-1099; SURVEY §2.9).
   *
   * Spark-first design: instead of the reference's row-at-a-time
-  * dynamic-SQL `prefix_search`, every prefix length L gets a small
-  * precomputed aggregate table at build time. The probe then takes one
-  * of two bitwise-identical forms ([[KvProbeSpec]] pins them):
+  * dynamic-SQL `prefix_search`, every field-wise prefix of every key is
+  * aggregated ONCE at build time into a single prefix relation
+  * `(len, prefix, value)`, next to the exact `kv` relation. The probe
+  * then takes one of two bitwise-identical forms ([[KvProbeSpec]] pins
+  * them):
   *
   *  - **compiled** (default, index ≤ [[KvModel.MaxCompiledEntries]]
   *    entries): the collected maps embed in the plan as a reference
@@ -63,15 +65,11 @@ object Aggregates {
 final case class KvModel(
     task: Task,
     keyLen: Int,
-    kv: DataFrame,                      // (key string, value double)
-    prefixes: Seq[(Int, DataFrame)],    // len -> (prefix string, value double), len = keyLen-1 .. 1
-    globalValue: Double,                // trie-root fallback
-    maxCompiledEntries: Long = KvModel.MaxCompiledEntries,
-    // |kv| when the builder already materialized it (fromKv's cache
-    // count; Persist.load's count) — lets the compiled-vs-join decision
-    // skip its own count jobs (r16: the size probe was 3 extra driver
-    // jobs per model build, paid by every model-building query row)
-    kvCountHint: Option[Long] = None
+    kv: DataFrame,          // (key string, value double), cached
+    prefixRel: DataFrame,   // (len int, prefix string, value double), cached; len = 1 .. keyLen-1
+    globalValue: Double,    // trie-root fallback
+    kvCount: Long,          // |kv|, counted once when the relation is cached
+    prefixCount: Long       // |prefixRel|, likewise
 ) {
   /** The index entries as a typed Dataset (SURVEY §1.2 fixed shape). */
   def entries: org.apache.spark.sql.Dataset[Types.KVEntry] = {
@@ -79,40 +77,32 @@ final case class KvModel(
     kv.select(col("key"), col("value")).as[Types.KVEntry]
   }
 
-  /** The embedded-cascade kernel when the index fits the size cap —
-    * collected ONCE per model (the tables are cached + key-space-
-    * bounded), then reused by every probe this model serves.
-    *
-    * r16 (guide §1.2/§5 — fewer driver jobs per model build): the old
-    * size probe COUNTED kv + every prefix table (up to keyLen driver
-    * jobs) before a compiled model then COLLECTED the same tables
-    * again. Now the gate is the kv count alone — known for free when
-    * the builder materialized the cache ([[kvCountHint]]) — and the
-    * collect itself measures the total: |prefix_l| ≤ |kv| for every l,
-    * so a transient over-collect is bounded by keyLen·cap entries
-    * (a few MB) even when the total lands above the cap and the model
-    * falls back to the join cascade. The compiled/join DECISION is
-    * unchanged (total entries ≤ cap) and the two paths are bitwise
-    * identical anyway (KvProbeSpec), so no declared result can move. */
-  @transient private lazy val compiledRef: Option[graft.plans.KvScorerRef] = {
-    val kvN = kvCountHint.getOrElse(kv.count())
-    if (kvN > maxCompiledEntries) None
-    else {
-      val local = toLocalScorer
-      val entries = local.kv.size.toLong +
-        local.prefixes.iterator.map(_._2.size.toLong).sum
-      if (entries <= maxCompiledEntries) Some(new graft.plans.KvScorerRef(local))
-      else None
-    }
+  /** Prefix lengths in cascade order, longest first. */
+  private def levels: Seq[Int] = keyLen - 1 to 1 by -1
+
+  /** Per-level views of [[prefixRel]], longest first: len ->
+    * (prefix string, value double). Built once per model and reused by
+    * every [[joinProbe]]: five fresh views per call re-analyzed the
+    * relation's lineage and cost a 6-field cascade serve ~0.1 s
+    * (4 local cores). */
+  @transient lazy val prefixes: Seq[(Int, DataFrame)] = levels.map { l =>
+    l -> prefixRel.where(col("len") === l).select(col("prefix"), col("value"))
   }
+
+  /** The embedded-cascade kernel when the index fits the size cap —
+    * collected ONCE per model, then reused by every probe it serves. */
+  @transient private lazy val compiledRef: Option[graft.plans.KvScorerRef] =
+    if (kvCount + prefixCount <= KvModel.MaxCompiledEntries)
+      Some(new graft.plans.KvScorerRef(toLocalScorer))
+    else None
 
   /** Append `predName` to `input` by probing the index with `key`.
     * Exact hit wins; else the longest non-empty prefix aggregate; else
     * the global aggregate (trie-root DFS, inference_trie.py:91-98).
     * Compiled single-projection form when the index fits
-    * [[maxCompiledEntries]]; broadcast-join cascade otherwise — same
-    * values bit for bit either way (a NULL key resolves to the global
-    * aggregate on both paths).
+    * [[KvModel.MaxCompiledEntries]]; broadcast-join cascade otherwise —
+    * same values bit for bit either way (a NULL key resolves to the
+    * global aggregate on both paths).
     */
   def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
     compiledRef match {
@@ -142,35 +132,18 @@ final case class KvModel(
       .drop("__key" +: "__v_exact" +: prefixes.map { case (l, _) => s"__v_$l" }: _*)
   }
 
-  /** Collect the (bounded-by-key-space) kv + prefix tables ONCE into
-    * plain maps for driver-local point lookups — the reference's
+  /** Collect the (bounded-by-key-space) kv and prefix relations ONCE
+    * into plain maps for driver-local point lookups — the reference's
     * standalone-trie single-row use case (transpiler.py:3117-3215;
-    * SURVEY §1.1).
-    *
-    * r17 (guide §1.2/§2.6 — overlap independent jobs): the kv and each
-    * prefix-table collect are INDEPENDENT actions over tiny cached
-    * frames, but they used to run sequentially — keyLen driver jobs
-    * back to back, each paying full job latency for ~100 rows; the
-    * x_index_lifecycle phase profile measured the sequential collects
-    * at 1.3 s warm, the row's single biggest phase. Submitting them
-    * from a thread pool overlaps the latencies (Spark's scheduler runs
-    * concurrent jobs fine; job-description props are thread-local).
-    * Each map's CONTENT is untouched — same Spark-computed tables,
-    * same rows — so compiled ≡ join parity (KvProbeSpec) is unchanged. */
+    * SURVEY §1.1). Two collects on the caller's thread, so both jobs
+    * run under the caller's job group and description. */
   def toLocalScorer: LocalScorer = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val kvF = Future(kv.select(col("key"), col("value"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
-    val pfxFs = prefixes.map { case (l, t) =>
-      Future(l -> t.select(col("prefix"), col("value"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
-    }
-    val kvMap = Await.result(kvF, Duration.Inf)
-    val pfxMaps = pfxFs.map(Await.result(_, Duration.Inf))
-    LocalScorer(kvMap, pfxMaps, globalValue)
+    val kvMap = kv.select(col("key"), col("value")).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val byLen = prefixRel.select(col("len"), col("prefix"), col("value")).collect()
+      .groupBy(_.getInt(0))
+      .map { case (l, rows) => l -> rows.map(r => r.getString(1) -> r.getDouble(2)).toMap }
+    LocalScorer(kvMap, levels.map(l => l -> byLen.getOrElse(l, Map.empty[String, Double])), globalValue)
   }
 }
 
@@ -245,7 +218,7 @@ final case class KvIndexState(task: Task, keyLen: Int, stats: DataFrame) {
     copy(stats = KvIndexState.merge(
       stats.unionByName(KvIndexState.partial(keyed, task)), task))
 
-  /** Finalize into a servable [[KvModel]] (prefix tables + global
+  /** Finalize into a servable [[KvModel]] (prefix relation + global
     * fallback derive from the kv exactly like a fresh build). */
   def toModel(balanceRatio: Option[Double] = None): KvModel = {
     val kv = task match {
@@ -304,7 +277,7 @@ object KvIndexBuilder {
     *                 (`min(value*ratio, 1)`, transpiler.py:3080-3081).
     *
     * Aggregation per key: mean for regression/binary, mode for
-    * multi-class (transpiler.py:986-996). Prefix tables aggregate over
+    * multi-class (transpiler.py:986-996). Prefix aggregates run over
     * DISTINCT KEYS (one row per kv entry), not raw rows — matching the
     * trie's DFS over leaves (inference_trie.py:73-98).
     */
@@ -338,8 +311,10 @@ object KvIndexBuilder {
   }
 
   /** Finalize a (key, value) kv relation into a servable model:
-    * balance reweight, then the prefix fallback tables and global
-    * aggregate — shared by the fresh build and [[KvIndexState.toModel]]. */
+    * balance reweight, then the prefix relation and global aggregate —
+    * shared by the fresh build and [[KvIndexState.toModel]]. The prefix
+    * relation is ONE aggregate: each kv row explodes into its keyLen-1
+    * field-wise prefixes, grouped by (len, prefix). */
   private[core] def fromKv(
       kvRaw: DataFrame,
       keyLen: Int,
@@ -353,16 +328,18 @@ object KvIndexBuilder {
     val kvCached = kv.cache()
     val kvN = kvCached.count() // materialize once; every probe broadcasts from here
 
-    val prefixes = (keyLen - 1 to 1 by -1).map { l =>
-      val pfx = kvCached.select(Keys.prefix(col("key"), l).as("prefix"), col("value"))
-      val tbl = task match {
-        case Task.MultiClass =>
-          Aggregates.mode(pfx, Seq("prefix"), "value")
-        case _ =>
-          pfx.groupBy("prefix").agg(avg("value").as("value"))
-      }
-      l -> tbl.cache()
-    }
+    val pfx =
+      if (keyLen <= 1) // no prefix levels: an empty relation of the same shape
+        kvCached.select(lit(0).as("len"), col("key").as("prefix"), col("value")).where(lit(false))
+      else kvCached
+        .select(explode(array((1 until keyLen).map(l =>
+          struct(lit(l).as("len"), Keys.prefix(col("key"), l).as("prefix"))): _*)).as("p"), col("value"))
+        .select(col("p.len").as("len"), col("p.prefix").as("prefix"), col("value"))
+    val prefixRel = (task match {
+      case Task.MultiClass => Aggregates.mode(pfx, Seq("len", "prefix"), "value")
+      case _ => pfx.groupBy("len", "prefix").agg(avg("value").as("value"))
+    }).cache()
+    val prefixN = prefixRel.count()
 
     val globalValue = task match {
       case Task.MultiClass =>
@@ -371,7 +348,6 @@ object KvIndexBuilder {
       case _ =>
         kvCached.agg(avg("value")).head().getDouble(0)
     }
-    KvModel(task, keyLen, kvCached, prefixes, globalValue,
-      kvCountHint = Some(kvN))
+    KvModel(task, keyLen, kvCached, prefixRel, globalValue, kvN, prefixN)
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fitted-artifact persistence (S5 made real — the reference
@@ -8,16 +8,21 @@ import org.apache.spark.sql.functions._
   * src/transpiler.py:3188-3194, :3266-3273; here the artifact IS a set
   * of relations, so it saves as parquet + a one-row meta relation).
   *
-  * Layout under `dir`:
-  *   meta/        one row: task, key_len, global_value, iv, selected,
-  *                features, categorical, target, max_bins, model
-  *   bins/        one row per fitted feature: (feature, kind,
-  *                splits array<double>, cat_keys, cat_vals) — parquet
-  *                doubles round-trip EXACTLY (no decimal detour), so
-  *                the reloaded bin splits serve the identical bits the
-  *                in-memory pipeline fitted.
-  *   kv/          the (key, value) index relation
-  *   prefix_<l>/  the per-length prefix fallback aggregates
+  * Layout under `dir` — four relations for any key length:
+  *   meta/      one row: layout ([[Persist.Layout]]), task, key_len,
+  *              global_value, iv, selected, features, categorical,
+  *              target, max_bins, model and the other Config fields
+  *   bins/      one row per fitted feature: (feature, kind,
+  *              splits array<double>, cat_keys, cat_vals) — parquet
+  *              doubles round-trip EXACTLY (no decimal detour), so
+  *              the reloaded bin splits serve the identical bits the
+  *              in-memory pipeline fitted.
+  *   kv/        the exact (key, value) index relation
+  *   prefixes/  the (len, prefix, value) prefix fallback relation
+  *
+  * [[load]] rejects any other layout (a missing or different `layout`
+  * value) before it reads an index relation, so an old directory is
+  * never misread.
   *
   * A reloaded [[graft.InferDbPipeline.Fitted]] probes bit-identically
   * to the in-memory one by construction: every constant the serve plan
@@ -26,6 +31,9 @@ import org.apache.spark.sql.functions._
   * writes; the load is metadata-only until the first probe broadcasts.
   */
 object Persist {
+  /** The layout this version writes and the only one it loads. */
+  val Layout = "kv+prefixes/2"
+
   private def taskName(t: Task): String = t match {
     case Task.Regression => "regression"
     case Task.Classification => "classification"
@@ -44,10 +52,8 @@ object Persist {
     // index relations: tiny (key-space-bounded) — one file each
     f.kv.kv.select(col("key"), col("value"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/kv")
-    f.kv.prefixes.foreach { case (l, t) =>
-      t.select(col("prefix"), col("value"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/prefix_$l")
-    }
+    f.kv.prefixRel.select(col("len"), col("prefix"), col("value"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/prefixes")
     f.bins.toSeq.sortBy(_._1).map {
       case (feat, NumericBins(splits)) =>
         (feat, "numeric", splits.toSeq, Seq.empty[String], Seq.empty[Int])
@@ -61,12 +67,12 @@ object Persist {
     // different model than the one that was saved if reused for a
     // refresh, even though serving alone wouldn't notice.
     val c = f.config
-    Seq((taskName(c.task), f.kv.keyLen, f.kv.globalValue, f.iv,
+    Seq((Layout, taskName(c.task), f.kv.keyLen, f.kv.globalValue, f.iv,
         f.selected, c.features, c.categorical.toSeq.sorted,
         c.target, c.maxBins, c.model,
         c.tolerance, c.maxFeatures, c.maxCandidates, c.balanceRatio,
         c.mlpHidden, c.maxOneHot, c.populatePaths))
-      .toDF("task", "key_len", "global_value", "iv", "selected",
+      .toDF("layout", "task", "key_len", "global_value", "iv", "selected",
         "features", "categorical", "target", "max_bins", "model",
         "tolerance", "max_features", "max_candidates", "balance_ratio",
         "mlp_hidden", "max_one_hot", "populate_paths")
@@ -113,6 +119,10 @@ object Persist {
 
   def load(spark: SparkSession, dir: String): graft.InferDbPipeline.Fitted = {
     val meta = spark.read.parquet(s"$dir/meta").head()
+    val layout =
+      if (meta.schema.fieldNames.contains("layout")) meta.getAs[String]("layout") else "<none>"
+    require(layout == Layout,
+      s"$dir: saved index layout '$layout' is not the supported layout '$Layout'; re-save it")
     def strs(r: Row, field: String): Seq[String] =
       r.getAs[scala.collection.Seq[String]](field).toSeq
     val task = taskOf(meta.getAs[String]("task"))
@@ -132,12 +142,7 @@ object Persist {
     // cache + materialize like KvIndexBuilder: every probe broadcasts
     // from these, so they must not re-read parquet per probe
     val kv = spark.read.parquet(s"$dir/kv").cache()
-    val kvN = kv.count()
-    val prefixes = (keyLen - 1 to 1 by -1).map { l =>
-      val t = spark.read.parquet(s"$dir/prefix_$l").cache()
-      t.count()
-      l -> t
-    }
+    val prefixRel = spark.read.parquet(s"$dir/prefixes").cache()
     val config = graft.InferDbPipeline.Config(
       features = strs(meta, "features"),
       categorical = strs(meta, "categorical").toSet,
@@ -154,7 +159,7 @@ object Persist {
       populatePaths = meta.getAs[Boolean]("populate_paths"))
     graft.InferDbPipeline.Fitted(
       config, bins, strs(meta, "selected"), meta.getAs[Double]("iv"),
-      KvModel(task, keyLen, kv, prefixes, meta.getAs[Double]("global_value"),
-        kvCountHint = Some(kvN)))
+      KvModel(task, keyLen, kv, prefixRel, meta.getAs[Double]("global_value"),
+        kv.count(), prefixRel.count()))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Codegen'd supervised-bin lookup: `bin(v)` = index of the first split
   * strictly greater than `v`; `v` beyond the last split, NULL, or NaN

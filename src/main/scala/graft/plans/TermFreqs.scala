@@ -50,8 +50,7 @@ object TermFreqKernel {
         var j = 0
         while (j < len) { bytes(j) = s.getByte(start + j); j += 1 }
         val tok = UTF8String.fromBytes(bytes)
-        val prev = counts.get(tok)
-        counts.put(tok, if (prev == null) 1L else prev + 1L)
+        counts.put(tok, counts.getOrDefault(tok, 0L) + 1L)
         start = i + 1
       }
       i += 1
@@ -78,8 +77,7 @@ object TermFreqKernel {
         "array_freqs: null element (the explode+groupBy form counts a " +
           "NULL group; this kernel refuses rather than diverge)")
       val tok = arr.getUTF8String(i).clone()
-      val prev = counts.get(tok)
-      counts.put(tok, if (prev == null) 1L else prev + 1L)
+      counts.put(tok, counts.getOrDefault(tok, 0L) + 1L)
       i += 1
     }
     toEntries(counts)

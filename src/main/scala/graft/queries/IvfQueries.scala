@@ -637,7 +637,6 @@ object IvfQueries {
     // the recorded codebooks (r9); per-query LUTs + integer codes keep
     // it partition-invariant.
     "x_ann_pq" -> ((s, d) => pqResult.getOrElseUpdate((s, d), {
-      val tv = graft.plans.TextVectorExprs
       val books = pqCodebooks(s, d) // [m][k][j]
       val slN = pqShortlist(cachedEmb(s, d).count())
       pqSlot.put(d, (books, slN))
@@ -704,7 +703,6 @@ object IvfQueries {
     // Oracle re-derives both operating points from the recorded
     // center + codebook literals (r9).
     "x_ann_ivf_pq" -> ((s, d) => ivfPqResult.getOrElseUpdate((s, d), {
-      val tv = graft.plans.TextVectorExprs
       val centers = fittedCenters(s, d)
       val books = pqCodebooks(s, d)
       val slN = pqShortlist(cachedEmb(s, d).count())

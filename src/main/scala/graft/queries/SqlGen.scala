@@ -265,14 +265,10 @@ object SqlGen {
       predName: String,
       maxEntries: Int = 4096,
       ctePrefix: String = ""): Option[(String, String)] = {
-    if (f.selected.isEmpty) return None
-    val kvRows = f.kv.kv.select("key", "value").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toSeq.sortBy(_._1)
-    if (kvRows.isEmpty || kvRows.length > maxEntries) return None
-    val pfxRows: Seq[(Int, Seq[(String, Double)])] = f.kv.prefixes.map { case (l, t) =>
-      l -> t.select("prefix", "value").collect()
-        .map(r => r.getString(0) -> r.getDouble(1)).toSeq.sortBy(_._1)
-    }
+    if (f.selected.isEmpty || f.kv.kvCount == 0 || f.kv.kvCount > maxEntries) return None
+    val scorer = f.kv.toLocalScorer
+    val kvRows = scorer.kv.toSeq.sortBy(_._1)
+    val pfxRows = scorer.prefixes.map { case (l, m) => l -> m.toSeq.sortBy(_._1) }
     def values(name: String, rows: Seq[(String, Double)]) =
       s"$name(k, v) AS (VALUES ${rows.map { case (k, v) =>
         s"(${slit(k)}, ${dlit(round6(v))})" }.mkString(", ")})"

@@ -12,7 +12,6 @@ class BinIndexSpec extends AnyFunSuite {
   test("BinIndex matches the when-chain on random values, edges, NaN, NULL") {
     val rnd = new scala.util.Random(7)
     val splits = (1 to 20).map(_ * 5.0).toArray // wide -> BinIndex path
-    val narrow = NumericBins(splits.take(5))    // when-chain path
     val wide   = NumericBins(splits)            // BinIndex path
 
     val values: Seq[Option[Double]] =

@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BpeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   private def ranksOf(merges: (String, String)*) =
     BpeEncode.rankMap(merges.toArray)

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental index maintenance: append(delta) must equal a
-  * from-scratch rebuild over base ∪ delta — kv entries, every prefix
-  * table, and the global fallback. For 0/1 predictions the sums are
-  * exact integers in double, so mean equality is BITWISE; multi-class
-  * mode merges integer counts, also exact.
+  * from-scratch rebuild over base ∪ delta — kv entries, the whole
+  * (len, prefix) relation, and the global fallback. For 0/1
+  * predictions the sums are exact integers in double, so mean equality
+  * is BITWISE; multi-class mode merges integer counts, also exact.
   */
 class KvIndexStateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -20,12 +20,13 @@ class KvIndexStateSpec extends AnyFunSuite {
     df.select(col(k), col(v)).collect()
       .map(r => r.getString(0) -> bits(r.getDouble(1))).toMap
 
+  private def prefixMap(m: graft.core.KvModel): Map[(Int, String), Long] =
+    m.prefixRel.select("len", "prefix", "value").collect()
+      .map(r => (r.getInt(0), r.getString(1)) -> bits(r.getDouble(2))).toMap
+
   private def assertSameModel(a: graft.core.KvModel, b: graft.core.KvModel): Unit = {
     assert(kvMap(a.kv, "key", "value") == kvMap(b.kv, "key", "value"))
-    assert(a.prefixes.map(_._1) == b.prefixes.map(_._1))
-    a.prefixes.zip(b.prefixes).foreach { case ((l, ta), (_, tb)) =>
-      assert(kvMap(ta, "prefix", "value") == kvMap(tb, "prefix", "value"), s"prefix len $l")
-    }
+    assert(prefixMap(a) == prefixMap(b))
     assert(bits(a.globalValue) == bits(b.globalValue))
   }
 

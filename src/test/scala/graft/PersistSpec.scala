@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{NumericBins, Task, TmpDirs}
+import graft.core.{KvModel, NumericBins, Persist, Task, TmpDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,9 +47,34 @@ class PersistSpec extends AnyFunSuite {
         case (NumericBins(a), NumericBins(b)) => a.sameElements(b)
         case (x, y) => x == y
       }})
-    val kvA = trained.kv.kv.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val kvB = reloaded.kv.kv.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(kvA == kvB)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def kvBits(m: KvModel) = m.kv.select("key", "value").collect()
+      .map(r => r.getString(0) -> bits(r.getDouble(1))).toMap
+    def prefixBits(m: KvModel) = m.prefixRel.select("len", "prefix", "value").collect()
+      .map(r => (r.getInt(0), r.getString(1)) -> bits(r.getDouble(2))).toMap
+    assert(kvBits(trained.kv) == kvBits(reloaded.kv))
+    assert(prefixBits(trained.kv).nonEmpty)
+    assert(prefixBits(trained.kv) == prefixBits(reloaded.kv))
+    assert(reloaded.kv.kvCount == trained.kv.kvCount &&
+      reloaded.kv.prefixCount == trained.kv.prefixCount)
+  }
+
+  test("a saved index is four relations; an older layout is rejected by name") {
+    val dir = TmpDirs.scratch("persist_spec_layout", sf)
+    trained.save(dir)
+    val rels = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(rels == Set("meta", "bins", "kv", "prefixes"))
+    // the per-length layout: meta without `layout`, kv/ and prefix_<l>/
+    val old = TmpDirs.scratch("persist_spec_old_layout", sf)
+    spark.read.parquet(s"$dir/meta").drop("layout").write.mode("overwrite").parquet(s"$old/meta")
+    spark.read.parquet(s"$dir/bins").write.mode("overwrite").parquet(s"$old/bins")
+    trained.kv.kv.write.mode("overwrite").parquet(s"$old/kv")
+    trained.kv.prefixes.foreach { case (l, t) =>
+      t.write.mode("overwrite").parquet(s"$old/prefix_$l")
+    }
+    val e = intercept[IllegalArgumentException](InferDbPipeline.load(spark, old))
+    assert(e.getMessage.contains("'<none>'") && e.getMessage.contains(s"'${Persist.Layout}'"),
+      e.getMessage)
   }
 
   test("reloaded index probes identically, including fallback paths") {

@@ -397,9 +397,8 @@ class PipelineSpec extends AnyFunSuite {
       assert(compiled.contains("kv_probe"), compiled.take(800))
       assert(!compiled.contains("Join") && !compiled.contains("Exchange"),
         s"compiled serve must be a pure projection:\n$compiled")
-      // join-cascade path (indexes above the embed cap), forced via the cap
-      val plan = fitted.kv.copy(maxCompiledEntries = 0L)
-        .probe(df, fitted.keyColumn, "p").queryExecution.executedPlan
+      // join-cascade path (indexes above the embed cap)
+      val plan = fitted.kv.joinProbe(df, fitted.keyColumn, "p").queryExecution.executedPlan
       val s = plan.toString
       // every index side must broadcast; a sort-merge or shuffled-hash
       // join here would shuffle the 100 TB probe side

@@ -9,7 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   test("CSV round-trip with explicit schema preserves rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
