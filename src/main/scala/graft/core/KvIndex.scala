@@ -57,7 +57,8 @@ object Aggregates {
   *  - **join cascade** (indexes too large to embed): BROADCAST hash
   *    joins + one coalesce — fully parallel, no iteration, and the only
   *    shuffle in the whole serve path is whatever the caller's plan
-  *    already needed.
+  *    already needed. The levels are lazy: a prefix level computes its
+  *    key and probes its table only for rows no longer level resolved.
   *
   * At 100 TB the probe side streams; the index sides are bounded by the
   * key space (small by construction — that is the point of the paper).
@@ -113,23 +114,32 @@ final case class KvModel(
     }
 
   /** The broadcast-join cascade form of [[probe]] (always correct; the
-    * scale path for indexes too large to embed in the task binary). */
+    * scale path for indexes too large to embed in the task binary).
+    *
+    * Lazy, like the trie walk it reproduces: level `l`'s stream-side key
+    * is `CASE WHEN <every longer level missed> THEN prefix(key, l) END`,
+    * so a row an earlier level resolved skips the `substring_index` and,
+    * its join key being NULL, the hash lookup too (broadcast hash joins
+    * never probe a NULL key). A level's value only counts when every
+    * earlier one is NULL, and then it probes exactly the eager key —
+    * the final coalesce is bit-identical to probing every level. */
   def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
     val keyed = input.withColumn("__key", key)
     val exact = keyed.join(
       broadcast(kv.select(col("key").as("__key"), col("value").as("__v_exact"))),
       Seq("__key"), "left")
-    val cascaded = prefixes.foldLeft(exact) { case (df, (l, tbl)) =>
-      df.join(
-        broadcast(tbl.select(col("prefix").as(s"__p_$l"), col("value").as(s"__v_$l"))),
-        Keys.prefix(col("__key"), l) === col(s"__p_$l"), "left")
-        .drop(s"__p_$l")
+    val (cascaded, values) = prefixes.foldLeft((exact, Seq("__v_exact"))) {
+      case ((df, resolved), (l, tbl)) =>
+        val levelKey = when(coalesce(resolved.map(col): _*).isNull, Keys.prefix(col("__key"), l))
+        val joined = df.join(
+          broadcast(tbl.select(col("prefix").as(s"__p_$l"), col("value").as(s"__v_$l"))),
+          levelKey === col(s"__p_$l"), "left")
+          .drop(s"__p_$l")
+        (joined, resolved :+ s"__v_$l")
     }
-    val fallbackCols = prefixes.map { case (l, _) => col(s"__v_$l") }
-    val pred = coalesce((col("__v_exact") +: fallbackCols) :+ lit(globalValue): _*)
     cascaded
-      .withColumn(predName, pred)
-      .drop("__key" +: "__v_exact" +: prefixes.map { case (l, _) => s"__v_$l" }: _*)
+      .withColumn(predName, coalesce(values.map(col) :+ lit(globalValue): _*))
+      .drop("__key" +: values: _*)
   }
 
   /** Collect the (bounded-by-key-space) kv and prefix relations ONCE
@@ -237,17 +247,14 @@ object KvIndexState {
   def build(keyed: DataFrame, keyLen: Int, task: Task): KvIndexState =
     KvIndexState(task, keyLen, partial(keyed, task))
 
-  private def partial(keyed: DataFrame, task: Task): DataFrame = task match {
-    case Task.MultiClass =>
-      keyed.groupBy(col("key"), col("pred").cast("double").as("pred"))
-        .agg(count(lit(1)).as("cnt"))
-    case _ =>
-      // count(pred), NOT count(*): a NULL prediction must be excluded
-      // from BOTH the sum and the count, exactly like the rebuild's
-      // avg() — counting it would shrink the merged mean.
-      keyed.groupBy("key")
-        .agg(sum(col("pred").cast("double")).as("sum"),
-          count(col("pred").cast("double")).as("cnt"))
+  private def partial(keyed: DataFrame, task: Task): DataFrame = {
+    val voted = KvIndexBuilder.votes(keyed)
+    task match {
+      case Task.MultiClass =>
+        voted.groupBy(col("key"), col("pred")).agg(count(lit(1)).as("cnt"))
+      case _ =>
+        voted.groupBy("key").agg(sum(col("pred")).as("sum"), count(lit(1)).as("cnt"))
+    }
   }
 
   private def merge(stats: DataFrame, task: Task): DataFrame = task match {
@@ -301,14 +308,22 @@ object KvIndexBuilder {
       task: Task,
       balanceRatio: Option[Double] = None
   ): KvModel = {
+    val voted = votes(keyed)
     val kvRaw = task match {
       case Task.MultiClass =>
-        Aggregates.mode(keyed, Seq("key"), "pred").withColumnRenamed("pred", "value")
+        Aggregates.mode(voted, Seq("key"), "pred").withColumnRenamed("pred", "value")
       case _ =>
-        keyed.groupBy("key").agg(avg("pred").as("value"))
+        voted.groupBy("key").agg(avg("pred").as("value"))
     }
     fromKv(kvRaw, keyLen, task, balanceRatio)
   }
+
+  /** The (key, pred) rows that vote: a NULL prediction carries no vote,
+    * so a key seen only with NULL predictions gets no kv entry and falls
+    * through to its prefix, and a NULL can never win a mode. Shared by
+    * the fresh build and [[KvIndexState]], so append ≡ rebuild. */
+  private[core] def votes(keyed: DataFrame): DataFrame =
+    keyed.select(col("key"), col("pred").cast("double").as("pred")).where(col("pred").isNotNull)
 
   /** Finalize a (key, value) kv relation into a servable model:
     * balance reweight, then the prefix relation and global aggregate —

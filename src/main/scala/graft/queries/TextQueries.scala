@@ -67,7 +67,7 @@ object TextQueries {
   // earlier HOF formulation needed a cache barrier + repartition to be
   // viable (87 s -> 0.6 s for 5000 docs); the kernel needs neither.
   // Values identical to the oracle's explode+groupBy formulation.
-  private def minhashSig(s: SparkSession, d: String): DataFrame = {
+  private[queries] def minhashSig(s: SparkSession, d: String): DataFrame = {
     assertCapMemo(s, d)
     Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism) // single-file source -> spread CPU work
@@ -267,9 +267,11 @@ object TextQueries {
       val bands = bandsOf(sig)
       val a = bands.select(col("band"), col("bsig"), col("doc_id").as("doc_a"))
       val b = bands.select(col("band"), col("bsig"), col("doc_id").as("doc_b"))
-      a.join(b, Seq("band", "bsig")).filter(col("doc_a") < col("doc_b"))
+      val pairs = a.join(b, Seq("band", "bsig")).filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b").distinct()
         .localCheckpoint(true)
+      sig.unpersist() // the eager checkpoint holds the pairs; nothing reads sig again
+      pairs
     }(_ => ()) // checkpoint blocks are ContextCleaner-managed on eviction
 
   /** The (doc_id, band, bsig) band-index rows of a signature frame —

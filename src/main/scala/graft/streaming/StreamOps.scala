@@ -273,11 +273,28 @@ object StreamOps {
     * (same files, same order, same rows; only intra-file row order may
     * differ, which no windowed/sessionized aggregate can observe).
     * `partitionBy` drops `bCol` from the file schema, matching the
-    * untagged frames the Seq form stages. */
+    * untagged frames the Seq form stages. A `bCol` value outside
+    * 0 until n (or NULL) fails with an IllegalArgumentException naming
+    * it, before any batch is staged. */
   def stageOrderedFilesTagged(tagged: DataFrame, bCol: String, n: Int, dir: String): Unit = {
     val tmp = new java.io.File(dir, "_stage_tagged")
+    // clean the temp tree (dir-per-value + _SUCCESS)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
     tagged.repartition(n, col(bCol))
       .write.mode("overwrite").partitionBy(bCol).parquet(tmp.toString)
+    // a tag outside 0 until n (NULL included) would land in a directory
+    // no batch reads: fail before staging anything instead of dropping it
+    val expected = (0 until n).map(i => s"$bCol=$i").toSet
+    val stray = Option(tmp.listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith(s"$bCol=")).filterNot(expected).sorted
+    if (stray.nonEmpty) {
+      rm(tmp)
+      throw new IllegalArgumentException(
+        s"$bCol values outside 0 until $n would be dropped from the replay: " +
+          stray.map(_.stripPrefix(s"$bCol=")).mkString(", "))
+    }
     (0 until n).foreach { i =>
       val sub = new java.io.File(tmp, s"$bCol=$i")
       val part = Option(sub.listFiles()).getOrElse(Array.empty)
@@ -291,10 +308,6 @@ object StreamOps {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       require(dst.setLastModified(1700000000000L + i * 60000L),
         s"could not pin modification time of $dst")
-    }
-    // clean the temp tree (dir-per-value + _SUCCESS)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
     rm(tmp)
   }

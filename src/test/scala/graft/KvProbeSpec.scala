@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{Keys, KvIndexBuilder, NumericBins, Task}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -84,6 +85,94 @@ class KvProbeSpec extends AnyFunSuite {
     val inGroup = sc.statusTracker.getJobIdsForGroup(g).toSet
     assert(started.size == 2, s"jobs $started")
     assert(started.forall(inGroup), s"jobs $started, group $g has $inGroup")
+  }
+
+  /** A keyLen=4 index and one probe key per cascade outcome: an exact
+    * hit, a hit at each prefix length 3, 2, 1, an unseen first field
+    * (global) and a NULL key. */
+  private lazy val (cascade4, cascadeKeys) = {
+    import spark.implicits._
+    val keyed = Seq(
+      "1.1.1.1" -> 1.0, "1.1.1.1" -> 0.0, "1.1.1.1" -> 1.0,
+      "1.1.1.2" -> 0.0, "1.1.2.1" -> 1.0, "1.1.2.1" -> 0.0,
+      "1.2.1.1" -> 1.0, "2.1.1.1" -> 0.0, "2.2.2.2" -> 1.0, "2.2.2.2" -> 1.0)
+      .toDF("key", "pred")
+    val m = KvIndexBuilder.buildFromKeyed(keyed, keyLen = 4, Task.Classification)
+    (m, Seq("1.1.1.1", "1.1.1.7", "1.1.7.7", "1.7.7.7", "7.7.7.7", null))
+  }
+
+  /** `probe` applied to `keys`, values in key order. */
+  private def probeValues(keys: Seq[String])(
+      probe: (DataFrame, Column, String) => DataFrame): Seq[Double] = {
+    import spark.implicits._
+    probe(keys.zipWithIndex.toDF("k", "i"), col("k"), "p").select("i", "p").collect()
+      .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1).map(_._2).toSeq
+  }
+
+  test("the lazy join cascade matches toLocalScorer at every level") {
+    val scorer = cascade4.toLocalScorer
+    // which level answers each probe key: 4 = exact, 3..1 = prefix, 0 = global
+    def level(k: String): Int =
+      if (k == null) 0
+      else if (scorer.kv.contains(k)) 4
+      else scorer.prefixes.collectFirst {
+        case (l, tbl) if tbl.contains(graft.core.LocalScorer.prefix(k, l)) => l
+      }.getOrElse(0)
+    assert(cascadeKeys.map(level) == Seq(4, 3, 2, 1, 0, 0), "fixture must cover every level")
+    val joined = probeValues(cascadeKeys)(cascade4.joinProbe)
+    cascadeKeys.zip(joined).foreach { case (k, v) =>
+      val local = Option(k).map(scorer.scoreKey).getOrElse(cascade4.globalValue)
+      assert(bits(v) == bits(local), s"key $k: joined $v vs local $local")
+    }
+  }
+
+  test("every prefix join probes with a key conditional on the longer levels missing") {
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, If, IsNull}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import spark.implicits._
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val input = Seq("1.1.1.1", "1.1.7.7").toDF("k")
+      val plan = cascade4.joinProbe(input, col("k"), "p").queryExecution.executedPlan
+      val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+      assert(joins.size == 4, s"one broadcast join per level:\n$plan")
+      def conditional(e: Expression): Boolean = e.find {
+        case CaseWhen(branches, _) => branches.exists(_._1.find(_.isInstanceOf[IsNull]).isDefined)
+        case If(p, _, _) => p.find(_.isInstanceOf[IsNull]).isDefined
+        case _ => false
+      }.isDefined
+      val lazyJoins = joins.count(_.leftKeys.exists(conditional))
+      assert(lazyJoins == 3, s"all 3 prefix joins must skip resolved rows:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  }
+
+  test("keys whose every prediction is NULL serve the same on every path") {
+    import spark.implicits._
+    // "1.1.1" and "1.2.1" only ever see NULL predictions; "1.1.2"/"1.2.2"
+    // give their prefixes a non-NULL value a NULL vote could tie
+    val keyed = Seq[(String, java.lang.Double)](
+      "1.1.1" -> null, "1.1.1" -> null, "1.1.2" -> 2.0, "1.2.1" -> null,
+      "1.2.2" -> 1.0, "2.1.1" -> 0.0, "2.1.1" -> 1.0, "2.1.1" -> 1.0)
+      .toDF("key", "pred")
+    val probeKeys = Seq("1.1.1", "1.1.2", "1.2.1", "1.1.9", "2.1.1", "9.9.9", null)
+    Seq(Task.Classification, Task.MultiClass).foreach { task =>
+      val m = KvIndexBuilder.buildFromKeyed(keyed, keyLen = 3, task)
+      val scorer = m.toLocalScorer
+      val compiled = probeValues(probeKeys)(m.probe)
+      val joined = probeValues(probeKeys)(m.joinProbe)
+      probeKeys.indices.foreach { i =>
+        val local = Option(probeKeys(i)).map(scorer.scoreKey).getOrElse(m.globalValue)
+        assert(bits(compiled(i)) == bits(local) && bits(joined(i)) == bits(local),
+          s"$task key ${probeKeys(i)}: compiled ${compiled(i)} joined ${joined(i)} local $local")
+      }
+      // a NULL-only key has no entry of its own: it serves its prefix
+      assert(!scorer.kv.contains("1.1.1"), s"$task: NULL-only key must not get a kv entry")
+      assert(bits(scorer.scoreKey("1.1.1")) == bits(scorer.scoreKey("1.1.2")), s"$task")
+      // and the incremental state builds the same index as the fresh build
+      val fromState = graft.core.KvIndexState.build(keyed, keyLen = 3, task).toModel().toLocalScorer
+      assert(fromState.kv.view.mapValues(bits).toMap == scorer.kv.view.mapValues(bits).toMap, s"$task")
+    }
   }
 
   test("small index compiles to a joinless, exchange-free projection") {

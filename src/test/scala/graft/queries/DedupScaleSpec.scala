@@ -258,4 +258,14 @@ class DedupScaleSpec extends AnyFunSuite {
         s"verified dup ($a,$b) missing from the containment output")
     }
   }
+
+  test("the memoized LSH pairs leave no cached signature frame behind") {
+    // a fresh session is a fresh memo key, so the pairs build here
+    val s = spark.newSession()
+    val pairs = TextQueries.defs("t_dedup_minhash")(s, sf)
+    assert(pairs.count() > 0, "the check must build real pairs")
+    // storageLevel looks the frame's plan up in the shared cache manager
+    assert(TextQueries.minhashSig(s, sf).storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the signature cache must be released once the pairs are checkpointed")
+  }
 }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * staged replay bytes instead of riding the session's flat |cores|.
   * Three contracts: (a) the conf is set inside the block and RESTORED
   * after (success and failure paths); (b) the sizing clamps to
-  * [4, 4·defaultParallelism] with ~1 MB/partition density; (c) the
+  * [4, max(4, defaultParallelism)] with ~1 MB/partition density; (c) the
   * streamed result is bitwise partition-count INDEPENDENT — the whole
   * reason the knob is free to vary per eval.
   */
@@ -119,5 +119,18 @@ class StatePartitionSizingSpec extends AnyFunSuite {
       == spark.read.parquet(s"$seqDir/b00.parquet").schema)
     // no temp droppings left behind
     assert(!new java.io.File(tagDir, "_stage_tagged").exists)
+  }
+
+  test("stageOrderedFilesTagged rejects tags outside 0 until n instead of dropping rows") {
+    import spark.implicits._
+    val df = (0L until 40L).map(i => (i, s"u${i % 7}")).toDF("id", "u")
+    val dir = graft.core.TmpDirs.scratch("stage_tagged_stray", "spec")
+    val err = intercept[IllegalArgumentException] {
+      StreamOps.stageOrderedFilesTagged(
+        df.withColumn("__b", pmod(col("id"), lit(5L)).cast("int")), "__b", 3, dir)
+    }
+    assert(err.getMessage.contains("3, 4"), err.getMessage)
+    assert(!new java.io.File(dir, "b00.parquet").exists, "nothing may be staged")
+    assert(!new java.io.File(dir, "_stage_tagged").exists)
   }
 }
