@@ -120,16 +120,6 @@ object Sessions {
       // events.ts is parquet TIMESTAMP(NANOS) — unsupported natively;
       // read as epoch-nanos long, converted in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r17 (VERDICT r16 Next #6, driver-JVM long-sweep hygiene): the
-      // ContextCleaner's periodic GC defaults to 30min, so a full
-      // ~15-min sweep never gets one and dead shuffle/broadcast/cache
-      // metadata from 200+ queries accumulates until a CMS-triggering
-      // allocation stalls a late row. SPARK_GRAFT_PERIODIC_GC=5min
-      // opts a sweep into more frequent cleaner GCs for the A/B; the
-      // default stays Spark's own so committed numbers ride the stock
-      // config (measured adopt-or-reject in OPTIMIZATION_r17.md).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
       // keep saveAsTable metadata out of the working directory (the
       // bucketed-layout queries pass explicit data paths; this catches
       // the empty spark-warehouse/ dir the in-memory catalog creates)
@@ -138,19 +128,6 @@ object Sessions {
       // sides we broadcast are far below it at any SF because they are
       // bounded by key-space/dimension size, not data size.
       .getOrCreate()
-    // Measurement knob (VERDICT r15 Next #7): SPARK_GRAFT_ROCKSDB_STATE=1
-    // swaps every streaming query's state store from the default
-    // in-heap HDFSBackedStateStoreProvider to RocksDB — the provider a
-    // production cluster uses once state outgrows executor heap. Set
-    // AFTER getOrCreate so a fresh checkpoint picks it up (providers
-    // pin at checkpoint creation; graft streaming queries scratch
-    // their checkpoints per eval, so the knob takes effect per run).
-    // Off by default: at graft's gate/sf10 state sizes the in-heap map
-    // is the faster provider (see README's r16 comparison) and the
-    // default keeps committed numbers comparable round-over-round.
-    if (sys.env.get("SPARK_GRAFT_ROCKSDB_STATE").contains("1"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

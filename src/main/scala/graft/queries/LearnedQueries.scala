@@ -1395,7 +1395,7 @@ object LearnedQueries {
     // with the replay for eviction to be observable, so the 4 staged
     // batches are hour-blocked (batch i carries only ts in
     // [i·2h, i·2h+2h)) and their file modification times pin the replay
-    // order (StreamOps.stageOrderedFiles). A single far-future sentinel
+    // order (StreamOps.stageOrderedFilesTagged). A single far-future sentinel
     // doc in a 5th file pushes the watermark past every real window so
     // the tail windows FLUSH (append emits a window only once its end
     // passes the watermark); the sentinel's own window is excluded from

@@ -1585,9 +1585,16 @@ object TextQueries {
     // r17 (guide §2.4 — share the exchange): canonical_id = min(doc_id)
     // per (fp, len) used to be a groupBy + SortMergeJoin BACK onto base
     // — two shuffles + two full sorts of base for a value a window over
-    // the SAME key computes inside one exchange (every base row matches
-    // its own group by construction, so join ≡ window row for row). At
-    // 100 TB that is one full corpus shuffle saved from this pipeline.
+    // the SAME key computes inside one exchange (every base row with a
+    // non-NULL key matches its own group by construction, so join ≡
+    // window row for row). At 100 TB that is one full corpus shuffle
+    // saved from this pipeline. NULL keys: a NULL-text document has
+    // NULL fp/len, so the equi-join dropped it while the window keeps
+    // it (all NULL-text documents in one window group) — but split of
+    // NULL explodes to no token rows, so it has no `rep` row and the
+    // inner `canon.join(rep, "doc_id")` below drops it. The window
+    // form, the old join form and the oracle's
+    // `JOIN canon USING (fp, len) JOIN rep` (verdictCteSql) all drop it.
     val canon = base.withColumn("canonical_id",
       min("doc_id").over(Window.partitionBy("fp", "len")))
     val rep = docs

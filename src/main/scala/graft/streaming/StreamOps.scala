@@ -38,24 +38,6 @@ object StreamOps {
       val med = if (s.length % 2 == 1) s(mid) else (s(mid - 1) + s(mid)) / 2.0
       batchMillis.put(name, med)
     }
-    // Plan-evidence hook (off unless the env var is set, so bench/verify
-    // timed regions never pay it): dump the streaming query's executed
-    // physical plan + the last progress JSON (which carries the state
-    // operators' numShufflePartitions) to <dir>/<name>.txt — the
-    // streaming analog of `.explain("formatted")` for plans/rNN/.
-    sys.env.get("SPARK_GRAFT_STREAM_EXPLAIN_DIR").foreach { dir =>
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
-        q.explain(extended = false)
-      }
-      val progress = Option(q.lastProgress).map(_.json).getOrElse("{}")
-      val txt = s"== Streaming executed plan: $name ==\n" +
-        buf.toString("UTF-8") + s"\n== lastProgress ==\n$progress\n"
-      val path = java.nio.file.Paths.get(dir, s"$name.txt")
-      java.nio.file.Files.createDirectories(path.getParent)
-      java.nio.file.Files.write(path,
-        txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
   }
 
   /** Watermarked tumbling-window aggregate over an event stream:
@@ -222,48 +204,26 @@ object StreamOps {
       spark: org.apache.spark.sql.SparkSession, stagedDir: String)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // SPARK_GRAFT_STREAM_STATE_PARTS pins the count explicitly — the
-    // cluster-operator override (and the A/B lever: =32 reproduces the
-    // old flat-cores setting bit for bit on local[32]).
-    val n = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS").map(_.toLong).getOrElse {
-      val bytes = graft.Sessions.dirBytes(stagedDir)
-      val cap = math.max(4L, spark.sparkContext.defaultParallelism.toLong)
-      math.min(cap, math.max(4L, (bytes + (1L << 20) - 1) / (1L << 20)))
-    }
+    val bytes = graft.Sessions.dirBytes(stagedDir)
+    val cap = math.max(4L, spark.sparkContext.defaultParallelism.toLong)
+    val n = math.min(cap, math.max(4L, (bytes + (1L << 20) - 1) / (1L << 20)))
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Stage `parts` as one parquet FILE each (b00.parquet, b01.parquet…)
-    * with strictly increasing modification times, so a file-stream
-    * replay with maxFilesPerTrigger=1 processes them in EXACTLY this
-    * order (FileStreamSource orders unseen files by modification time).
-    * Watermark-sensitive replays need this: event time must advance
-    * with the batch sequence, or late-drop behavior becomes
-    * nondeterministic across runs.
-    */
-  def stageOrderedFiles(parts: Seq[DataFrame], dir: String): Unit =
-    parts.zipWithIndex.foreach { case (df, i) =>
-      val tmp = new java.io.File(dir, s"_stage$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")) match {
-        case Array(one) => one
-        case other => throw new IllegalStateException(
-          s"expected exactly one staged part file, found ${other.length}")
-      }
-      val dst = new java.io.File(dir, f"b$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // distinct, increasing, second-granularity-safe mod times
-      require(dst.setLastModified(1700000000000L + i * 60000L),
-        s"could not pin modification time of $dst")
-      tmp.listFiles().foreach(_.delete()); tmp.delete()
-    }
-
-  /** ONE-JOB form of [[stageOrderedFiles]] (r17, guide §1.2/§2.4 —
-    * fewer passes, fewer driver jobs): `tagged` carries an integer
-    * batch column `bCol` with values 0 until n, and the whole replay
-    * stages in a single shuffle+write job — where the Seq form ran one
+  /** Stage a replay as one parquet FILE per batch (b00.parquet,
+    * b01.parquet…) with strictly increasing modification times, so a
+    * file-stream replay with maxFilesPerTrigger=1 processes them in
+    * EXACTLY batch order (FileStreamSource orders unseen files by
+    * modification time). Watermark-sensitive replays need this: event
+    * time must advance with the batch sequence, or late-drop behavior
+    * becomes nondeterministic across runs.
+    *
+    * ONE-JOB form (r17, guide §1.2/§2.4 — fewer passes, fewer driver
+    * jobs): `tagged` carries an integer batch column `bCol` with values
+    * 0 until n, and the whole replay stages in a single shuffle+write
+    * job — where the per-batch Seq form (`StreamTestOps.stageOrderedFiles`
+    * under src/test, the specs' reference for this form) runs one
     * coalesce(1) write JOB per batch, each rescanning its input. The
     * hash repartition on `bCol` puts every batch's rows in exactly one
     * task, so each `bCol=i` directory holds exactly one part file

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.TestSpark
-import graft.streaming.StreamOps
+import graft.streaming.{StreamOps, StreamTestOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -98,7 +98,7 @@ class StatePartitionSizingSpec extends AnyFunSuite {
     val parts = (0 until 3).map(i => df.filter(pmod(col("id"), lit(3L)) === i))
     val seqDir = graft.core.TmpDirs.scratch("stage_tagged_seq", "spec")
     val tagDir = graft.core.TmpDirs.scratch("stage_tagged_one", "spec")
-    StreamOps.stageOrderedFiles(parts, seqDir)
+    StreamTestOps.stageOrderedFiles(parts, seqDir)
     StreamOps.stageOrderedFilesTagged(
       df.withColumn("__b", pmod(col("id"), lit(3L)).cast("int")), "__b", 3, tagDir)
     def fileRows(dir: String, i: Int): Set[(Long, String)] =

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.TestSpark
-import graft.streaming.StreamOps
+import graft.streaming.{StreamOps, StreamTestOps}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,7 +37,7 @@ class StreamLateDataSpec extends AnyFunSuite {
     val b1 = Seq((4L, 14400L), (5L, 15000L)).toDF("id", "t")
     val b2 = Seq((6L, 16000L), (99L, 1800L)).toDF("id", "t")
     val b3 = Seq((100L, 30000L)).toDF("id", "t")
-    StreamOps.stageOrderedFiles(Seq(b0, b1, b2, b3), dir)
+    StreamTestOps.stageOrderedFiles(Seq(b0, b1, b2, b3), dir)
     val stream = spark.readStream.schema(b0.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val agg = stream
@@ -77,7 +77,7 @@ class StreamLateDataSpec extends AnyFunSuite {
     // stage DESCENDING content so any content- or size-based ordering
     // would disagree with the staged order
     val parts = Seq(Seq(30L), Seq(20L, 21L), Seq(10L)).map(_.toDF("v"))
-    StreamOps.stageOrderedFiles(parts, dir)
+    StreamTestOps.stageOrderedFiles(parts, dir)
     val stream = spark.readStream.schema(parts.head.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]

@@ -18,9 +18,9 @@ review, but never counted superlinear off a noise denominator).
 With a fourth argument (a run on the 100x corpus), a second-decade
 "sf10" section records sf1->sf10 ratios for the overlapping rows. When
 the sf10 run covers >= 90% of the sf1 rows it is labeled a FULL second
-decade (run both sides with the default median protocol — no
-SPARK_GRAFT_BENCH_SINGLE); below that it is labeled a single-shot spot
-subset whose ratios carry one-run noise.
+decade (run both sides with the default median protocol, not a
+restricted SPARK_GRAFT_BENCH_ONLY spot run); below that it is labeled a
+single-shot spot subset whose ratios carry one-run noise.
 
 With a fifth argument (a spot run on the 1000x corpus), a THIRD-decade
 "sf100_spot" section records sf10->sf100 ratios for the overlapping
