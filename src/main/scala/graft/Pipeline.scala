@@ -62,19 +62,13 @@ object InferDbPipeline {
       vals => {
         require(vals.length == specs.length,
           s"expected ${specs.length} values for ${selected.mkString(",")}")
-        val sb = new java.lang.StringBuilder
-        var i = 0
-        while (i < specs.length) {
-          if (i > 0) sb.append('.')
-          sb.append(specs(i).binValue(vals(i)))
-          i += 1
-        }
-        scorer.scoreKey(sb.toString)
+        scorer.scoreKey(Keys.render(specs.indices.map(i => specs(i).binValue(vals(i)))))
       }
     }
 
-    /** Rows in the kv relation (the "index size" driver). */
-    def indexEntries: Long = kv.kv.count()
+    /** Rows in the kv relation (the "index size" driver), counted once
+      * when the relation was cached or loaded. */
+    def indexEntries: Long = kv.kvCount
 
     /** Persist every serve-time artifact (kv + prefix relations, bin
       * specs, selection, fallbacks) to `dir` — the reference's joblib
@@ -230,7 +224,7 @@ object InferDbPipeline {
       acc.flatMap(p => r.map(p :+ _))
     }
     import spark.implicits._
-    val paths = combos.map(p => (p.mkString("."), p.map(_.toDouble)))
+    val paths = combos.map(p => (Keys.render(p.map(_.toLong)), p.map(_.toDouble)))
       .toDF("key", "__bins")
       .select(col("key") +: selFeatures.zipWithIndex.map { case (f, i) =>
         col("__bins").getItem(i).as(f)

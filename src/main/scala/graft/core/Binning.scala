@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Bin semantics (must match src/encoder.py:113-128 exactly):
   *  - numeric: bin(v) = index of the FIRST split strictly greater than v;
   *    v >= last split  -> splits.length (overflow bin); NULL -> splits.length.
-  *  - categorical: fitted map lookup; unseen or NULL -> map.size.
+  *  - categorical: fitted map lookup; unseen or NULL -> numBins - 1.
   *
   * The fit itself (optbinning's OptimalBinning) is replaced by a
   * deterministic quantile-prebin + greedy adjacent-merge driver loop
@@ -73,7 +73,9 @@ object NumericBins {
 
 final case class CategoricalBins(mapping: Map[String, Int]) extends BinSpec {
   override def numBins: Int = mapping.values.toSet.size + 1
-  private val overflow = mapping.size.toLong
+  /** The bin of NULL and unseen values: the last of `numBins`, also when
+    * more categories than bins share the tail bin. */
+  val overflow: Long = numBins - 1L
   override def toColumn(c: Column): Column = {
     // O(1) hash lookup inside codegen via a literal map — scales to
     // thousands of categories where a when-chain would blow up codegen.

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.plans.{DenseAnswers, KvProbe}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -46,17 +47,20 @@ object Aggregates {
   * dynamic-SQL `prefix_search`, every field-wise prefix of every key is
   * aggregated ONCE at build time into a single prefix relation
   * `(len, prefix, value)`, next to the exact `kv` relation. The probe
-  * then takes one of two bitwise-identical forms ([[KvProbeSpec]] pins
-  * them):
+  * then takes one of two bitwise-identical forms, chosen in [[probe]]
+  * ([[KvProbeSpec]] pins them):
   *
-  *  - **compiled** (default, index ≤ [[KvModel.MaxCompiledEntries]]
-  *    entries): the collected maps embed in the plan as a reference
-  *    object ([[graft.plans.KvScorerRef]], like the kNN/tree kernels)
-  *    and the whole cascade is ONE whole-stage-codegen projection —
-  *    zero joins, zero exchanges on the probe side at any input size;
-  *  - **join cascade** (indexes too large to embed): BROADCAST hash
-  *    joins + one coalesce — fully parallel, no iteration, and the only
-  *    shuffle in the whole serve path is whatever the caller's plan
+  *  - **dense** (a [[Keys.keyColumn]] over `keyLen` non-nullable
+  *    integral bins, and a key space of at most
+  *    [[KvModel.MaxCompiledEntries]] slots): every key's cascade answer
+  *    is a pure function of the key, so it is computed once per model
+  *    into a mixed-radix answer table ([[DenseAnswers]]) and
+  *    the serve is ONE whole-stage-codegen projection that packs the bins
+  *    and loads one double — no key string, zero joins, zero exchanges on
+  *    the probe side at any input size;
+  *  - **join cascade** (any other key, or a larger key space): BROADCAST
+  *    hash joins + one coalesce — fully parallel, no iteration, and the
+  *    only shuffle in the whole serve path is whatever the caller's plan
   *    already needed. The levels are lazy: a prefix level computes its
   *    key and probes its table only for rows no longer level resolved.
   *
@@ -90,31 +94,52 @@ final case class KvModel(
     l -> prefixRel.where(col("len") === l).select(col("prefix"), col("value"))
   }
 
-  /** The embedded-cascade kernel when the index fits the size cap —
-    * collected ONCE per model, then reused by every probe it serves. */
-  @transient private lazy val compiledRef: Option[graft.plans.KvScorerRef] =
-    if (kvCount + prefixCount <= KvModel.MaxCompiledEntries)
-      Some(new graft.plans.KvScorerRef(toLocalScorer))
-    else None
-
   /** Append `predName` to `input` by probing the index with `key`.
     * Exact hit wins; else the longest non-empty prefix aggregate; else
     * the global aggregate (trie-root DFS, inference_trie.py:91-98).
-    * Compiled single-projection form when the index fits
-    * [[KvModel.MaxCompiledEntries]]; broadcast-join cascade otherwise —
-    * same values bit for bit either way (a NULL key resolves to the
-    * global aggregate on both paths).
+    * The one place the form is chosen: the dense answer table when
+    * [[denseProbe]] applies, the broadcast-join cascade otherwise — same
+    * values bit for bit either way (a NULL key resolves to the global
+    * aggregate on the join path; a dense key is never NULL).
     */
   def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
-    compiledRef match {
-      case Some(ref) =>
-        input.withColumn(predName,
-          coalesce(graft.plans.KvProbe.column(key, ref), lit(globalValue)))
+    denseProbe(input, key) match {
+      case Some(answer) => input.withColumn(predName, answer)
       case None => joinProbe(input, key, predName)
     }
 
-  /** The broadcast-join cascade form of [[probe]] (always correct; the
-    * scale path for indexes too large to embed in the task binary).
+  /** The dense kernel over `key`'s bins, when `key` is a
+    * [[Keys.keyColumn]] of `keyLen` bins that are non-nullable and
+    * integral in `input` (an analysis, no job) and the index has a
+    * [[denseAnswers]] table. */
+  private def denseProbe(input: DataFrame, key: Column): Option[Column] =
+    Keys.bins(key).filter(_.length == keyLen).filter { bins =>
+      input.select(bins: _*).schema.forall(f => !f.nullable && KvProbe.bin(f.dataType))
+    }.flatMap(bins => denseAnswers.map(KvProbe.column(bins, _)))
+
+  /** [[LocalScorer.scoreKey]] over every slot of the key space, built
+    * once per model — when every kv key is `keyLen` canonical decimals
+    * and the space has at most [[KvModel.MaxCompiledEntries]] slots.
+    * Field `i`'s radix is 1 + its largest value over the kv keys; its
+    * extra "unseen" digit renders as the radix itself, a value no kv key
+    * (so no prefix) has in that field — exactly the cascade of any bin
+    * outside `[0, radix)`. An index of more entries than the cap cannot
+    * fit (each kv key has its own slot) and is never collected. */
+  @transient private lazy val denseAnswers: Option[DenseAnswers] =
+    if (kvCount > KvModel.MaxCompiledEntries) None
+    else {
+      val scorer = toLocalScorer
+      val keys = scorer.kv.keys.toSeq.flatMap(Keys.parse(_, keyLen))
+      if (keys.size < scorer.kv.size) None
+      else {
+        val radices = Array.tabulate(keyLen)(i => keys.foldLeft(0)((m, k) => math.max(m, k(i) + 1)))
+        if (DenseAnswers.slots(radices) > KvModel.MaxCompiledEntries) None
+        else Some(DenseAnswers.tabulate(radices)(d => scorer.scoreKey(Keys.render(d.toSeq.map(_.toLong)))))
+      }
+    }
+
+  /** The broadcast-join cascade form of [[probe]] (always correct, for
+    * any string key; the scale path for key spaces above the dense cap).
     *
     * Lazy, like the trie walk it reproduces: level `l`'s stream-side key
     * is `CASE WHEN <every longer level missed> THEN prefix(key, l) END`,
@@ -266,11 +291,10 @@ object KvIndexState {
 }
 
 object KvModel {
-  /** Above this many total index entries the probe falls back from the
-    * plan-embedded kernel to broadcast joins: the reference object
-    * rides every task binary, so it must stay a few MB at most —
-    * 2^17 (key, double) entries is ~4-8 MB serialized, comfortably
-    * under the broadcast threshold the join path would use anyway. */
+  /** The largest key space (slots of the dense answer table, unseen
+    * digits included) the probe serves from the plan-embedded kernel;
+    * above it the probe takes the broadcast joins. The table rides every
+    * task binary, so it must stay small: 2^17 doubles is 1 MB. */
   val MaxCompiledEntries: Long = 1L << 17
 }
 

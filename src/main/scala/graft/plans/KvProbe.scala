@@ -2,57 +2,117 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, EmptyBlock, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Compiled KV-probe cascade: the collected (key-space-bounded) kv +
-  * prefix maps embedded in the plan as a reference object — the serve
-  * path becomes ONE whole-stage-codegen projection doing a hash-lookup
-  * cascade per row, replacing keyLen broadcast hash joins + coalesce
-  * ([[graft.core.KvModel.probe]]'s join form, which stays as the
-  * fallback for indexes too large to embed). Same cascade order as the
-  * joins — exact hit, then longest-to-shortest field-wise prefix, then
-  * the global aggregate — over the same collected doubles, so the two
-  * forms are bitwise identical (KvProbeSpec pins it).
-  *
-  * Scale shape: the reference object rides the task binary exactly like
-  * [[KnnRef]]/[[TreeEnsembleRef]] — one copy per executor, zero join
-  * overhead, and the probe side needs no exchange at any input size.
-  * (The reference serves this cascade as dynamic SQL per row,
-  * src/inference_trie.py:60-98; the join form mirrors its batch SQL,
-  * this kernel is the point-lookup form applied to the batch path.)
+/** The whole probe cascade precomputed over an index's key space, one
+  * answer per mixed-radix slot of the bins. Field `i` has digits
+  * `0 .. radices(i)`: a bin in `[0, radices(i))` is its own digit and
+  * any other bin (negative, or above every bin the index has seen in
+  * that field) is the "unseen" digit `radices(i)`. Slots pack field 0
+  * first: `slot = (..(d0 * (r1+1) + d1) * (r2+1) ..) + d(k-1)`.
   */
-final class KvScorerRef(val scorer: graft.core.LocalScorer) extends Serializable {
-  def score(key: UTF8String): Double = scorer.scoreKey(key.toString)
+final class DenseAnswers private (val radices: Array[Int], val answers: Array[Double])
+    extends Serializable {
+  def answer(bins: Array[Long]): Double = {
+    var slot = 0
+    var i = 0
+    while (i < radices.length) {
+      val r = radices(i)
+      val b = bins(i)
+      slot = slot * (r + 1) + (if (b >= 0 && b < r) b.toInt else r)
+      i += 1
+    }
+    answers(slot)
+  }
+
+  override def toString: String = radices.map(_ + 1).mkString("", "x", " slots")
 }
 
-/** key string -> cascaded index value (never null on non-null input —
-  * the global aggregate answers every miss). */
-case class KvProbeScore(child: Expression, ref: KvScorerRef) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kv_probe requires a STRING key, got ${other.sql}")
+object DenseAnswers {
+  /** Π (r_i + 1), saturating at Long.MaxValue. */
+  def slots(radices: Array[Int]): Long = radices.foldLeft(1L) { (n, r) =>
+    val m = r + 1L
+    if (n > Long.MaxValue / m) Long.MaxValue else n * m
   }
 
-  override def nullSafeEval(k: Any): Any = ref.score(k.asInstanceOf[UTF8String])
+  /** The table whose slot with digits `d` holds `answer(d)` (a key space
+    * of at most Int.MaxValue slots). */
+  def tabulate(radices: Array[Int])(answer: Array[Int] => Double): DenseAnswers = {
+    val digits = new Array[Int](radices.length)
+    val answers = Array.tabulate(slots(radices).toInt) { s =>
+      var rest = s
+      var i = radices.length - 1
+      while (i >= 0) {
+        digits(i) = rest % (radices(i) + 1)
+        rest /= radices(i) + 1
+        i -= 1
+      }
+      answer(digits)
+    }
+    new DenseAnswers(radices, answers)
+  }
+}
+
+/** Compiled KV probe: the bins -> the index's cascaded answer, one
+  * mixed-radix pack and one `double[]` load per row inside whole-stage
+  * codegen — no key string, no hashing, no level loop, no join, and no
+  * exchange on the probe side at any input size. The table is built by
+  * [[graft.core.KvModel.probe]] from `LocalScorer.scoreKey`, so the values
+  * are the join cascade's bit for bit (KvProbeSpec pins it over whole key
+  * spaces); it rides the task binary like [[KnnRef]]/[[TreeEnsembleRef]]
+  * and is at most `KvModel.MaxCompiledEntries` doubles.
+  */
+case class KvProbeScore(children: Seq[Expression], table: DenseAnswers) extends Expression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.length != table.radices.length) TypeCheckResult.TypeCheckFailure(
+      s"kv_probe takes ${table.radices.length} bins, got ${children.length}")
+    else children.map(_.dataType).find(t => !KvProbe.bin(t)) match {
+      case Some(t) => TypeCheckResult.TypeCheckFailure(s"kv_probe requires integral bins, got ${t.sql}")
+      case None => TypeCheckResult.TypeCheckSuccess
+    }
+
+  override def eval(input: InternalRow): Any =
+    table.answer(children.map(c => c.eval(input).asInstanceOf[Number].longValue).toArray)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val refName = ctx.addReferenceObj("kvScorerRef", ref, classOf[KvScorerRef].getName)
-    defineCodeGen(ctx, ev, c => s"$refName.score($c)")
+    val answers = ctx.addReferenceObj("kvAnswers", table.answers, "double[]")
+    val slot = ctx.freshName("slot")
+    val packs = children.zip(table.radices).map { case (c, r) =>
+      val b = c.genCode(ctx)
+      code"""
+        ${b.code}
+        $slot = $slot * ${r + 1} + ((${b.value} >= 0 && ${b.value} < $r) ? (int) ${b.value} : $r);
+      """
+    }
+    ev.copy(
+      code = code"""
+        int $slot = 0;
+        ${packs.foldLeft(EmptyBlock: Block)(_ + _)}
+        double ${ev.value} = $answers[$slot];
+      """,
+      isNull = FalseLiteral)
   }
 
-  override protected def withNewChildInternal(c: Expression): KvProbeScore =
-    copy(child = c)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KvProbeScore =
+    copy(children = c)
   override def prettyName: String = "kv_probe"
 }
 
 object KvProbe {
-  def column(key: Column, ref: KvScorerRef): Column =
-    GraftColumnBridge.column(KvProbeScore(GraftColumnBridge.expression(key), ref))
+  /** The bin types [[KvProbeScore]] packs. */
+  def bin(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  def column(bins: Seq[Column], table: DenseAnswers): Column =
+    GraftColumnBridge.column(KvProbeScore(bins.map(GraftColumnBridge.expression), table))
 }

@@ -67,19 +67,17 @@ object SqlGen {
       .mkString("(CASE ", " ", s" ELSE ${splits.length} END)")
 
   /** Fitted-categorical bin index — mirrors CategoricalBins.toColumn
-    * (map lookup; NULL/unseen -> overflow bin = mapping.size). */
-  def catCase(c: String, mapping: Map[String, Int]): String = {
-    val overflow = mapping.size
-    if (mapping.isEmpty) overflow.toString
-    else mapping.toSeq.sortBy(_._1)
+    * (map lookup; NULL/unseen -> its overflow bin). */
+  def catCase(c: String, bins: CategoricalBins): String =
+    if (bins.mapping.isEmpty) bins.overflow.toString
+    else bins.mapping.toSeq.sortBy(_._1)
       .map { case (v, i) => s"WHEN ${slit(v)} THEN $i" }
-      .mkString(s"(CASE $c ", " ", s" ELSE $overflow END)")
-  }
+      .mkString(s"(CASE $c ", " ", s" ELSE ${bins.overflow} END)")
 
   /** Bin expression for any fitted BinSpec over SQL expression `c`. */
   def binSql(spec: BinSpec, c: String): String = spec match {
     case NumericBins(splits)   => binCaseExact(c, splits.toSeq)
-    case CategoricalBins(m)    => catCase(c, m)
+    case cat: CategoricalBins  => catCase(c, cat)
   }
 
   /** Spark's round(col, 6) semantics driver-side (RoundBase on

@@ -33,6 +33,21 @@ class CoreSpec extends AnyFunSuite {
     assert(df.as[Long].collect().toSeq == Seq(0L, 1L, 2L, 2L))
   }
 
+  test("CategoricalBins: more categories than bins keep NULL and unseen in [0, numBins)") {
+    // six categories, most frequent first; maxBins = 4 folds c3..c5 into bin 3
+    val rows = (0 until 6).flatMap(i => Seq.fill(10 - i)((s"c$i", (i % 2).toDouble)))
+    val bins = Binning.fitCategorical(rows.toDF("v", "y"), "v", "y", maxBins = 4)
+    assert(bins.mapping.size == 6 && bins.numBins == 4 + 1)
+    val served = Seq(None, Some("zz"), Some("c5")).toDF("v")
+      .select(bins.toColumn(col("v"))).as[Long].collect().toSeq
+    val sql = spark.sql(s"SELECT ${graft.queries.SqlGen.catCase("v", bins)} AS b " +
+      "FROM VALUES (CAST(NULL AS STRING)), ('zz'), ('c5') AS t(v)").as[Long].collect().toSeq
+    val driver = Seq(null, "zz", "c5").map(bins.binValue)
+    assert(served == Seq(4L, 4L, 3L) && sql == served && driver == served,
+      s"column $served, SQL $sql, driver $driver")
+    assert(served.forall(b => b >= 0 && b < bins.numBins))
+  }
+
   test("fitNumeric produces sorted splits bounded by maxBins") {
     val df = (1 to 1000).map(i => (i.toDouble, if (i > 500) 1.0 else 0.0)).toDF("f", "y")
     val bins = Binning.fitNumeric(df, "f", "y", maxBins = 4)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** The compiled single-projection probe (KvScorerRef kernel) must be
+/** The compiled single-projection probe (the dense answer table) must be
   * bitwise identical to the broadcast-join cascade on every path:
   * exact hit, each prefix length, global fallback, NULL-translated
   * keys — and must be the plan actually chosen for a small index.
@@ -185,5 +185,114 @@ class KvProbeSpec extends AnyFunSuite {
       assert(!plan.contains("Join"), "compiled probe must not join")
       assert(!plan.contains("Exchange"), "compiled probe must not exchange")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  }
+
+  /** A model over the Long bin columns b0..b(k-1), trained on a seeded
+    * ~60% of the cells of `ranges`, and its key. */
+  private def binModel(ranges: Seq[Int], task: Task, seed: Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val cells = ranges.foldLeft(Seq(Seq.empty[Long]))((acc, r) => acc.flatMap(p => (0 until r).map(p :+ _.toLong)))
+    val votes = cells.filter(_ => rnd.nextDouble() < 0.6).flatMap { c =>
+      Seq.fill(1 + rnd.nextInt(3))(
+        (c.mkString("."), if (task == Task.MultiClass) rnd.nextInt(3).toDouble else rnd.nextInt(2).toDouble))
+    }
+    val key = Keys.keyColumn(ranges.indices.map(i => col(s"b$i")))
+    (KvIndexBuilder.buildFromKeyed(votes.toDF("key", "pred"), ranges.length, task), key)
+  }
+
+  /** Every slot of the extended key space: each field from -1 to two past
+    * its trained range, plus both Long extremes — as an RDD-backed frame
+    * of non-nullable Long bins (so the probe runs through codegen) with
+    * a row id. */
+  private def extendedSpace(ranges: Seq[Int]): DataFrame = {
+    val values = ranges.map(r => (Seq(Long.MinValue, Long.MaxValue) ++ (-1L to r + 1L)))
+    val rows = values.foldLeft(Seq(Seq.empty[Long]))((acc, vs) => acc.flatMap(p => vs.map(p :+ _)))
+    val schema = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.IntegerType, nullable = false) +:
+        ranges.indices.map(i => org.apache.spark.sql.types.StructField(s"b$i",
+          org.apache.spark.sql.types.LongType, nullable = false)))
+    val data = rows.zipWithIndex.map { case (r, i) => org.apache.spark.sql.Row.fromSeq(i +: r) }
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 4), schema)
+  }
+
+  private def executedPlan(df: DataFrame): String = {
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan.toString
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  }
+
+  test("dense probe equals joinProbe and scoreKey bitwise over the whole key space") {
+    for ((ranges, task, seed) <- Seq(
+        (Seq(3, 4, 2), Task.Classification, 1), (Seq(3, 4, 2), Task.MultiClass, 2),
+        (Seq(3, 2, 3, 3), Task.Classification, 3), (Seq(3, 2, 3, 3), Task.MultiClass, 4))) {
+      val (m, key) = binModel(ranges, task, seed)
+      val scorer = m.toLocalScorer
+      val input = extendedSpace(ranges)
+      val dense = m.probe(input, key, "p")
+      assert(executedPlan(dense).contains("kv_probe("), s"$ranges $task must serve dense")
+      def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val got = byId(dense)
+      val joined = byId(m.joinProbe(input, key, "p"))
+      // the interpreted path: a local relation folds the projection at plan time
+      val folded = byId(m.probe(spark.createDataFrame(input.collect().toSeq.asJava, input.schema), key, "p"))
+      val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      assert(got.size == keys.size && joined.size == keys.size && folded.size == keys.size)
+      keys.foreach { case (id, k) =>
+        val local = scorer.scoreKey(k)
+        assert(bits(got(id)) == bits(local) && bits(joined(id)) == bits(local) &&
+          bits(folded(id)) == bits(local),
+          s"$ranges $task key $k: dense ${got(id)} joined ${joined(id)} folded ${folded(id)} local $local")
+      }
+      // every level of the cascade answers some slot
+      val levels = keys.values.map { k =>
+        if (scorer.kv.contains(k)) ranges.length
+        else scorer.prefixes.collectFirst {
+          case (l, t) if t.contains(graft.core.LocalScorer.prefix(k, l)) => l
+        }.getOrElse(0)
+      }.toSet
+      assert(levels == (0 to ranges.length).toSet, s"$ranges $task levels $levels")
+    }
+  }
+
+  test("a fused dense serve is one projection: no key string, no join, no probe-side exchange") {
+    val (m, key) = binModel(Seq(3, 4, 2), Task.Classification, 5)
+    val fused = m.probe(extendedSpace(Seq(3, 4, 2)), key, "p")
+      .filter(col("p") > 0.5).groupBy(col("b0")).agg(count(lit(1)).as("n"))
+    val plan = executedPlan(fused)
+    assert(plan.contains("kv_probe("), plan)
+    assert(!plan.contains("concat_ws"), s"the dense serve must not build the key:\n$plan")
+    assert(!plan.contains("Join"), s"the dense serve must not join:\n$plan")
+    // the one exchange is the aggregate's own shuffle
+    assert("Exchange ".r.findAllIn(plan).size == 1, s"only the aggregate may exchange:\n$plan")
+  }
+
+  test("a non-bin key, a nullable bin and an over-cap key space take the join form") {
+    import spark.implicits._
+    def form(df: DataFrame): String = {
+      val plan = executedPlan(df)
+      if (plan.contains("kv_probe(")) "dense" else if (plan.contains("BroadcastHashJoin")) "join" else plan
+    }
+    val (m, key) = binModel(Seq(3, 4, 2), Task.Classification, 6)
+    val input = extendedSpace(Seq(3, 4, 2))
+    assert(form(m.probe(input, key, "p")) == "dense")
+    assert(form(m.probe(input.select(col("id"), key.as("k")), col("k"), "p")) == "join")
+    val nullable = Keys.keyColumn(Seq(when(col("b0") > 100, lit(null)).otherwise(col("b0")),
+      col("b1"), col("b2")))
+    assert(form(m.probe(input, nullable, "p")) == "join")
+    // 400 kv keys, far below the cap, over a 401 x 401 key space above it
+    val wide = KvIndexBuilder.buildFromKeyed(
+      (0 until 400).map(i => (s"$i.$i", (i % 2).toDouble)).toDF("key", "pred"), keyLen = 2, Task.Classification)
+    assert(wide.kvCount <= graft.core.KvModel.MaxCompiledEntries)
+    val wideInput = (0L until 500L).map(i => (i, i)).toDF("b0", "b1")
+    val wideKey = Keys.keyColumn(Seq(col("b0"), col("b1")))
+    assert(form(wide.probe(wideInput, wideKey, "p")) == "join")
+    // and the join form serves every row the same as the scorer
+    val scorer = wide.toLocalScorer
+    wide.probe(wideInput, wideKey, "p").select(wideKey, col("p")).collect().foreach { r =>
+      assert(bits(r.getDouble(1)) == bits(scorer.scoreKey(r.getString(0))), r.toString)
+    }
   }
 }

@@ -240,6 +240,46 @@ class PipelineSpec extends AnyFunSuite {
     assert(p == kvVal)
   }
 
+  test("populatePaths serves a NULL category as an exact hit when categories outnumber bins") {
+    // six categories (no NULL in training), maxBins = 4: the overflow
+    // bin is a path of the key space, so populate fills it
+    val rnd = new scala.util.Random(11)
+    val df = (1 to 3000).map { _ =>
+      val c = rnd.nextInt(6)
+      (s"c$c", if (c % 2 == 0) 1.0 else 0.0)
+    }.toDF("cat", "y").withColumn("pred", col("y"))
+    val cfg = InferDbPipeline.Config(Seq("cat"), categorical = Set("cat"), target = "y",
+      task = Task.Classification, maxBins = 4, populatePaths = true)
+    val fitted = InferDbPipeline.fit(df, cfg, "pred")
+    assert(fitted.selected == Seq("cat") && fitted.bins("cat").numBins == 5)
+    val nullRow = Seq(Option.empty[String]).toDF("cat")
+    val key = nullRow.select(fitted.keyColumn).head().getString(0)
+    val kv = fitted.kv.toLocalScorer.kv
+    assert(kv.contains(key), s"NULL-category key $key missing from ${kv.keys.toSeq.sorted}")
+    assert(fitted.transform(nullRow, "p").select("p").head().getDouble(0) == kv(key))
+  }
+
+  test("indexEntries reads the cached kv count without a Spark job") {
+    val df = (1 to 500).map(i => (i.toDouble % 10, if (i % 10 >= 5) 1.0 else 0.0)).toDF("f", "y")
+    val (fitted, _) = InferDbPipeline.fitWithModel(df, InferDbPipeline.Config(Seq("f"),
+      target = "y", task = Task.Classification, maxBins = 4))
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val entries = try {
+      val n = fitted.indexEntries
+      org.apache.spark.ListenerBusDrain(sc)
+      n
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs")
+    assert(entries == fitted.kv.kv.count())
+  }
+
   test("toLocalScorer matches the distributed probe row-for-row") {
     val rnd = new scala.util.Random(5)
     val df = (1 to 3000).map { _ =>
