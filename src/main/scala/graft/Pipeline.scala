@@ -66,12 +66,12 @@ object InferDbPipeline {
       }
     }
 
-    /** Rows in the kv relation (the "index size" driver), counted once
-      * when the relation was cached or loaded. */
+    /** Exact (kv) entries in the index (the "index size" driver),
+      * counted once when the index was cached or loaded. */
     def indexEntries: Long = kv.kvCount
 
-    /** Persist every serve-time artifact (kv + prefix relations, bin
-      * specs, selection, fallbacks) to `dir` — the reference's joblib
+    /** Persist every serve-time artifact (the index relation, bin
+      * specs, selection) to `dir` — the reference's joblib
       * dump of the fitted pipeline/trie (transpiler.py:3188-3194),
       * relational here. [[InferDbPipeline.load]] round-trips it. */
     def save(dir: String): Unit = core.Persist.save(this, dir)

@@ -40,14 +40,17 @@ object Aggregates {
 }
 
 /** The learned key–value index: exact probe + field-wise prefix
-  * fallback (ref: src/inference_trie.py:60-98, src/transpiler.py
-  * :1004-1099; SURVEY §2.9).
+  * fallback + global fallback (ref: src/inference_trie.py:60-98,
+  * src/transpiler.py:1004-1099; SURVEY §2.9).
   *
-  * Spark-first design: instead of the reference's row-at-a-time
-  * dynamic-SQL `prefix_search`, every field-wise prefix of every key is
-  * aggregated ONCE at build time into a single prefix relation
-  * `(len, prefix, value)`, next to the exact `kv` relation. The probe
-  * then takes one of two bitwise-identical forms, chosen in [[probe]]
+  * Spark-first design: like the reference's trie, the index is ONE
+  * structure — a cached relation `index (len, key, value)`. Its rows at
+  * `len = keyLen` are the exact kv entries (the trie's leaves); every
+  * field-wise prefix of every key is aggregated ONCE at build time into
+  * the rows at `len = 1 .. keyLen-1` (the inner nodes); and the single
+  * `len = 0` row is the global value (the root), instead of the
+  * reference's row-at-a-time dynamic-SQL `prefix_search`. The probe then
+  * takes one of two bitwise-identical forms, chosen in [[probe]]
   * ([[KvProbeSpec]] pins them):
   *
   *  - **dense** (a [[Keys.keyColumn]] over `keyLen` non-nullable
@@ -64,34 +67,42 @@ object Aggregates {
   *    already needed. The levels are lazy: a prefix level computes its
   *    key and probes its table only for rows no longer level resolved.
   *
-  * At 100 TB the probe side streams; the index sides are bounded by the
+  * Build it with [[KvIndexBuilder.buildFromKeyed]] or [[KvIndexState]];
+  * [[KvModel.materialize]] is the one place an index is cached.
+  *
+  * At 100 TB the probe side streams; the index side is bounded by the
   * key space (small by construction — that is the point of the paper).
   */
 final case class KvModel(
     task: Task,
     keyLen: Int,
-    kv: DataFrame,          // (key string, value double), cached
-    prefixRel: DataFrame,   // (len int, prefix string, value double), cached; len = 1 .. keyLen-1
-    globalValue: Double,    // trie-root fallback
-    kvCount: Long,          // |kv|, counted once when the relation is cached
-    prefixCount: Long       // |prefixRel|, likewise
+    index: DataFrame,    // (len int, key string, value double), cached
+    globalValue: Double, // the len = 0 row's value: the trie-root fallback
+    kvCount: Long        // rows at len = keyLen, counted when the index was cached
 ) {
   /** The index entries as a typed Dataset (SURVEY §1.2 fixed shape). */
   def entries: org.apache.spark.sql.Dataset[Types.KVEntry] = {
     import kv.sparkSession.implicits._
-    kv.select(col("key"), col("value")).as[Types.KVEntry]
+    kv.as[Types.KVEntry]
   }
 
   /** Prefix lengths in cascade order, longest first. */
   private def levels: Seq[Int] = keyLen - 1 to 1 by -1
 
-  /** Per-level views of [[prefixRel]], longest first: len ->
-    * (prefix string, value double). Built once per model and reused by
-    * every [[joinProbe]]: five fresh views per call re-analyzed the
-    * relation's lineage and cost a 6-field cascade serve ~0.1 s
-    * (4 local cores). */
+  private def rowsAt(l: Int): DataFrame = index.where(col("len") === l)
+
+  /** The exact entries, (key string, value double): the rows at
+    * `len = keyLen`. A view of [[index]], built once per model (so its
+    * `unpersist()` frees nothing). */
+  @transient lazy val kv: DataFrame = rowsAt(keyLen).select(col("key"), col("value"))
+
+  /** Per-level views of [[index]], longest first: len ->
+    * (prefix string, value double) for `len = keyLen-1 .. 1`; the global
+    * value is not a level. Built once per model and reused by every
+    * [[joinProbe]]: five fresh views per call re-analyzed the index's
+    * lineage and cost a 6-field cascade serve ~0.1 s (4 local cores). */
   @transient lazy val prefixes: Seq[(Int, DataFrame)] = levels.map { l =>
-    l -> prefixRel.where(col("len") === l).select(col("prefix"), col("value"))
+    l -> rowsAt(l).select(col("key").as("prefix"), col("value"))
   }
 
   /** Append `predName` to `input` by probing the index with `key`.
@@ -167,18 +178,16 @@ final case class KvModel(
       .drop("__key" +: values: _*)
   }
 
-  /** Collect the (bounded-by-key-space) kv and prefix relations ONCE
-    * into plain maps for driver-local point lookups — the reference's
-    * standalone-trie single-row use case (transpiler.py:3117-3215;
-    * SURVEY §1.1). Two collects on the caller's thread, so both jobs
-    * run under the caller's job group and description. */
+  /** Collect the (bounded-by-key-space) index ONCE into plain maps for
+    * driver-local point lookups — the reference's standalone-trie
+    * single-row use case (transpiler.py:3117-3215; SURVEY §1.1). One
+    * collect on the caller's thread, so its one job runs under the
+    * caller's job group and description. */
   def toLocalScorer: LocalScorer = {
-    val kvMap = kv.select(col("key"), col("value")).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val byLen = prefixRel.select(col("len"), col("prefix"), col("value")).collect()
-      .groupBy(_.getInt(0))
+    val byLen = index.collect().groupBy(_.getInt(0))
       .map { case (l, rows) => l -> rows.map(r => r.getString(1) -> r.getDouble(2)).toMap }
-    LocalScorer(kvMap, levels.map(l => l -> byLen.getOrElse(l, Map.empty[String, Double])), globalValue)
+      .withDefaultValue(Map.empty[String, Double])
+    LocalScorer(byLen(keyLen), levels.map(l => l -> byLen(l)), globalValue)
   }
 }
 
@@ -253,8 +262,10 @@ final case class KvIndexState(task: Task, keyLen: Int, stats: DataFrame) {
     copy(stats = KvIndexState.merge(
       stats.unionByName(KvIndexState.partial(keyed, task)), task))
 
-  /** Finalize into a servable [[KvModel]] (prefix relation + global
-    * fallback derive from the kv exactly like a fresh build). */
+  /** Finalize into a servable [[KvModel]]: the per-key mean (`sum /
+    * cnt`, the same division as Spark's `avg`) or pinned-tie mode, then
+    * [[KvIndexBuilder.fromKv]]. A fresh build finalizes a fresh state, so
+    * this is the one definition of the per-key value. */
   def toModel(balanceRatio: Option[Double] = None): KvModel = {
     val kv = task match {
       case Task.MultiClass =>
@@ -272,8 +283,12 @@ object KvIndexState {
   def build(keyed: DataFrame, keyLen: Int, task: Task): KvIndexState =
     KvIndexState(task, keyLen, partial(keyed, task))
 
+  /** Per-key statistics of the (key, pred) rows that vote: a NULL
+    * prediction carries no vote, so a key seen only with NULL predictions
+    * gets no kv entry and falls through to its prefix, and a NULL can
+    * never win a mode. */
   private def partial(keyed: DataFrame, task: Task): DataFrame = {
-    val voted = KvIndexBuilder.votes(keyed)
+    val voted = keyed.select(col("key"), col("pred").cast("double").as("pred")).where(col("pred").isNotNull)
     task match {
       case Task.MultiClass =>
         voted.groupBy(col("key"), col("pred")).agg(count(lit(1)).as("cnt"))
@@ -296,64 +311,60 @@ object KvModel {
     * above it the probe takes the broadcast joins. The table rides every
     * task binary, so it must stay small: 2^17 doubles is 1 MB. */
   val MaxCompiledEntries: Long = 1L << 17
+
+  /** Cache `rows` (len, key, value) as the index of a [[KvModel]] and
+    * read its kv count and global value in ONE pass, which also fills the
+    * cache every probe broadcasts from — shared by the build and
+    * [[Persist.load]]. On a load that pass is the only job; a build also
+    * runs its aggregates' stages, and adaptive execution may run the last
+    * of them into the cache as a job of its own. `origin` names the rows
+    * in the error thrown when they have no `len = 0` row: an index
+    * nothing voted for. */
+  private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
+    val index = rows.select(col("len"), col("key"), col("value")).cache()
+    val (kvCount, global) = index.select(col("len"), col("value")).rdd
+      .aggregate((0L, Option.empty[Double]))(
+        { case ((n, g), r) =>
+          (if (r.getInt(0) == keyLen) n + 1 else n, if (r.getInt(0) == 0) Some(r.getDouble(1)) else g) },
+        { case ((n1, g1), (n2, g2)) => (n1 + n2, g1.orElse(g2)) })
+    if (global.isEmpty) index.unpersist()
+    require(global.isDefined, s"$origin has no len = 0 (global value) row: no (key, prediction) " +
+      "row voted, so the input was empty or every prediction NULL")
+    KvModel(task, keyLen, index, global.get, kvCount)
+  }
 }
 
 object KvIndexBuilder {
-  /** Build the KV index from an encoded training DataFrame.
+  /** Build the KV index from (key, pred) rows — the trained model's
+    * predictions on train, keyed (transpiler.py:573). Aggregation per
+    * key: mean for regression/binary, mode for multi-class
+    * (transpiler.py:986-996), through the same [[KvIndexState]] an
+    * incremental append finalizes, so append ≡ rebuild by construction.
     *
-    * @param encoded  DataFrame with LongType bin columns `keyCols` and
-    *                 a numeric prediction column `predCol` (the trained
-    *                 model's predictions on train — transpiler.py:573).
     * @param balanceRatio optional class-balance reweighting
     *                 (`min(value*ratio, 1)`, transpiler.py:3080-3081).
-    *
-    * Aggregation per key: mean for regression/binary, mode for
-    * multi-class (transpiler.py:986-996). Prefix aggregates run over
-    * DISTINCT KEYS (one row per kv entry), not raw rows — matching the
-    * trie's DFS over leaves (inference_trie.py:73-98).
     */
-  def build(
-      encoded: DataFrame,
-      keyCols: Seq[String],
-      predCol: String,
-      task: Task,
-      balanceRatio: Option[Double] = None
-  ): KvModel = {
-    val keyed = encoded.select(
-      Keys.keyColumn(keyCols.map(col)).as("key"),
-      col(predCol).cast("double").as("pred"))
-    buildFromKeyed(keyed, keyCols.length, task, balanceRatio)
-  }
-
-  /** Build from an already-keyed DataFrame with columns (key, pred). */
   def buildFromKeyed(
       keyed: DataFrame,
       keyLen: Int,
       task: Task,
       balanceRatio: Option[Double] = None
-  ): KvModel = {
-    val voted = votes(keyed)
-    val kvRaw = task match {
-      case Task.MultiClass =>
-        Aggregates.mode(voted, Seq("key"), "pred").withColumnRenamed("pred", "value")
-      case _ =>
-        voted.groupBy("key").agg(avg("pred").as("value"))
-    }
-    fromKv(kvRaw, keyLen, task, balanceRatio)
-  }
+  ): KvModel =
+    KvIndexState.build(keyed, keyLen, task).toModel(balanceRatio)
 
-  /** The (key, pred) rows that vote: a NULL prediction carries no vote,
-    * so a key seen only with NULL predictions gets no kv entry and falls
-    * through to its prefix, and a NULL can never win a mode. Shared by
-    * the fresh build and [[KvIndexState]], so append ≡ rebuild. */
-  private[core] def votes(keyed: DataFrame): DataFrame =
-    keyed.select(col("key"), col("pred").cast("double").as("pred")).where(col("pred").isNotNull)
-
-  /** Finalize a (key, value) kv relation into a servable model:
-    * balance reweight, then the prefix relation and global aggregate —
-    * shared by the fresh build and [[KvIndexState.toModel]]. The prefix
-    * relation is ONE aggregate: each kv row explodes into its keyLen-1
-    * field-wise prefixes, grouped by (len, prefix). */
+  /** Finalize a (key, value) kv relation into a servable model: balance
+    * reweight, then ONE index relation. The kv rows are copied in at
+    * `len = keyLen` (their bits untouched); one aggregate over them —
+    * each kv row explodes into its field-wise prefixes of length
+    * 0 .. keyLen-1 (length 0 is the empty prefix every key shares),
+    * grouped by (len, prefix) with `avg`, or [[Aggregates.mode]] for
+    * multi-class — gives every prefix level and, as its one `len = 0`
+    * row, the global value. Prefix aggregates run over DISTINCT KEYS
+    * (one row per kv entry), not raw rows — the trie's DFS over leaves
+    * (inference_trie.py:73-98). Both branches read the same kv plan, so
+    * its aggregate runs once: the branches share its exchange. The index
+    * is one partition, like a saved one: every join-cascade broadcast
+    * scans all of its partitions, a task each, on every serve. */
   private[core] def fromKv(
       kvRaw: DataFrame,
       keyLen: Int,
@@ -364,29 +375,16 @@ object KvIndexBuilder {
       case Some(r) => kvRaw.withColumn("value", least(col("value") * r, lit(1.0)))
       case None    => kvRaw
     }
-    val kvCached = kv.cache()
-    val kvN = kvCached.count() // materialize once; every probe broadcasts from here
-
-    val pfx =
-      if (keyLen <= 1) // no prefix levels: an empty relation of the same shape
-        kvCached.select(lit(0).as("len"), col("key").as("prefix"), col("value")).where(lit(false))
-      else kvCached
-        .select(explode(array((1 until keyLen).map(l =>
-          struct(lit(l).as("len"), Keys.prefix(col("key"), l).as("prefix"))): _*)).as("p"), col("value"))
-        .select(col("p.len").as("len"), col("p.prefix").as("prefix"), col("value"))
-    val prefixRel = (task match {
-      case Task.MultiClass => Aggregates.mode(pfx, Seq("len", "prefix"), "value")
-      case _ => pfx.groupBy("len", "prefix").agg(avg("value").as("value"))
-    }).cache()
-    val prefixN = prefixRel.count()
-
-    val globalValue = task match {
-      case Task.MultiClass =>
-        Aggregates.mode(kvCached.select(col("value")), Seq.empty, "value")
-          .head().getDouble(0)
-      case _ =>
-        kvCached.agg(avg("value")).head().getDouble(0)
+    val pfx = kv
+      .select(explode(array((0 until keyLen).map(l =>
+        struct(lit(l).as("len"), Keys.prefix(col("key"), l).as("key"))): _*)).as("p"), col("value"))
+      .select(col("p.len").as("len"), col("p.key").as("key"), col("value"))
+    val aggregated = task match {
+      case Task.MultiClass => Aggregates.mode(pfx, Seq("len", "key"), "value")
+      case _ => pfx.groupBy("len", "key").agg(avg("value").as("value"))
     }
-    KvModel(task, keyLen, kvCached, prefixRel, globalValue, kvN, prefixN)
+    KvModel.materialize(task, keyLen,
+      kv.select(lit(keyLen).as("len"), col("key"), col("value")).unionByName(aggregated).coalesce(1),
+      "the index")
   }
 }

@@ -1,38 +1,38 @@
 package graft.core
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Fitted-artifact persistence (S5 made real — the reference
   * joblib-dumps the fitted pipeline/trie and measures the artifact,
   * src/transpiler.py:3188-3194, :3266-3273; here the artifact IS a set
   * of relations, so it saves as parquet + a one-row meta relation).
   *
-  * Layout under `dir` — four relations for any key length:
-  *   meta/      one row: layout ([[Persist.Layout]]), task, key_len,
-  *              global_value, iv, selected, features, categorical,
-  *              target, max_bins, model and the other Config fields
+  * Layout under `dir` — three relations for any key length:
+  *   meta/      one row: layout ([[Persist.Layout]]), task, key_len, iv,
+  *              selected, features, categorical, target, max_bins, model
+  *              and the other Config fields
   *   bins/      one row per fitted feature: (feature, kind,
   *              splits array<double>, cat_keys, cat_vals) — parquet
   *              doubles round-trip EXACTLY (no decimal detour), so
   *              the reloaded bin splits serve the identical bits the
   *              in-memory pipeline fitted.
-  *   kv/        the exact (key, value) index relation
-  *   prefixes/  the (len, prefix, value) prefix fallback relation
+  *   index/     the one (len, key, value) index relation: the exact kv
+  *              at len = key_len, the prefix levels, and the global
+  *              value as its len = 0 row
   *
   * [[load]] rejects any other layout (a missing or different `layout`
-  * value) before it reads an index relation, so an old directory is
+  * value) before it reads the index relation, so an old directory is
   * never misread.
   *
   * A reloaded [[graft.InferDbPipeline.Fitted]] probes bit-identically
   * to the in-memory one by construction: every constant the serve plan
-  * embeds (splits, kv rows, fallbacks) round-trips through parquet
-  * unchanged. At 100 TB the save is a handful of broadcast-sized
-  * writes; the load is metadata-only until the first probe broadcasts.
+  * embeds (splits, index rows) round-trips through parquet unchanged.
+  * At 100 TB the save is a handful of broadcast-sized writes; the load
+  * caches the index in one job, like a fresh build.
   */
 object Persist {
   /** The layout this version writes and the only one it loads. */
-  val Layout = "kv+prefixes/2"
+  val Layout = "index/3"
 
   private def taskName(t: Task): String = t match {
     case Task.Regression => "regression"
@@ -47,13 +47,10 @@ object Persist {
   }
 
   def save(f: graft.InferDbPipeline.Fitted, dir: String): Unit = {
-    val spark = f.kv.kv.sparkSession
+    val spark = f.kv.index.sparkSession
     import spark.implicits._
-    // index relations: tiny (key-space-bounded) — one file each
-    f.kv.kv.select(col("key"), col("value"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/kv")
-    f.kv.prefixRel.select(col("len"), col("prefix"), col("value"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/prefixes")
+    // the index relation: tiny (key-space-bounded) — one file
+    f.kv.index.coalesce(1).write.mode("overwrite").parquet(s"$dir/index")
     f.bins.toSeq.sortBy(_._1).map {
       case (feat, NumericBins(splits)) =>
         (feat, "numeric", splits.toSeq, Seq.empty[String], Seq.empty[Int])
@@ -67,12 +64,12 @@ object Persist {
     // different model than the one that was saved if reused for a
     // refresh, even though serving alone wouldn't notice.
     val c = f.config
-    Seq((Layout, taskName(c.task), f.kv.keyLen, f.kv.globalValue, f.iv,
+    Seq((Layout, taskName(c.task), f.kv.keyLen, f.iv,
         f.selected, c.features, c.categorical.toSeq.sorted,
         c.target, c.maxBins, c.model,
         c.tolerance, c.maxFeatures, c.maxCandidates, c.balanceRatio,
         c.mlpHidden, c.maxOneHot, c.populatePaths))
-      .toDF("layout", "task", "key_len", "global_value", "iv", "selected",
+      .toDF("layout", "task", "key_len", "iv", "selected",
         "features", "categorical", "target", "max_bins", "model",
         "tolerance", "max_features", "max_candidates", "balance_ratio",
         "mlp_hidden", "max_one_hot", "populate_paths")
@@ -139,10 +136,6 @@ object Persist {
       }
       feat -> spec
     }.toMap
-    // cache + materialize like KvIndexBuilder: every probe broadcasts
-    // from these, so they must not re-read parquet per probe
-    val kv = spark.read.parquet(s"$dir/kv").cache()
-    val prefixRel = spark.read.parquet(s"$dir/prefixes").cache()
     val config = graft.InferDbPipeline.Config(
       features = strs(meta, "features"),
       categorical = strs(meta, "categorical").toSet,
@@ -159,7 +152,6 @@ object Persist {
       populatePaths = meta.getAs[Boolean]("populate_paths"))
     graft.InferDbPipeline.Fitted(
       config, bins, strs(meta, "selected"), meta.getAs[Double]("iv"),
-      KvModel(task, keyLen, kv, prefixRel, meta.getAs[Double]("global_value"),
-        kv.count(), prefixRel.count()))
+      KvModel.materialize(task, keyLen, spark.read.parquet(s"$dir/index"), s"$dir/index"))
   }
 }

@@ -263,7 +263,7 @@ object SqlGen {
       predName: String,
       maxEntries: Int = 4096,
       ctePrefix: String = ""): Option[(String, String)] = {
-    if (f.selected.isEmpty || f.kv.kvCount == 0 || f.kv.kvCount > maxEntries) return None
+    if (f.selected.isEmpty || f.kv.kvCount > maxEntries) return None
     val scorer = f.kv.toLocalScorer
     val kvRows = scorer.kv.toSeq.sortBy(_._1)
     val pfxRows = scorer.prefixes.map { case (l, m) => l -> m.toSeq.sortBy(_._1) }

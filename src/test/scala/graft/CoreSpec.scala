@@ -86,6 +86,11 @@ class CoreSpec extends AnyFunSuite {
     assert(out("r1") == 1.0)          // exact
     assert(out("r2") == 0.5)          // prefix "0" -> avg(1.0, 0.0) over kv leaves
     assert(out("r3") == 2.0 / 3)      // global avg over kv values
+    // the global value is the index's one len = 0 row: avg over the kv rows
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    val avgKv = model.kv.agg(avg("value")).head().getDouble(0)
+    val root = model.index.where(col("len") === 0).select("value").as[Double].collect().toSeq
+    assert(root.map(bits) == Seq(bits(avgKv)) && bits(model.globalValue) == bits(avgKv))
   }
 
   test("multi-class KV uses per-key mode with pinned tie-break") {
@@ -94,6 +99,11 @@ class CoreSpec extends AnyFunSuite {
     val model = KvIndexBuilder.buildFromKeyed(train, 2, Task.MultiClass)
     val kv = model.kv.as[(String, Double)].collect().toMap
     assert(kv("a.b") == 2.0)
+    // the global value is the mode over the kv rows, where classes 1.0
+    // and 2.0 tie: the pinned tie-break picks 1.0, and so does len = 0
+    val modeKv = Aggregates.mode(model.kv.select("value"), Seq.empty, "value").head().getDouble(0)
+    val root = model.index.where(col("len") === 0).select("value").as[Double].collect().toSeq
+    assert(modeKv == 1.0 && root == Seq(modeKv) && model.globalValue == modeKv)
   }
 
   test("typed Dataset accessors: KVEntry / Coef / NNWeight") {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental index maintenance: append(delta) must equal a
   * from-scratch rebuild over base ∪ delta — kv entries, the whole
-  * (len, prefix) relation, and the global fallback. For 0/1
+  * (len, key) index relation, and the global fallback. For 0/1
   * predictions the sums are exact integers in double, so mean equality
   * is BITWISE; multi-class mode merges integer counts, also exact.
   */
@@ -20,13 +20,14 @@ class KvIndexStateSpec extends AnyFunSuite {
     df.select(col(k), col(v)).collect()
       .map(r => r.getString(0) -> bits(r.getDouble(1))).toMap
 
-  private def prefixMap(m: graft.core.KvModel): Map[(Int, String), Long] =
-    m.prefixRel.select("len", "prefix", "value").collect()
+  /** The whole index relation: kv, every prefix level and len = 0. */
+  private def indexMap(m: graft.core.KvModel): Map[(Int, String), Long] =
+    m.index.select("len", "key", "value").collect()
       .map(r => (r.getInt(0), r.getString(1)) -> bits(r.getDouble(2))).toMap
 
   private def assertSameModel(a: graft.core.KvModel, b: graft.core.KvModel): Unit = {
     assert(kvMap(a.kv, "key", "value") == kvMap(b.kv, "key", "value"))
-    assert(prefixMap(a) == prefixMap(b))
+    assert(indexMap(a) == indexMap(b))
     assert(bits(a.globalValue) == bits(b.globalValue))
   }
 
@@ -91,5 +92,20 @@ class KvIndexStateSpec extends AnyFunSuite {
       parts.reduce(_.unionByName(_)), 2, Task.Regression)
     // regression means over small-integer predictions: sums exact
     assertSameModel(appended, rebuilt)
+  }
+
+  test("an index nothing voted for fails loudly, naming the cause") {
+    import spark.implicits._
+    val allNull = Seq[(String, java.lang.Double)]("1.1" -> null, "1.2" -> null).toDF("key", "pred")
+    val empty = allNull.where(lit(false))
+    for (task <- Seq(Task.Classification, Task.MultiClass);
+         (what, keyed) <- Seq("all-NULL predictions" -> allNull, "no rows" -> empty);
+         (path, build) <- Seq[(String, () => Any)](
+           "buildFromKeyed" -> (() => KvIndexBuilder.buildFromKeyed(keyed, 2, task)),
+           "KvIndexState" -> (() => KvIndexState.build(keyed, 2, task).toModel()))) {
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("no len = 0") && e.getMessage.contains("prediction"),
+        s"$task $what $path: ${e.getMessage}")
+    }
   }
 }

@@ -60,31 +60,21 @@ class KvProbeSpec extends AnyFunSuite {
     assert(bits(joined) == bits(model.globalValue))
   }
 
-  test("toLocalScorer runs two jobs, all under the caller's job group") {
+  test("build and toLocalScorer run pinned job counts under the caller's job group") {
     import spark.implicits._
     val keyed = (1 to 200).map(i => (s"${i % 2}.${i % 3}.${i % 5}.${i % 7}", (i % 2).toDouble))
       .toDF("key", "pred")
-    val m4 = KvIndexBuilder.buildFromKeyed(keyed, keyLen = 4, Task.Classification)
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(e.jobId)
+    Seq(Task.Classification -> 4, Task.MultiClass -> 6).foreach { case (task, buildJobs) =>
+      // the build: one job per exchange of the kv and prefix aggregates
+      // (mean 1 + 1, mode 2 + 2; the index's two branches share the kv's),
+      // the job that runs the index's last stage into the cache, then ONE
+      // job that reads the kv count and global value
+      val build = GroupJobs(KvIndexBuilder.buildFromKeyed(keyed, keyLen = 4, task))
+      assert(build.started.size == buildJobs && build.outside.isEmpty, s"$task build $build")
+      // ONE collect of the one index relation
+      val scorer = GroupJobs(build.result.toLocalScorer)
+      assert(scorer.started.size == 1 && scorer.outside.isEmpty, s"$task toLocalScorer $scorer")
     }
-    sc.addSparkListener(listener)
-    // job groups are thread-local properties: a collect submitted from a
-    // pool thread runs outside `g`, where cancelling `g` cannot reach it
-    val g = s"kv-local-scorer-${System.nanoTime()}"
-    try {
-      sc.setJobGroup(g, "toLocalScorer job count")
-      try m4.toLocalScorer finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    val started = jobs.asScala.toSeq
-    val inGroup = sc.statusTracker.getJobIdsForGroup(g).toSet
-    assert(started.size == 2, s"jobs $started")
-    assert(started.forall(inGroup), s"jobs $started, group $g has $inGroup")
   }
 
   /** A keyLen=4 index and one probe key per cascade outcome: an exact
@@ -226,8 +216,16 @@ class KvProbeSpec extends AnyFunSuite {
   test("dense probe equals joinProbe and scoreKey bitwise over the whole key space") {
     for ((ranges, task, seed) <- Seq(
         (Seq(3, 4, 2), Task.Classification, 1), (Seq(3, 4, 2), Task.MultiClass, 2),
-        (Seq(3, 2, 3, 3), Task.Classification, 3), (Seq(3, 2, 3, 3), Task.MultiClass, 4))) {
+        (Seq(3, 2, 3, 3), Task.Classification, 3), (Seq(3, 2, 3, 3), Task.MultiClass, 4),
+        // keyLen 1: no prefix level, the kv straight over the global value
+        (Seq(4), Task.Classification, 7))) {
       val (m, key) = binModel(ranges, task, seed)
+      // the one index relation: the kv rows at len = keyLen, one row per
+      // prefix at lens keyLen-1 .. 1, and exactly one len = 0 row
+      val lens = m.index.select("len").collect().map(_.getInt(0))
+      assert(lens.count(_ == ranges.length) == m.kvCount && lens.count(_ == 0) == 1 &&
+        lens.toSet == (0 to ranges.length).toSet, s"$ranges $task lens ${lens.distinct.sorted.toSeq}")
+      assert(m.prefixes.map(_._1) == (ranges.length - 1 to 1 by -1), s"$ranges $task")
       val scorer = m.toLocalScorer
       val input = extendedSpace(ranges)
       val dense = m.probe(input, key, "p")

@@ -50,31 +50,52 @@ class PersistSpec extends AnyFunSuite {
     def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
     def kvBits(m: KvModel) = m.kv.select("key", "value").collect()
       .map(r => r.getString(0) -> bits(r.getDouble(1))).toMap
-    def prefixBits(m: KvModel) = m.prefixRel.select("len", "prefix", "value").collect()
+    // the whole index relation: kv, every prefix level and len = 0
+    def indexBits(m: KvModel) = m.index.select("len", "key", "value").collect()
       .map(r => (r.getInt(0), r.getString(1)) -> bits(r.getDouble(2))).toMap
     assert(kvBits(trained.kv) == kvBits(reloaded.kv))
-    assert(prefixBits(trained.kv).nonEmpty)
-    assert(prefixBits(trained.kv) == prefixBits(reloaded.kv))
-    assert(reloaded.kv.kvCount == trained.kv.kvCount &&
-      reloaded.kv.prefixCount == trained.kv.prefixCount)
+    assert(indexBits(trained.kv).keys.exists { case (l, _) => l > 0 && l < trained.kv.keyLen })
+    assert(indexBits(trained.kv) == indexBits(reloaded.kv))
+    assert(reloaded.kv.kvCount == trained.kv.kvCount)
   }
 
-  test("a saved index is four relations; an older layout is rejected by name") {
+  test("a saved index is three relations; older layouts are rejected by name") {
     val dir = TmpDirs.scratch("persist_spec_layout", sf)
     trained.save(dir)
     val rels = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(rels == Set("meta", "bins", "kv", "prefixes"))
+    assert(rels == Set("meta", "bins", "index"))
+    // the load reads meta and bins (a schema job and a read job each),
+    // the index's schema, then caches the index in ONE job that also
+    // reads its kv count and global value
+    val load = GroupJobs(InferDbPipeline.load(spark, dir))
+    assert(load.started.size == 6 && load.outside.isEmpty, s"load $load")
+    val meta = spark.read.parquet(s"$dir/meta")
     // the per-length layout: meta without `layout`, kv/ and prefix_<l>/
-    val old = TmpDirs.scratch("persist_spec_old_layout", sf)
-    spark.read.parquet(s"$dir/meta").drop("layout").write.mode("overwrite").parquet(s"$old/meta")
-    spark.read.parquet(s"$dir/bins").write.mode("overwrite").parquet(s"$old/bins")
-    trained.kv.kv.write.mode("overwrite").parquet(s"$old/kv")
+    val perLength = TmpDirs.scratch("persist_spec_old_layout", sf)
+    meta.drop("layout").write.mode("overwrite").parquet(s"$perLength/meta")
+    trained.kv.kv.write.mode("overwrite").parquet(s"$perLength/kv")
     trained.kv.prefixes.foreach { case (l, t) =>
-      t.write.mode("overwrite").parquet(s"$old/prefix_$l")
+      t.write.mode("overwrite").parquet(s"$perLength/prefix_$l")
     }
-    val e = intercept[IllegalArgumentException](InferDbPipeline.load(spark, old))
-    assert(e.getMessage.contains("'<none>'") && e.getMessage.contains(s"'${Persist.Layout}'"),
-      e.getMessage)
+    // the two-relation layout: meta tagged kv+prefixes/2, kv/ and prefixes/
+    val twoRel = TmpDirs.scratch("persist_spec_kv_prefixes_layout", sf)
+    meta.withColumn("layout", lit("kv+prefixes/2")).write.mode("overwrite").parquet(s"$twoRel/meta")
+    trained.kv.kv.write.mode("overwrite").parquet(s"$twoRel/kv")
+    trained.kv.index.where(col("len") > 0 && col("len") < trained.kv.keyLen)
+      .withColumnRenamed("key", "prefix").write.mode("overwrite").parquet(s"$twoRel/prefixes")
+    for ((old, layout) <- Seq(perLength -> "<none>", twoRel -> "kv+prefixes/2")) {
+      spark.read.parquet(s"$dir/bins").write.mode("overwrite").parquet(s"$old/bins")
+      val e = intercept[IllegalArgumentException](InferDbPipeline.load(spark, old))
+      assert(e.getMessage.contains(s"'$layout'") && e.getMessage.contains(s"'${Persist.Layout}'"),
+        e.getMessage)
+    }
+    // an index without its len = 0 row is rejected naming the directory
+    val noRoot = TmpDirs.scratch("persist_spec_no_root", sf)
+    meta.write.mode("overwrite").parquet(s"$noRoot/meta")
+    spark.read.parquet(s"$dir/bins").write.mode("overwrite").parquet(s"$noRoot/bins")
+    trained.kv.index.where(col("len") > 0).write.mode("overwrite").parquet(s"$noRoot/index")
+    val e = intercept[IllegalArgumentException](InferDbPipeline.load(spark, noRoot))
+    assert(e.getMessage.contains(noRoot) && e.getMessage.contains("no len = 0"), e.getMessage)
   }
 
   test("reloaded index probes identically, including fallback paths") {

@@ -263,21 +263,9 @@ class PipelineSpec extends AnyFunSuite {
     val df = (1 to 500).map(i => (i.toDouble % 10, if (i % 10 >= 5) 1.0 else 0.0)).toDF("f", "y")
     val (fitted, _) = InferDbPipeline.fitWithModel(df, InferDbPipeline.Config(Seq("f"),
       target = "y", task = Task.Classification, maxBins = 4))
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val entries = try {
-      val n = fitted.indexEntries
-      org.apache.spark.ListenerBusDrain(sc)
-      n
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0, s"${jobs.get} jobs")
-    assert(entries == fitted.kv.kv.count())
+    val entries = GroupJobs(fitted.indexEntries)
+    assert(entries.started.isEmpty, s"jobs ${entries.started}")
+    assert(entries.result == fitted.kv.kv.count())
   }
 
   test("toLocalScorer matches the distributed probe row-for-row") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
@@ -17,5 +18,34 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+}
+
+/** The Spark jobs a block of driver code starts, counted under a job
+  * group of its own. Job groups are thread-local properties: a job
+  * submitted from a pool thread runs outside the group, where cancelling
+  * it cannot reach it, so a spec asserts `outside` is empty. */
+object GroupJobs {
+  final case class Counted[T](result: T, started: Seq[Int], outside: Seq[Int])
+
+  def apply[T](body: => T): Counted[T] = {
+    val sc = TestSpark.spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    val g = s"graft-spec-jobs-${System.nanoTime()}"
+    val result = try {
+      sc.setJobGroup(g, "spec job count")
+      val r = try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    val started = jobs.asScala.toSeq
+    val inGroup = sc.statusTracker.getJobIdsForGroup(g).toSet
+    Counted(result, started, started.filterNot(inGroup))
   }
 }
