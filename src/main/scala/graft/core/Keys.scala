@@ -1,17 +1,22 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Cast, ConcatWs, Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, ConcatWs, Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, CodegenFallback, EmptyBlock, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Compound-key assembly: '.'-joined bin indices in selected-feature
   * order, e.g. "2.0.5.11" (ref: src/transpiler.py:940-983, 1132-1166).
   * Owns the key format (`LocalScorer.prefix` mirrors [[prefix]]
   * driver-side): [[KvModel.probe]] reads the bins back out of a
-  * [[keyColumn]] through [[bins]], and its dense answer table names its
-  * slots through [[parse]] and [[render]].
+  * [[keyColumn]] through [[bins]], its dense answer table names its
+  * slots through [[parse]] and [[render]], and its join cascade probes a
+  * packed [[code]] of the bins when the index packs.
   */
 object Keys {
   /** Build the compound key from already-encoded (LongType) bin columns. */
@@ -38,10 +43,76 @@ object Keys {
     * (no sign, no leading zero, at most 9 digits) — the keys [[keyColumn]]
     * builds from non-negative bins; None for anything else. */
   def parse(key: String, n: Int): Option[Array[Int]] = {
-    val fields = key.split("\\.", -1)
-    def canonical(f: String) = f.nonEmpty && f.length <= 9 && f.forall(c => c >= '0' && c <= '9') &&
-      (f == "0" || f.head != '0')
-    if (fields.length == n && fields.forall(canonical)) Some(fields.map(_.toInt)) else None
+    val fields = new Array[Int](n)
+    if (scan(UTF8String.fromString(key), n)((i, f) => fields(i) = f)) Some(fields) else None
+  }
+
+  /** Pass each field of `key` to `field` (its index and value) while it
+    * reads as `n` canonical decimals; whether all of it did. It reads the
+    * bytes in place, so [[code]] can run it on every index row; [[parse]]
+    * shares it, so both accept exactly the same keys. */
+  private def scan(key: UTF8String, n: Int)(field: (Int, Int) => Unit): Boolean = {
+    val end = key.numBytes
+    def digit(i: Int) = i < end && key.getByte(i) >= '0' && key.getByte(i) <= '9'
+    var i = 0
+    var k = 0
+    while (k < n) {
+      if (k > 0) {
+        if (i == end || key.getByte(i) != '.') return false
+        i += 1
+      }
+      val start = i
+      var f = 0
+      while (i - start < 10 && digit(i)) {
+        f = f * 10 + (key.getByte(i) - '0')
+        i += 1
+      }
+      if (i == start || i - start > 9 || (i - start > 1 && key.getByte(start) == '0')) return false
+      field(k, f)
+      k += 1
+    }
+    i == end
+  }
+
+  /** Bits per field of the code of an `n`-field key: ⌊63/n⌋, so a code
+    * is a non-negative Long with field 0 in its highest bits. */
+  def codeWidth(n: Int): Int = 63 / n
+
+  /** The all-ones "unseen" digit of an `n`-field code. A bin outside
+    * `[0, unseen)` packs to it, and an index packs only fields below it,
+    * so an unseen digit matches no index key. */
+  def unseen(n: Int): Long = (1L << codeWidth(n)) - 1
+
+  /** The code of a [[keyColumn]] over `bins` (non-nullable, integral):
+    * its level-`l` [[codePrefix]] equals the [[code]] of an index key
+    * exactly when the key string's [[prefix]] equals that index key. */
+  private[core] def code(bins: Seq[Column]): Column =
+    GraftColumnBridge.column(BinCode(bins.map(GraftColumnBridge.expression)))
+
+  /** The first `l` fields of the code of an `n`-field key: the packed
+    * [[prefix]]. */
+  private[core] def codePrefix(code: Column, n: Int, l: Int): Column =
+    shiftrightunsigned(code, codeWidth(n) * (n - l))
+
+  /** The code of each index key: [[code]] of `key` at `len` fields of an
+    * `n`-field index, NULL where it does not pack. */
+  private[core] def indexCode(key: Column, len: Column, n: Int): Column =
+    GraftColumnBridge.column(IndexKeyCode(GraftColumnBridge.expression(key), GraftColumnBridge.expression(len), n))
+
+  /** The code of an index key of `l` fields (a prefix level of an
+    * `n`-field index, or its exact level when `l == n`) — equal to
+    * [[codePrefix]] of the code of every key it prefixes — when `key` is
+    * `l` canonical decimals ([[parse]]) each below [[unseen]]`(n)`; -1
+    * (no code) otherwise. */
+  private[core] def code(key: UTF8String, l: Int, n: Int): Long = {
+    val (width, top) = (codeWidth(n), unseen(n))
+    var code = 0L
+    var below = true
+    val scanned = scan(key, l) { (_, f) =>
+      below &&= f < top
+      code = code << width | f
+    }
+    if (scanned && below) code else -1L
   }
 }
 
@@ -57,4 +128,53 @@ private[core] final case class CompoundKey(children: Seq[Expression])
   override def sql: String = replacement.sql
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CompoundKey =
     copy(children = c)
+}
+
+/** The node of [[Keys.code]] over bins: each bin as a `⌊63/n⌋`-bit
+  * digit, field 0 highest, a bin outside `[0, unseen)` as the unseen
+  * digit. One shift-or per bin inside whole-stage codegen — no string,
+  * no parse. */
+private[core] final case class BinCode(children: Seq[Expression]) extends Expression {
+  private def width: Int = Keys.codeWidth(children.length)
+  private def unseen: Long = Keys.unseen(children.length)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = children.foldLeft(0L) { (code, c) =>
+    val b = c.eval(input).asInstanceOf[Number].longValue
+    code << width | (if (b >= 0 && b < unseen) b else unseen)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val digits = children.map { c =>
+      val b = c.genCode(ctx)
+      code"""
+        ${b.code}
+        ${ev.value} = ${ev.value} << $width | ((${b.value} >= 0 && ${b.value} < ${unseen}L) ? (long) ${b.value} : ${unseen}L);
+      """
+    }
+    ev.copy(
+      code = code"""
+        long ${ev.value} = 0L;
+        ${digits.foldLeft(EmptyBlock: Block)(_ + _)}
+      """,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BinCode = copy(children = c)
+  override def prettyName: String = "bin_code"
+}
+
+/** The node of [[Keys.indexCode]]: evaluated once per index row, where
+  * the index is cached. */
+private[core] final case class IndexKeyCode(left: Expression, right: Expression, n: Int)
+    extends BinaryExpression with CodegenFallback {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override protected def nullSafeEval(key: Any, len: Any): Any = {
+    val code = Keys.code(key.asInstanceOf[UTF8String], len.asInstanceOf[Int], n)
+    if (code < 0) null else code
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): IndexKeyCode =
+    copy(left = l, right = r)
 }

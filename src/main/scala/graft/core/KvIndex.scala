@@ -66,6 +66,9 @@ object Aggregates {
   *    only shuffle in the whole serve path is whatever the caller's plan
   *    already needed. The levels are lazy: a prefix level computes its
   *    key and probes its table only for rows no longer level resolved.
+  *    On the same bins, when the index [[packed]], it joins on a Long
+  *    [[Keys.code]] of them (stored once in the index's `code` column)
+  *    instead of the key string.
   *
   * Build it with [[KvIndexBuilder.buildFromKeyed]] or [[KvIndexState]];
   * [[KvModel.materialize]] is the one place an index is cached.
@@ -76,9 +79,10 @@ object Aggregates {
 final case class KvModel(
     task: Task,
     keyLen: Int,
-    index: DataFrame,    // (len int, key string, value double), cached
+    index: DataFrame,    // (len int, key string, value double, code long), cached
     globalValue: Double, // the len = 0 row's value: the trie-root fallback
-    kvCount: Long        // rows at len = keyLen, counted when the index was cached
+    kvCount: Long,       // rows at len = keyLen, counted when the index was cached
+    packed: Boolean      // every key at len >= 1 has a code (Keys.code), checked then too
 ) {
   /** The index entries as a typed Dataset (SURVEY §1.2 fixed shape). */
   def entries: org.apache.spark.sql.Dataset[Types.KVEntry] = {
@@ -105,28 +109,36 @@ final case class KvModel(
     l -> rowsAt(l).select(col("key").as("prefix"), col("value"))
   }
 
+  /** The packed twin of [[kv]] +: [[prefixes]]: len -> (code, value) for
+    * `len = keyLen .. 1`, memoized the same way. */
+  @transient private lazy val codeLevels: Seq[(Int, DataFrame)] = (keyLen +: levels).map { l =>
+    l -> rowsAt(l).select(col("code"), col("value"))
+  }
+
   /** Append `predName` to `input` by probing the index with `key`.
     * Exact hit wins; else the longest non-empty prefix aggregate; else
     * the global aggregate (trie-root DFS, inference_trie.py:91-98).
-    * The one place the form is chosen: the dense answer table when
-    * [[denseProbe]] applies, the broadcast-join cascade otherwise — same
-    * values bit for bit either way (a NULL key resolves to the global
-    * aggregate on the join path; a dense key is never NULL).
+    * The one place the form is chosen: the dense answer table when the
+    * key has [[intBins]] and the index a [[denseAnswers]] table, the
+    * broadcast-join cascade otherwise — same values bit for bit either
+    * way (a NULL key resolves to the global aggregate on the join path;
+    * a dense key is never NULL).
     */
-  def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
-    denseProbe(input, key) match {
+  def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
+    val bins = intBins(input, key)
+    bins.flatMap(b => denseAnswers.map(KvProbe.column(b, _))) match {
       case Some(answer) => input.withColumn(predName, answer)
-      case None => joinProbe(input, key, predName)
+      case None => cascade(input, key, bins, predName)
     }
+  }
 
-  /** The dense kernel over `key`'s bins, when `key` is a
-    * [[Keys.keyColumn]] of `keyLen` bins that are non-nullable and
-    * integral in `input` (an analysis, no job) and the index has a
-    * [[denseAnswers]] table. */
-  private def denseProbe(input: DataFrame, key: Column): Option[Column] =
+  /** `key`'s bins when it is a [[Keys.keyColumn]] of `keyLen` bins that
+    * are non-nullable and integral in `input` (an analysis, no job): the
+    * keys the dense table and the packed cascade serve. */
+  private def intBins(input: DataFrame, key: Column): Option[Seq[Column]] =
     Keys.bins(key).filter(_.length == keyLen).filter { bins =>
       input.select(bins: _*).schema.forall(f => !f.nullable && KvProbe.bin(f.dataType))
-    }.flatMap(bins => denseAnswers.map(KvProbe.column(bins, _)))
+    }
 
   /** [[LocalScorer.scoreKey]] over every slot of the key space, built
     * once per model — when every kv key is `keyLen` canonical decimals
@@ -150,26 +162,36 @@ final case class KvModel(
     }
 
   /** The broadcast-join cascade form of [[probe]] (always correct, for
-    * any string key; the scale path for key spaces above the dense cap).
+    * any string key; the scale path for key spaces above the dense cap). */
+  def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
+    cascade(input, key, intBins(input, key), predName)
+
+  /** The join cascade, one broadcast left join per level, exact first.
     *
     * Lazy, like the trie walk it reproduces: level `l`'s stream-side key
     * is `CASE WHEN <every longer level missed> THEN prefix(key, l) END`,
-    * so a row an earlier level resolved skips the `substring_index` and,
-    * its join key being NULL, the hash lookup too (broadcast hash joins
-    * never probe a NULL key). A level's value only counts when every
-    * earlier one is NULL, and then it probes exactly the eager key —
-    * the final coalesce is bit-identical to probing every level. */
-  def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
-    val keyed = input.withColumn("__key", key)
-    val exact = keyed.join(
-      broadcast(kv.select(col("key").as("__key"), col("value").as("__v_exact"))),
-      Seq("__key"), "left")
-    val (cascaded, values) = prefixes.foldLeft((exact, Seq("__v_exact"))) {
+    * so a row an earlier level resolved skips the prefix and, its join
+    * key being NULL, the hash lookup too (broadcast hash joins never
+    * probe a NULL key). A level's value only counts when every earlier
+    * one is NULL, and then it probes exactly the eager key — the final
+    * coalesce is bit-identical to probing every level.
+    *
+    * The key encoding is the one parameter: when `bins` are the key's
+    * and the index [[packed]], the stream key is their [[Keys.code]], a
+    * level's key a shift of it, and each table the index's `code` column
+    * — Long-keyed hash relations, and no key string built or cut per
+    * row. Otherwise the key string, [[Keys.prefix]] and the `key` column.
+    * Both match a row at the same levels, so the values are identical. */
+  private def cascade(input: DataFrame, key: Column, bins: Option[Seq[Column]], predName: String): DataFrame = {
+    val (streamKey, levelKey, tables) = bins.filter(_ => packed) match {
+      case Some(b) => (Keys.code(b), (k: Column, l: Int) => Keys.codePrefix(k, keyLen, l), codeLevels)
+      case None => (key, (k: Column, l: Int) => Keys.prefix(k, l), (keyLen -> kv) +: prefixes)
+    }
+    val (cascaded, values) = tables.foldLeft((input.withColumn("__key", streamKey), Seq.empty[String])) {
       case ((df, resolved), (l, tbl)) =>
-        val levelKey = when(coalesce(resolved.map(col): _*).isNull, Keys.prefix(col("__key"), l))
-        val joined = df.join(
-          broadcast(tbl.select(col("prefix").as(s"__p_$l"), col("value").as(s"__v_$l"))),
-          levelKey === col(s"__p_$l"), "left")
+        val probeKey =
+          if (l == keyLen) col("__key") else when(coalesce(resolved.map(col): _*).isNull, levelKey(col("__key"), l))
+        val joined = df.join(broadcast(tbl.toDF(s"__p_$l", s"__v_$l")), probeKey === col(s"__p_$l"), "left")
           .drop(s"__p_$l")
         (joined, resolved :+ s"__v_$l")
     }
@@ -184,7 +206,7 @@ final case class KvModel(
     * collect on the caller's thread, so its one job runs under the
     * caller's job group and description. */
   def toLocalScorer: LocalScorer = {
-    val byLen = index.collect().groupBy(_.getInt(0))
+    val byLen = index.select(col("len"), col("key"), col("value")).collect().groupBy(_.getInt(0))
       .map { case (l, rows) => l -> rows.map(r => r.getString(1) -> r.getDouble(2)).toMap }
       .withDefaultValue(Map.empty[String, Double])
     LocalScorer(byLen(keyLen), levels.map(l => l -> byLen(l)), globalValue)
@@ -312,25 +334,28 @@ object KvModel {
     * task binary, so it must stay small: 2^17 doubles is 1 MB. */
   val MaxCompiledEntries: Long = 1L << 17
 
-  /** Cache `rows` (len, key, value) as the index of a [[KvModel]] and
-    * read its kv count and global value in ONE pass, which also fills the
-    * cache every probe broadcasts from — shared by the build and
-    * [[Persist.load]]. On a load that pass is the only job; a build also
-    * runs its aggregates' stages, and adaptive execution may run the last
-    * of them into the cache as a job of its own. `origin` names the rows
-    * in the error thrown when they have no `len = 0` row: an index
-    * nothing voted for. */
+  /** Cache `rows` (len, key, value) with each key's [[Keys.code]] as the
+    * index of a [[KvModel]], and read its kv count, its global value and
+    * whether every key packs in ONE pass, which also fills the cache every
+    * probe broadcasts from — shared by the build and [[Persist.load]], so
+    * the code is computed once per index and never per serve. On a load
+    * that pass is the only job; a build also runs its aggregates' stages,
+    * and adaptive execution may run the last of them into the cache as a
+    * job of its own. `origin` names the rows in the error thrown when
+    * they have no `len = 0` row: an index nothing voted for. */
   private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
-    val index = rows.select(col("len"), col("key"), col("value")).cache()
-    val (kvCount, global) = index.select(col("len"), col("value")).rdd
-      .aggregate((0L, Option.empty[Double]))(
-        { case ((n, g), r) =>
-          (if (r.getInt(0) == keyLen) n + 1 else n, if (r.getInt(0) == 0) Some(r.getDouble(1)) else g) },
-        { case ((n1, g1), (n2, g2)) => (n1 + n2, g1.orElse(g2)) })
+    val index = rows.select(col("len"), col("key"), col("value"),
+      Keys.indexCode(col("key"), col("len"), keyLen).as("code")).cache()
+    val (kvCount, global, packed) = index.select(col("len"), col("value"), col("code").isNotNull).rdd
+      .aggregate((0L, Option.empty[Double], true))(
+        { case ((n, g, p), r) =>
+          val len = r.getInt(0)
+          (if (len == keyLen) n + 1 else n, if (len == 0) Some(r.getDouble(1)) else g, p && (len == 0 || r.getBoolean(2))) },
+        { case ((n1, g1, p1), (n2, g2, p2)) => (n1 + n2, g1.orElse(g2), p1 && p2) })
     if (global.isEmpty) index.unpersist()
     require(global.isDefined, s"$origin has no len = 0 (global value) row: no (key, prediction) " +
       "row voted, so the input was empty or every prediction NULL")
-    KvModel(task, keyLen, index, global.get, kvCount)
+    KvModel(task, keyLen, index, global.get, kvCount, packed)
   }
 }
 

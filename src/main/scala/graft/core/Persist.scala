@@ -18,21 +18,36 @@ import org.apache.spark.sql.{Row, SparkSession}
   *              in-memory pipeline fitted.
   *   index/     the one (len, key, value) index relation: the exact kv
   *              at len = key_len, the prefix levels, and the global
-  *              value as its len = 0 row
+  *              value as its len = 0 row (the cached index's key codes
+  *              are recomputed on load, never saved)
   *
-  * [[load]] rejects any other layout (a missing or different `layout`
-  * value) before it reads the index relation, so an old directory is
-  * never misread.
+  * [[load]] reads each relation with the fixed schema [[save]] writes
+  * (no schema-inference job), and rejects any other layout (a missing
+  * or different `layout` value) before it reads the index relation, so
+  * an old directory is never misread.
   *
   * A reloaded [[graft.InferDbPipeline.Fitted]] probes bit-identically
   * to the in-memory one by construction: every constant the serve plan
   * embeds (splits, index rows) round-trips through parquet unchanged.
   * At 100 TB the save is a handful of broadcast-sized writes; the load
-  * caches the index in one job, like a fresh build.
+  * is three jobs: the meta row, the bins, and the index cached in one
+  * job, like a fresh build.
   */
 object Persist {
   /** The layout this version writes and the only one it loads. */
   val Layout = "index/3"
+
+  private val MetaSchema = "layout STRING, task STRING, key_len INT, iv DOUBLE, selected ARRAY<STRING>, " +
+    "features ARRAY<STRING>, categorical ARRAY<STRING>, target STRING, max_bins INT, model STRING, " +
+    "tolerance DOUBLE, max_features INT, max_candidates INT, balance_ratio DOUBLE, mlp_hidden INT, " +
+    "max_one_hot INT, populate_paths BOOLEAN"
+  private val BinsSchema =
+    "feature STRING, kind STRING, splits ARRAY<DOUBLE>, cat_keys ARRAY<STRING>, cat_vals ARRAY<INT>"
+  private val IndexSchema = "len INT, key STRING, value DOUBLE"
+  private def statsSchema(t: Task): String = t match {
+    case Task.MultiClass => "key STRING, pred DOUBLE, cnt BIGINT"
+    case _ => "key STRING, sum DOUBLE, cnt BIGINT"
+  }
 
   private def taskName(t: Task): String = t match {
     case Task.Regression => "regression"
@@ -50,7 +65,7 @@ object Persist {
     val spark = f.kv.index.sparkSession
     import spark.implicits._
     // the index relation: tiny (key-space-bounded) — one file
-    f.kv.index.coalesce(1).write.mode("overwrite").parquet(s"$dir/index")
+    f.kv.index.select("len", "key", "value").coalesce(1).write.mode("overwrite").parquet(s"$dir/index")
     f.bins.toSeq.sortBy(_._1).map {
       case (feat, NumericBins(splits)) =>
         (feat, "numeric", splits.toSeq, Seq.empty[String], Seq.empty[Int])
@@ -108,23 +123,22 @@ object Persist {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val is = fs.open(p)
     try props.load(is) finally is.close()
-    KvIndexState(
-      taskOf(props.getProperty("task")),
-      props.getProperty("key_len").toInt,
-      spark.read.parquet(s"$dir/stats"))
+    val task = taskOf(props.getProperty("task"))
+    KvIndexState(task, props.getProperty("key_len").toInt,
+      spark.read.schema(statsSchema(task)).parquet(s"$dir/stats"))
   }
 
   def load(spark: SparkSession, dir: String): graft.InferDbPipeline.Fitted = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val layout =
-      if (meta.schema.fieldNames.contains("layout")) meta.getAs[String]("layout") else "<none>"
+    val meta = spark.read.schema(MetaSchema).parquet(s"$dir/meta").head()
+    // an older meta has no `layout` column: it reads as NULL
+    val layout = Option(meta.getAs[String]("layout")).getOrElse("<none>")
     require(layout == Layout,
       s"$dir: saved index layout '$layout' is not the supported layout '$Layout'; re-save it")
     def strs(r: Row, field: String): Seq[String] =
       r.getAs[scala.collection.Seq[String]](field).toSeq
     val task = taskOf(meta.getAs[String]("task"))
     val keyLen = meta.getAs[Int]("key_len")
-    val bins: Map[String, BinSpec] = spark.read.parquet(s"$dir/bins").collect().map { r =>
+    val bins: Map[String, BinSpec] = spark.read.schema(BinsSchema).parquet(s"$dir/bins").collect().map { r =>
       val feat = r.getAs[String]("feature")
       val spec: BinSpec = r.getAs[String]("kind") match {
         case "numeric" =>
@@ -152,6 +166,6 @@ object Persist {
       populatePaths = meta.getAs[Boolean]("populate_paths"))
     graft.InferDbPipeline.Fitted(
       config, bins, strs(meta, "selected"), meta.getAs[Double]("iv"),
-      KvModel.materialize(task, keyLen, spark.read.parquet(s"$dir/index"), s"$dir/index"))
+      KvModel.materialize(task, keyLen, spark.read.schema(IndexSchema).parquet(s"$dir/index"), s"$dir/index"))
   }
 }

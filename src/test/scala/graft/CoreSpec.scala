@@ -65,6 +65,16 @@ class CoreSpec extends AnyFunSuite {
     assert(p == "2.0") // field-wise, NOT char-wise (SURVEY §2.9 divergence)
   }
 
+  test("Keys.parse reads exactly n canonical decimals") {
+    assert(Keys.parse("2.0.11", 3).map(_.toSeq).contains(Seq(2, 0, 11)))
+    assert(Keys.parse("999999999", 1).map(_.toSeq).contains(Seq(999999999)))
+    assert(Keys.parse("", 1).isEmpty && Keys.parse("", 0).map(_.toSeq).contains(Nil))
+    Seq("2.0", "2.0.11.3", "02.0.11", "2.-1.11", "2.+1.11", "2..11", "2.0.11.", ".2.0", "2.0.1x",
+        "2.0.1234567890", "2.0.11 ", "2.0.\u0661").foreach { k =>
+      assert(Keys.parse(k, 3).isEmpty, k)
+    }
+  }
+
   test("Aggregates.mode: highest count wins, ties break to lowest value") {
     val df = Seq(("g", 3L), ("g", 3L), ("g", 1L), ("g", 1L), ("g", 9L)).toDF("k", "v")
     val m = Aggregates.mode(df, Seq("k"), "v").as[(String, Long)].head()

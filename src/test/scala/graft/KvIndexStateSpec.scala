@@ -71,12 +71,17 @@ class KvIndexStateSpec extends AnyFunSuite {
     }.toDF("key", "pred", "i")
     val base  = rows.filter(col("i") % 3 =!= 0).select("key", "pred")
     val delta = rows.filter(col("i") % 3 === 0).select("key", "pred")
-    val st = KvIndexState.build(base, 2, Task.Classification)
-    val dir = TmpDirs.scratch("kv_state_spec", "x")
-    Persist.saveState(st, dir)
-    val reloaded = Persist.loadState(spark, dir)
-    assert(reloaded.task == st.task && reloaded.keyLen == st.keyLen)
-    assertSameModel(reloaded.append(delta).toModel(), st.append(delta).toModel())
+    for (task <- Seq(Task.Classification, Task.MultiClass)) {
+      val st = KvIndexState.build(base, 2, task)
+      val dir = TmpDirs.scratch("kv_state_spec", task.toString)
+      Persist.saveState(st, dir)
+      // the stats are read with the schema saveState wrote: no job
+      val load = GroupJobs(Persist.loadState(spark, dir))
+      assert(load.started.isEmpty, s"$task loadState $load")
+      val reloaded = load.result
+      assert(reloaded.task == st.task && reloaded.keyLen == st.keyLen)
+      assertSameModel(reloaded.append(delta).toModel(), st.append(delta).toModel())
+    }
   }
 
   test("multiple appends compose") {

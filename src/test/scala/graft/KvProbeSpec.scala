@@ -117,23 +117,44 @@ class KvProbeSpec extends AnyFunSuite {
   }
 
   test("every prefix join probes with a key conditional on the longer levels missing") {
-    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, If, IsNull}
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, ConcatWs, Expression, If, IsNull, SubstringIndex}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.types.LongType
     import spark.implicits._
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val input = Seq("1.1.1.1", "1.1.7.7").toDF("k")
-      val plan = cascade4.joinProbe(input, col("k"), "p").queryExecution.executedPlan
-      val joins = plan.collect { case j: BroadcastHashJoinExec => j }
-      assert(joins.size == 4, s"one broadcast join per level:\n$plan")
       def conditional(e: Expression): Boolean = e.find {
         case CaseWhen(branches, _) => branches.exists(_._1.find(_.isInstanceOf[IsNull]).isDefined)
         case If(p, _, _) => p.find(_.isInstanceOf[IsNull]).isDefined
         case _ => false
       }.isDefined
-      val lazyJoins = joins.count(_.leftKeys.exists(conditional))
-      assert(lazyJoins == 3, s"all 3 prefix joins must skip resolved rows:\n$plan")
+      def lazyJoins(df: DataFrame) = {
+        val plan = df.queryExecution.executedPlan
+        val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+        assert(joins.size == 4, s"one broadcast join per level:\n$plan")
+        assert(joins.count(_.leftKeys.exists(conditional)) == 3,
+          s"all 3 prefix joins must skip resolved rows:\n$plan")
+        (plan, joins)
+      }
+      // the key-string functions the serve's own operators run (the
+      // cached index's lineage is not one of them)
+      def keyStrings(plan: org.apache.spark.sql.execution.SparkPlan) =
+        plan.flatMap(_.expressions).flatMap(_.collect {
+          case e @ (_: ConcatWs | _: SubstringIndex) => e.prettyName
+        }).toSet
+      val (stringPlan, _) = lazyJoins(cascade4.joinProbe(Seq("1.1.1.1", "1.1.7.7").toDF("k"), col("k"), "p"))
+      assert(keyStrings(stringPlan) == Set("substring_index"), stringPlan.toString)
+      // a key over non-nullable Long bins probes the packed code: Long
+      // hash relations, and no key string built or cut on the probe side
+      assert(cascade4.packed)
+      val (plan, joins) = lazyJoins(cascade4.joinProbe(extendedSpace(Seq(2, 2, 2, 2)),
+        Keys.keyColumn((0 until 4).map(i => col(s"b$i"))), "p"))
+      assert(joins.forall(j => (j.leftKeys ++ j.rightKeys).forall(_.dataType == LongType)),
+        s"every join key must be a Long code:\n$plan")
+      assert(keyStrings(plan).isEmpty, s"the packed cascade must not run ${keyStrings(plan)}:\n$plan")
+      assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, s"no probe-side shuffle:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
@@ -192,11 +213,11 @@ class KvProbeSpec extends AnyFunSuite {
   }
 
   /** Every slot of the extended key space: each field from -1 to two past
-    * its trained range, plus both Long extremes — as an RDD-backed frame
-    * of non-nullable Long bins (so the probe runs through codegen) with
-    * a row id. */
-  private def extendedSpace(ranges: Seq[Int]): DataFrame = {
-    val values = ranges.map(r => (Seq(Long.MinValue, Long.MaxValue) ++ (-1L to r + 1L)))
+    * its trained range, plus both Long extremes and `extra` — as an
+    * RDD-backed frame of non-nullable Long bins (so the probe runs
+    * through codegen) with a row id. */
+  private def extendedSpace(ranges: Seq[Int], extra: Seq[Long] = Nil): DataFrame = {
+    val values = ranges.map(r => (Seq(Long.MinValue, Long.MaxValue) ++ (-1L to r + 1L) ++ extra))
     val rows = values.foldLeft(Seq(Seq.empty[Long]))((acc, vs) => acc.flatMap(p => vs.map(p :+ _)))
     val schema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.IntegerType, nullable = false) +:
@@ -252,6 +273,84 @@ class KvProbeSpec extends AnyFunSuite {
         }.getOrElse(0)
       }.toSet
       assert(levels == (0 to ranges.length).toSet, s"$ranges $task levels $levels")
+    }
+  }
+
+  /** The types of every broadcast join key in `df`'s executed plan. */
+  private def joinKeyTypes(df: DataFrame): Set[org.apache.spark.sql.types.DataType] = {
+    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => (j.leftKeys ++ j.rightKeys).map(_.dataType)
+    }.flatten.toSet
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  }
+
+  test("packed joinProbe equals the string cascade, the dense form and scoreKey over a whole keyLen-4 space") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val w = Keys.codeWidth(4)
+    // around the unseen digit 2^w - 1, which a bin must never alias
+    val wide = Seq((1L << w) - 2, (1L << w) - 1, 1L << w, (1L << w) + 1)
+    for ((task, seed) <- Seq(Task.Classification -> 11, Task.MultiClass -> 12)) {
+      val ranges = Seq(3, 2, 3, 3)
+      val (m, key) = binModel(ranges, task, seed)
+      assert(m.packed, s"$task")
+      val scorer = m.toLocalScorer
+      val input = extendedSpace(ranges, wide)
+      val asString = input.select(col("id"), key.as("k"))
+      def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val packedJoin = m.joinProbe(input, key, "p")
+      val stringJoin = m.joinProbe(asString, col("k"), "p")
+      assert(joinKeyTypes(packedJoin) == Set(LongType), s"$task packed join keys")
+      assert(joinKeyTypes(stringJoin) == Set(StringType), s"$task string join keys")
+      val dense = m.probe(input, key, "p")
+      assert(executedPlan(dense).contains("kv_probe("), s"$task must serve dense")
+      // the interpreted code: a local relation folds the projection at plan time
+      val folded = m.joinProbe(spark.createDataFrame(input.collect().toSeq.asJava, input.schema), key, "p")
+      val forms = Seq("packed" -> packedJoin, "string" -> stringJoin, "dense" -> dense, "folded" -> folded)
+        .map { case (name, df) => name -> byId(df) }
+      val keys = asString.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      keys.foreach { case (id, k) =>
+        val local = bits(scorer.scoreKey(k))
+        forms.foreach { case (name, values) =>
+          assert(values.size == keys.size && bits(values(id)) == local,
+            s"$task key $k: $name ${values.get(id)} vs local ${scorer.scoreKey(k)}")
+        }
+      }
+    }
+  }
+
+  test("an index or key that does not pack takes the string cascade and still agrees with scoreKey") {
+    import org.apache.spark.sql.types.StringType
+    import spark.implicits._
+    val unseen = Keys.unseen(4)
+    val base = Seq("1.1.1.1" -> 1.0, "1.1.2.1" -> 0.0, "1.2.1.1" -> 1.0, "2.1.1.1" -> 0.0)
+    val input = extendedSpace(Seq(2, 2, 2, 2), Seq(unseen - 1, unseen))
+    val binKey = Keys.keyColumn((0 until 4).map(i => col(s"b$i")))
+    val nullable = Keys.keyColumn(when(col("b0") === Long.MaxValue, lit(null)).otherwise(col("b0")) +:
+      (1 until 4).map(i => col(s"b$i")))
+    val indexes = Seq(
+      "a non-canonical kv key" -> (base :+ ("01.2.1.1" -> 1.0)),
+      "a field at the unseen digit" -> (base :+ (s"$unseen.1.1.1" -> 1.0)))
+    val model = KvIndexBuilder.buildFromKeyed(base.toDF("key", "pred"), keyLen = 4, Task.Classification)
+    val cases = indexes.map { case (why, keyed) =>
+      (why, KvIndexBuilder.buildFromKeyed(keyed.toDF("key", "pred"), keyLen = 4, Task.Classification),
+        input, binKey)
+    } ++ Seq(
+      ("a nullable bin", model, input, nullable),
+      ("a plain string key", model, input.select(col("id"), binKey.as("k")), col("k")))
+    cases.foreach { case (why, m, in, key) =>
+      assert(m.packed == (m eq model), why)
+      val probed = m.joinProbe(in, key, "p")
+      assert(joinKeyTypes(probed) == Set(StringType), s"$why must take the string cascade")
+      val scorer = m.toLocalScorer
+      val rows = probed.select(key.as("k"), col("p")).collect()
+      assert(rows.length == input.count(), why)
+      rows.foreach { r =>
+        val local = Option(r.getString(0)).map(scorer.scoreKey).getOrElse(m.globalValue)
+        assert(bits(r.getDouble(1)) == bits(local), s"$why key ${r.getString(0)}: ${r.getDouble(1)} vs $local")
+      }
     }
   }
 

@@ -64,11 +64,12 @@ class PersistSpec extends AnyFunSuite {
     trained.save(dir)
     val rels = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(rels == Set("meta", "bins", "index"))
-    // the load reads meta and bins (a schema job and a read job each),
-    // the index's schema, then caches the index in ONE job that also
-    // reads its kv count and global value
-    val load = GroupJobs(InferDbPipeline.load(spark, dir))
-    assert(load.started.size == 6 && load.outside.isEmpty, s"load $load")
+    // the index is saved as exactly (len, key, value): the cached
+    // index's key codes never reach the directory
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
+    assert(spark.read.parquet(s"$dir/index").schema.map(f => f.name -> f.dataType) ==
+      Seq("len" -> IntegerType, "key" -> StringType, "value" -> DoubleType))
+    assert(spark.read.parquet(s"$dir/meta").head().getAs[String]("layout") == "index/3")
     val meta = spark.read.parquet(s"$dir/meta")
     // the per-length layout: meta without `layout`, kv/ and prefix_<l>/
     val perLength = TmpDirs.scratch("persist_spec_old_layout", sf)
@@ -96,6 +97,17 @@ class PersistSpec extends AnyFunSuite {
     trained.kv.index.where(col("len") > 0).write.mode("overwrite").parquet(s"$noRoot/index")
     val e = intercept[IllegalArgumentException](InferDbPipeline.load(spark, noRoot))
     assert(e.getMessage.contains(noRoot) && e.getMessage.contains("no len = 0"), e.getMessage)
+  }
+
+  test("load runs pinned job counts under the caller's job group: no schema inference") {
+    val dir = TmpDirs.scratch("persist_spec_load_jobs", sf)
+    trained.save(dir)
+    // the meta row, the bins, then ONE job that caches the index and
+    // reads its kv count, global value and whether its keys pack — each
+    // relation read with the schema save wrote, never inferred
+    val load = GroupJobs(InferDbPipeline.load(spark, dir))
+    assert(load.started.size == 3 && load.outside.isEmpty, s"load $load")
+    assert(load.result.kv.packed && load.result.kv.kvCount == trained.kv.kvCount)
   }
 
   test("reloaded index probes identically, including fallback paths") {
