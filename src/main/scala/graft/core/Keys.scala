@@ -12,11 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Compound-key assembly: '.'-joined bin indices in selected-feature
   * order, e.g. "2.0.5.11" (ref: src/transpiler.py:940-983, 1132-1166).
-  * Owns the key format (`LocalScorer.prefix` mirrors [[prefix]]
-  * driver-side): [[KvModel.probe]] reads the bins back out of a
-  * [[keyColumn]] through [[bins]], its dense answer table names its
-  * slots through [[parse]] and [[render]], and its join cascade probes a
-  * packed [[code]] of the bins when the index packs.
+  * Owns both encodings of a key: the string a build keys by and an index
+  * saves (`LocalScorer.prefix` mirrors [[prefix]] driver-side), and the
+  * packed Long [[code]] of its bins, the one key [[KvModel.probe]] serves:
+  * it reads the bins back out of a [[keyColumn]] through [[bins]], and
+  * each index key is packed once, where the index is cached.
   */
 object Keys {
   /** Build the compound key from already-encoded (LongType) bin columns. */
@@ -39,19 +39,12 @@ object Keys {
   /** The key [[keyColumn]] builds for these bin values. */
   def render(bins: Seq[Long]): String = bins.mkString(".")
 
-  /** The bin values of `key` when it is exactly `n` canonical decimals
-    * (no sign, no leading zero, at most 9 digits) — the keys [[keyColumn]]
-    * builds from non-negative bins; None for anything else. */
-  def parse(key: String, n: Int): Option[Array[Int]] = {
-    val fields = new Array[Int](n)
-    if (scan(UTF8String.fromString(key), n)((i, f) => fields(i) = f)) Some(fields) else None
-  }
-
-  /** Pass each field of `key` to `field` (its index and value) while it
-    * reads as `n` canonical decimals; whether all of it did. It reads the
-    * bytes in place, so [[code]] can run it on every index row; [[parse]]
-    * shares it, so both accept exactly the same keys. */
-  private def scan(key: UTF8String, n: Int)(field: (Int, Int) => Unit): Boolean = {
+  /** Pass each field of `key` to `field` while it reads as `n` canonical
+    * decimals (no sign, no leading zero, at most 9 digits: the keys
+    * [[keyColumn]] builds from non-negative bins); whether all of it did.
+    * It reads the bytes in place, so [[code]] can run it on every index
+    * row. */
+  private def scan(key: UTF8String, n: Int)(field: Int => Unit): Boolean = {
     val end = key.numBytes
     def digit(i: Int) = i < end && key.getByte(i) >= '0' && key.getByte(i) <= '9'
     var i = 0
@@ -68,7 +61,7 @@ object Keys {
         i += 1
       }
       if (i == start || i - start > 9 || (i - start > 1 && key.getByte(start) == '0')) return false
-      field(k, f)
+      field(f)
       k += 1
     }
     i == end
@@ -99,21 +92,26 @@ object Keys {
   private[core] def indexCode(key: Column, len: Column, n: Int): Column =
     GraftColumnBridge.column(IndexKeyCode(GraftColumnBridge.expression(key), GraftColumnBridge.expression(len), n))
 
-  /** The code of an index key of `l` fields (a prefix level of an
+  /** The code of an index key of `l <= n` fields (a prefix level of an
     * `n`-field index, or its exact level when `l == n`) — equal to
     * [[codePrefix]] of the code of every key it prefixes — when `key` is
-    * `l` canonical decimals ([[parse]]) each below [[unseen]]`(n)`; -1
+    * `l` canonical decimals ([[scan]]) each below [[unseen]]`(n)`; -1
     * (no code) otherwise. */
   private[core] def code(key: UTF8String, l: Int, n: Int): Long = {
     val (width, top) = (codeWidth(n), unseen(n))
     var code = 0L
     var below = true
-    val scanned = scan(key, l) { (_, f) =>
+    val scanned = scan(key, l) { f =>
       below &&= f < top
       code = code << width | f
     }
-    if (scanned && below) code else -1L
+    if (scanned && below && l <= n) code else -1L
   }
+
+  /** The `l` fields of the code of an `l`-field key of an `n`-field
+    * index, field 0 first: the bins [[code]] packed. */
+  private[core] def digits(code: Long, l: Int, n: Int): Array[Int] =
+    Array.tabulate(l)(i => ((code >>> codeWidth(n) * (l - 1 - i)) & unseen(n)).toInt)
 }
 
 /** The key node of [[Keys.keyColumn]]: the '.'-joined string of its bins.

@@ -44,31 +44,31 @@ object Aggregates {
   * src/transpiler.py:1004-1099; SURVEY §2.9).
   *
   * Spark-first design: like the reference's trie, the index is ONE
-  * structure — a cached relation `index (len, key, value)`. Its rows at
+  * structure — a cached relation `index (len, key, value, code)`. Its rows at
   * `len = keyLen` are the exact kv entries (the trie's leaves); every
   * field-wise prefix of every key is aggregated ONCE at build time into
   * the rows at `len = 1 .. keyLen-1` (the inner nodes); and the single
   * `len = 0` row is the global value (the root), instead of the
-  * reference's row-at-a-time dynamic-SQL `prefix_search`. The probe then
-  * takes one of two bitwise-identical forms, chosen in [[probe]]
-  * ([[KvProbeSpec]] pins them):
+  * reference's row-at-a-time dynamic-SQL `prefix_search`. Every key at
+  * `len >= 1` packs into a Long [[Keys.code]] (checked when the index is
+  * cached), and the probe serves that one encoding: a [[Keys.keyColumn]]
+  * over `keyLen` non-nullable integral bins, packed per row inside the
+  * serve's projection — any other key fails loudly. It takes one of two
+  * bitwise-identical forms, chosen in [[probe]] ([[KvProbeSpec]] pins
+  * them):
   *
-  *  - **dense** (a [[Keys.keyColumn]] over `keyLen` non-nullable
-  *    integral bins, and a key space of at most
-  *    [[KvModel.MaxCompiledEntries]] slots): every key's cascade answer
-  *    is a pure function of the key, so it is computed once per model
-  *    into a mixed-radix answer table ([[DenseAnswers]]) and
-  *    the serve is ONE whole-stage-codegen projection that packs the bins
-  *    and loads one double — no key string, zero joins, zero exchanges on
-  *    the probe side at any input size;
-  *  - **join cascade** (any other key, or a larger key space): BROADCAST
-  *    hash joins + one coalesce — fully parallel, no iteration, and the
-  *    only shuffle in the whole serve path is whatever the caller's plan
+  *  - **dense** (a key space of at most [[KvModel.MaxCompiledEntries]]
+  *    slots): every key's cascade answer is a pure function of the key,
+  *    so it is filled once per model from the index's codes into a
+  *    mixed-radix answer table ([[DenseAnswers]]) and the serve is ONE
+  *    whole-stage-codegen projection that packs the bins and loads one
+  *    double — no key string, zero joins, zero exchanges on the probe
+  *    side at any input size;
+  *  - **join cascade** (a larger key space): BROADCAST hash joins on the
+  *    code + one coalesce — fully parallel, no iteration, and the only
+  *    shuffle in the whole serve path is whatever the caller's plan
   *    already needed. The levels are lazy: a prefix level computes its
   *    key and probes its table only for rows no longer level resolved.
-  *    On the same bins, when the index [[packed]], it joins on a Long
-  *    [[Keys.code]] of them (stored once in the index's `code` column)
-  *    instead of the key string.
   *
   * Build it with [[KvIndexBuilder.buildFromKeyed]] or [[KvIndexState]];
   * [[KvModel.materialize]] is the one place an index is cached.
@@ -81,8 +81,7 @@ final case class KvModel(
     keyLen: Int,
     index: DataFrame,    // (len int, key string, value double, code long), cached
     globalValue: Double, // the len = 0 row's value: the trie-root fallback
-    kvCount: Long,       // rows at len = keyLen, counted when the index was cached
-    packed: Boolean      // every key at len >= 1 has a code (Keys.code), checked then too
+    kvCount: Long        // rows at len = keyLen, counted when the index was cached
 ) {
   /** The index entries as a typed Dataset (SURVEY §1.2 fixed shape). */
   def entries: org.apache.spark.sql.Dataset[Types.KVEntry] = {
@@ -100,17 +99,18 @@ final case class KvModel(
     * `unpersist()` frees nothing). */
   @transient lazy val kv: DataFrame = rowsAt(keyLen).select(col("key"), col("value"))
 
-  /** Per-level views of [[index]], longest first: len ->
+  /** Per-level string views of [[index]], longest first: len ->
     * (prefix string, value double) for `len = keyLen-1 .. 1`; the global
-    * value is not a level. Built once per model and reused by every
-    * [[joinProbe]]: five fresh views per call re-analyzed the index's
-    * lineage and cost a 6-field cascade serve ~0.1 s (4 local cores). */
+    * value is not a level. Built once per model, for readers of the
+    * saved string keys; the probe reads [[codeLevels]]. */
   @transient lazy val prefixes: Seq[(Int, DataFrame)] = levels.map { l =>
     l -> rowsAt(l).select(col("key").as("prefix"), col("value"))
   }
 
-  /** The packed twin of [[kv]] +: [[prefixes]]: len -> (code, value) for
-    * `len = keyLen .. 1`, memoized the same way. */
+  /** The join cascade's tables, longest first: len -> (code, value) for
+    * `len = keyLen .. 1`. Built once per model and reused by every
+    * [[joinProbe]]: fresh views per call re-analyzed the index's lineage
+    * and cost a 6-field cascade serve ~0.1 s (4 local cores). */
   @transient private lazy val codeLevels: Seq[(Int, DataFrame)] = (keyLen +: levels).map { l =>
     l -> rowsAt(l).select(col("code"), col("value"))
   }
@@ -119,78 +119,73 @@ final case class KvModel(
     * Exact hit wins; else the longest non-empty prefix aggregate; else
     * the global aggregate (trie-root DFS, inference_trie.py:91-98).
     * The one place the form is chosen: the dense answer table when the
-    * key has [[intBins]] and the index a [[denseAnswers]] table, the
-    * broadcast-join cascade otherwise — same values bit for bit either
-    * way (a NULL key resolves to the global aggregate on the join path;
-    * a dense key is never NULL).
-    */
+    * index has a [[denseAnswers]] table, the broadcast-join cascade
+    * otherwise — same values bit for bit either way. */
   def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
     val bins = intBins(input, key)
-    bins.flatMap(b => denseAnswers.map(KvProbe.column(b, _))) match {
-      case Some(answer) => input.withColumn(predName, answer)
-      case None => cascade(input, key, bins, predName)
+    denseAnswers match {
+      case Some(table) => input.withColumn(predName, KvProbe.column(bins, table))
+      case None => cascade(input, bins, predName)
     }
   }
 
-  /** `key`'s bins when it is a [[Keys.keyColumn]] of `keyLen` bins that
-    * are non-nullable and integral in `input` (an analysis, no job): the
-    * keys the dense table and the packed cascade serve. */
-  private def intBins(input: DataFrame, key: Column): Option[Seq[Column]] =
-    Keys.bins(key).filter(_.length == keyLen).filter { bins =>
-      input.select(bins: _*).schema.forall(f => !f.nullable && KvProbe.bin(f.dataType))
-    }
+  /** The broadcast-join cascade form of [[probe]] (the scale path for
+    * key spaces above the dense cap). */
+  def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
+    cascade(input, intBins(input, key), predName)
 
-  /** [[LocalScorer.scoreKey]] over every slot of the key space, built
-    * once per model — when every kv key is `keyLen` canonical decimals
-    * and the space has at most [[KvModel.MaxCompiledEntries]] slots.
-    * Field `i`'s radix is 1 + its largest value over the kv keys; its
-    * extra "unseen" digit renders as the radix itself, a value no kv key
-    * (so no prefix) has in that field — exactly the cascade of any bin
-    * outside `[0, radix)`. An index of more entries than the cap cannot
-    * fit (each kv key has its own slot) and is never collected. */
+  /** `key`'s bins: the one probe contract, checked by analysis (no job)
+    * before either form runs. `key` must be a [[Keys.keyColumn]] of
+    * `keyLen` bins that are non-nullable and integral in `input`;
+    * anything else throws `IllegalArgumentException`. */
+  private def intBins(input: DataFrame, key: Column): Seq[Column] = {
+    val bins = Keys.bins(key).getOrElse(
+      throw new IllegalArgumentException(s"the probe key must be a Keys.keyColumn of bins, got $key"))
+    require(bins.length == keyLen, s"the probe key has ${bins.length} bins, the index keys $keyLen: $key")
+    input.select(bins: _*).schema.foreach { f =>
+      require(!f.nullable, s"probe key bin ${f.name} is nullable")
+      require(KvProbe.bin(f.dataType), s"probe key bin ${f.name} is ${f.dataType.sql}, not integral")
+    }
+    bins
+  }
+
+  /** The cascade's answer for every slot of the key space, filled once
+    * per model from ONE collect of the index's (len, code, value) rows —
+    * when the space has at most [[KvModel.MaxCompiledEntries]] slots.
+    * Field `i`'s radix is 1 + its largest digit over the index codes;
+    * its extra "unseen" digit is the radix itself, a digit no index key
+    * has in that field — exactly the cascade of any bin outside
+    * `[0, radix)`. An index of more entries than the cap cannot fit
+    * (each kv key has its own slot) and is never collected. */
   @transient private lazy val denseAnswers: Option[DenseAnswers] =
     if (kvCount > KvModel.MaxCompiledEntries) None
     else {
-      val scorer = toLocalScorer
-      val keys = scorer.kv.keys.toSeq.flatMap(Keys.parse(_, keyLen))
-      if (keys.size < scorer.kv.size) None
-      else {
-        val radices = Array.tabulate(keyLen)(i => keys.foldLeft(0)((m, k) => math.max(m, k(i) + 1)))
-        if (DenseAnswers.slots(radices) > KvModel.MaxCompiledEntries) None
-        else Some(DenseAnswers.tabulate(radices)(d => scorer.scoreKey(Keys.render(d.toSeq.map(_.toLong)))))
-      }
+      val rows = index.where(col("len") > 0).select(col("len"), col("code"), col("value")).collect()
+        .map(r => Keys.digits(r.getLong(1), r.getInt(0), keyLen) -> r.getDouble(2)).toSeq
+      val radices = Array.tabulate(keyLen)(i =>
+        rows.foldLeft(0) { case (m, (d, _)) => if (i < d.length) math.max(m, d(i) + 1) else m })
+      if (DenseAnswers.slots(radices) > KvModel.MaxCompiledEntries) None
+      else Some(DenseAnswers.fill(radices, globalValue, rows))
     }
 
-  /** The broadcast-join cascade form of [[probe]] (always correct, for
-    * any string key; the scale path for key spaces above the dense cap). */
-  def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
-    cascade(input, key, intBins(input, key), predName)
-
-  /** The join cascade, one broadcast left join per level, exact first.
+  /** The join cascade over the Long [[Keys.code]] of `bins`, one
+    * broadcast left join per level of [[codeLevels]], exact first: level
+    * `l` probes with [[Keys.codePrefix]] — Long-keyed hash relations, and
+    * no key string built or cut per row.
     *
     * Lazy, like the trie walk it reproduces: level `l`'s stream-side key
-    * is `CASE WHEN <every longer level missed> THEN prefix(key, l) END`,
-    * so a row an earlier level resolved skips the prefix and, its join
+    * is `CASE WHEN <every longer level missed> THEN codePrefix(code, l) END`,
+    * so a row an earlier level resolved skips the shift and, its join
     * key being NULL, the hash lookup too (broadcast hash joins never
     * probe a NULL key). A level's value only counts when every earlier
     * one is NULL, and then it probes exactly the eager key — the final
-    * coalesce is bit-identical to probing every level.
-    *
-    * The key encoding is the one parameter: when `bins` are the key's
-    * and the index [[packed]], the stream key is their [[Keys.code]], a
-    * level's key a shift of it, and each table the index's `code` column
-    * — Long-keyed hash relations, and no key string built or cut per
-    * row. Otherwise the key string, [[Keys.prefix]] and the `key` column.
-    * Both match a row at the same levels, so the values are identical. */
-  private def cascade(input: DataFrame, key: Column, bins: Option[Seq[Column]], predName: String): DataFrame = {
-    val (streamKey, levelKey, tables) = bins.filter(_ => packed) match {
-      case Some(b) => (Keys.code(b), (k: Column, l: Int) => Keys.codePrefix(k, keyLen, l), codeLevels)
-      case None => (key, (k: Column, l: Int) => Keys.prefix(k, l), (keyLen -> kv) +: prefixes)
-    }
-    val (cascaded, values) = tables.foldLeft((input.withColumn("__key", streamKey), Seq.empty[String])) {
+    * coalesce is bit-identical to probing every level. */
+  private def cascade(input: DataFrame, bins: Seq[Column], predName: String): DataFrame = {
+    val (cascaded, values) = codeLevels.foldLeft((input.withColumn("__key", Keys.code(bins)), Seq.empty[String])) {
       case ((df, resolved), (l, tbl)) =>
         val probeKey =
-          if (l == keyLen) col("__key") else when(coalesce(resolved.map(col): _*).isNull, levelKey(col("__key"), l))
+          if (l == keyLen) col("__key")
+          else when(coalesce(resolved.map(col): _*).isNull, Keys.codePrefix(col("__key"), keyLen, l))
         val joined = df.join(broadcast(tbl.toDF(s"__p_$l", s"__v_$l")), probeKey === col(s"__p_$l"), "left")
           .drop(s"__p_$l")
         (joined, resolved :+ s"__v_$l")
@@ -335,27 +330,31 @@ object KvModel {
   val MaxCompiledEntries: Long = 1L << 17
 
   /** Cache `rows` (len, key, value) with each key's [[Keys.code]] as the
-    * index of a [[KvModel]], and read its kv count, its global value and
-    * whether every key packs in ONE pass, which also fills the cache every
-    * probe broadcasts from — shared by the build and [[Persist.load]], so
-    * the code is computed once per index and never per serve. On a load
-    * that pass is the only job; a build also runs its aggregates' stages,
-    * and adaptive execution may run the last of them into the cache as a
-    * job of its own. `origin` names the rows in the error thrown when
-    * they have no `len = 0` row: an index nothing voted for. */
+    * index of a [[KvModel]], and read its kv count and its global value
+    * and check that every key packs in ONE pass, which also fills the
+    * cache every probe broadcasts from — shared by the build and
+    * [[Persist.load]], so the code is computed once per index and never
+    * per serve. On a load that pass is the only job; a build also runs
+    * its aggregates' stages, and adaptive execution may run the last of
+    * them into the cache as a job of its own. `origin` names the rows in
+    * the error thrown when they have no `len = 0` row (an index nothing
+    * voted for) or a key at `len >= 1` without a code. */
   private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
     val index = rows.select(col("len"), col("key"), col("value"),
       Keys.indexCode(col("key"), col("len"), keyLen).as("code")).cache()
-    val (kvCount, global, packed) = index.select(col("len"), col("value"), col("code").isNotNull).rdd
-      .aggregate((0L, Option.empty[Double], true))(
-        { case ((n, g, p), r) =>
+    val (kvCount, global, unpacked) = index
+      .select(col("len"), col("value"), when(col("len") > 0 && col("code").isNull, col("key"))).rdd
+      .aggregate((0L, Option.empty[Double], Option.empty[String]))(
+        { case ((n, g, u), r) =>
           val len = r.getInt(0)
-          (if (len == keyLen) n + 1 else n, if (len == 0) Some(r.getDouble(1)) else g, p && (len == 0 || r.getBoolean(2))) },
-        { case ((n1, g1, p1), (n2, g2, p2)) => (n1 + n2, g1.orElse(g2), p1 && p2) })
-    if (global.isEmpty) index.unpersist()
+          (if (len == keyLen) n + 1 else n, if (len == 0) Some(r.getDouble(1)) else g, u.orElse(Option(r.getString(2)))) },
+        { case ((n1, g1, u1), (n2, g2, u2)) => (n1 + n2, g1.orElse(g2), u1.orElse(u2)) })
+    if (global.isEmpty || unpacked.isDefined) index.unpersist()
     require(global.isDefined, s"$origin has no len = 0 (global value) row: no (key, prediction) " +
       "row voted, so the input was empty or every prediction NULL")
-    KvModel(task, keyLen, index, global.get, kvCount, packed)
+    require(unpacked.isEmpty, s"$origin has key '${unpacked.get}', which does not pack: a key must be its " +
+      s"len (at most $keyLen) canonical decimals, each below 2^${Keys.codeWidth(keyLen)} - 1 = ${Keys.unseen(keyLen)}")
+    KvModel(task, keyLen, index, global.get, kvCount)
   }
 }
 

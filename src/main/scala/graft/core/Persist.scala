@@ -19,7 +19,8 @@ import org.apache.spark.sql.{Row, SparkSession}
   *   index/     the one (len, key, value) index relation: the exact kv
   *              at len = key_len, the prefix levels, and the global
   *              value as its len = 0 row (the cached index's key codes
-  *              are recomputed on load, never saved)
+  *              are recomputed on load, never saved; a key without one
+  *              is rejected there, naming `<dir>/index`)
   *
   * [[load]] reads each relation with the fixed schema [[save]] writes
   * (no schema-inference job), and rejects any other layout (a missing

@@ -40,19 +40,20 @@ object DenseAnswers {
     if (n > Long.MaxValue / m) Long.MaxValue else n * m
   }
 
-  /** The table whose slot with digits `d` holds `answer(d)` (a key space
-    * of at most Int.MaxValue slots). */
-  def tabulate(radices: Array[Int])(answer: Array[Int] => Double): DenseAnswers = {
-    val digits = new Array[Int](radices.length)
-    val answers = Array.tabulate(slots(radices).toInt) { s =>
-      var rest = s
-      var i = radices.length - 1
-      while (i >= 0) {
-        digits(i) = rest % (radices(i) + 1)
-        rest /= radices(i) + 1
-        i -= 1
-      }
-      answer(digits)
+  /** The table of an index's cascade: every slot starts at `global`,
+    * then each `(digits, value)` prefix, shortest first, writes its value
+    * over its block — the slots whose first `digits.length` digits are
+    * `digits`. Longer prefixes overwrite shorter ones, so a slot holds
+    * the value of its longest prefix in the index, or `global`. Every
+    * digit must be below its radix, and the space at most Int.MaxValue
+    * slots. */
+  def fill(radices: Array[Int], global: Double, prefixes: Seq[(Array[Int], Double)]): DenseAnswers = {
+    val answers = Array.fill(slots(radices).toInt)(global)
+    // block(l): the slots under one prefix of l digits, Π_{j>=l} (r_j + 1)
+    val block = radices.scanRight(1)((r, n) => (r + 1) * n)
+    prefixes.sortBy(_._1.length).foreach { case (digits, value) =>
+      val start = digits.indices.foldLeft(0)((s, i) => s * (radices(i) + 1) + digits(i)) * block(digits.length)
+      java.util.Arrays.fill(answers, start, start + block(digits.length), value)
     }
     new DenseAnswers(radices, answers)
   }
@@ -61,9 +62,10 @@ object DenseAnswers {
 /** Compiled KV probe: the bins -> the index's cascaded answer, one
   * mixed-radix pack and one `double[]` load per row inside whole-stage
   * codegen — no key string, no hashing, no level loop, no join, and no
-  * exchange on the probe side at any input size. The table is built by
-  * [[graft.core.KvModel.probe]] from `LocalScorer.scoreKey`, so the values
-  * are the join cascade's bit for bit (KvProbeSpec pins it over whole key
+  * exchange on the probe side at any input size. The table is filled by
+  * [[graft.core.KvModel.probe]] from the index's codes and values
+  * ([[DenseAnswers.fill]]), copied, never recomputed, so the values are
+  * the join cascade's bit for bit (KvProbeSpec pins it over whole key
   * spaces); it rides the task binary like [[KnnRef]]/[[TreeEnsembleRef]]
   * and is at most `KvModel.MaxCompiledEntries` doubles.
   */

@@ -65,16 +65,6 @@ class CoreSpec extends AnyFunSuite {
     assert(p == "2.0") // field-wise, NOT char-wise (SURVEY §2.9 divergence)
   }
 
-  test("Keys.parse reads exactly n canonical decimals") {
-    assert(Keys.parse("2.0.11", 3).map(_.toSeq).contains(Seq(2, 0, 11)))
-    assert(Keys.parse("999999999", 1).map(_.toSeq).contains(Seq(999999999)))
-    assert(Keys.parse("", 1).isEmpty && Keys.parse("", 0).map(_.toSeq).contains(Nil))
-    Seq("2.0", "2.0.11.3", "02.0.11", "2.-1.11", "2.+1.11", "2..11", "2.0.11.", ".2.0", "2.0.1x",
-        "2.0.1234567890", "2.0.11 ", "2.0.\u0661").foreach { k =>
-      assert(Keys.parse(k, 3).isEmpty, k)
-    }
-  }
-
   test("Aggregates.mode: highest count wins, ties break to lowest value") {
     val df = Seq(("g", 3L), ("g", 3L), ("g", 1L), ("g", 1L), ("g", 9L)).toDF("k", "v")
     val m = Aggregates.mode(df, Seq("k"), "v").as[(String, Long)].head()
@@ -90,8 +80,8 @@ class CoreSpec extends AnyFunSuite {
     val train = Seq(("0.0", 1.0), ("0.1", 0.0), ("1.0", 1.0))
       .toDF("key", "pred")
     val model = KvIndexBuilder.buildFromKeyed(train, keyLen = 2, Task.Classification)
-    val probe = Seq(("r1", "0.0"), ("r2", "0.7"), ("r3", "9.9")).toDF("id", "k")
-    val out = model.probe(probe, col("k"), "p")
+    val probe = Seq(("r1", 0L, 0L), ("r2", 0L, 7L), ("r3", 9L, 9L)).toDF("id", "a", "b")
+    val out = model.probe(probe, Keys.keyColumn(Seq(col("a"), col("b"))), "p")
       .select("id", "p").as[(String, Double)].collect().toMap
     assert(out("r1") == 1.0)          // exact
     assert(out("r2") == 0.5)          // prefix "0" -> avg(1.0, 0.0) over kv leaves
@@ -104,11 +94,11 @@ class CoreSpec extends AnyFunSuite {
   }
 
   test("multi-class KV uses per-key mode with pinned tie-break") {
-    val train = Seq(("a.b", 2.0), ("a.b", 2.0), ("a.b", 5.0), ("z.z", 1.0))
+    val train = Seq(("0.1", 2.0), ("0.1", 2.0), ("0.1", 5.0), ("2.2", 1.0))
       .toDF("key", "pred")
     val model = KvIndexBuilder.buildFromKeyed(train, 2, Task.MultiClass)
     val kv = model.kv.as[(String, Double)].collect().toMap
-    assert(kv("a.b") == 2.0)
+    assert(kv("0.1") == 2.0)
     // the global value is the mode over the kv rows, where classes 1.0
     // and 2.0 tie: the pinned tie-break picks 1.0, and so does len = 0
     val modeKv = Aggregates.mode(model.kv.select("value"), Seq.empty, "value").head().getDouble(0)

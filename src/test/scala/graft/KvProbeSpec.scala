@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 /** The compiled single-projection probe (the dense answer table) must be
   * bitwise identical to the broadcast-join cascade on every path:
   * exact hit, each prefix length, global fallback, NULL-translated
-  * keys — and must be the plan actually chosen for a small index.
+  * keys — and must be the plan actually chosen for a small index. Both
+  * serve one key: a `Keys.keyColumn` over non-nullable integral bins.
   */
 class KvProbeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -51,10 +52,14 @@ class KvProbeSpec extends AnyFunSuite {
 
   test("a NULL key resolves to the global fallback on both paths") {
     import spark.implicits._
-    val one = Seq(1).toDF("i")
-    val compiled = model.probe(one, lit(null).cast("string"), "p")
+    // every feature NULL: each bins to its overflow bin, and the first
+    // (l_discount's 2) never trained, so the key matches no prefix
+    val one = Seq[(java.lang.Double, java.lang.Double, java.lang.Double)]((null, null, null))
+      .toDF("l_discount", "l_tax", "l_quantity")
+    assert(one.select(keyCol).head().getString(0) == "2.1.3")
+    val compiled = model.probe(one, keyCol, "p")
       .select("p").head().getDouble(0)
-    val joined = model.joinProbe(one, lit(null).cast("string"), "p")
+    val joined = model.joinProbe(one, keyCol, "p")
       .select("p").head().getDouble(0)
     assert(bits(compiled) == bits(model.globalValue))
     assert(bits(joined) == bits(model.globalValue))
@@ -77,10 +82,10 @@ class KvProbeSpec extends AnyFunSuite {
     }
   }
 
-  /** A keyLen=4 index and one probe key per cascade outcome: an exact
-    * hit, a hit at each prefix length 3, 2, 1, an unseen first field
-    * (global) and a NULL key. */
-  private lazy val (cascade4, cascadeKeys) = {
+  /** A keyLen=4 index and one probe row of bins per cascade outcome: an
+    * exact hit, a hit at each prefix length 3, 2, 1 and an unseen first
+    * field (global). */
+  private lazy val (cascade4, cascadeBins) = {
     import spark.implicits._
     val keyed = Seq(
       "1.1.1.1" -> 1.0, "1.1.1.1" -> 0.0, "1.1.1.1" -> 1.0,
@@ -88,30 +93,34 @@ class KvProbeSpec extends AnyFunSuite {
       "1.2.1.1" -> 1.0, "2.1.1.1" -> 0.0, "2.2.2.2" -> 1.0, "2.2.2.2" -> 1.0)
       .toDF("key", "pred")
     val m = KvIndexBuilder.buildFromKeyed(keyed, keyLen = 4, Task.Classification)
-    (m, Seq("1.1.1.1", "1.1.1.7", "1.1.7.7", "1.7.7.7", "7.7.7.7", null))
+    (m, Seq(Seq(1L, 1L, 1L, 1L), Seq(1L, 1L, 1L, 7L), Seq(1L, 1L, 7L, 7L), Seq(1L, 7L, 7L, 7L), Seq(7L, 7L, 7L, 7L)))
   }
 
-  /** `probe` applied to `keys`, values in key order. */
-  private def probeValues(keys: Seq[String])(
-      probe: (DataFrame, Column, String) => DataFrame): Seq[Double] = {
-    import spark.implicits._
-    probe(keys.zipWithIndex.toDF("k", "i"), col("k"), "p").select("i", "p").collect()
+  /** The key over the bin columns b0..b(n-1) of [[binRows]]. */
+  private def binKey(n: Int): Column = Keys.keyColumn((0 until n).map(i => col(s"b$i")))
+
+  /** `probe` applied to one [[binRows]] row per element of `rows`, values
+    * in row order. */
+  private def probeValues(rows: Seq[Seq[Long]])(
+      probe: (DataFrame, Column, String) => DataFrame): Seq[Double] =
+    probe(binRows(rows), binKey(rows.head.length), "p").select("id", "p").collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1).map(_._2).toSeq
-  }
+
+  /** Which level of `scorer` answers `key`: keyLen = exact, keyLen-1 .. 1
+    * = prefix, 0 = global. */
+  private def level(scorer: graft.core.LocalScorer, keyLen: Int, key: String): Int =
+    if (scorer.kv.contains(key)) keyLen
+    else scorer.prefixes.collectFirst {
+      case (l, tbl) if tbl.contains(graft.core.LocalScorer.prefix(key, l)) => l
+    }.getOrElse(0)
 
   test("the lazy join cascade matches toLocalScorer at every level") {
     val scorer = cascade4.toLocalScorer
-    // which level answers each probe key: 4 = exact, 3..1 = prefix, 0 = global
-    def level(k: String): Int =
-      if (k == null) 0
-      else if (scorer.kv.contains(k)) 4
-      else scorer.prefixes.collectFirst {
-        case (l, tbl) if tbl.contains(graft.core.LocalScorer.prefix(k, l)) => l
-      }.getOrElse(0)
-    assert(cascadeKeys.map(level) == Seq(4, 3, 2, 1, 0, 0), "fixture must cover every level")
-    val joined = probeValues(cascadeKeys)(cascade4.joinProbe)
-    cascadeKeys.zip(joined).foreach { case (k, v) =>
-      val local = Option(k).map(scorer.scoreKey).getOrElse(cascade4.globalValue)
+    val keys = cascadeBins.map(Keys.render)
+    assert(keys.map(level(scorer, 4, _)) == Seq(4, 3, 2, 1, 0), "fixture must cover every level")
+    val joined = probeValues(cascadeBins)(cascade4.joinProbe)
+    keys.zip(joined).foreach { case (k, v) =>
+      val local = scorer.scoreKey(k)
       assert(bits(v) == bits(local), s"key $k: joined $v vs local $local")
     }
   }
@@ -121,41 +130,26 @@ class KvProbeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.types.LongType
-    import spark.implicits._
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      def conditional(e: Expression): Boolean = e.find {
-        case CaseWhen(branches, _) => branches.exists(_._1.find(_.isInstanceOf[IsNull]).isDefined)
-        case If(p, _, _) => p.find(_.isInstanceOf[IsNull]).isDefined
-        case _ => false
-      }.isDefined
-      def lazyJoins(df: DataFrame) = {
-        val plan = df.queryExecution.executedPlan
-        val joins = plan.collect { case j: BroadcastHashJoinExec => j }
-        assert(joins.size == 4, s"one broadcast join per level:\n$plan")
-        assert(joins.count(_.leftKeys.exists(conditional)) == 3,
-          s"all 3 prefix joins must skip resolved rows:\n$plan")
-        (plan, joins)
-      }
-      // the key-string functions the serve's own operators run (the
-      // cached index's lineage is not one of them)
-      def keyStrings(plan: org.apache.spark.sql.execution.SparkPlan) =
-        plan.flatMap(_.expressions).flatMap(_.collect {
-          case e @ (_: ConcatWs | _: SubstringIndex) => e.prettyName
-        }).toSet
-      val (stringPlan, _) = lazyJoins(cascade4.joinProbe(Seq("1.1.1.1", "1.1.7.7").toDF("k"), col("k"), "p"))
-      assert(keyStrings(stringPlan) == Set("substring_index"), stringPlan.toString)
-      // a key over non-nullable Long bins probes the packed code: Long
-      // hash relations, and no key string built or cut on the probe side
-      assert(cascade4.packed)
-      val (plan, joins) = lazyJoins(cascade4.joinProbe(extendedSpace(Seq(2, 2, 2, 2)),
-        Keys.keyColumn((0 until 4).map(i => col(s"b$i"))), "p"))
-      assert(joins.forall(j => (j.leftKeys ++ j.rightKeys).forall(_.dataType == LongType)),
-        s"every join key must be a Long code:\n$plan")
-      assert(keyStrings(plan).isEmpty, s"the packed cascade must not run ${keyStrings(plan)}:\n$plan")
-      assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, s"no probe-side shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    def conditional(e: Expression): Boolean = e.find {
+      case CaseWhen(branches, _) => branches.exists(_._1.find(_.isInstanceOf[IsNull]).isDefined)
+      case If(p, _, _) => p.find(_.isInstanceOf[IsNull]).isDefined
+      case _ => false
+    }.isDefined
+    // the probe key is the packed code of the bins: Long hash relations
+    val plan = TestSpark.executedPlan(cascade4.joinProbe(extendedSpace(Seq(2, 2, 2, 2)), binKey(4), "p"))
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 4, s"one broadcast join per level:\n$plan")
+    assert(joins.count(_.leftKeys.exists(conditional)) == 3,
+      s"all 3 prefix joins must skip resolved rows:\n$plan")
+    assert(joins.forall(j => (j.leftKeys ++ j.rightKeys).forall(_.dataType == LongType)),
+      s"every join key must be a Long code:\n$plan")
+    // and no key string built or cut by the serve's own operators (the
+    // cached index's lineage is not one of them)
+    val keyStrings = plan.flatMap(_.expressions).flatMap(_.collect {
+      case e @ (_: ConcatWs | _: SubstringIndex) => e.prettyName
+    }).toSet
+    assert(keyStrings.isEmpty, s"the cascade must not run $keyStrings:\n$plan")
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, s"no probe-side shuffle:\n$plan")
   }
 
   test("keys whose every prediction is NULL serve the same on every path") {
@@ -166,16 +160,18 @@ class KvProbeSpec extends AnyFunSuite {
       "1.1.1" -> null, "1.1.1" -> null, "1.1.2" -> 2.0, "1.2.1" -> null,
       "1.2.2" -> 1.0, "2.1.1" -> 0.0, "2.1.1" -> 1.0, "2.1.1" -> 1.0)
       .toDF("key", "pred")
-    val probeKeys = Seq("1.1.1", "1.1.2", "1.2.1", "1.1.9", "2.1.1", "9.9.9", null)
+    val probeBins = Seq(Seq(1L, 1L, 1L), Seq(1L, 1L, 2L), Seq(1L, 2L, 1L), Seq(1L, 1L, 9L),
+      Seq(2L, 1L, 1L), Seq(9L, 9L, 9L))
     Seq(Task.Classification, Task.MultiClass).foreach { task =>
       val m = KvIndexBuilder.buildFromKeyed(keyed, keyLen = 3, task)
       val scorer = m.toLocalScorer
-      val compiled = probeValues(probeKeys)(m.probe)
-      val joined = probeValues(probeKeys)(m.joinProbe)
-      probeKeys.indices.foreach { i =>
-        val local = Option(probeKeys(i)).map(scorer.scoreKey).getOrElse(m.globalValue)
+      val compiled = probeValues(probeBins)(m.probe)
+      val joined = probeValues(probeBins)(m.joinProbe)
+      probeBins.indices.foreach { i =>
+        val k = Keys.render(probeBins(i))
+        val local = scorer.scoreKey(k)
         assert(bits(compiled(i)) == bits(local) && bits(joined(i)) == bits(local),
-          s"$task key ${probeKeys(i)}: compiled ${compiled(i)} joined ${joined(i)} local $local")
+          s"$task key $k: compiled ${compiled(i)} joined ${joined(i)} local $local")
       }
       // a NULL-only key has no entry of its own: it serves its prefix
       assert(!scorer.kv.contains("1.1.1"), s"$task: NULL-only key must not get a kv entry")
@@ -187,15 +183,10 @@ class KvProbeSpec extends AnyFunSuite {
   }
 
   test("small index compiles to a joinless, exchange-free projection") {
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = model.probe(Tables.lineitem(spark, sf), keyCol, "p")
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("kv_probe"), plan.take(500))
-      assert(!plan.contains("Join"), "compiled probe must not join")
-      assert(!plan.contains("Exchange"), "compiled probe must not exchange")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    val plan = executedPlan(model.probe(Tables.lineitem(spark, sf), keyCol, "p"))
+    assert(plan.contains("kv_probe"), plan.take(500))
+    assert(!plan.contains("Join"), "compiled probe must not join")
+    assert(!plan.contains("Exchange"), "compiled probe must not exchange")
   }
 
   /** A model over the Long bin columns b0..b(k-1), trained on a seeded
@@ -208,38 +199,38 @@ class KvProbeSpec extends AnyFunSuite {
       Seq.fill(1 + rnd.nextInt(3))(
         (c.mkString("."), if (task == Task.MultiClass) rnd.nextInt(3).toDouble else rnd.nextInt(2).toDouble))
     }
-    val key = Keys.keyColumn(ranges.indices.map(i => col(s"b$i")))
-    (KvIndexBuilder.buildFromKeyed(votes.toDF("key", "pred"), ranges.length, task), key)
+    (KvIndexBuilder.buildFromKeyed(votes.toDF("key", "pred"), ranges.length, task), binKey(ranges.length))
   }
 
-  /** Every slot of the extended key space: each field from -1 to two past
-    * its trained range, plus both Long extremes and `extra` — as an
-    * RDD-backed frame of non-nullable Long bins (so the probe runs
-    * through codegen) with a row id. */
-  private def extendedSpace(ranges: Seq[Int], extra: Seq[Long] = Nil): DataFrame = {
-    val values = ranges.map(r => (Seq(Long.MinValue, Long.MaxValue) ++ (-1L to r + 1L) ++ extra))
-    val rows = values.foldLeft(Seq(Seq.empty[Long]))((acc, vs) => acc.flatMap(p => vs.map(p :+ _)))
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        ranges.indices.map(i => org.apache.spark.sql.types.StructField(s"b$i",
-          org.apache.spark.sql.types.LongType, nullable = false)))
+  /** `rows` of bins as an RDD-backed frame (so the probe runs through
+    * codegen, and building it starts no job) of non-nullable Long bin
+    * columns b0..b(n-1) and the row's index as its id. */
+  private def binRows(rows: Seq[Seq[Long]]): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    val schema = StructType(StructField("id", IntegerType, nullable = false) +:
+      rows.head.indices.map(i => StructField(s"b$i", LongType, nullable = false)))
     val data = rows.zipWithIndex.map { case (r, i) => org.apache.spark.sql.Row.fromSeq(i +: r) }
     spark.createDataFrame(spark.sparkContext.parallelize(data, 4), schema)
   }
 
-  private def executedPlan(df: DataFrame): String = {
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan.toString
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  /** Every slot of the extended key space as [[binRows]]: each field from
+    * -1 to two past its trained range, plus both Long extremes and
+    * `extra`. */
+  private def extendedSpace(ranges: Seq[Int], extra: Seq[Long] = Nil): DataFrame = {
+    val values = ranges.map(r => (Seq(Long.MinValue, Long.MaxValue) ++ (-1L to r + 1L) ++ extra))
+    binRows(values.foldLeft(Seq(Seq.empty[Long]))((acc, vs) => acc.flatMap(p => vs.map(p :+ _))))
   }
+
+  private def executedPlan(df: DataFrame): String = TestSpark.executedPlan(df).toString
 
   test("dense probe equals joinProbe and scoreKey bitwise over the whole key space") {
     for ((ranges, task, seed) <- Seq(
         (Seq(3, 4, 2), Task.Classification, 1), (Seq(3, 4, 2), Task.MultiClass, 2),
         (Seq(3, 2, 3, 3), Task.Classification, 3), (Seq(3, 2, 3, 3), Task.MultiClass, 4),
         // keyLen 1: no prefix level, the kv straight over the global value
-        (Seq(4), Task.Classification, 7))) {
+        (Seq(4), Task.Classification, 7),
+        // radix 1 (only bin 0 trained) in field 0: blocks at the table's edge
+        (Seq(1, 3, 2), Task.Classification, 8))) {
       val (m, key) = binModel(ranges, task, seed)
       // the one index relation: the kv rows at len = keyLen, one row per
       // prefix at lens keyLen-1 .. 1, and exactly one len = 0 row
@@ -266,51 +257,48 @@ class KvProbeSpec extends AnyFunSuite {
           s"$ranges $task key $k: dense ${got(id)} joined ${joined(id)} folded ${folded(id)} local $local")
       }
       // every level of the cascade answers some slot
-      val levels = keys.values.map { k =>
-        if (scorer.kv.contains(k)) ranges.length
-        else scorer.prefixes.collectFirst {
-          case (l, t) if t.contains(graft.core.LocalScorer.prefix(k, l)) => l
-        }.getOrElse(0)
-      }.toSet
+      val levels = keys.values.map(level(scorer, ranges.length, _)).toSet
       assert(levels == (0 to ranges.length).toSet, s"$ranges $task levels $levels")
     }
   }
 
-  /** The types of every broadcast join key in `df`'s executed plan. */
-  private def joinKeyTypes(df: DataFrame): Set[org.apache.spark.sql.types.DataType] = {
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => (j.leftKeys ++ j.rightKeys).map(_.dataType)
-    }.flatten.toSet
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+  test("the first dense probe collects the index once, in the caller's job group") {
+    val (m, key) = binModel(Seq(3, 4, 2), Task.MultiClass, 9)
+    val input = extendedSpace(Seq(3, 4, 2))
+    // the table is filled from ONE collect of the index's codes, the
+    // first time a probe asks for it, and then reused
+    val first = GroupJobs(m.probe(input, key, "p"))
+    assert(first.started.size == 1 && first.outside.isEmpty, s"first probe $first")
+    val second = GroupJobs(m.probe(input, key, "p"))
+    assert(second.started.isEmpty, s"second probe $second")
+    assert(executedPlan(second.result).contains("kv_probe("))
   }
 
-  test("packed joinProbe equals the string cascade, the dense form and scoreKey over a whole keyLen-4 space") {
-    import org.apache.spark.sql.types.{LongType, StringType}
+  test("packed joinProbe equals dense, folded and scoreKey over a keyLen-4 space") {
+    import org.apache.spark.sql.types.LongType
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val w = Keys.codeWidth(4)
     // around the unseen digit 2^w - 1, which a bin must never alias
     val wide = Seq((1L << w) - 2, (1L << w) - 1, 1L << w, (1L << w) + 1)
     for ((task, seed) <- Seq(Task.Classification -> 11, Task.MultiClass -> 12)) {
       val ranges = Seq(3, 2, 3, 3)
       val (m, key) = binModel(ranges, task, seed)
-      assert(m.packed, s"$task")
       val scorer = m.toLocalScorer
       val input = extendedSpace(ranges, wide)
-      val asString = input.select(col("id"), key.as("k"))
       def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
       val packedJoin = m.joinProbe(input, key, "p")
-      val stringJoin = m.joinProbe(asString, col("k"), "p")
-      assert(joinKeyTypes(packedJoin) == Set(LongType), s"$task packed join keys")
-      assert(joinKeyTypes(stringJoin) == Set(StringType), s"$task string join keys")
+      val joinKeys = TestSpark.executedPlan(packedJoin).collect {
+        case j: BroadcastHashJoinExec => (j.leftKeys ++ j.rightKeys).map(_.dataType)
+      }.flatten.toSet
+      assert(joinKeys == Set(LongType), s"$task packed join keys")
       val dense = m.probe(input, key, "p")
       assert(executedPlan(dense).contains("kv_probe("), s"$task must serve dense")
       // the interpreted code: a local relation folds the projection at plan time
       val folded = m.joinProbe(spark.createDataFrame(input.collect().toSeq.asJava, input.schema), key, "p")
-      val forms = Seq("packed" -> packedJoin, "string" -> stringJoin, "dense" -> dense, "folded" -> folded)
+      val forms = Seq("packed" -> packedJoin, "dense" -> dense, "folded" -> folded)
         .map { case (name, df) => name -> byId(df) }
-      val keys = asString.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
       keys.foreach { case (id, k) =>
         val local = bits(scorer.scoreKey(k))
         forms.foreach { case (name, values) =>
@@ -321,36 +309,32 @@ class KvProbeSpec extends AnyFunSuite {
     }
   }
 
-  test("an index or key that does not pack takes the string cascade and still agrees with scoreKey") {
-    import org.apache.spark.sql.types.StringType
+  test("a key or index that does not pack fails loudly, before any job") {
     import spark.implicits._
-    val unseen = Keys.unseen(4)
     val base = Seq("1.1.1.1" -> 1.0, "1.1.2.1" -> 0.0, "1.2.1.1" -> 1.0, "2.1.1.1" -> 0.0)
-    val input = extendedSpace(Seq(2, 2, 2, 2), Seq(unseen - 1, unseen))
-    val binKey = Keys.keyColumn((0 until 4).map(i => col(s"b$i")))
-    val nullable = Keys.keyColumn(when(col("b0") === Long.MaxValue, lit(null)).otherwise(col("b0")) +:
-      (1 until 4).map(i => col(s"b$i")))
-    val indexes = Seq(
-      "a non-canonical kv key" -> (base :+ ("01.2.1.1" -> 1.0)),
-      "a field at the unseen digit" -> (base :+ (s"$unseen.1.1.1" -> 1.0)))
-    val model = KvIndexBuilder.buildFromKeyed(base.toDF("key", "pred"), keyLen = 4, Task.Classification)
-    val cases = indexes.map { case (why, keyed) =>
-      (why, KvIndexBuilder.buildFromKeyed(keyed.toDF("key", "pred"), keyLen = 4, Task.Classification),
-        input, binKey)
-    } ++ Seq(
-      ("a nullable bin", model, input, nullable),
-      ("a plain string key", model, input.select(col("id"), binKey.as("k")), col("k")))
-    cases.foreach { case (why, m, in, key) =>
-      assert(m.packed == (m eq model), why)
-      val probed = m.joinProbe(in, key, "p")
-      assert(joinKeyTypes(probed) == Set(StringType), s"$why must take the string cascade")
-      val scorer = m.toLocalScorer
-      val rows = probed.select(key.as("k"), col("p")).collect()
-      assert(rows.length == input.count(), why)
-      rows.foreach { r =>
-        val local = Option(r.getString(0)).map(scorer.scoreKey).getOrElse(m.globalValue)
-        assert(bits(r.getDouble(1)) == bits(local), s"$why key ${r.getString(0)}: ${r.getDouble(1)} vs $local")
-      }
+    val input = extendedSpace(Seq(2, 2, 2, 2))
+    val keys = Seq(
+      "keyColumn" -> (input.select(col("id"), binKey(4).as("k")), col("k")),
+      "nullable" -> (input, Keys.keyColumn(when(col("b0") === Long.MaxValue, lit(null)).otherwise(col("b0")) +:
+        (1 until 4).map(i => col(s"b$i")))),
+      "integral" -> (input, Keys.keyColumn(col("b0").cast("double") +: (1 until 4).map(i => col(s"b$i")))),
+      "3 bins" -> (input, binKey(3)),
+      "5 bins" -> (input.withColumn("b4", col("b0")), binKey(5)))
+    // no probe here succeeds, so the dense table stays unfilled: a check
+    // made after the table's collect would start that job
+    val m = KvIndexBuilder.buildFromKeyed(base.toDF("key", "pred"), keyLen = 4, Task.Classification)
+    for ((why, (in, key)) <- keys; (form, dense) <- Seq("probe" -> true, "joinProbe" -> false)) {
+      val run = GroupJobs(intercept[IllegalArgumentException](
+        if (dense) m.probe(in, key, "p") else m.joinProbe(in, key, "p")))
+      assert(run.started.isEmpty, s"$form with a $why key started jobs: $run")
+      assert(run.result.getMessage.contains(why), s"$form: ${run.result.getMessage}")
+    }
+    // an index key that does not pack is rejected when the index is built
+    val unseen = Keys.unseen(4)
+    for (bad <- Seq("01.2.1.1", s"$unseen.1.1.1")) {
+      val e = intercept[IllegalArgumentException](KvIndexBuilder.buildFromKeyed(
+        (base :+ (bad -> 1.0)).toDF("key", "pred"), keyLen = 4, Task.Classification))
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains(s"$unseen"), e.getMessage)
     }
   }
 
@@ -366,25 +350,20 @@ class KvProbeSpec extends AnyFunSuite {
     assert("Exchange ".r.findAllIn(plan).size == 1, s"only the aggregate may exchange:\n$plan")
   }
 
-  test("a non-bin key, a nullable bin and an over-cap key space take the join form") {
+  test("an over-cap key space takes the join form") {
     import spark.implicits._
     def form(df: DataFrame): String = {
       val plan = executedPlan(df)
       if (plan.contains("kv_probe(")) "dense" else if (plan.contains("BroadcastHashJoin")) "join" else plan
     }
     val (m, key) = binModel(Seq(3, 4, 2), Task.Classification, 6)
-    val input = extendedSpace(Seq(3, 4, 2))
-    assert(form(m.probe(input, key, "p")) == "dense")
-    assert(form(m.probe(input.select(col("id"), key.as("k")), col("k"), "p")) == "join")
-    val nullable = Keys.keyColumn(Seq(when(col("b0") > 100, lit(null)).otherwise(col("b0")),
-      col("b1"), col("b2")))
-    assert(form(m.probe(input, nullable, "p")) == "join")
+    assert(form(m.probe(extendedSpace(Seq(3, 4, 2)), key, "p")) == "dense")
     // 400 kv keys, far below the cap, over a 401 x 401 key space above it
     val wide = KvIndexBuilder.buildFromKeyed(
       (0 until 400).map(i => (s"$i.$i", (i % 2).toDouble)).toDF("key", "pred"), keyLen = 2, Task.Classification)
     assert(wide.kvCount <= graft.core.KvModel.MaxCompiledEntries)
     val wideInput = (0L until 500L).map(i => (i, i)).toDF("b0", "b1")
-    val wideKey = Keys.keyColumn(Seq(col("b0"), col("b1")))
+    val wideKey = binKey(2)
     assert(form(wide.probe(wideInput, wideKey, "p")) == "join")
     // and the join form serves every row the same as the scorer
     val scorer = wide.toLocalScorer

@@ -97,17 +97,27 @@ class PersistSpec extends AnyFunSuite {
     trained.kv.index.where(col("len") > 0).write.mode("overwrite").parquet(s"$noRoot/index")
     val e = intercept[IllegalArgumentException](InferDbPipeline.load(spark, noRoot))
     assert(e.getMessage.contains(noRoot) && e.getMessage.contains("no len = 0"), e.getMessage)
+    // and one whose key does not pack (a leading zero), naming the key too
+    val unpacked = TmpDirs.scratch("persist_spec_unpacked", sf)
+    meta.write.mode("overwrite").parquet(s"$unpacked/meta")
+    spark.read.parquet(s"$dir/bins").write.mode("overwrite").parquet(s"$unpacked/bins")
+    val bad = Seq.fill(trained.kv.keyLen)("01").mkString(".")
+    import spark.implicits._
+    trained.kv.index.select("len", "key", "value").unionByName(Seq((trained.kv.keyLen, bad, 0.5)).toDF("len", "key", "value"))
+      .write.mode("overwrite").parquet(s"$unpacked/index")
+    val u = intercept[IllegalArgumentException](InferDbPipeline.load(spark, unpacked))
+    assert(u.getMessage.contains(s"$unpacked/index") && u.getMessage.contains(s"'$bad'"), u.getMessage)
   }
 
   test("load runs pinned job counts under the caller's job group: no schema inference") {
     val dir = TmpDirs.scratch("persist_spec_load_jobs", sf)
     trained.save(dir)
-    // the meta row, the bins, then ONE job that caches the index and
-    // reads its kv count, global value and whether its keys pack — each
+    // the meta row, the bins, then ONE job that caches the index, reads
+    // its kv count and global value and checks that its keys pack — each
     // relation read with the schema save wrote, never inferred
     val load = GroupJobs(InferDbPipeline.load(spark, dir))
     assert(load.started.size == 3 && load.outside.isEmpty, s"load $load")
-    assert(load.result.kv.packed && load.result.kv.kvCount == trained.kv.kvCount)
+    assert(load.result.kv.kvCount == trained.kv.kvCount)
   }
 
   test("reloaded index probes identically, including fallback paths") {

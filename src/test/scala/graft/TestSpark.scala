@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import scala.jdk.CollectionConverters._
 
 /** One shared local session for the whole forked test JVM. */
@@ -18,6 +19,16 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** `df`'s executed plan with adaptive execution off, so every join and
+    * exchange shows as planned instead of inside an unexecuted adaptive
+    * shell. The setting is restored afterwards. */
+  def executedPlan(df: DataFrame): SparkPlan = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }
 
