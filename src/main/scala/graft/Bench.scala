@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Stage queries mirror the reference's query-integration benchmark
   * (SURVEY §3.3 note): featurize = expression-only feature projection;
-  * translate = key construction; score = KV probe (broadcast joins +
-  * coalesce); end_to_end = featurize+translate+probe+selection folded
+  * translate = key construction; score = KV probe (the compiled answer
+  * table, plus broadcast joins + coalesce for the levels above it in an
+  * over-cap index); end_to_end = featurize+translate+probe+selection folded
   * into ONE fused plan — the capability PG needs three materialized
   * views for.
   */

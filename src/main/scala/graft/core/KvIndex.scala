@@ -53,22 +53,27 @@ object Aggregates {
   * `len >= 1` packs into a Long [[Keys.code]] (checked when the index is
   * cached), and the probe serves that one encoding: a [[Keys.keyColumn]]
   * over `keyLen` non-nullable integral bins, packed per row inside the
-  * serve's projection — any other key fails loudly. It takes one of two
-  * bitwise-identical forms, chosen in [[probe]] ([[KvProbeSpec]] pins
-  * them):
+  * serve's projection — any other key fails loudly. It is ONE cascade,
+  * split at the level [[split]] (`s*`): the longest prefix length whose
+  * fields' [[radices]] span at most [[KvModel.MaxCompiledEntries]] slots.
   *
-  *  - **dense** (a key space of at most [[KvModel.MaxCompiledEntries]]
-  *    slots): every key's cascade answer is a pure function of the key,
-  *    so it is filled once per model from the index's codes into a
-  *    mixed-radix answer table ([[DenseAnswers]]) and the serve is ONE
-  *    whole-stage-codegen projection that packs the bins and loads one
-  *    double — no key string, zero joins, zero exchanges on the probe
-  *    side at any input size;
-  *  - **join cascade** (a larger key space): BROADCAST hash joins on the
-  *    code + one coalesce — fully parallel, no iteration, and the only
-  *    shuffle in the whole serve path is whatever the caller's plan
-  *    already needed. The levels are lazy: a prefix level computes its
-  *    key and probes its table only for rows no longer level resolved.
+  *  - **compiled levels** `1 .. s*`: a level's answer is a pure function
+  *    of the key's first `s*` bins, so every such level and the global
+  *    value are filled once per model from the index's codes into ONE
+  *    mixed-radix answer table ([[DenseAnswers]]), loaded at the packed
+  *    bins inside the serve's whole-stage-codegen projection — no key
+  *    string, zero joins, zero exchanges;
+  *  - **joined levels** `s*+1 .. keyLen`: BROADCAST hash joins on the
+  *    code, lazy like the trie walk (a level computes its key and probes
+  *    its table only for rows no longer level resolved) — fully
+  *    parallel, and the only shuffle in the serve path is whatever the
+  *    caller's plan already needed.
+  *
+  * The final coalesce of the joined levels ends in the table's answer.
+  * `s* = keyLen` is the dense form (one projection, no join): every
+  * index the shipped queries fit serves so. [[joinProbe]] is the other
+  * end, `s* = 0`: every level joined, ending in the global value. Every
+  * split gives the same values bit for bit ([[KvProbeSpec]] pins them).
   *
   * Build it with [[KvIndexBuilder.buildFromKeyed]] or [[KvIndexState]];
   * [[KvModel.materialize]] is the one place an index is cached.
@@ -81,7 +86,8 @@ final case class KvModel(
     keyLen: Int,
     index: DataFrame,    // (len int, key string, value double, code long), cached
     globalValue: Double, // the len = 0 row's value: the trie-root fallback
-    kvCount: Long        // rows at len = keyLen, counted when the index was cached
+    kvCount: Long,       // rows at len = keyLen, counted when the index was cached
+    radices: Seq[Int]    // field i's radix: 1 + its largest digit over the index codes
 ) {
   /** The index entries as a typed Dataset (SURVEY §1.2 fixed shape). */
   def entries: org.apache.spark.sql.Dataset[Types.KVEntry] = {
@@ -108,34 +114,36 @@ final case class KvModel(
   }
 
   /** The join cascade's tables, longest first: len -> (code, value) for
-    * `len = keyLen .. 1`. Built once per model and reused by every
-    * [[joinProbe]]: fresh views per call re-analyzed the index's lineage
-    * and cost a 6-field cascade serve ~0.1 s (4 local cores). */
+    * `len = keyLen .. 1`. Built once per model and reused by every serve
+    * that joins a level: fresh views per call re-analyzed the index's
+    * lineage and cost a 6-field cascade serve ~0.1 s (4 local cores). */
   @transient private lazy val codeLevels: Seq[(Int, DataFrame)] = (keyLen +: levels).map { l =>
     l -> rowsAt(l).select(col("code"), col("value"))
   }
 
+  /** `s*`, where [[probe]] splits the cascade: the longest prefix length
+    * `s` with `Π_{i<s} (radices(i) + 1) <= MaxCompiledEntries` — only the
+    * index's radices and the cap decide it. */
+  def split: Int =
+    (1 to keyLen).takeWhile(s => DenseAnswers.slots(radices.take(s).toArray) <= KvModel.MaxCompiledEntries).length
+
   /** Append `predName` to `input` by probing the index with `key`.
     * Exact hit wins; else the longest non-empty prefix aggregate; else
-    * the global aggregate (trie-root DFS, inference_trie.py:91-98).
-    * The one place the form is chosen: the dense answer table when the
-    * index has a [[denseAnswers]] table, the broadcast-join cascade
-    * otherwise — same values bit for bit either way. */
+    * the global aggregate (trie-root DFS, inference_trie.py:91-98):
+    * levels above [[split]] by broadcast joins, the rest from the
+    * [[compiled]] table — the same values bit for bit at any split. */
   def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
     val bins = intBins(input, key)
-    denseAnswers match {
-      case Some(table) => input.withColumn(predName, KvProbe.column(bins, table))
-      case None => cascade(input, bins, predName)
-    }
+    cascade(input, bins, compiled, predName)
   }
 
-  /** The broadcast-join cascade form of [[probe]] (the scale path for
-    * key spaces above the dense cap). */
+  /** The cascade with every level joined (`s* = 0`): the scale path, and
+    * the reference every split of [[probe]] equals. */
   def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
-    cascade(input, intBins(input, key), predName)
+    cascade(input, intBins(input, key), None, predName)
 
   /** `key`'s bins: the one probe contract, checked by analysis (no job)
-    * before either form runs. `key` must be a [[Keys.keyColumn]] of
+    * before any probe runs. `key` must be a [[Keys.keyColumn]] of
     * `keyLen` bins that are non-nullable and integral in `input`;
     * anything else throws `IllegalArgumentException`. */
   private def intBins(input: DataFrame, key: Column): Seq[Column] = {
@@ -149,29 +157,33 @@ final case class KvModel(
     bins
   }
 
-  /** The cascade's answer for every slot of the key space, filled once
-    * per model from ONE collect of the index's (len, code, value) rows —
-    * when the space has at most [[KvModel.MaxCompiledEntries]] slots.
-    * Field `i`'s radix is 1 + its largest digit over the index codes;
-    * its extra "unseen" digit is the radix itself, a digit no index key
-    * has in that field — exactly the cascade of any bin outside
-    * `[0, radix)`. An index of more entries than the cap cannot fit
-    * (each kv key has its own slot) and is never collected. */
-  @transient private lazy val denseAnswers: Option[DenseAnswers] =
-    if (kvCount > KvModel.MaxCompiledEntries) None
+  /** The cascade's answer over levels `0 .. s*` for every slot of the
+    * first [[split]] fields, filled once per model — the first time a
+    * probe asks for it — from ONE collect of the index's (len, code,
+    * value) rows at `len <= s*`; None when `s* = 0`. Field `i`'s extra
+    * "unseen" digit is its radix, a digit no index key has in that field
+    * — exactly the cascade of any bin outside `[0, radix)`. */
+  @transient private lazy val compiled: Option[DenseAnswers] = {
+    val s = split
+    if (s == 0) None
     else {
-      val rows = index.where(col("len") > 0).select(col("len"), col("code"), col("value")).collect()
+      val rows = index.where(col("len").between(1, s)).select(col("len"), col("code"), col("value")).collect()
         .map(r => Keys.digits(r.getLong(1), r.getInt(0), keyLen) -> r.getDouble(2)).toSeq
-      val radices = Array.tabulate(keyLen)(i =>
-        rows.foldLeft(0) { case (m, (d, _)) => if (i < d.length) math.max(m, d(i) + 1) else m })
-      if (DenseAnswers.slots(radices) > KvModel.MaxCompiledEntries) None
-      else Some(DenseAnswers.fill(radices, globalValue, rows))
+      Some(DenseAnswers.fill(radices.take(s).toArray, globalValue, rows))
     }
+  }
 
-  /** The join cascade over the Long [[Keys.code]] of `bins`, one
-    * broadcast left join per level of [[codeLevels]], exact first: level
-    * `l` probes with [[Keys.codePrefix]] — Long-keyed hash relations, and
-    * no key string built or cut per row.
+  /** The cascade over the Long [[Keys.code]] of `bins`: one broadcast
+    * left join per level of [[codeLevels]] above the table's fields,
+    * exact first, then `table`'s answer at the code's first digits, or
+    * the global value without a table. Level `l` probes with
+    * [[Keys.codePrefix]] — Long-keyed hash relations, and no key string
+    * built or cut per row. The table reads the digits of the code the
+    * joins already packed, not the bins again: re-binning there put a
+    * second copy of every bin expression into the serve's generated
+    * code, and a 6-field serve that also kept the key string ran ~5x
+    * slower (4 local cores). With every level in the table it is the
+    * table's one projection over the bins.
     *
     * Lazy, like the trie walk it reproduces: level `l`'s stream-side key
     * is `CASE WHEN <every longer level missed> THEN codePrefix(code, l) END`,
@@ -179,20 +191,26 @@ final case class KvModel(
     * key being NULL, the hash lookup too (broadcast hash joins never
     * probe a NULL key). A level's value only counts when every earlier
     * one is NULL, and then it probes exactly the eager key — the final
-    * coalesce is bit-identical to probing every level. */
-  private def cascade(input: DataFrame, bins: Seq[Column], predName: String): DataFrame = {
-    val (cascaded, values) = codeLevels.foldLeft((input.withColumn("__key", Keys.code(bins)), Seq.empty[String])) {
-      case ((df, resolved), (l, tbl)) =>
-        val probeKey =
-          if (l == keyLen) col("__key")
-          else when(coalesce(resolved.map(col): _*).isNull, Keys.codePrefix(col("__key"), keyLen, l))
-        val joined = df.join(broadcast(tbl.toDF(s"__p_$l", s"__v_$l")), probeKey === col(s"__p_$l"), "left")
-          .drop(s"__p_$l")
-        (joined, resolved :+ s"__v_$l")
+    * coalesce, itself lazy, is bit-identical to probing every level. */
+  private def cascade(input: DataFrame, bins: Seq[Column], table: Option[DenseAnswers], predName: String): DataFrame = {
+    val s = table.fold(0)(_.radices.length)
+    codeLevels.takeWhile(_._1 > s) match {
+      case Seq() => input.withColumn(predName, KvProbe.column(bins, table.get))
+      case joined =>
+        val (cascaded, values) = joined.foldLeft((input.withColumn("__key", Keys.code(bins)), Seq.empty[String])) {
+          case ((df, resolved), (l, tbl)) =>
+            val probeKey =
+              if (l == keyLen) col("__key")
+              else when(coalesce(resolved.map(col): _*).isNull, Keys.codePrefix(col("__key"), keyLen, l))
+            val next = df.join(broadcast(tbl.toDF(s"__p_$l", s"__v_$l")), probeKey === col(s"__p_$l"), "left")
+              .drop(s"__p_$l")
+            (next, resolved :+ s"__v_$l")
+        }
+        val fallback = table.fold(lit(globalValue))(t => KvProbe.column(Keys.codeDigits(col("__key"), keyLen, s), t))
+        cascaded
+          .withColumn(predName, coalesce(values.map(col) :+ fallback: _*))
+          .drop("__key" +: values: _*)
     }
-    cascaded
-      .withColumn(predName, coalesce(values.map(col) :+ lit(globalValue): _*))
-      .drop("__key" +: values: _*)
   }
 
   /** Collect the (bounded-by-key-space) index ONCE into plain maps for
@@ -323,38 +341,42 @@ object KvIndexState {
 }
 
 object KvModel {
-  /** The largest key space (slots of the dense answer table, unseen
-    * digits included) the probe serves from the plan-embedded kernel;
-    * above it the probe takes the broadcast joins. The table rides every
-    * task binary, so it must stay small: 2^17 doubles is 1 MB. */
+  /** The most slots (unseen digits included) of the answer table that
+    * serves a model's compiled levels: [[KvModel.split]] compiles the
+    * longest prefix whose space fits, and the levels above it take the
+    * broadcast joins. The table rides every task binary, so it must stay
+    * small: 2^17 doubles is 1 MB. */
   val MaxCompiledEntries: Long = 1L << 17
 
   /** Cache `rows` (len, key, value) with each key's [[Keys.code]] as the
-    * index of a [[KvModel]], and read its kv count and its global value
-    * and check that every key packs in ONE pass, which also fills the
-    * cache every probe broadcasts from — shared by the build and
-    * [[Persist.load]], so the code is computed once per index and never
-    * per serve. On a load that pass is the only job; a build also runs
-    * its aggregates' stages, and adaptive execution may run the last of
-    * them into the cache as a job of its own. `origin` names the rows in
-    * the error thrown when they have no `len = 0` row (an index nothing
-    * voted for) or a key at `len >= 1` without a code. */
+    * index of a [[KvModel]], and read its kv count, its global value and
+    * its radices and check that every key packs in ONE pass, which also
+    * fills the cache every probe broadcasts from — shared by the build
+    * and [[Persist.load]], so the code is computed once per index and
+    * never per serve. On a load that pass is the only job; a build also
+    * runs its aggregates' stages, and adaptive execution may run the last
+    * of them into the cache as a job of its own. `origin` names the rows
+    * in the error thrown when they have no `len = 0` row (an index
+    * nothing voted for) or a key at `len >= 1` without a code. */
   private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
     val index = rows.select(col("len"), col("key"), col("value"),
       Keys.indexCode(col("key"), col("len"), keyLen).as("code")).cache()
-    val (kvCount, global, unpacked) = index
-      .select(col("len"), col("value"), when(col("len") > 0 && col("code").isNull, col("key"))).rdd
-      .aggregate((0L, Option.empty[Double], Option.empty[String]))(
-        { case ((n, g, u), r) =>
+    val (kvCount, global, unpacked, radices) = index
+      .select(col("len"), col("value"), when(col("len") > 0 && col("code").isNull, col("key")), col("code")).rdd
+      .aggregate((0L, Option.empty[Double], Option.empty[String], new Array[Int](keyLen)))(
+        { case ((n, g, u, rs), r) =>
           val len = r.getInt(0)
-          (if (len == keyLen) n + 1 else n, if (len == 0) Some(r.getDouble(1)) else g, u.orElse(Option(r.getString(2)))) },
-        { case ((n1, g1, u1), (n2, g2, u2)) => (n1 + n2, g1.orElse(g2), u1.orElse(u2)) })
+          if (len > 0 && !r.isNullAt(3))
+            Keys.digits(r.getLong(3), len, keyLen).zipWithIndex.foreach { case (d, i) => rs(i) = math.max(rs(i), d + 1) }
+          (if (len == keyLen) n + 1 else n, if (len == 0) Some(r.getDouble(1)) else g, u.orElse(Option(r.getString(2))), rs) },
+        { case ((n1, g1, u1, rs1), (n2, g2, u2, rs2)) =>
+          (n1 + n2, g1.orElse(g2), u1.orElse(u2), rs1.zip(rs2).map { case (a, b) => math.max(a, b) }) })
     if (global.isEmpty || unpacked.isDefined) index.unpersist()
     require(global.isDefined, s"$origin has no len = 0 (global value) row: no (key, prediction) " +
       "row voted, so the input was empty or every prediction NULL")
     require(unpacked.isEmpty, s"$origin has key '${unpacked.get}', which does not pack: a key must be its " +
       s"len (at most $keyLen) canonical decimals, each below 2^${Keys.codeWidth(keyLen)} - 1 = ${Keys.unseen(keyLen)}")
-    KvModel(task, keyLen, index, global.get, kvCount)
+    KvModel(task, keyLen, index, global.get, kvCount, radices.toSeq)
   }
 }
 
@@ -387,8 +409,9 @@ object KvIndexBuilder {
     * (one row per kv entry), not raw rows — the trie's DFS over leaves
     * (inference_trie.py:73-98). Both branches read the same kv plan, so
     * its aggregate runs once: the branches share its exchange. The index
-    * is one partition, like a saved one: every join-cascade broadcast
-    * scans all of its partitions, a task each, on every serve. */
+    * is one partition, like a saved one: the broadcast of every level
+    * above [[KvModel.split]] scans all of its partitions, a task each, on
+    * every serve. */
   private[core] def fromKv(
       kvRaw: DataFrame,
       keyLen: Int,

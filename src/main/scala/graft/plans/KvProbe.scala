@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext,
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
 
-/** The whole probe cascade precomputed over an index's key space, one
-  * answer per mixed-radix slot of the bins. Field `i` has digits
+/** The probe cascade's compiled levels precomputed over the space of an
+  * index's first fields (all of them when the whole space fits), one
+  * answer per mixed-radix slot of those bins. Field `i` has digits
   * `0 .. radices(i)`: a bin in `[0, radices(i))` is its own digit and
   * any other bin (negative, or above every bin the index has seen in
   * that field) is the "unseen" digit `radices(i)`. Slots pack field 0
@@ -59,15 +60,19 @@ object DenseAnswers {
   }
 }
 
-/** Compiled KV probe: the bins -> the index's cascaded answer, one
-  * mixed-radix pack and one `double[]` load per row inside whole-stage
-  * codegen — no key string, no hashing, no level loop, no join, and no
-  * exchange on the probe side at any input size. The table is filled by
-  * [[graft.core.KvModel.probe]] from the index's codes and values
-  * ([[DenseAnswers.fill]]), copied, never recomputed, so the values are
-  * the join cascade's bit for bit (KvProbeSpec pins it over whole key
-  * spaces); it rides the task binary like [[KnnRef]]/[[TreeEnsembleRef]]
-  * and is at most `KvModel.MaxCompiledEntries` doubles.
+/** Compiled KV probe: the bins -> the cascade's answer over the
+  * table's levels, one mixed-radix pack and one `double[]` load per row
+  * inside whole-stage codegen — no key string, no hashing, no level
+  * loop, no join, and no exchange on the probe side at any input size.
+  * [[graft.core.KvModel.probe]] serves its compiled levels `1 .. s*`
+  * (the first `s*` bins) from it: the whole cascade when `s*` is the key
+  * length, else the last term of the coalesce after the broadcast joins
+  * of the longer levels. The table is filled from the index's codes and
+  * values ([[DenseAnswers.fill]]), copied, never recomputed, so the
+  * values are the join cascade's bit for bit (KvProbeSpec pins it over
+  * whole key spaces); it rides the task binary like
+  * [[KnnRef]]/[[TreeEnsembleRef]] and is at most
+  * `KvModel.MaxCompiledEntries` doubles.
   */
 case class KvProbeScore(children: Seq[Expression], table: DenseAnswers) extends Expression {
   override def dataType: DataType = DoubleType

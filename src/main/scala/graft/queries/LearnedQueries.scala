@@ -1532,7 +1532,7 @@ object LearnedQueries {
     }),
     // Streaming PROBE through the foreachBatch sink: the events parquet
     // is replayed as a file STREAM, each micro-batch scored by the
-    // learned index (`model.probe` — stateless broadcast joins, the
+    // learned index (`model.probe` — a stateless projection, the
     // identical plan batch and stream) and appended to a sink; the
     // union of batch outputs is oracle-checked against the one-shot
     // batch probe, which the stateless-transform identity guarantees

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming surface (SURVEY §7.3: the reference is strictly
-  * batch; this is the designed extension — the KvModel probe is
-  * stateless broadcast joins + a projection, so
+  * batch; this is the designed extension — the KvModel probe is a
+  * stateless projection (plus broadcast joins for an over-cap index), so
   * `fitted.transform(readStreamDf)` works unchanged; what needs
   * streaming-specific code is only stateful aggregation, provided here).
   */
@@ -274,7 +274,8 @@ object StreamOps {
 
   /** foreachBatch sink: per-micro-batch the batch DataFrame is handed to
     * an arbitrary BATCH transform (e.g. `fitted.transform(_, "p")` — the
-    * learned-index probe is stateless broadcast joins, so the same plan
+    * learned-index probe is stateless (a projection, plus broadcast joins
+    * for an over-cap index), so the same plan
     * serves batch and stream) and then to a writer. This is the S4/MV
     * maintenance shape: incremental scoring + upsert into a sink that
     * has no native streaming writer.

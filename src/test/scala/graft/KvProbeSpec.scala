@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** The compiled single-projection probe (the dense answer table) must be
-  * bitwise identical to the broadcast-join cascade on every path:
+/** The probe is one cascade split at `s*`: the compiled levels from one
+  * dense answer table, the levels above it by broadcast joins. Every
+  * split must be bitwise identical to the all-join cascade on every path:
   * exact hit, each prefix length, global fallback, NULL-translated
-  * keys — and must be the plan actually chosen for a small index. Both
+  * keys — and must be the plan actually chosen: one projection for a
+  * small index, the table plus a join per over-cap level above it. Both
   * serve one key: a `Keys.keyColumn` over non-nullable integral bins.
   */
 class KvProbeSpec extends AnyFunSuite {
@@ -350,25 +352,100 @@ class KvProbeSpec extends AnyFunSuite {
     assert("Exchange ".r.findAllIn(plan).size == 1, s"only the aggregate may exchange:\n$plan")
   }
 
-  test("an over-cap key space takes the join form") {
+  /** 400 kv keys `i.i`, far below the cap, over a 401 x 401 key space
+    * above it: the first field's 401 slots fit, so `s* = 1`. */
+  private def wideModel() = {
     import spark.implicits._
-    def form(df: DataFrame): String = {
-      val plan = executedPlan(df)
-      if (plan.contains("kv_probe(")) "dense" else if (plan.contains("BroadcastHashJoin")) "join" else plan
-    }
-    val (m, key) = binModel(Seq(3, 4, 2), Task.Classification, 6)
-    assert(form(m.probe(extendedSpace(Seq(3, 4, 2)), key, "p")) == "dense")
-    // 400 kv keys, far below the cap, over a 401 x 401 key space above it
-    val wide = KvIndexBuilder.buildFromKeyed(
+    KvIndexBuilder.buildFromKeyed(
       (0 until 400).map(i => (s"$i.$i", (i % 2).toDouble)).toDF("key", "pred"), keyLen = 2, Task.Classification)
+  }
+
+  private def wideInput: DataFrame = {
+    import spark.implicits._
+    (0L until 500L).map(i => (i, i)).toDF("b0", "b1")
+  }
+
+  private def broadcastJoins(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    TestSpark.executedPlan(df).collect { case j: BroadcastHashJoinExec => j }.size
+  }
+
+  test("an over-cap key space takes the join form") {
+    val (m, key) = binModel(Seq(3, 4, 2), Task.Classification, 6)
+    val dense = m.probe(extendedSpace(Seq(3, 4, 2)), key, "p")
+    assert(m.split == 3 && executedPlan(dense).contains("kv_probe(") && broadcastJoins(dense) == 0)
+    val wide = wideModel()
     assert(wide.kvCount <= graft.core.KvModel.MaxCompiledEntries)
-    val wideInput = (0L until 500L).map(i => (i, i)).toDF("b0", "b1")
-    val wideKey = binKey(2)
-    assert(form(wide.probe(wideInput, wideKey, "p")) == "join")
-    // and the join form serves every row the same as the scorer
+    assert(wide.radices == Seq(400, 400) && wide.split == 1, s"${wide.radices} split ${wide.split}")
+    // the split shape: the first field compiled, the exact level joined
+    val served = wide.probe(wideInput, binKey(2), "p")
+    assert(executedPlan(served).contains("kv_probe(") && broadcastJoins(served) == 1, executedPlan(served))
+    // and the split form serves every row the same as the scorer
     val scorer = wide.toLocalScorer
-    wide.probe(wideInput, wideKey, "p").select(wideKey, col("p")).collect().foreach { r =>
+    served.select(binKey(2), col("p")).collect().foreach { r =>
       assert(bits(r.getDouble(1)) == bits(scorer.scoreKey(r.getString(0))), r.toString)
+    }
+  }
+
+  test("the first split-form probe collects the compiled levels once, in the caller's job group") {
+    val wide = wideModel()
+    // the table over the first s* fields is filled from ONE collect of
+    // the index's rows at len <= s*, the first time a probe asks for it;
+    // the joined levels broadcast when the serve runs, not here
+    val first = GroupJobs(wide.probe(wideInput, binKey(2), "p"))
+    assert(first.started.size == 1 && first.outside.isEmpty, s"first probe $first")
+    val second = GroupJobs(wide.probe(wideInput, binKey(2), "p"))
+    assert(second.started.isEmpty, s"second probe $second")
+    assert(executedPlan(second.result).contains("kv_probe(") && broadcastJoins(second.result) == 1)
+  }
+
+  /** `body` with whole-stage codegen off and every expression evaluated
+    * by its interpreted `eval`; the settings are restored afterwards. */
+  private def interpreted[T](body: => T): T = {
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("split probe equals joinProbe, interpreted and scoreKey bitwise over a space above the cap") {
+    import org.apache.spark.sql.catalyst.expressions.{ConcatWs, SubstringIndex}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // 71 x 71 x 31 slots is above 2^17; the first two fields' 71 x 71 fit
+    val ranges = Seq(70, 70, 30)
+    for ((task, seed) <- Seq(Task.Classification -> 13, Task.MultiClass -> 14)) {
+      val (m, key) = binModel(ranges, task, seed)
+      assert(m.radices == ranges && m.split == 2, s"$task radices ${m.radices} split ${m.split}")
+      val scorer = m.toLocalScorer
+      val input = extendedSpace(ranges)
+      val split = m.probe(input, key, "p")
+      // the serve's own operators (the cached index's lineage is not one)
+      val plan = TestSpark.executedPlan(split)
+      val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+      assert(joins.size == ranges.length - m.split, s"$task one join per level above s*:\n$plan")
+      val names = plan.flatMap(_.expressions).flatMap(_.collect {
+        case e @ (_: graft.plans.KvProbeScore | _: ConcatWs | _: SubstringIndex) => e.prettyName
+      })
+      assert(names == Seq("kv_probe"), s"$task: one kv_probe, no key string:\n$plan")
+      def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val forms = Seq(
+        "split" -> byId(split),
+        "joined" -> byId(m.joinProbe(input, key, "p")),
+        "interpreted" -> interpreted(byId(m.probe(input, key, "p"))))
+      val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      forms.foreach { case (name, values) => assert(values.size == keys.size, s"$task $name") }
+      keys.foreach { case (id, k) =>
+        val local = bits(scorer.scoreKey(k))
+        forms.foreach { case (name, values) =>
+          val got = bits(values(id))
+          assert(got == local, s"$task key $k: $name ${values(id)} vs local ${scorer.scoreKey(k)}")
+        }
+      }
+      // every level of the cascade answers some slot, joined and compiled
+      val levels = keys.values.map(level(scorer, ranges.length, _)).toSet
+      assert(levels == (0 to ranges.length).toSet, s"$task levels $levels")
     }
   }
 }

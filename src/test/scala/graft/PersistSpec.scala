@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{KvModel, NumericBins, Persist, Task, TmpDirs}
+import graft.core.{KvIndexBuilder, KvModel, NumericBins, Persist, Task, TmpDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,6 +118,41 @@ class PersistSpec extends AnyFunSuite {
     val load = GroupJobs(InferDbPipeline.load(spark, dir))
     assert(load.started.size == 3 && load.outside.isEmpty, s"load $load")
     assert(load.result.kv.kvCount == trained.kv.kvCount)
+  }
+
+  test("a reloaded over-cap index keeps the split form and serves bit-identically") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import spark.implicits._
+    // 400 kv keys i.i over a 401 x 401 key space, above the cap: the
+    // first field is compiled (s* = 1), the exact level joined
+    val kv = KvIndexBuilder.buildFromKeyed(
+      (0 until 400).map(i => (s"$i.$i", (i % 3).toDouble)).toDF("key", "pred"), keyLen = 2, Task.Classification)
+    // bins 0 .. 400 for values below 0.5 .. from 399.5: bin 400 is unseen
+    val splits = Array.tabulate(400)(_ + 0.5)
+    val fitted = InferDbPipeline.Fitted(
+      InferDbPipeline.Config(features = Seq("f0", "f1"), target = "y"),
+      Map("f0" -> NumericBins(splits), "f1" -> NumericBins(splits)), Seq("f0", "f1"), 0.0, kv)
+    val dir = TmpDirs.scratch("persist_spec_over_cap", sf)
+    fitted.save(dir)
+    val load = GroupJobs(InferDbPipeline.load(spark, dir))
+    assert(load.started.size == 3 && load.outside.isEmpty, s"load $load")
+    val back = load.result
+    assert(back.kv.radices == kv.radices && back.kv.split == 1, s"${back.kv.radices} split ${back.kv.split}")
+    // per f0: an exact hit, a prefix hit, and (f0 = 400, 401) the global value
+    val input = (0 to 401).flatMap(i => Seq((i.toDouble, i.toDouble), (i.toDouble, i + 1.0), (i.toDouble, 0.0)))
+      .toDF("f0", "f1")
+    val served = back.transform(input, "p")
+    val plan = TestSpark.executedPlan(served)
+    assert(plan.toString.contains("kv_probe(") && plan.collect { case j: BroadcastHashJoinExec => j }.size == 1,
+      s"the reloaded index must serve split:\n$plan")
+    def byRow(df: org.apache.spark.sql.DataFrame) = df.select("f0", "f1", "p").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> java.lang.Double.doubleToRawLongBits(r.getDouble(2))).toMap
+    val a = byRow(fitted.transform(input, "p"))
+    val b = byRow(served)
+    assert(a.size == input.distinct().count() && a == b)
+    // 5.6 falls back to its prefix 5 (5.5's value), 400.0 to the global value
+    val bits = java.lang.Double.doubleToRawLongBits _
+    assert(b((5.0, 6.0)) == bits(2.0) && b((400.0, 0.0)) == bits(kv.globalValue) && kv.globalValue != 2.0)
   }
 
   test("reloaded index probes identically, including fallback paths") {
