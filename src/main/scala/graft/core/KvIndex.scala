@@ -70,6 +70,15 @@ object Aggregates {
   *    caller's plan already needed.
   *
   * The final coalesce of the joined levels ends in the table's answer.
+  * So the first joined level, `s*+1`, broadcasts only its exceptions:
+  * a row whose value is bitwise the table's answer at its first `s*`
+  * digits repeats what every key under it falls through to anyway (its
+  * level-`s*` parent need not even be in the index), so the broadcast
+  * drops it and the served bits stay the same. On a 6-field index of
+  * 157k keys over 9^6 slots that leaves 7% of the exact level. The
+  * levels above `s*+1` keep every row: their parents are joined rows,
+  * and pruning them would need a self-join of the index.
+  *
   * `s* = keyLen` is the dense form (one projection, no join): every
   * index the shipped queries fit serves so. [[joinProbe]] is the other
   * end, `s* = 0`: every level joined, ending in the global value. Every
@@ -121,6 +130,24 @@ final case class KvModel(
     l -> rowsAt(l).select(col("code"), col("value"))
   }
 
+  /** The levels [[probe]] joins above the [[compiled]] table, longest
+    * first: the [[codeLevels]] above `s*`, the last of them (`s*+1`)
+    * filtered to the rows whose value differs bitwise from the table's
+    * answer at their first `s*` digits — the filter runs in the
+    * broadcast's own scan of the cached index, on every serve. A NULL
+    * value, which the coalesce skips anyway, is dropped too. Every level
+    * when there is no table. Built once per model, like [[codeLevels]]. */
+  @transient private lazy val splitLevels: Seq[(Int, DataFrame)] = compiled match {
+    case None => codeLevels
+    case Some(t) =>
+      val s = t.radices.length
+      codeLevels.takeWhile(_._1 > s).map {
+        case (l, tbl) if l == s + 1 =>
+          l -> tbl.where(KvProbe.differs(col("value"), Keys.codeDigits(col("code"), l, keyLen, s), t))
+        case level => level
+      }
+  }
+
   /** `s*`, where [[probe]] splits the cascade: the longest prefix length
     * `s` with `Π_{i<s} (radices(i) + 1) <= MaxCompiledEntries` — only the
     * index's radices and the cap decide it. */
@@ -130,17 +157,18 @@ final case class KvModel(
   /** Append `predName` to `input` by probing the index with `key`.
     * Exact hit wins; else the longest non-empty prefix aggregate; else
     * the global aggregate (trie-root DFS, inference_trie.py:91-98):
-    * levels above [[split]] by broadcast joins, the rest from the
+    * levels above [[split]] by broadcast joins (the first of them only
+    * its rows the table does not already answer), the rest from the
     * [[compiled]] table — the same values bit for bit at any split. */
   def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
     val bins = intBins(input, key)
-    cascade(input, bins, compiled, predName)
+    cascade(input, bins, compiled, splitLevels, predName)
   }
 
-  /** The cascade with every level joined (`s* = 0`): the scale path, and
-    * the reference every split of [[probe]] equals. */
+  /** The cascade with every level joined in full (`s* = 0`): the scale
+    * path, and the reference every split of [[probe]] equals. */
   def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
-    cascade(input, intBins(input, key), None, predName)
+    cascade(input, intBins(input, key), None, codeLevels, predName)
 
   /** `key`'s bins: the one probe contract, checked by analysis (no job)
     * before any probe runs. `key` must be a [[Keys.keyColumn]] of
@@ -174,9 +202,9 @@ final case class KvModel(
   }
 
   /** The cascade over the Long [[Keys.code]] of `bins`: one broadcast
-    * left join per level of [[codeLevels]] above the table's fields,
-    * exact first, then `table`'s answer at the code's first digits, or
-    * the global value without a table. Level `l` probes with
+    * left join per level of `joined` (the levels above the table's
+    * fields, longest first), then `table`'s answer at the code's first
+    * digits, or the global value without a table. Level `l` probes with
     * [[Keys.codePrefix]] — Long-keyed hash relations, and no key string
     * built or cut per row. The table reads the digits of the code the
     * joins already packed, not the bins again: re-binning there put a
@@ -192,11 +220,11 @@ final case class KvModel(
     * probe a NULL key). A level's value only counts when every earlier
     * one is NULL, and then it probes exactly the eager key — the final
     * coalesce, itself lazy, is bit-identical to probing every level. */
-  private def cascade(input: DataFrame, bins: Seq[Column], table: Option[DenseAnswers], predName: String): DataFrame = {
-    val s = table.fold(0)(_.radices.length)
-    codeLevels.takeWhile(_._1 > s) match {
+  private def cascade(input: DataFrame, bins: Seq[Column], table: Option[DenseAnswers],
+      joined: Seq[(Int, DataFrame)], predName: String): DataFrame =
+    joined match {
       case Seq() => input.withColumn(predName, KvProbe.column(bins, table.get))
-      case joined =>
+      case _ =>
         val (cascaded, values) = joined.foldLeft((input.withColumn("__key", Keys.code(bins)), Seq.empty[String])) {
           case ((df, resolved), (l, tbl)) =>
             val probeKey =
@@ -206,12 +234,12 @@ final case class KvModel(
               .drop(s"__p_$l")
             (next, resolved :+ s"__v_$l")
         }
-        val fallback = table.fold(lit(globalValue))(t => KvProbe.column(Keys.codeDigits(col("__key"), keyLen, s), t))
+        val fallback = table.fold(lit(globalValue))(t =>
+          KvProbe.column(Keys.codeDigits(col("__key"), keyLen, keyLen, t.radices.length), t))
         cascaded
           .withColumn(predName, coalesce(values.map(col) :+ fallback: _*))
           .drop("__key" +: values: _*)
     }
-  }
 
   /** Collect the (bounded-by-key-space) index ONCE into plain maps for
     * driver-local point lookups — the reference's standalone-trie

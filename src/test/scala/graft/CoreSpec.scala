@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.bits
 import graft.core._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -87,7 +88,6 @@ class CoreSpec extends AnyFunSuite {
     assert(out("r2") == 0.5)          // prefix "0" -> avg(1.0, 0.0) over kv leaves
     assert(out("r3") == 2.0 / 3)      // global avg over kv values
     // the global value is the index's one len = 0 row: avg over the kv rows
-    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
     val avgKv = model.kv.agg(avg("value")).head().getDouble(0)
     val root = model.index.where(col("len") === 0).select("value").as[Double].collect().toSeq
     assert(root.map(bits) == Seq(bits(avgKv)) && bits(model.globalValue) == bits(avgKv))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.bits
 import graft.core.{KvIndexBuilder, KvIndexState, Persist, Task, TmpDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,8 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KvIndexStateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
   private def kvMap(df: org.apache.spark.sql.DataFrame,
                     k: String, v: String): Map[String, Long] =

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.bits
 import graft.core.{Keys, KvIndexBuilder, NumericBins, Task}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -17,8 +18,6 @@ import scala.jdk.CollectionConverters._
 class KvProbeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
-
-  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
   private def keyCol = Keys.keyColumn(Seq(
     NumericBins(Array(0.03, 0.07)).toColumn(col("l_discount")),
@@ -301,11 +300,11 @@ class KvProbeSpec extends AnyFunSuite {
       val forms = Seq("packed" -> packedJoin, "dense" -> dense, "folded" -> folded)
         .map { case (name, df) => name -> byId(df) }
       val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      forms.foreach { case (name, values) => assert(values.size == keys.size, s"$task $name") }
       keys.foreach { case (id, k) =>
         val local = bits(scorer.scoreKey(k))
         forms.foreach { case (name, values) =>
-          assert(values.size == keys.size && bits(values(id)) == local,
-            s"$task key $k: $name ${values.get(id)} vs local ${scorer.scoreKey(k)}")
+          assert(bits(values(id)) == local, s"$task key $k: $name ${values(id)} vs local ${scorer.scoreKey(k)}")
         }
       }
     }
@@ -370,6 +369,27 @@ class KvProbeSpec extends AnyFunSuite {
     TestSpark.executedPlan(df).collect { case j: BroadcastHashJoinExec => j }.size
   }
 
+  /** The rows each broadcast of `df`'s plan builds its hash relation
+    * from, decoded as keys of an `n`-field index's exact level (the only
+    * level the split serves here join) and sorted. */
+  private def broadcastKeys(df: DataFrame, n: Int): Seq[Seq[String]] = {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def key(code: Long) = (0 until n).map(i => (code >>> Keys.codeWidth(n) * (n - 1 - i)) & Keys.unseen(n)).mkString(".")
+    TestSpark.executedPlan(df).collect { case b: BroadcastExchangeExec => b.child }
+      .map(_.executeCollect().map(r => key(r.getLong(0))).toSeq.sorted)
+  }
+
+  /** The exact keys of `scorer` whose value differs bitwise from the one
+    * their first `s` fields fall through to, sorted: what the split
+    * probe's first joined level broadcasts when it is the exact level. */
+  private def exceptions(scorer: graft.core.LocalScorer, s: Int): Seq[String] = {
+    def fallback(k: String) = scorer.prefixes.collectFirst {
+      case (l, tbl) if l <= s && tbl.contains(graft.core.LocalScorer.prefix(k, l)) =>
+        tbl(graft.core.LocalScorer.prefix(k, l))
+    }.getOrElse(scorer.globalValue)
+    scorer.kv.collect { case (k, v) if bits(v) != bits(fallback(k)) => k }.toSeq.sorted
+  }
+
   test("an over-cap key space takes the join form") {
     val (m, key) = binModel(Seq(3, 4, 2), Task.Classification, 6)
     val dense = m.probe(extendedSpace(Seq(3, 4, 2)), key, "p")
@@ -410,8 +430,11 @@ class KvProbeSpec extends AnyFunSuite {
   }
 
   test("split probe equals joinProbe, interpreted and scoreKey bitwise over a space above the cap") {
-    import org.apache.spark.sql.catalyst.expressions.{ConcatWs, SubstringIndex}
+    import org.apache.spark.sql.catalyst.expressions.{Coalesce, ConcatWs, Expression, SubstringIndex}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import graft.plans.{BitsDiffer, KvProbeScore}
     // 71 x 71 x 31 slots is above 2^17; the first two fields' 71 x 71 fit
     val ranges = Seq(70, 70, 30)
     for ((task, seed) <- Seq(Task.Classification -> 13, Task.MultiClass -> 14)) {
@@ -424,10 +447,26 @@ class KvProbeSpec extends AnyFunSuite {
       val plan = TestSpark.executedPlan(split)
       val joins = plan.collect { case j: BroadcastHashJoinExec => j }
       assert(joins.size == ranges.length - m.split, s"$task one join per level above s*:\n$plan")
-      val names = plan.flatMap(_.expressions).flatMap(_.collect {
-        case e @ (_: graft.plans.KvProbeScore | _: ConcatWs | _: SubstringIndex) => e.prettyName
+      def probes(es: Seq[Expression]) = es.flatMap(_.collect { case e: KvProbeScore => e })
+      // one kv_probe in the probe side's coalesce, one in the broadcast
+      // side's filter, compared by raw bits; no key string anywhere
+      val coalesces = plan.flatMap(_.expressions).flatMap(_.collect { case c: Coalesce => c })
+      assert(probes(coalesces).size == 1, s"$task: the table ends the coalesce:\n$plan")
+      val filters = joins.head.right.collect { case f: FilterExec => f.condition }
+      assert(probes(filters).size == 1 && filters.exists(_.find(_.isInstanceOf[BitsDiffer]).isDefined),
+        s"$task: the broadcast side filters by the table's bits:\n$plan")
+      // (the cached scan's batch-pruning predicates restate the filter)
+      val nodes = plan.collect { case n if !n.isInstanceOf[InMemoryTableScanExec] => n }
+      val names = nodes.flatMap(_.expressions).flatMap(_.collect {
+        case e @ (_: KvProbeScore | _: ConcatWs | _: SubstringIndex) => e.prettyName
       })
-      assert(names == Seq("kv_probe"), s"$task: one kv_probe, no key string:\n$plan")
+      assert(names == Seq("kv_probe", "kv_probe"), s"$task: two kv_probes, no key string:\n$plan")
+      // the joined (exact) level broadcasts exactly the keys the table
+      // does not already answer
+      val broadcast = broadcastKeys(split, ranges.length)
+      val expected = exceptions(scorer, m.split)
+      assert(broadcast == Seq(expected), s"$task broadcast ${broadcast.map(_.size)} vs ${expected.size}")
+      assert(expected.nonEmpty && expected.size < m.kvCount, s"$task ${expected.size} of ${m.kvCount}")
       def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
       val forms = Seq(
@@ -447,5 +486,59 @@ class KvProbeSpec extends AnyFunSuite {
       val levels = keys.values.map(level(scorer, ranges.length, _)).toSet
       assert(levels == (0 to ranges.length).toSet, s"$task levels $levels")
     }
+  }
+
+  /** The split serve's values over `input` against joinProbe's and
+    * `scoreKey`'s, bitwise, by id. */
+  private def assertServesLikeJoinProbe(m: graft.core.KvModel, input: DataFrame, what: String): Unit = {
+    def byId(df: DataFrame) = df.select(col("id"), col("p")).collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val key = binKey(m.keyLen)
+    val split = byId(m.probe(input, key, "p"))
+    val joined = byId(m.joinProbe(input, key, "p"))
+    val scorer = m.toLocalScorer
+    val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(split.size == keys.size && joined.size == keys.size, what)
+    keys.foreach { case (id, k) =>
+      val local = scorer.scoreKey(k)
+      assert(bits(split(id)) == bits(local) && bits(joined(id)) == bits(local),
+        s"$what key $k: split ${split(id)} joined ${joined(id)} local $local")
+    }
+  }
+
+  test("a signed zero or NaN the table does not answer bitwise stays in the broadcast") {
+    import spark.implicits._
+    // a saved over-cap index (401 x 401 slots, s* = 1) with hand-written rows
+    val base = InferDbPipeline.Fitted(InferDbPipeline.Config(features = Seq("f0", "f1"), target = "y"),
+      Map("f0" -> NumericBins(Array(0.5)), "f1" -> NumericBins(Array(0.5))), Seq("f0", "f1"), 0.0,
+      KvIndexBuilder.buildFromKeyed(Seq("0.0" -> 1.0).toDF("key", "pred"), keyLen = 2, Task.Classification))
+    val dir = graft.core.TmpDirs.scratch("kv_probe_spec_signed_zero", sf)
+    base.save(dir)
+    val nan = Double.NaN
+    Seq((0, "", 0.25), (1, "0", 0.0), (1, "1", nan), (1, "3", 0.75), (1, "400", 1.0),
+      (2, "0.0", -0.0),      // under 0.0: differs only in its bits
+      (2, "0.1", 0.0),       // repeats its parent
+      (2, "1.1", nan),       // repeats its NaN parent
+      (2, "1.2", 0.5),
+      (2, "2.2", 0.25),      // no parent: repeats the global value
+      (2, "3.3", nan),       // a NaN under 0.75
+      (2, "400.400", 0.5))
+      .toDF("len", "key", "value").coalesce(1).write.mode("overwrite").parquet(s"$dir/index")
+    val m = InferDbPipeline.load(spark, dir).kv
+    assert(m.radices == Seq(401, 401) && m.split == 1, s"${m.radices} split ${m.split}")
+    assert(bits(m.toLocalScorer.kv("0.0")) == bits(-0.0), "the load must keep -0.0")
+    val grid = Seq(-1L, 0L, 1L, 2L, 3L, 399L, 400L, 401L)
+    val input = binRows(for (a <- grid; b <- grid) yield Seq(a, b))
+    assertServesLikeJoinProbe(m, input, "signed zero and NaN")
+    assert(broadcastKeys(m.probe(input, binKey(2), "p"), 2) == Seq(Seq("0.0", "1.2", "3.3", "400.400")))
+  }
+
+  test("an over-cap index whose every exact key repeats its prefix broadcasts nothing") {
+    // 400 keys i.i, each the only key under its prefix i: the same value
+    val m = wideModel()
+    assert(m.split == 1 && exceptions(m.toLocalScorer, 1).isEmpty)
+    val input = binRows((0L to 401L).flatMap(i => Seq(Seq(i, i), Seq(i, i + 1), Seq(i, 0L))))
+    assert(broadcastKeys(m.probe(input, binKey(2), "p"), 2) == Seq(Seq.empty))
+    // values only: adaptive execution may drop a join whose build side is empty
+    assertServesLikeJoinProbe(m, input, "empty broadcast")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.bits
 import graft.core.{KvIndexBuilder, KvModel, NumericBins, Persist, Task, TmpDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,15 +40,13 @@ class PersistSpec extends AnyFunSuite {
     assert(reloaded.selected == trained.selected)
     // the ENTIRE config, including fit-time-only fields
     assert(reloaded.config == trained.config)
-    assert(java.lang.Double.doubleToRawLongBits(reloaded.kv.globalValue) ==
-      java.lang.Double.doubleToRawLongBits(trained.kv.globalValue))
+    assert(bits(reloaded.kv.globalValue) == bits(trained.kv.globalValue))
     assert(reloaded.bins == trained.bins ||
       // NumericBins holds an Array — compare content, not reference
       trained.bins.forall { case (f, spec) => (spec, reloaded.bins(f)) match {
         case (NumericBins(a), NumericBins(b)) => a.sameElements(b)
         case (x, y) => x == y
       }})
-    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
     def kvBits(m: KvModel) = m.kv.select("key", "value").collect()
       .map(r => r.getString(0) -> bits(r.getDouble(1))).toMap
     // the whole index relation: kv, every prefix level and len = 0
@@ -146,12 +145,11 @@ class PersistSpec extends AnyFunSuite {
     assert(plan.toString.contains("kv_probe(") && plan.collect { case j: BroadcastHashJoinExec => j }.size == 1,
       s"the reloaded index must serve split:\n$plan")
     def byRow(df: org.apache.spark.sql.DataFrame) = df.select("f0", "f1", "p").collect()
-      .map(r => (r.getDouble(0), r.getDouble(1)) -> java.lang.Double.doubleToRawLongBits(r.getDouble(2))).toMap
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> bits(r.getDouble(2))).toMap
     val a = byRow(fitted.transform(input, "p"))
     val b = byRow(served)
     assert(a.size == input.distinct().count() && a == b)
     // 5.6 falls back to its prefix 5 (5.5's value), 400.0 to the global value
-    val bits = java.lang.Double.doubleToRawLongBits _
     assert(b((5.0, 6.0)) == bits(2.0) && b((400.0, 0.0)) == bits(kv.globalValue) && kv.globalValue != 2.0)
   }
 
@@ -170,8 +168,7 @@ class PersistSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(a.nonEmpty && a.size == b.size)
     a.foreach { case (k, v) =>
-      assert(java.lang.Double.doubleToRawLongBits(v) ==
-        java.lang.Double.doubleToRawLongBits(b(k)), s"row $k: $v vs ${b(k)}")
+      assert(bits(v) == bits(b(k)), s"row $k: $v vs ${b(k)}")
     }
   }
 
@@ -184,8 +181,7 @@ class PersistSpec extends AnyFunSuite {
       // only the SELECTED features feed the scorer
       .map(_.take(trained.selected.length))
     inputs.foreach { in =>
-      assert(java.lang.Double.doubleToRawLongBits(sa(in)) ==
-        java.lang.Double.doubleToRawLongBits(sb(in)))
+      assert(bits(sa(in)) == bits(sb(in)))
     }
   }
 }

@@ -21,6 +21,10 @@ object TestSpark {
     s
   }
 
+  /** A double's raw bits: the specs compare served values by them, so
+    * `0.0` differs from `-0.0` and a NaN only equals a NaN of its bits. */
+  def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
   /** `df`'s executed plan with adaptive execution off, so every join and
     * exchange shows as planned instead of inside an unexecuted adaptive
     * shell. The setting is restored afterwards. */

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.TestSpark
+import graft.TestSpark.bits
 import graft.Tables
 import graft.plans.TreeEnsembleRef
 import org.apache.spark.sql.functions._
@@ -17,7 +18,6 @@ class TreeEnsembleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
   test("compiled GBT classification margin is bitwise equal to the when-chain") {
     val (roots, ws) = LearnedQueries.fittedGbt(spark, sf)
