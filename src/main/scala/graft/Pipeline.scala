@@ -6,6 +6,7 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.LinearRegression
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The user-facing InferDB-equivalent lifecycle (ref: §3.1 of SURVEY —
   * src/transpiler.py:2999-3215): train a model, discretize features
@@ -29,7 +30,7 @@ object InferDbPipeline {
       maxBins: Int = 8,
       tolerance: Double = 1.002,
       maxFeatures: Int = Int.MaxValue,
-      maxCandidates: Int = Int.MaxValue, // cap the greedy walk (1 IV job per candidate)
+      maxCandidates: Int = Int.MaxValue, // cap the ranked candidates the greedy walk scores
       balanceRatio: Option[Double] = None,
       model: String = "lr", // "lr" | "gbt" | "dt" | "mlp" | "knn" — the index memorizes ANY model
       mlpHidden: Int = 8,   // hidden-layer width when model = "mlp"
@@ -88,24 +89,20 @@ object InferDbPipeline {
     * the index memorizes the MODEL, not the labels).
     */
   def fit(train: DataFrame, config: Config, predCol: String): Fitted = {
-    val cached = train.cache()
-    // all numeric features fitted in TWO jobs (batched quantiles +
-    // batched per-prebin stats); categoricals are one groupBy each.
-    val numericFeats = config.features.filterNot(config.categorical)
-    val numericBins: Map[String, BinSpec] =
-      if (numericFeats.isEmpty) Map.empty
-      else Binning.fitNumericBatch(cached, numericFeats, config.target, config.maxBins)
-    val bins: Map[String, BinSpec] = config.features.map { f =>
-      f -> (if (config.categorical(f))
-        Binning.fitCategorical(cached, f, config.target, config.maxBins)
-      else numericBins(f))
-    }.toMap
+    // cache only a frame the caller has not cached, and release only
+    // that cache: unpersisting the caller's frame would drop its cache
+    val ownCache = train.storageLevel == StorageLevel.NONE
+    val cached = if (ownCache) train.cache() else train
+    // every feature binned in two passes (quantiles, then one stats
+    // aggregate over numeric pre-bins and category strings together)
+    val bins = Binning.fit(cached, config.features, config.categorical,
+      config.target, config.maxBins)
 
+    // filled by the first greedy round, not by a count job of its own
     val encodedCols = config.features.map(f => bins(f).toColumn(col(f)).as(s"__b_$f"))
     val encoded = cached
       .select((encodedCols :+ col(config.target).as("__y")) :+ col(predCol).as("__pred"): _*)
       .cache()
-    encoded.count()
 
     val sel = GreedySelector.select(
       encoded,
@@ -131,7 +128,8 @@ object InferDbPipeline {
         sel.features.map(f => f -> bins(f.stripPrefix("__b_")).numBins).toMap, config))
     val kv = KvIndexBuilder.buildFromKeyed(
       keyedAll, sel.features.length, config.task, config.balanceRatio)
-    encoded.unpersist(); cached.unpersist()
+    encoded.unpersist()
+    if (ownCache) cached.unpersist()
     Fitted(config, bins, selectedRaw, sel.iv, kv)
   }
 
@@ -326,7 +324,9 @@ object InferDbPipeline {
     val model = trainEstimator(config, assembled, modelInputs.length,
       "__fv", config.target, "__model_pred", "__model_proba", "__model_raw")
     val predicted = model.asInstanceOf[org.apache.spark.ml.Transformer].transform(assembled)
-    val withPred = predicted.drop("__fv" +: oh.map(_._1): _*).cache()
+    // not cached here: `fit` caches it for its own passes and releases
+    // that cache, so the returned frame holds no cache of the caller's
+    val withPred = predicted.drop("__fv" +: oh.map(_._1): _*)
     val fitted = fit(withPred, config, "__model_pred")
     assembled.unpersist()
     Trained(fitted, withPred, model, oneHot)

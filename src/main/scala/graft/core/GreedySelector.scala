@@ -12,13 +12,14 @@ object Task {
 /** Greedy Information-Value feature selection
   * (ref: src/optimizer.py:175-231).
   *
-  * Driver loop; every iteration is one IV aggregation job over the
-  * cached encoded DataFrame. Candidates are ranked by single-feature IV
-  * descending (ties: candidate order — np.argsort stability, SURVEY
-  * §7.4 risk #3); a candidate joins the index if joint IV improves by
-  * more than `tolerance` (1.002x, optimizer.py:195-198); the final
-  * ordering sorts the kept set by bin count ascending to shrink the
-  * key space (optimizer.py:210-211).
+  * Driver loop; every round is one shuffle over the cached encoded
+  * DataFrame ([[IV.roundStats]]: two Spark jobs under adaptive
+  * execution, the map stage and the collect). Candidates are ranked
+  * by single-feature IV descending (ties: candidate order — np.argsort
+  * stability, SURVEY §7.4 risk #3); a candidate joins the index if
+  * joint IV improves by more than `tolerance` (1.002x,
+  * optimizer.py:195-198); the final ordering sorts the kept set by bin
+  * count ascending to shrink the key space (optimizer.py:210-211).
   */
 object GreedySelector {
   final case class Result(features: Seq[String], iv: Double, singleIvs: Map[String, Double])
@@ -33,20 +34,19 @@ object GreedySelector {
       maxFeatures: Int = Int.MaxValue,
       maxCandidates: Int = Int.MaxValue
   ): Result = {
-    // global target stats once — reused by the ranking and every
-    // walk round (they cannot change between rounds)
-    val totals = IV.totalsOf(encoded, target, task)
-    // single-feature ranking: ONE batched job for every task
-    // (IV.jointIvs with an empty kept set = single-feature IVs; it
-    // also batches the multi-class one-vs-rest decomposition, which
-    // used to pay per-feature jobs).
-    val singleMap = IV.jointIvs(encoded, Nil, candidates, target, task, totals)
-    val single: Seq[(String, Double)] = candidates.map(f => f -> singleMap(f))
+    // round 0: single-feature IVs of every candidate in ONE shuffle,
+    // and the walk-invariant global totals read from its bins (every
+    // row falls in exactly one bin of candidate 0), so no totals job
+    val round0 = IV.roundStats(encoded, Nil, candidates, target, task)
+    val totals = IV.totalsOf(round0(0), task)
+    val single: Seq[(String, Double)] =
+      candidates.indices.map(i => candidates(i) -> IV.ivOf(round0(i), totals))
+    val singleMap = single.toMap
     // stable sort: descending IV, ties keep candidate order; at MNIST
     // width the ranked list is capped to the `maxCandidates` best.
     val ranked = single.sortBy { case (_, iv) => -iv }.map(_._1).take(maxCandidates)
 
-    // The walk, batched: ONE joint-IV job per ACCEPT evaluates every
+    // The walk, batched: ONE joint-IV round per ACCEPT evaluates every
     // remaining candidate against the current kept set, then the rank
     // order is walked over the precomputed joints, accepting the FIRST
     // improver — decision-for-decision identical to evaluating
@@ -59,7 +59,7 @@ object GreedySelector {
     while (kept.size < maxFeatures && remaining.nonEmpty) {
       val joint =
         if (kept.isEmpty) singleMap // round 0's joints ARE the single IVs
-        else IV.jointIvs(encoded, kept, remaining, target, task, totals)
+        else IV.jointIvs(encoded, kept, remaining, target, task, Some(totals))
       val idx = remaining.indexWhere(f =>
         kept.isEmpty || joint(f) > tolerance * current)
       if (idx < 0) remaining = Nil // nothing improves: the walk is done
@@ -72,6 +72,6 @@ object GreedySelector {
     }
     // re-order by bin count asc (stable: ties keep greedy order)
     val ordered = kept.sortBy(f => numBins.getOrElse(f, Int.MaxValue))
-    Result(ordered, current, single.toMap)
+    Result(ordered, current, singleMap)
   }
 }

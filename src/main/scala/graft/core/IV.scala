@@ -3,10 +3,15 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Information-Value aggregates (ref: src/optimizer.py:41-102,153-172)
-  * as single groupBy jobs + column arithmetic. Each call is one Spark
-  * job over the (cached) encoded DataFrame; the greedy selector loops
-  * over these on the driver.
+/** Information-Value aggregates (ref: src/optimizer.py:41-102,153-172).
+  *
+  * Two forms. The Column forms ([[classification]], [[regression]],
+  * [[multiclass]]) score one grouping with a totals aggregate plus a
+  * per-bin aggregate summed in Spark; the queries and their oracle SQL
+  * use them. The greedy selector uses the round form ([[roundStats]],
+  * [[jointIvs]]): one shuffle scores every candidate, and the driver
+  * sums the collected bins. (Under adaptive execution each shuffle
+  * aggregate runs as two Spark jobs: its map stage, then the collect.)
   */
 object IV {
 
@@ -62,11 +67,11 @@ object IV {
   /** Multi-class IV (optimizer.py:83-98): per-class one-vs-rest
     * classification IV, summed across classes.
     *
-    * r16 (guide §1.2/§2.3): TWO jobs total — one class-count
+    * r16 (guide §1.2/§2.3): TWO aggregations — one class-count
     * aggregation (which also discovers the classes, replacing the old
     * standalone distinct+collect), then one per-bin aggregation
     * carrying a conditional sum per class, with the per-class IV terms
-    * summed in the same job. The old form paid 1 + 2·|classes| jobs
+    * summed in the same pass. The old form paid 1 + 2·|classes| jobs
     * (a distinct scan, then a totals job and a per-bin job PER CLASS)
     * over the same cached frame. Term SET is identical (same per-bin
     * n/s_c, same classificationIvTerm); only the summation order moves
@@ -92,96 +97,118 @@ object IV {
       .agg(sum(terms.reduce(_ + _))).head().getDouble(0)
   }
 
-  /** Walk-invariant global target statistics, computed ONCE per
-    * selection and reused by every [[jointIvs]] round (they cannot
-    * change between rounds — recomputing them cost one extra
-    * driver-blocking job per accepted feature). */
+  /** Walk-invariant global target statistics, read ONCE per selection
+    * from round 0's bins and reused by every later [[jointIvs]] round
+    * (they cannot change between rounds). */
   sealed trait Totals
   final case class ClsTotals(nEv: Double, nNonEv: Double) extends Totals
   final case class RegTotals(gMean: Double, nTot: Double) extends Totals
   final case class McTotals(counts: Map[Long, Double]) extends Totals
 
-  def totalsOf(df: DataFrame, target: String, task: Task): Totals = {
-    val y = col(target).cast("double")
-    task match {
-      case Task.Regression =>
-        val t = df.agg(avg(y), count(lit(1)).cast("double")).head()
-        RegTotals(t.getDouble(0), t.getDouble(1))
-      case Task.Classification =>
-        val t = df.agg(sum(y).as("s"), count(lit(1)).cast("double").as("n")).head()
-        ClsTotals(t.getDouble(0), t.getDouble(1) - t.getDouble(0))
+  /** One bin of a candidate's joint grouping (kept bins + its own bin):
+    * its row count `n` and target sum `s` (Classification, Regression),
+    * or its row count per class, keyed by the truncated label
+    * (MultiClass; `s` is unused). */
+  final case class BinStats(n: Double, s: Double, classes: Map[Long, Double])
+
+  /** One greedy round in ONE shuffle: explode (candidateIdx, bin) pairs
+    * alongside the kept-bin tuple, aggregate per (candidate, kept-bins,
+    * bin) — and per class for MultiClass — and collect. Returns each
+    * candidate index's bins. The rows are bounded by candidates × the
+    * joint key space (× classes), the same bound as the index itself.
+    */
+  def roundStats(
+      df: DataFrame,
+      kept: Seq[String],
+      candidates: Seq[String],
+      target: String,
+      task: Task): Map[Int, Seq[BinStats]] = {
+    val keptKey: Column =
+      if (kept.isEmpty) lit(0L) else struct(kept.map(col): _*)
+    val pairs = df.select(
+      posexplode(array(candidates.map(c => col(c).cast("long")): _*)).as(Seq("fi", "bin")),
+      keptKey.as("kk"), col(target).cast("double").as("y"))
+    val bins: Seq[(Int, BinStats)] = task match {
       case Task.MultiClass =>
-        McTotals(df.groupBy(col(target).cast("long").as("c"))
-          .agg(count(lit(1)).cast("double").as("n")).collect()
-          .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+        // truncating class match (y.cast(long)), so a non-integral
+        // label counts in the class it truncates to
+        pairs.groupBy(col("fi"), col("kk"), col("bin"), col("y").cast("long").as("c"))
+          .agg(count(lit(1)).cast("double").as("n"))
+          .collect().toSeq
+          .groupBy(r => (r.getInt(0), r.get(1), r.get(2))).toSeq
+          .map { case ((fi, _, _), rs) =>
+            val classes = rs.map(r => r.getLong(3) -> r.getDouble(4)).toMap
+            fi -> BinStats(classes.values.sum, 0.0, classes)
+          }
+      case _ =>
+        pairs.groupBy("fi", "kk", "bin")
+          .agg(count(lit(1)).cast("double").as("n"), sum("y").as("s"))
+          .collect().toSeq
+          .map(r => r.getInt(0) -> BinStats(r.getDouble(3), r.getDouble(4), Map.empty))
+    }
+    bins.groupBy(_._1).view.mapValues(_.map(_._2)).toMap.withDefaultValue(Seq.empty)
+  }
+
+  /** The global totals, read from ONE candidate's bins: every row falls
+    * in exactly one bin of each candidate, so its bins cover the data. */
+  def totalsOf(bins: Seq[BinStats], task: Task): Totals = {
+    val n = fixedSum(bins.map(_.n))
+    task match {
+      case Task.Regression => RegTotals(fixedSum(bins.map(_.s)) / n, n)
+      case Task.Classification =>
+        val ev = fixedSum(bins.map(_.s))
+        ClsTotals(ev, n - ev)
+      case Task.MultiClass =>
+        McTotals(bins.flatMap(_.classes).groupMapReduce(_._1)(_._2)(_ + _))
     }
   }
 
-  /** Joint IV of (kept ++ candidate) for EVERY candidate in ONE
-    * aggregation job (all three tasks): explode (candidateIdx, bin)
-    * pairs alongside the kept-bin tuple, aggregate per
-    * (candidate, kept-bins, bin), then sum each candidate's IV terms —
-    * all in Spark, so only #candidates rows come back to the driver.
-    * This is what makes the greedy WALK (not just the ranking) O(jobs
-    * per accept) instead of O(jobs per candidate): each rejected
-    * candidate previously paid its own two-job `classification()`
-    * call against the same kept set.
+  /** One candidate's IV from its collected bins, summed on the driver
+    * in a fixed order. Each bin's term is the same double expression
+    * the Column forms above evaluate (Spark's `log` is StrictMath.log,
+    * NULL at or below 0, and such a term is skipped like `sum` skips a
+    * NULL); only the order the terms are added in differs. */
+  def ivOf(bins: Seq[BinStats], totals: Totals): Double = totals match {
+    case RegTotals(gMean, nTot) =>
+      fixedSum(bins.map(b => math.abs(b.s / b.n - gMean) * b.n / nTot))
+    case ClsTotals(nEv, nNonEv) =>
+      if (nEv == 0 || nNonEv == 0) 0.0
+      else fixedSum(bins.flatMap(b => classificationTerm(b.n, b.s, nEv, nNonEv)))
+    case McTotals(counts) =>
+      // one-vs-rest per class, summed per bin over the classes in order
+      val nTot = counts.values.sum
+      val classes = counts.keys.toSeq.sorted.filter(c => counts(c) != 0 && counts(c) != nTot)
+      if (classes.isEmpty) 0.0
+      else fixedSum(bins.map(b => classes.flatMap(c =>
+        classificationTerm(b.n, b.classes.getOrElse(c, 0.0), counts(c), nTot - counts(c))).sum))
+  }
+
+  private def classificationTerm(n: Double, s: Double, nEv: Double, nNonEv: Double): Option[Double] = {
+    def ln(x: Double) = if (x <= 0) None else Some(StrictMath.log(x))
+    for (a <- ln(n - s + 0.5); b <- ln(nNonEv); c <- ln(s + 0.5); d <- ln(nEv))
+      yield ((a - b) - (c - d)) * ((n - s) / nNonEv - s / nEv)
+  }
+
+  /** Ascending order: the sum does not depend on the order the rows
+    * were collected in. */
+  private def fixedSum(xs: Seq[Double]): Double = xs.sorted(Ordering.Double.TotalOrdering).sum
+
+  /** Joint IV of (kept ++ candidate) for EVERY candidate in one round
+    * ([[roundStats]]: one shuffle, one collect), with the global totals
+    * of a previous round — or, when none are given, of this round's own
+    * bins, so a lone call needs no separate totals job. This is what
+    * makes the greedy WALK (not just the ranking) O(jobs per accept)
+    * instead of O(jobs per candidate).
     */
   def jointIvs(
       df: DataFrame,
       kept: Seq[String],
       candidates: Seq[String],
       target: String,
-      task: Task): Map[String, Double] =
-    jointIvs(df, kept, candidates, target, task, totalsOf(df, target, task))
-
-  def jointIvs(
-      df: DataFrame,
-      kept: Seq[String],
-      candidates: Seq[String],
-      target: String,
       task: Task,
-      totals: Totals): Map[String, Double] = {
-    val y = col(target).cast("double")
-    val keptKey: Column =
-      if (kept.isEmpty) lit(0L) else struct(kept.map(col): _*)
-    val pairs = df.select(
-      posexplode(array(candidates.map(c => col(c).cast("long")): _*)).as(Seq("fi", "bin")) ,
-      keptKey.as("kk"), y.as("y"))
-
-    val (perBinAggs: Seq[Column], ivSum: Column) = totals match {
-      case RegTotals(gMean, nTot) =>
-        (Seq(count(lit(1)).cast("double").as("n"), avg("y").as("m")),
-          abs(col("m") - gMean) * col("n") / nTot)
-      case ClsTotals(nEv, nNonEv) =>
-        if (nEv == 0 || nNonEv == 0) return candidates.map(_ -> 0.0).toMap.withDefaultValue(0.0)
-        (Seq(count(lit(1)).cast("double").as("n"), sum("y").as("s")),
-          classificationIvTerm(col("n"), col("s"), nEv, nNonEv))
-      case McTotals(counts) =>
-        // one-vs-rest per class, summed: the per-class bin sums are
-        // extra agg columns and the per-class terms one summed column
-        val classes = counts.keys.toSeq.sorted
-        val nTot = counts.values.sum
-        val terms = classes.flatMap { c =>
-          val nEv = counts(c); val nNonEv = nTot - nEv
-          if (nEv == 0 || nNonEv == 0) None
-          else Some(classificationIvTerm(col("n"), col(s"s_$c"), nEv, nNonEv))
-        }
-        if (terms.isEmpty) return candidates.map(_ -> 0.0).toMap.withDefaultValue(0.0)
-        // truncating match (y.cast(long) === c), the SAME normalization
-        // the class counts above use — an exact-double match would
-        // silently drop non-integral labels from the bin sums only
-        (count(lit(1)).cast("double").as("n") +:
-           classes.map(c => sum(when(col("y").cast("long") === c, 1.0).otherwise(0.0)).as(s"s_$c")),
-          terms.reduce(_ + _))
-    }
-    pairs.groupBy("fi", "kk", "bin")
-      .agg(perBinAggs.head, perBinAggs.tail: _*)
-      .groupBy("fi").agg(sum(ivSum).as("iv"))
-      .collect()
-      .map(r => candidates(r.getInt(0)) -> r.getDouble(1))
-      .toMap
-      .withDefaultValue(0.0)
+      totals: Option[Totals] = None): Map[String, Double] = {
+    val bins = roundStats(df, kept, candidates, target, task)
+    val t = totals.getOrElse(totalsOf(bins(0), task))
+    candidates.indices.map(i => candidates(i) -> ivOf(bins(i), t)).toMap.withDefaultValue(0.0)
   }
-
 }

@@ -30,6 +30,13 @@ import org.apache.spark.sql.{Row, SparkSession}
   * A reloaded [[graft.InferDbPipeline.Fitted]] probes bit-identically
   * to the in-memory one by construction: every constant the serve plan
   * embeds (splits, index rows) round-trips through parquet unchanged.
+  * NaN is the one value whose bits are not all kept, and not by the
+  * parquet round trip: Spark writes every NaN that enters its row
+  * format as the canonical `0x7ff8000000000000`, so a NaN with a payload
+  * (say `0x7ff8000000000001`) loses it in the first Spark job that
+  * carries it. The index is built by Spark jobs, so it only ever holds
+  * the canonical NaN, which saves and loads unchanged; a payload NaN
+  * handed to a write (a hand-built relation) is stored canonical.
   * At 100 TB the save is a handful of broadcast-sized writes; the load
   * is three jobs: the meta row, the bins, and the index cached in one
   * job, like a fresh build.
