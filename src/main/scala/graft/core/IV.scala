@@ -3,99 +3,23 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Information-Value aggregates (ref: src/optimizer.py:41-102,153-172).
+/** Information Value (ref: src/optimizer.py:41-102,153-172), in one
+  * form: a round ([[roundStats]], [[jointIvs]]) scores every candidate
+  * grouping in ONE shuffle, and the driver sums each candidate's
+  * collected bins in a fixed order ([[ivOf]]). The greedy selector and
+  * the IV queries (a3, a4, a5) both score through it. (Under adaptive
+  * execution each shuffle aggregate runs as two Spark jobs: its map
+  * stage, then the collect.)
   *
-  * Two forms. The Column forms ([[classification]], [[regression]],
-  * [[multiclass]]) score one grouping with a totals aggregate plus a
-  * per-bin aggregate summed in Spark; the queries and their oracle SQL
-  * use them. The greedy selector uses the round form ([[roundStats]],
-  * [[jointIvs]]): one shuffle scores every candidate, and the driver
-  * sums the collected bins. (Under adaptive execution each shuffle
-  * aggregate runs as two Spark jobs: its map stage, then the collect.)
+  * Per-bin terms, summed over the bins of a grouping (n = bin size,
+  * s = sum(y) in the bin):
+  *  - classification (optimizer.py:79-82):
+  *    ((ln(n-s+0.5)-ln(N_nonev)) - (ln(s+0.5)-ln(N_ev))) * ((n-s)/N_nonev - s/N_ev);
+  *  - multi-class (optimizer.py:83-98): the classification term one
+  *    class against the rest, summed over the classes;
+  *  - regression (optimizer.py:99-102): |s/n - mean(y)| * n / N.
   */
 object IV {
-
-  /** Binary-classification IV of the grouping defined by `keyCols`.
-    * WoE formula per bin (optimizer.py:79-82):
-    *   ((ln(n-s+0.5)-ln(N_nonev)) - (ln(s+0.5)-ln(N_ev)))
-    *     * ((n-s)/N_nonev - s/N_ev)
-    * summed over bins; n = bin size, s = sum(y) in bin.
-    */
-  def classification(df: DataFrame, keyCols: Seq[Column], target: Column): Double = {
-    val tot = df.agg(
-      sum(target.cast("double")).as("ev"),
-      count(lit(1)).cast("double").as("n")
-    ).head()
-    classification(df, keyCols, target, tot.getDouble(0),
-      tot.getDouble(1) - tot.getDouble(0))
-  }
-
-  /** [[classification]] with the global totals precomputed — callers
-    * scoring SEVERAL groupings of the same (df, target) share ONE
-    * totals job instead of re-running it per call (r16, guide §1.2:
-    * a3_iv_classification paid 3 identical totals aggregations). The
-    * per-call IV aggregation is unchanged bit for bit. */
-  def classification(df: DataFrame, keyCols: Seq[Column], target: Column,
-      nEv: Double, nNonEv: Double): Double = {
-    if (nEv == 0 || nNonEv == 0) return 0.0
-    val perBin = df
-      .groupBy(keyCols: _*)
-      .agg(count(lit(1)).cast("double").as("n"), sum(target.cast("double")).as("s"))
-    val ivCol = classificationIvTerm(col("n"), col("s"), nEv, nNonEv)
-    perBin.agg(sum(ivCol)).head().getDouble(0)
-  }
-
-  /** The per-bin WoE*distribution-difference term as a Column, shared
-    * with the oracle-SQL generator so both sides use one formula. */
-  def classificationIvTerm(n: Column, s: Column, nEv: Double, nNonEv: Double): Column =
-    ((log(n - s + 0.5) - log(lit(nNonEv))) - (log(s + 0.5) - log(lit(nEv)))) *
-      ((n - s) / nNonEv - s / nEv)
-
-  /** Regression IV variant (optimizer.py:99-102):
-    * sum over bins of |mean(y)_bin - mean(y)| * n_bin / N.
-    */
-  def regression(df: DataFrame, keyCols: Seq[Column], target: Column): Double = {
-    val tot = df.agg(avg(target.cast("double")), count(lit(1)).cast("double")).head()
-    val gMean = tot.getDouble(0)
-    val nTot  = tot.getDouble(1)
-    val perBin = df
-      .groupBy(keyCols: _*)
-      .agg(count(lit(1)).cast("double").as("n"), avg(target.cast("double")).as("m"))
-    perBin.agg(sum(abs(col("m") - gMean) * col("n") / nTot)).head().getDouble(0)
-  }
-
-  /** Multi-class IV (optimizer.py:83-98): per-class one-vs-rest
-    * classification IV, summed across classes.
-    *
-    * r16 (guide §1.2/§2.3): TWO aggregations — one class-count
-    * aggregation (which also discovers the classes, replacing the old
-    * standalone distinct+collect), then one per-bin aggregation
-    * carrying a conditional sum per class, with the per-class IV terms
-    * summed in the same pass. The old form paid 1 + 2·|classes| jobs
-    * (a distinct scan, then a totals job and a per-bin job PER CLASS)
-    * over the same cached frame. Term SET is identical (same per-bin
-    * n/s_c, same classificationIvTerm); only the summation order moves
-    * (bins-then-classes vs classes-then-bins), which every consumer
-    * already absorbs by rounding to 6 decimals — the same tolerance
-    * the cross-engine oracle needs anyway.
-    */
-  def multiclass(df: DataFrame, keyCols: Seq[Column], target: Column): Double = {
-    val counts = df.groupBy(target.cast("long").as("c"))
-      .agg(count(lit(1)).cast("double").as("n"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val nTot = counts.values.sum
-    val classes = counts.keys.toSeq.sorted
-    val aggs = count(lit(1)).cast("double").as("n") +: classes.map(c =>
-      sum((target.cast("long") === c).cast("double")).as(s"s_$c"))
-    val terms = classes.flatMap { c =>
-      val nEv = counts(c); val nNonEv = nTot - nEv
-      if (nEv == 0 || nNonEv == 0) None
-      else Some(classificationIvTerm(col("n"), col(s"s_$c"), nEv, nNonEv))
-    }
-    if (terms.isEmpty) return 0.0
-    df.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
-      .agg(sum(terms.reduce(_ + _))).head().getDouble(0)
-  }
 
   /** Walk-invariant global target statistics, read ONCE per selection
     * from round 0's bins and reused by every later [[jointIvs]] round
@@ -164,10 +88,9 @@ object IV {
   }
 
   /** One candidate's IV from its collected bins, summed on the driver
-    * in a fixed order. Each bin's term is the same double expression
-    * the Column forms above evaluate (Spark's `log` is StrictMath.log,
-    * NULL at or below 0, and such a term is skipped like `sum` skips a
-    * NULL); only the order the terms are added in differs. */
+    * in a fixed order. A term whose logarithm has an argument at or
+    * below 0 is skipped, as Spark's `log` (StrictMath.log, NULL there)
+    * and `sum` would skip it. */
   def ivOf(bins: Seq[BinStats], totals: Totals): Double = totals match {
     case RegTotals(gMean, nTot) =>
       fixedSum(bins.map(b => math.abs(b.s / b.n - gMean) * b.n / nTot))

@@ -82,9 +82,4 @@ object Fns {
   /** Full day name, PG `TRIM(to_char(ts,'Day'))`.
     * Ref: sql_scripts/query_integration.sql:8. */
   def dayName(ts: Column): Column = date_format(ts, "EEEE")
-
-  /** Whitespace token count; empty/blank string -> 0. */
-  def tokenCount(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0L))
-      .otherwise(size(split(trim(text), "\\s+")).cast("long"))
 }

@@ -26,11 +26,6 @@ final case class LinearModel(coefs: Array[Double], intercept: Double) {
     terms.reduceOption(_ + _).getOrElse(lit(0.0)) + lit(intercept)
   }
 
-  /** Regression prediction with the reference's overflow-clamped exp on
-    * the log-domain path (transpiler.py:1614, 2110-2113). */
-  def predictRegressionExp(features: Seq[Column]): Column =
-    Fns.crazyExp(linearExpr(features))
-
   /** Binary probability, reference-faithful sigmoid (transpiler.py:1612). */
   def predictProba(features: Seq[Column]): Column =
     Fns.sigmoidRef(linearExpr(features))

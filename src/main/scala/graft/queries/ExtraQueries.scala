@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.core.IV
+import graft.core.{IV, Task}
 import graft.models.{LinearModel, MultiClassLinearModel}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{PCA, VectorAssembler}
@@ -120,15 +120,14 @@ object ExtraQueries {
         graft.core.NumericBins(wideSplits.toArray)
           .toColumn(col("l_extendedprice")).as("price_bin"))),
 
-    // A5 — multi-class IV via per-class one-vs-rest sum.
+    // A5 — multi-class IV via per-class one-vs-rest sum, one round.
     "a5_iv_multiclass" -> ((s, d) => {
       val li = Tables.events(s, d).select(
         (col("user_id") % 4).as("b"),
         (when(col("event_type") === "click", 0L)
           .when(col("event_type") === "view", 1L)
-          .otherwise(2L)).as("y")).cache()
-      val iv = IV.multiclass(li, Seq(col("b")), col("y"))
-      li.unpersist()
+          .otherwise(2L)).as("y"))
+      val iv = IV.jointIvs(li, Nil, Seq("b"), "y", Task.MultiClass)("b")
       import s.implicits._
       Seq(("user_mod4", math.rint(iv * 1e6) / 1e6)).toDF("feature", "iv")
     }),

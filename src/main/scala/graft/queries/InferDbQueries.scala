@@ -228,35 +228,28 @@ object InferDbQueries {
     }),
 
     // A3 — classification Information Value of the key grouping, plus
-    // per-feature single IVs (the greedy selector's scoring job).
+    // per-feature single IVs, scored the way the greedy selector scores:
+    // one round for both single IVs, one with b_qty kept for the joint.
     "a3_iv_classification" -> ((s, d) => {
       val li  = Tables.lineitem(s, d).select(
         NumericBins(qtySplits.toArray).toColumn(col("l_quantity")).as("b_qty"),
         NumericBins(discSplits.toArray).toColumn(col("l_discount")).as("b_disc"),
         targetCol.as("y")).cache()
-      // ONE totals job shared by the three IV calls (r16, guide §1.2 —
-      // they aggregate the same (frame, target), so the old per-call
-      // totals re-ran an identical job 3x); each IV aggregation is
-      // unchanged bit for bit.
-      val tot = li.agg(sum(col("y").cast("double")),
-        count(lit(1)).cast("double")).head()
-      val (nEv, nNonEv) = (tot.getDouble(0), tot.getDouble(1) - tot.getDouble(0))
-      val ivQty  = IV.classification(li, Seq(col("b_qty")), col("y"), nEv, nNonEv)
-      val ivDisc = IV.classification(li, Seq(col("b_disc")), col("y"), nEv, nNonEv)
-      val ivJoint = IV.classification(li, Seq(col("b_qty"), col("b_disc")), col("y"), nEv, nNonEv)
+      val single = IV.jointIvs(li, Nil, Seq("b_qty", "b_disc"), "y", Task.Classification)
+      val joint = IV.jointIvs(li, Seq("b_qty"), Seq("b_disc"), "y", Task.Classification)
       li.unpersist()
       import s.implicits._
-      Seq(("b_qty", ivQty), ("b_disc", ivDisc), ("joint", ivJoint))
+      Seq(("b_qty", single("b_qty")), ("b_disc", single("b_disc")), ("joint", joint("b_disc")))
         .toDF("feature", "iv")
         .select(col("feature"), round(col("iv"), 6).as("iv"))
     }),
 
-    // A4 — regression IV variant.
+    // A4 — regression IV variant, one round.
     "a4_iv_regression" -> ((s, d) => {
       val li = Tables.lineitem(s, d).select(
         NumericBins(qtySplits.toArray).toColumn(col("l_quantity")).as("b_qty"),
         col("l_extendedprice").as("y"))
-      val iv = IV.regression(li, Seq(col("b_qty")), col("y"))
+      val iv = IV.jointIvs(li, Nil, Seq("b_qty"), "y", Task.Regression)("b_qty")
       import s.implicits._
       Seq(("b_qty", iv)).toDF("feature", "iv")
         .select(col("feature"), round(col("iv"), 6).as("iv"))

@@ -81,27 +81,4 @@ object Report {
       "f1", "featurize_s", "translate_s", "score_s", "end_to_end_s",
       "spread_s", "n_iterations", "batch_size")
   }
-
-  /** Regression variant: RMSLE in place of the confusion metrics. */
-  def regressionReport(
-      spark: SparkSession,
-      fitted: Fitted,
-      test: DataFrame,
-      target: String,
-      solution: String = "graft-kv-index",
-      iterations: Int = 5): DataFrame = {
-    val (featurizeS, featurizeSpread, batch) =
-      timedEval(featurizeFrame(fitted, test), iterations)
-    val (translateS, translateSpread, _) =
-      timedEval(test.select(fitted.keyColumn.as("key")), iterations)
-    val scored = fitted.transform(test, "__p")
-    val (scoreS, scoreSpread, _) = timedEval(scored, iterations)
-    val rmsle = Metrics.rmsle(scored, col("__p"), col(target)).head().getDouble(0)
-    import spark.implicits._
-    Seq((solution, fitted.indexEntries, rmsle, featurizeS, translateS, scoreS,
-      featurizeS + translateS + scoreS,
-      featurizeSpread + translateSpread + scoreSpread, iterations, batch))
-      .toDF("solution", "size_entries", "rmsle", "featurize_s", "translate_s",
-        "score_s", "end_to_end_s", "spread_s", "n_iterations", "batch_size")
-  }
 }

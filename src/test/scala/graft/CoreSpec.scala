@@ -2,6 +2,7 @@ package graft
 
 import graft.TestSpark.bits
 import graft.core._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,7 +52,7 @@ class CoreSpec extends AnyFunSuite {
 
   test("fitNumeric produces sorted splits bounded by maxBins") {
     val df = (1 to 1000).map(i => (i.toDouble, if (i > 500) 1.0 else 0.0)).toDF("f", "y")
-    val bins = Binning.fitNumeric(df, "f", "y", maxBins = 4)
+    val bins = Binning.fit(df, Seq("f"), Set.empty, "y", maxBins = 4)("f").asInstanceOf[NumericBins]
     assert(bins.splits.sameElements(bins.splits.sorted))
     assert(bins.numBins <= 4 + 1) // merge loop targets maxBins bins
     // the supervised merge must keep a split near the label flip at 500
@@ -121,13 +122,20 @@ class CoreSpec extends AnyFunSuite {
       Types.NNWeight(0, 0, 0, 1.0, 0.5), Types.NNWeight(1, 0, 0, 2.0, -0.5)))
   }
 
+  /** The IV of the grouping (kept ++ f) from the spec-local two-shuffle
+    * form ([[FitPassesSpec.TwoShuffle]]), the reference the one-shuffle
+    * rounds are checked against. */
+  private def refIv(df: DataFrame, kept: Seq[String], f: String, y: String, task: Task): Double =
+    FitPassesSpec.TwoShuffle.jointIvs(df, kept, Seq(f), y, task,
+      FitPassesSpec.TwoShuffle.totalsOf(df, y, task))(f)
+
   test("IV: informative grouping scores higher than uninformative") {
     val df = (1 to 400).map { i =>
       val y = if (i % 2 == 0) 1.0 else 0.0
       (y, y, (i % 3).toDouble) // f_good == y, f_noise independent
     }.toDF("y", "f_good", "f_noise")
-    val good  = IV.classification(df, Seq(col("f_good")), col("y"))
-    val noise = IV.classification(df, Seq(col("f_noise")), col("y"))
+    val ivs = IV.jointIvs(df, Nil, Seq("f_good", "f_noise"), "y", Task.Classification)
+    val (good, noise) = (ivs("f_good"), ivs("f_noise"))
     assert(good > noise)
     assert(good > 1.0)
   }
@@ -137,12 +145,12 @@ class CoreSpec extends AnyFunSuite {
       ((i % 4).toDouble, (i % 7).toDouble, if (i % 2 == 0) 1.0 else 0.0)
     }.toDF("b_a", "b_b", "y").cache()
     val batched = IV.jointIvs(df, Nil, Seq("b_a", "b_b"), "y", Task.Classification)
-    val perA = IV.classification(df, Seq(col("b_a")), col("y"))
-    val perB = IV.classification(df, Seq(col("b_b")), col("y"))
+    val perA = refIv(df, Nil, "b_a", "y", Task.Classification)
+    val perB = refIv(df, Nil, "b_b", "y", Task.Classification)
     assert(math.abs(batched("b_a") - perA) < 1e-9)
     assert(math.abs(batched("b_b") - perB) < 1e-9)
     val reg = IV.jointIvs(df, Nil, Seq("b_a"), "y", Task.Regression)
-    val perReg = IV.regression(df, Seq(col("b_a")), col("y"))
+    val perReg = refIv(df, Nil, "b_a", "y", Task.Regression)
     assert(math.abs(reg("b_a") - perReg) < 1e-9)
   }
 
@@ -155,21 +163,21 @@ class CoreSpec extends AnyFunSuite {
     }.toDF("b_a", "b_b", "b_c", "y_cls", "y_reg", "y_multi").cache()
     // empty kept = single IVs
     val s = IV.jointIvs(df, Nil, Seq("b_a", "b_b"), "y_cls", Task.Classification)
-    assert(math.abs(s("b_a") - IV.classification(df, Seq(col("b_a")), col("y_cls"))) < 1e-9)
+    assert(math.abs(s("b_a") - refIv(df, Nil, "b_a", "y_cls", Task.Classification)) < 1e-9)
     // joint against a kept set, every candidate in one job
     val j = IV.jointIvs(df, Seq("b_a"), Seq("b_b", "b_c"), "y_cls", Task.Classification)
-    assert(math.abs(j("b_b") - IV.classification(df, Seq(col("b_a"), col("b_b")), col("y_cls"))) < 1e-9)
-    assert(math.abs(j("b_c") - IV.classification(df, Seq(col("b_a"), col("b_c")), col("y_cls"))) < 1e-9)
+    assert(math.abs(j("b_b") - refIv(df, Seq("b_a"), "b_b", "y_cls", Task.Classification)) < 1e-9)
+    assert(math.abs(j("b_c") - refIv(df, Seq("b_a"), "b_c", "y_cls", Task.Classification)) < 1e-9)
     val r = IV.jointIvs(df, Seq("b_a"), Seq("b_b"), "y_reg", Task.Regression)
-    assert(math.abs(r("b_b") - IV.regression(df, Seq(col("b_a"), col("b_b")), col("y_reg"))) < 1e-9)
+    assert(math.abs(r("b_b") - refIv(df, Seq("b_a"), "b_b", "y_reg", Task.Regression)) < 1e-9)
     val m = IV.jointIvs(df, Seq("b_a"), Seq("b_b"), "y_multi", Task.MultiClass)
-    assert(math.abs(m("b_b") - IV.multiclass(df, Seq(col("b_a"), col("b_b")), col("y_multi"))) < 1e-9)
+    assert(math.abs(m("b_b") - refIv(df, Seq("b_a"), "b_b", "y_multi", Task.MultiClass)) < 1e-9)
     // non-integral labels: both paths must TRUNCATE consistently (an
     // exact-double class match would drop 2.25 from class 2's bin sums
     // while the class counts still include it)
     val frac = df.withColumn("y_frac", col("y_multi") + lit(0.25))
     val mf = IV.jointIvs(frac, Seq("b_a"), Seq("b_b"), "y_frac", Task.MultiClass)
-    assert(math.abs(mf("b_b") - IV.multiclass(frac, Seq(col("b_a"), col("b_b")), col("y_frac"))) < 1e-9)
+    assert(math.abs(mf("b_b") - refIv(frac, Seq("b_a"), "b_b", "y_frac", Task.MultiClass)) < 1e-9)
   }
 
   test("GreedySelector keeps the informative feature and orders by bin count") {

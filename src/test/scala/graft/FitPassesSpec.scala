@@ -62,6 +62,22 @@ class FitPassesSpec extends AnyFunSuite {
     assert(run.outside.isEmpty, s"jobs outside the group ${run.outside}")
   }
 
+  test("the IV queries score in greedy rounds and run no totals job") {
+    val sf = "/root/testdata/sf0.001"
+    // each reads its parquet schema (1 job), then a3 fills its cache
+    // (1) and runs two rounds (2 each: both single IVs, then b_qty kept
+    // for the joint IV); a4 and a5 run one round, uncached
+    val expected = Seq(
+      ("a3_iv_classification", graft.queries.InferDbQueries.defs, 1 + 1 + 2 * 2),
+      ("a4_iv_regression", graft.queries.InferDbQueries.defs, 1 + 2),
+      ("a5_iv_multiclass", graft.queries.ExtraQueries.defs, 1 + 2))
+    expected.foreach { case (q, defs, jobs) =>
+      val run = GroupJobs(defs(q)(spark, sf).collect())
+      assert(run.started.size == jobs, s"$q jobs ${run.started}")
+      assert(run.outside.isEmpty, s"$q jobs outside the group ${run.outside}")
+    }
+  }
+
   /** Numeric with NULLs, an all-NULL numeric, a categorical with NULLs
     * and more values than bins, an all-NULL categorical. */
   private lazy val raw: DataFrame = {
@@ -78,8 +94,8 @@ class FitPassesSpec extends AnyFunSuite {
     val all = Binning.fit(raw, Seq("x", "x_null", "c", "c_null"), Set("c", "c_null"), "y",
       maxBins = 4)
     val perFeature = Map[String, BinSpec](
-      "x" -> Binning.fitNumeric(raw, "x", "y", maxBins = 4),
-      "x_null" -> Binning.fitNumeric(raw, "x_null", "y", maxBins = 4),
+      "x" -> Binning.fit(raw, Seq("x"), Set.empty, "y", maxBins = 4)("x"),
+      "x_null" -> Binning.fit(raw, Seq("x_null"), Set.empty, "y", maxBins = 4)("x_null"),
       "c" -> Binning.fitCategorical(raw, "c", "y", maxBins = 4),
       "c_null" -> Binning.fitCategorical(raw, "c_null", "y", maxBins = 4))
     assert(canon(all) == canon(perFeature))
@@ -164,9 +180,15 @@ object FitPassesSpec {
 
   /** The greedy selection this replaced: a totals job, then per round a
     * per-(candidate, kept-bins, bin) aggregate whose IV terms are summed
-    * per candidate by a second shuffle. */
+    * per candidate by a second shuffle. It is the specs' Spark-side
+    * reference for [[IV]]'s terms on all three tasks. */
   object TwoShuffle {
-    import IV.{ClsTotals, McTotals, RegTotals, Totals, classificationIvTerm}
+    import IV.{ClsTotals, McTotals, RegTotals, Totals}
+
+    /** The per-bin classification IV term as a Column. */
+    def classificationIvTerm(n: Column, s: Column, nEv: Double, nNonEv: Double): Column =
+      ((log(n - s + 0.5) - log(lit(nNonEv))) - (log(s + 0.5) - log(lit(nEv)))) *
+        ((n - s) / nNonEv - s / nEv)
 
     def totalsOf(df: DataFrame, target: String, task: Task): Totals = {
       val y = col(target).cast("double")
