@@ -1,43 +1,9 @@
 package graft.core
 
 import graft.plans.{DenseAnswers, KvProbe}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
-
-/** Shared aggregate helpers. */
-object Aggregates {
-  /** Per-group mode with pinned tie-break (highest count, then lowest
-    * value — deterministic under Spark shuffles; the reference's pandas
-    * idxmax / Counter.most_common tie-breaks are insertion-order
-    * dependent: src/transpiler.py:986-992, inference_trie.py:96-98 —
-    * SURVEY §7.4 risk #3 says pin it explicitly).
-    *
-    * Two shuffle-free-after-partial aggregations, no window: counts per
-    * (group, value), then max_by(value, (count, -value)) per group.
-    */
-  def mode(df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame =
-    modeFromCounts(
-      df.groupBy((groupCols :+ valueCol).map(col): _*)
-        .agg(count(lit(1)).as("cnt")),
-      groupCols, valueCol, "cnt")
-
-  /** The pinned tie-break applied to PRE-COUNTED (group, value, cnt)
-    * rows — the single definition both [[mode]] and the mergeable
-    * [[KvIndexState]] finalize through, so append and rebuild can never
-    * disagree on a tied key. min over (-cnt, value) == highest count,
-    * then lowest value — works for numeric AND string value columns
-    * (no negation of the value). */
-  def modeFromCounts(
-      counted: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      cntCol: String): DataFrame =
-    counted
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        min_by(col(valueCol), struct(-col(cntCol), col(valueCol))).as(valueCol)
-      )
-}
 
 /** The learned key–value index: exact probe + field-wise prefix
   * fallback + global fallback (ref: src/inference_trie.py:60-98,
@@ -49,7 +15,11 @@ object Aggregates {
   * field-wise prefix of every key is aggregated ONCE at build time into
   * the rows at `len = 1 .. keyLen-1` (the inner nodes); and the single
   * `len = 0` row is the global value (the root), instead of the
-  * reference's row-at-a-time dynamic-SQL `prefix_search`. Every key at
+  * reference's row-at-a-time dynamic-SQL `prefix_search`. The build is
+  * the trie's DFS over its sorted leaves ([[KvIndexState.toModel]]: one
+  * pass over the keys in code order, where every inner node's leaves are
+  * one contiguous run), like the reference's standalone backend builds
+  * its trie in-process (inference_trie.py:3-58). Every key at
   * `len >= 1` packs into a Long [[Keys.code]] (checked when the index is
   * cached), and the probe serves that one encoding: a [[Keys.keyColumn]]
   * over `keyLen` non-nullable integral bins, packed per row inside the
@@ -302,20 +272,22 @@ object LocalScorer {
   *    addition, value = sum/cnt. Identical to avg() over base ∪ delta
   *    because both are one exact merge-tree away from the same total.
   *  - multi-class (mode): per-(key, pred) cnt — merged by addition,
-  *    value = the same pinned-tie argmax [[Aggregates.mode]] computes.
+  *    value = the pinned-tie mode (highest count, then lowest value).
   *
   * append(delta) ≡ rebuild(base ∪ delta): mode counts are integers, so
   * multi-class equality is exact always; mean sums are doubles, so the
   * equality is BITWISE when predictions are integer-valued (0/1 labels,
   * class ids, integer-scaled scores — every shipped lifecycle) and
-  * otherwise agrees the way any two Spark avg() runs do (identical up
+  * otherwise agrees the way any two Spark sum() runs do (identical up
   * to FP summation order, which partitioning already makes
   * nondeterministic — round the served value, as the declared queries
-  * do). `x_index_append`'s oracle IS the rebuild, so the equivalence is
-  * hash-checked end to end. At 100 TB this is the
-  * difference between an O(delta) daily ingest and an O(corpus) rescan:
-  * the state is key-space-bounded (small by construction), the delta
-  * pass is one partial aggregate.
+  * do). The prefix levels and the global value are then a function of
+  * the per-key values alone ([[toModel]] folds them in code order), so
+  * they never add an order of their own. `x_index_append`'s oracle IS
+  * the rebuild, so the equivalence is hash-checked end to end. At 100 TB
+  * this is the difference between an O(delta) daily ingest and an
+  * O(corpus) rescan: the state is key-space-bounded (small by
+  * construction), the delta pass is one partial aggregate.
   */
 final case class KvIndexState(task: Task, keyLen: Int, stats: DataFrame) {
 
@@ -325,19 +297,26 @@ final case class KvIndexState(task: Task, keyLen: Int, stats: DataFrame) {
     copy(stats = KvIndexState.merge(
       stats.unionByName(KvIndexState.partial(keyed, task)), task))
 
-  /** Finalize into a servable [[KvModel]]: the per-key mean (`sum /
-    * cnt`, the same division as Spark's `avg`) or pinned-tie mode, then
-    * [[KvIndexBuilder.fromKv]]. A fresh build finalizes a fresh state, so
-    * this is the one definition of the per-key value. */
+  /** Finalize into a servable [[KvModel]] in ONE sorted pass — the
+    * trie's DFS over its sorted leaves (inference_trie.py:3-58). The
+    * state's rows, each with its key's [[Keys.code]], go to one partition
+    * sorted by code, so a key's rows are one run and so are the keys
+    * under every prefix (`code >>> w·(keyLen−l)`). The pass
+    * ([[KvIndexState.pass]]) emits every index row from them: each key's
+    * value (the mode, or `sum / cnt`, then the balance reweight
+    * `least(value·ratio, 1)`, transpiler.py:3080-3081), each prefix's
+    * value over the values of the keys under it (the same mode, or the
+    * mean summed in code order) when its run ends, and the `len = 0` row
+    * (the global value). [[KvModel.materialize]] caches the rows.
+    * A fresh build finalizes a fresh state, so this is the one
+    * definition of every index value. */
   def toModel(balanceRatio: Option[Double] = None): KvModel = {
-    val kv = task match {
-      case Task.MultiClass =>
-        Aggregates.modeFromCounts(stats, Seq("key"), "pred", "cnt")
-          .withColumnRenamed("pred", "value")
-      case _ =>
-        stats.select(col("key"), (col("sum") / col("cnt")).as("value"))
-    }
-    KvIndexBuilder.fromKv(kv, keyLen, task, balanceRatio)
+    val sorted = stats
+      .select(Keys.indexCode(col("key"), lit(keyLen), keyLen).as("code"), col("key"),
+        col(if (task == Task.MultiClass) "pred" else "sum"), col("cnt"))
+      .coalesce(1).sortWithinPartitions("code")
+    KvModel.materialize(task, keyLen,
+      sorted.mapPartitions(KvIndexState.pass(task, keyLen, balanceRatio))(KvIndexState.IndexRows), "the index")
   }
 }
 
@@ -366,6 +345,85 @@ object KvIndexState {
     case _ =>
       stats.groupBy("key").agg(sum("sum").as("sum"), sum("cnt").as("cnt"))
   }
+
+  /** The rows of a [[KvModel.index]]: (len, key, value, code). */
+  private val IndexRows = Encoders.row(StructType.fromDDL("len INT, key STRING, value DOUBLE, code BIGINT"))
+
+  /** One node of the trie as its votes arrive: a key, voted by its
+    * state rows (`pred, cnt` or `sum, cnt`), or a prefix, voted 1 by the
+    * value of each key under it.
+    *
+    *  - mode: highest count, then lowest value, over the values as Spark
+    *    groups them (−0.0 counts as 0.0, every NaN as the one canonical
+    *    NaN, which sorts above every number);
+    *  - mean: the sum from 0.0 in arrival order over the count, as
+    *    Spark's `sum` and `avg` add. */
+  private final class Node(mode: Boolean) {
+    private val counts = scala.collection.mutable.TreeMap.empty[Double, Long](Ordering.Double.TotalOrdering)
+    private var sum = 0.0
+    private var cnt = 0L
+
+    def vote(v: Double, n: Long): Unit =
+      if (mode) {
+        val k = if (v == 0.0) 0.0 else if (v.isNaN) Double.NaN else v
+        counts(k) = counts.getOrElse(k, 0L) + n
+      } else {
+        sum += v
+        cnt += n
+      }
+
+    /** The node's value; the node is then empty for the next run. */
+    def take(): Double = {
+      // maxBy keeps the first of equal counts: the lowest value
+      val v = if (mode) counts.maxBy(_._2)._1 else sum / cnt
+      counts.clear()
+      sum = 0.0
+      cnt = 0L
+      v
+    }
+  }
+
+  /** The sorted pass of [[KvIndexState#toModel]] over one partition of
+    * `(code, key, pred or sum, cnt)` state rows sorted by code: every
+    * `index (len, key, value, code)` row, grouped by len, longest first,
+    * each len in code order. A key's row streams out when its run ends;
+    * a prefix's row is held until every key has passed, so the cached
+    * index's batches hold one len each and a scan of one level skips the
+    * others' batches. A key without a code (NULL, or one that does not
+    * pack) is passed through as its raw row, outside every prefix, for
+    * [[KvModel.materialize]] to reject by name. */
+  private def pass(task: Task, n: Int, balanceRatio: Option[Double])(sorted: Iterator[Row]): Iterator[Row] = {
+    val mode = task == Task.MultiClass
+    val nodes = Array.fill(n + 1)(new Node(mode)) // the open node of each length
+    val codes = Array.fill(n + 1)(-1L)            // and its code: -1 before the first key
+    var key: String = null                        // the open key
+    val prefixRows = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Row]) // by len
+    def prefix(code: Long, l: Int) = code >>> Keys.codeWidth(n) * (n - l)
+    // close the open key and the open prefixes of length `from` and up
+    def close(from: Int): Row = {
+      val raw = nodes(n).take()
+      // the balance reweight least(raw * r, 1.0), where NaN sorts above 1.0
+      val v = balanceRatio.fold(raw)(r => if ((raw * r).isNaN || raw * r > 1.0) 1.0 else raw * r)
+      (0 until n).foreach(nodes(_).vote(v, 1L))
+      (from until n).foreach(l =>
+        prefixRows(l) += Row(l, Keys.digits(codes(l), l, n).mkString("."), nodes(l).take(), codes(l)))
+      Row(n, key, v, codes(n))
+    }
+    sorted.flatMap { r =>
+      val (k, v, cnt) = (r.getString(1), r.getDouble(2), r.getLong(3))
+      if (r.isNullAt(0)) Some(Row(n, k, v, null))
+      else {
+        val code = r.getLong(0)
+        // the shortest open node this key is not under; n + 1: its own key
+        val from = (0 to n).find(l => prefix(code, l) != codes(l)).getOrElse(n + 1)
+        val closed = if (codes(n) < 0 || from > n) None else Some(close(from))
+        (from to n).foreach(l => codes(l) = prefix(code, l))
+        key = k
+        nodes(n).vote(v, cnt)
+        closed
+      }
+    } ++ (if (codes(n) < 0) Iterator.empty else Iterator.single(close(0)) ++ prefixRows.reverseIterator.flatten)
+  }
 }
 
 object KvModel {
@@ -376,35 +434,38 @@ object KvModel {
     * small: 2^17 doubles is 1 MB. */
   val MaxCompiledEntries: Long = 1L << 17
 
-  /** Cache `rows` (len, key, value) with each key's [[Keys.code]] as the
-    * index of a [[KvModel]], and read its kv count, its global value and
-    * its radices and check that every key packs in ONE pass, which also
-    * fills the cache every probe broadcasts from — shared by the build
-    * and [[Persist.load]], so the code is computed once per index and
-    * never per serve. On a load that pass is the only job; a build also
-    * runs its aggregates' stages, and adaptive execution may run the last
-    * of them into the cache as a job of its own. `origin` names the rows
-    * in the error thrown when they have no `len = 0` row (an index
-    * nothing voted for) or a key at `len >= 1` without a code. */
+  /** Cache `rows` (len, key, value, code) as the index of a [[KvModel]],
+    * and read its kv count, its global value and its radices and check
+    * that every key packs in ONE pass, which also fills the cache every
+    * probe broadcasts from — shared by the build and [[Persist.load]], so
+    * the code is computed once per index and never per serve. `origin`
+    * names the rows in the error thrown when a key at `len >= 1` has no
+    * code (NULL, or not canonical decimals below the unseen digit), or
+    * when there is not exactly one `len = 0` row (none: an index nothing
+    * voted for). */
   private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
-    val index = rows.select(col("len"), col("key"), col("value"),
-      Keys.indexCode(col("key"), col("len"), keyLen).as("code")).cache()
-    val (kvCount, global, unpacked, radices) = index
+    val index = rows.select(col("len"), col("key"), col("value"), col("code")).cache()
+    val (kvCount, roots, unpacked, radices) = index
       .select(col("len"), col("value"), when(col("len") > 0 && col("code").isNull, col("key")), col("code")).rdd
-      .aggregate((0L, Option.empty[Double], Option.empty[String], new Array[Int](keyLen)))(
+      .aggregate((0L, List.empty[Double], Option.empty[Option[String]], new Array[Int](keyLen)))(
         { case ((n, g, u, rs), r) =>
           val len = r.getInt(0)
           if (len > 0 && !r.isNullAt(3))
             Keys.digits(r.getLong(3), len, keyLen).zipWithIndex.foreach { case (d, i) => rs(i) = math.max(rs(i), d + 1) }
-          (if (len == keyLen) n + 1 else n, if (len == 0) Some(r.getDouble(1)) else g, u.orElse(Option(r.getString(2))), rs) },
+          (if (len == keyLen) n + 1 else n, if (len == 0) r.getDouble(1) :: g else g,
+            u.orElse(Option.when(len > 0 && r.isNullAt(3))(Option(r.getString(2)))), rs) },
         { case ((n1, g1, u1, rs1), (n2, g2, u2, rs2)) =>
-          (n1 + n2, g1.orElse(g2), u1.orElse(u2), rs1.zip(rs2).map { case (a, b) => math.max(a, b) }) })
-    if (global.isEmpty || unpacked.isDefined) index.unpersist()
-    require(global.isDefined, s"$origin has no len = 0 (global value) row: no (key, prediction) " +
+          (n1 + n2, g1 ++ g2, u1.orElse(u2), rs1.zip(rs2).map { case (a, b) => math.max(a, b) }) })
+    if (roots.length != 1 || unpacked.isDefined) index.unpersist()
+    unpacked.foreach { k =>
+      throw new IllegalArgumentException(s"$origin has ${k.fold("a NULL key")(key => s"key '$key'")}, which does not " +
+        s"pack: a key must be its len (at most $keyLen) canonical decimals, each below " +
+        s"2^${Keys.codeWidth(keyLen)} - 1 = ${Keys.unseen(keyLen)}")
+    }
+    require(roots.nonEmpty, s"$origin has no len = 0 (global value) row: no (key, prediction) " +
       "row voted, so the input was empty or every prediction NULL")
-    require(unpacked.isEmpty, s"$origin has key '${unpacked.get}', which does not pack: a key must be its " +
-      s"len (at most $keyLen) canonical decimals, each below 2^${Keys.codeWidth(keyLen)} - 1 = ${Keys.unseen(keyLen)}")
-    KvModel(task, keyLen, index, global.get, kvCount, radices.toSeq)
+    require(roots.length == 1, s"$origin has ${roots.length} len = 0 (global value) rows; an index has exactly one")
+    KvModel(task, keyLen, index, roots.head, kvCount, radices.toSeq)
   }
 }
 
@@ -413,10 +474,12 @@ object KvIndexBuilder {
     * predictions on train, keyed (transpiler.py:573). Aggregation per
     * key: mean for regression/binary, mode for multi-class
     * (transpiler.py:986-996), through the same [[KvIndexState]] an
-    * incremental append finalizes, so append ≡ rebuild by construction.
+    * incremental append finalizes, so append ≡ rebuild by construction:
+    * one partial aggregate of the rows, then [[KvIndexState.toModel]]'s
+    * one sorted pass over its keys.
     *
     * @param balanceRatio optional class-balance reweighting
-    *                 (`min(value*ratio, 1)`, transpiler.py:3080-3081).
+    *                 (`least(value*ratio, 1)`, transpiler.py:3080-3081).
     */
   def buildFromKeyed(
       keyed: DataFrame,
@@ -425,41 +488,4 @@ object KvIndexBuilder {
       balanceRatio: Option[Double] = None
   ): KvModel =
     KvIndexState.build(keyed, keyLen, task).toModel(balanceRatio)
-
-  /** Finalize a (key, value) kv relation into a servable model: balance
-    * reweight, then ONE index relation. The kv rows are copied in at
-    * `len = keyLen` (their bits untouched); one aggregate over them —
-    * each kv row explodes into its field-wise prefixes of length
-    * 0 .. keyLen-1 (length 0 is the empty prefix every key shares),
-    * grouped by (len, prefix) with `avg`, or [[Aggregates.mode]] for
-    * multi-class — gives every prefix level and, as its one `len = 0`
-    * row, the global value. Prefix aggregates run over DISTINCT KEYS
-    * (one row per kv entry), not raw rows — the trie's DFS over leaves
-    * (inference_trie.py:73-98). Both branches read the same kv plan, so
-    * its aggregate runs once: the branches share its exchange. The index
-    * is one partition, like a saved one: the broadcast of every level
-    * above [[KvModel.split]] scans all of its partitions, a task each, on
-    * every serve. */
-  private[core] def fromKv(
-      kvRaw: DataFrame,
-      keyLen: Int,
-      task: Task,
-      balanceRatio: Option[Double]
-  ): KvModel = {
-    val kv = balanceRatio match {
-      case Some(r) => kvRaw.withColumn("value", least(col("value") * r, lit(1.0)))
-      case None    => kvRaw
-    }
-    val pfx = kv
-      .select(explode(array((0 until keyLen).map(l =>
-        struct(lit(l).as("len"), Keys.prefix(col("key"), l).as("key"))): _*)).as("p"), col("value"))
-      .select(col("p.len").as("len"), col("p.key").as("key"), col("value"))
-    val aggregated = task match {
-      case Task.MultiClass => Aggregates.mode(pfx, Seq("len", "key"), "value")
-      case _ => pfx.groupBy("len", "key").agg(avg("value").as("value"))
-    }
-    KvModel.materialize(task, keyLen,
-      kv.select(lit(keyLen).as("len"), col("key"), col("value")).unionByName(aggregated).coalesce(1),
-      "the index")
-  }
 }

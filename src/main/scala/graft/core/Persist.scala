@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Fitted-artifact persistence (S5 made real — the reference
   * joblib-dumps the fitted pipeline/trie and measures the artifact,
@@ -19,8 +20,9 @@ import org.apache.spark.sql.{Row, SparkSession}
   *   index/     the one (len, key, value) index relation: the exact kv
   *              at len = key_len, the prefix levels, and the global
   *              value as its len = 0 row (the cached index's key codes
-  *              are recomputed on load, never saved; a key without one
-  *              is rejected there, naming `<dir>/index`)
+  *              are recomputed on load, never saved; a key without one,
+  *              NULL included, and a second len = 0 row are rejected
+  *              there, naming `<dir>/index`)
   *
   * [[load]] reads each relation with the fixed schema [[save]] writes
   * (no schema-inference job), and rejects any other layout (a missing
@@ -174,6 +176,7 @@ object Persist {
       populatePaths = meta.getAs[Boolean]("populate_paths"))
     graft.InferDbPipeline.Fitted(
       config, bins, strs(meta, "selected"), meta.getAs[Double]("iv"),
-      KvModel.materialize(task, keyLen, spark.read.schema(IndexSchema).parquet(s"$dir/index"), s"$dir/index"))
+      KvModel.materialize(task, keyLen, spark.read.schema(IndexSchema).parquet(s"$dir/index")
+        .withColumn("code", Keys.indexCode(col("key"), col("len"), keyLen)), s"$dir/index"))
   }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.core.{Aggregates, Keys, NumericBins}
+import graft.core.{Keys, NumericBins}
 import graft.functions.Fns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -144,9 +144,11 @@ object RelationalQueries {
       Tables.customer(s, d).select(col("c_nationkey").as("nationkey")).distinct()
         .except(Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")).distinct())),
 
-    // A2: per-group mode with pinned tie-break (count desc, value asc).
+    // A2: per-group mode with pinned tie-break (count desc, value asc):
+    // counts per (group, value), then min_by over (-count, value).
     "a2_groupby_mode" -> ((s, d) =>
-      Aggregates.mode(Tables.events(s, d), Seq("event_type"), "user_id")),
+      Tables.events(s, d).groupBy("event_type", "user_id").agg(count(lit(1)).as("cnt"))
+        .groupBy("event_type").agg(min_by(col("user_id"), struct(-col("cnt"), col("user_id"))).as("user_id"))),
 
     // W2/O2: argmax per group as a single-pass aggregate (no window sort).
     "w2_rank_argmax" -> ((s, d) =>

@@ -70,13 +70,13 @@ class KvProbeSpec extends AnyFunSuite {
     import spark.implicits._
     val keyed = (1 to 200).map(i => (s"${i % 2}.${i % 3}.${i % 5}.${i % 7}", (i % 2).toDouble))
       .toDF("key", "pred")
-    Seq(Task.Classification -> 4, Task.MultiClass -> 6).foreach { case (task, buildJobs) =>
-      // the build: one job per exchange of the kv and prefix aggregates
-      // (mean 1 + 1, mode 2 + 2; the index's two branches share the kv's),
-      // the job that runs the index's last stage into the cache, then ONE
-      // job that reads the kv count and global value
+    Seq(Task.Classification, Task.MultiClass).foreach { task =>
+      // the build, for every task: the partial aggregate's map stage,
+      // the job that fills the cache (ONE task that merges the partials,
+      // sorts by code and runs the sorted pass), then ONE job that reads
+      // the kv count and global value
       val build = GroupJobs(KvIndexBuilder.buildFromKeyed(keyed, keyLen = 4, task))
-      assert(build.started.size == buildJobs && build.outside.isEmpty, s"$task build $build")
+      assert(build.started.size == 3 && build.outside.isEmpty, s"$task build $build")
       // ONE collect of the one index relation
       val scorer = GroupJobs(build.result.toLocalScorer)
       assert(scorer.started.size == 1 && scorer.outside.isEmpty, s"$task toLocalScorer $scorer")

@@ -108,6 +108,25 @@ class PersistSpec extends AnyFunSuite {
     assert(u.getMessage.contains(s"$unpacked/index") && u.getMessage.contains(s"'$bad'"), u.getMessage)
   }
 
+  test("load rejects a NULL key and a second len = 0 row, naming the directory") {
+    import spark.implicits._
+    val dir = TmpDirs.scratch("persist_spec_null_key", sf)
+    trained.save(dir)
+    val saved = trained.kv.index.select("len", "key", "value")
+    val n = trained.kv.keyLen
+    for ((what, extra, expected) <- Seq(
+        ("a NULL key", (n, null: String, 0.5), "has a NULL key"),
+        ("a NULL prefix", (n - 1, null: String, 0.5), "has a NULL key"),
+        ("a second root", (0, null: String, 1.0), "has 2 len = 0 (global value) rows"))) {
+      val bad = TmpDirs.scratch("persist_spec_null_key_bad", sf)
+      Seq("meta", "bins").foreach(r => spark.read.parquet(s"$dir/$r").write.mode("overwrite").parquet(s"$bad/$r"))
+      saved.unionByName(Seq(extra).toDF("len", "key", "value")).coalesce(1)
+        .write.mode("overwrite").parquet(s"$bad/index")
+      val e = intercept[IllegalArgumentException](InferDbPipeline.load(spark, bad))
+      assert(e.getMessage.contains(s"$bad/index") && e.getMessage.contains(expected), s"$what: ${e.getMessage}")
+    }
+  }
+
   test("load runs pinned job counts under the caller's job group: no schema inference") {
     val dir = TmpDirs.scratch("persist_spec_load_jobs", sf)
     trained.save(dir)
