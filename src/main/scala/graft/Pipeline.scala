@@ -54,16 +54,16 @@ object InferDbPipeline {
 
     /** Collect-once driver-local scorer for single-row / low-latency
       * paths (the reference's standalone trie, transpiler.py:3117-3215):
-      * raw values for `selected` (in order) -> prediction, microseconds
-      * per call, no Spark job. The collected maps are bounded by the
-      * selected key space — small by construction. */
+      * raw values for `selected` (in order) -> their bins -> prediction,
+      * microseconds per call, no Spark job. The collected table and maps
+      * are bounded by the selected key space — small by construction. */
     def toLocalScorer: Seq[Any] => Double = {
       val scorer = kv.toLocalScorer
-      val specs = selected.map(bins)
+      val specs = selected.map(bins).toArray
       vals => {
         require(vals.length == specs.length,
           s"expected ${specs.length} values for ${selected.mkString(",")}")
-        scorer.scoreKey(Keys.render(specs.indices.map(i => specs(i).binValue(vals(i)))))
+        scorer.score(Array.tabulate(specs.length)(i => specs(i).binValue(vals(i))))
       }
     }
 

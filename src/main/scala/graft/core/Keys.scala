@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Compound-key assembly: '.'-joined bin indices in selected-feature
   * order, e.g. "2.0.5.11" (ref: src/transpiler.py:940-983, 1132-1166).
   * Owns both encodings of a key: the string a build keys by and an index
-  * saves (`LocalScorer.prefix` mirrors [[prefix]] driver-side), and the
-  * packed Long [[code]] of its bins, the one key [[KvModel.probe]] serves:
+  * saves, and the packed Long [[code]] of its bins, the one key
+  * [[KvModel.probe]] and [[LocalScorer]] serve:
   * it reads the bins back out of a [[keyColumn]] through [[bins]], and
   * each index key is packed once, where the index is cached.
   */
@@ -82,6 +82,19 @@ object Keys {
   private[core] def code(bins: Seq[Column]): Column =
     GraftColumnBridge.column(BinCode(bins.map(GraftColumnBridge.expression)))
 
+  /** The code of one key's bin values, packed as [[BinCode]] packs a
+    * row's: the driver-side [[code]]. */
+  private[core] def code(bins: Array[Long]): Long = {
+    val (width, top) = (codeWidth(bins.length), unseen(bins.length))
+    var code = 0L
+    var i = 0
+    while (i < bins.length) {
+      code = code << width | (if (bins(i) >= 0 && bins(i) < top) bins(i) else top)
+      i += 1
+    }
+    code
+  }
+
   /** The first `l` fields of the code of an `n`-field key: the packed
     * [[prefix]]. */
   private[core] def codePrefix(code: Column, n: Int, l: Int): Column =
@@ -147,10 +160,8 @@ private[core] final case class BinCode(children: Seq[Expression]) extends Expres
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
 
-  override def eval(input: InternalRow): Any = children.foldLeft(0L) { (code, c) =>
-    val b = c.eval(input).asInstanceOf[Number].longValue
-    code << width | (if (b >= 0 && b < unseen) b else unseen)
-  }
+  override def eval(input: InternalRow): Any =
+    Keys.code(children.map(_.eval(input).asInstanceOf[Number].longValue).toArray)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val digits = children.map { c =>

@@ -68,12 +68,6 @@ final case class KvModel(
     kvCount: Long,       // rows at len = keyLen, counted when the index was cached
     radices: Seq[Int]    // field i's radix: 1 + its largest digit over the index codes
 ) {
-  /** The index entries as a typed Dataset (SURVEY §1.2 fixed shape). */
-  def entries: org.apache.spark.sql.Dataset[Types.KVEntry] = {
-    import kv.sparkSession.implicits._
-    kv.as[Types.KVEntry]
-  }
-
   /** Prefix lengths in cascade order, longest first. */
   private def levels: Seq[Int] = keyLen - 1 to 1 by -1
 
@@ -121,7 +115,7 @@ final case class KvModel(
   /** `s*`, where [[probe]] splits the cascade: the longest prefix length
     * `s` with `Π_{i<s} (radices(i) + 1) <= MaxCompiledEntries` — only the
     * index's radices and the cap decide it. */
-  def split: Int =
+  @transient lazy val split: Int =
     (1 to keyLen).takeWhile(s => DenseAnswers.slots(radices.take(s).toArray) <= KvModel.MaxCompiledEntries).length
 
   /** Append `predName` to `input` by probing the index with `key`.
@@ -158,18 +152,18 @@ final case class KvModel(
   /** The cascade's answer over levels `0 .. s*` for every slot of the
     * first [[split]] fields, filled once per model — the first time a
     * probe asks for it — from ONE collect of the index's (len, code,
-    * value) rows at `len <= s*`; None when `s* = 0`. Field `i`'s extra
-    * "unseen" digit is its radix, a digit no index key has in that field
-    * — exactly the cascade of any bin outside `[0, radix)`. */
-  @transient private lazy val compiled: Option[DenseAnswers] = {
-    val s = split
-    if (s == 0) None
-    else {
-      val rows = index.where(col("len").between(1, s)).select(col("len"), col("code"), col("value")).collect()
-        .map(r => Keys.digits(r.getLong(1), r.getInt(0), keyLen) -> r.getDouble(2)).toSeq
-      Some(DenseAnswers.fill(radices.take(s).toArray, globalValue, rows))
-    }
-  }
+    * value) rows at `len <= s*`; None when `s* = 0`. */
+  @transient private lazy val compiled: Option[DenseAnswers] = Option.when(split > 0)(
+    table(index.where(col("len").between(1, split)).select(col("len"), col("code"), col("value")).collect()))
+
+  /** The [[DenseAnswers]] table over the first [[split]] fields, filled
+    * from the index's `(len, code, value)` rows at `len = 1 .. s*` — the
+    * one fill behind [[compiled]] and [[toLocalScorer]]. Field `i`'s
+    * extra "unseen" digit is its radix, a digit no index key has in that
+    * field — exactly the cascade of any bin outside `[0, radix)`. */
+  private def table(rows: Array[Row]): DenseAnswers =
+    DenseAnswers.fill(radices.take(split).toArray, globalValue,
+      rows.map(r => Keys.digits(r.getLong(1), r.getInt(0), keyLen) -> r.getDouble(2)).toSeq)
 
   /** The cascade over the Long [[Keys.code]] of `bins`: one broadcast
     * left join per level of `joined` (the levels above the table's
@@ -211,55 +205,69 @@ final case class KvModel(
           .drop("__key" +: values: _*)
     }
 
-  /** Collect the (bounded-by-key-space) index ONCE into plain maps for
-    * driver-local point lookups — the reference's standalone-trie
-    * single-row use case (transpiler.py:3117-3215; SURVEY §1.1). One
-    * collect on the caller's thread, so its one job runs under the
-    * caller's job group and description. */
+  /** Collect the (bounded-by-key-space) index ONCE into the driver-local
+    * form of [[probe]]'s cascade, for point lookups — the reference's
+    * standalone-trie single-row use case (transpiler.py:3117-3215;
+    * SURVEY §1.1): the [[compiled]] table's [[table]] over the rows at
+    * `len = 1 .. s*` (over no field, so only the global value, when
+    * `s* = 0`), and one Long-keyed map per level above `s*`, keyed by the
+    * code prefix that level's join probes with. One collect of
+    * `(len, code, value)` on the caller's thread, so its one job runs
+    * under the caller's job group and description. */
   def toLocalScorer: LocalScorer = {
-    val byLen = index.select(col("len"), col("key"), col("value")).collect().groupBy(_.getInt(0))
-      .map { case (l, rows) => l -> rows.map(r => r.getString(1) -> r.getDouble(2)).toMap }
-      .withDefaultValue(Map.empty[String, Double])
-    LocalScorer(byLen(keyLen), levels.map(l => l -> byLen(l)), globalValue)
+    val (joinedRows, compiledRows) = index.select(col("len"), col("code"), col("value")).collect()
+      .filter(_.getInt(0) > 0).partition(_.getInt(0) > split)
+    val joined = joinedRows.groupBy(_.getInt(0)).toSeq.sortBy(-_._1).map { case (l, rows) =>
+      Keys.codeWidth(keyLen) * (keyLen - l) ->
+        scala.collection.mutable.LongMap.from(rows.map(r => r.getLong(1) -> java.lang.Double.valueOf(r.getDouble(2))))
+    }
+    new LocalScorer(keyLen, joined, table(compiledRows))
   }
 }
 
-/** Driver-local single-row scorer: exact hit, then longest non-empty
-  * field-wise prefix, then the global fallback — the same cascade as
-  * [[KvModel.probe]], microseconds per lookup, no Spark job. */
-final case class LocalScorer(
-    kv: Map[String, Double],
-    prefixes: Seq[(Int, Map[String, Double])], // longest first, like probe
-    globalValue: Double) {
+/** Driver-local single-row scorer: [[KvModel.probe]]'s one cascade,
+  * microseconds per lookup, no Spark job. The levels above `s*` are one
+  * Long-keyed map each, probed longest first at the code prefix their
+  * joins probe with (the code shifted right by the map's shift); then
+  * the compiled table's answer at the bins. */
+final class LocalScorer private[core] (
+    keyLen: Int,
+    joined: Seq[(Int, scala.collection.mutable.LongMap[java.lang.Double])], // (shift, map), longest first
+    table: DenseAnswers) {
+  private val (shifts, levels) = joined.toArray.unzip
 
-  def scoreKey(key: String): Double =
-    kv.get(key) match {
-      case Some(v) => v
-      case None =>
-        var i = 0
-        while (i < prefixes.length) {
-          val (l, m) = prefixes(i)
-          val hit = m.get(LocalScorer.prefix(key, l))
-          if (hit.isDefined) return hit.get
-          i += 1
-        }
-        globalValue
+  /** The cascade's value for one key's bins, packed as [[Keys.code]]
+    * packs a probe key's: a bin outside `[0, unseen)` is the unseen
+    * digit. */
+  def score(bins: Array[Long]): Double = {
+    if (bins.length != keyLen) throw new IllegalArgumentException(s"expected $keyLen bins, got ${bins.length}")
+    val code = Keys.code(bins)
+    var i = 0
+    while (i < levels.length) {
+      val hit = levels(i).getOrNull(code >>> shifts(i))
+      if (hit ne null) return hit
+      i += 1
     }
-}
+    table.answer(bins)
+  }
 
-object LocalScorer {
-  /** First `n` '.'-separated fields — `Keys.prefix` (substring_index)
-    * driver-side: the whole key when it has ≤ n fields. */
-  def prefix(key: String, n: Int): String = {
-    var idx = -1
-    var seen = 0
-    while (seen < n) {
-      val next = key.indexOf('.', idx + 1)
-      if (next < 0) return key
-      idx = next
-      seen += 1
+  /** [[score]] of a key string, read in place as the `keyLen`
+    * '.'-separated integers of its bins (the key [[Keys.keyColumn]]
+    * renders). A string that is not throws `IllegalArgumentException`. */
+  def scoreKey(key: String): Double = {
+    val bins = new Array[Long](keyLen)
+    var from = 0
+    var i = 0
+    while (i < keyLen) {
+      val to = if (i == keyLen - 1) key.length else key.indexOf('.', from)
+      bins(i) = try java.lang.Long.parseLong(key, from, to, 10) catch {
+        case _: NumberFormatException | _: IndexOutOfBoundsException =>
+          throw new IllegalArgumentException(s"key '$key' is not $keyLen '.'-separated integers")
+      }
+      from = to + 1
+      i += 1
     }
-    key.substring(0, idx)
+    score(bins)
   }
 }
 

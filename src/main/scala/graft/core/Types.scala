@@ -1,13 +1,10 @@
 package graft.core
 
 /** The small fixed shapes SURVEY §1.2 maps to typed Datasets — used
-  * where type safety helps (index entries, model-as-relation rows);
+  * where type safety helps (model-as-relation rows);
   * everything schema-dynamic stays `DataFrame`.
   */
 object Types {
-  /** One learned-index entry (kv relation row; transpiler.py:1004-1015). */
-  final case class KVEntry(key: String, value: Double)
-
   /** Linear-model coefficient row (transpiler.py:1529-1562). */
   final case class Coef(classId: Long, colId: Int, value: Double, intercept: Double)
 

@@ -177,11 +177,4 @@ object GraftExtensions {
     (FunctionIdentifier("graft_adc_dot"),
       new ExpressionInfo(classOf[AdcDotProduct].getName, "graft_adc_dot"),
       arity("graft_adc_dot", 2)(c => AdcDotProduct(c(0), c(1)))))
-
-  /** Register all graft functions on an already-built session
-    * (getOrCreate ignores withExtensions when a session exists). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    (binIndexFn +: kernelFns).foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }

@@ -264,9 +264,10 @@ object SqlGen {
       maxEntries: Int = 4096,
       ctePrefix: String = ""): Option[(String, String)] = {
     if (f.selected.isEmpty || f.kv.kvCount > maxEntries) return None
-    val scorer = f.kv.toLocalScorer
-    val kvRows = scorer.kv.toSeq.sortBy(_._1)
-    val pfxRows = scorer.prefixes.map { case (l, m) => l -> m.toSeq.sortBy(_._1) }
+    // the index's own string keys: one collect of its (len, key, value) rows
+    val byLen = f.kv.index.select("len", "key", "value").collect().toSeq.sortBy(_.getString(1))
+      .groupMap(_.getInt(0))(r => r.getString(1) -> r.getDouble(2)).withDefaultValue(Seq.empty)
+    val pfxRows = (f.kv.keyLen - 1 to 1 by -1).map(l => l -> byLen(l))
     def values(name: String, rows: Seq[(String, Double)]) =
       s"$name(k, v) AS (VALUES ${rows.map { case (k, v) =>
         s"(${slit(k)}, ${dlit(round6(v))})" }.mkString(", ")})"
@@ -282,7 +283,7 @@ object SqlGen {
     val ctes =
       s"""${ctePrefix}probe AS (
          |  SELECT ${(idCols ++ comps).mkString(", ")} FROM $table),
-         |${(values(s"${ctePrefix}kv", kvRows) +: pfxCtes).mkString(",\n")}""".stripMargin
+         |${(values(s"${ctePrefix}kv", byLen(f.kv.keyLen)) +: pfxCtes).mkString(",\n")}""".stripMargin
     val select =
       s"""SELECT ${idCols.map(c => s"p.$c").mkString(", ")},
          |  coalesce(${fallbacks.mkString(", ")}, ${dlit(round6(f.kv.globalValue))}) AS $predName

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.NumericBins
-import graft.plans.{BinIndex, GraftExtensions}
+import graft.plans.BinIndex
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,8 +38,8 @@ class BinIndexSpec extends AnyFunSuite {
     }
   }
 
+  // the shared session registers them: TestSpark installs GraftExtensions
   test("bin_index is callable from SQL once registered") {
-    GraftExtensions.register(spark)
     val out = spark.sql(
       "SELECT bin_index(CAST(x AS DOUBLE), 10.0D, 20.0D, 30.0D) AS b " +
       "FROM VALUES (5), (15), (25), (99) AS t(x)")
@@ -48,7 +48,6 @@ class BinIndexSpec extends AnyFunSuite {
   }
 
   test("text/vector kernels are callable from SQL once registered") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT poly_hash('ab') AS h, simhash16('a b a') AS s, " +
       "  graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
@@ -61,7 +60,6 @@ class BinIndexSpec extends AnyFunSuite {
   }
 
   test("SQ8 kernels are callable from SQL once registered") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       "SELECT graft_abs_max(array(-0.5D, 0.25D)) AS am, " +
       "  graft_sq8(array(-0.5D, 0.25D)) AS q, " +

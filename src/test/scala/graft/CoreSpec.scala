@@ -107,11 +107,10 @@ class CoreSpec extends AnyFunSuite {
     assert(modeKv == 1.0 && root == Seq(modeKv) && model.globalValue == modeKv)
   }
 
-  test("typed Dataset accessors: KVEntry / Coef / NNWeight") {
+  test("typed Dataset accessors: Coef / NNWeight; the kv rows") {
     val train = Seq(("0.0", 1.0), ("0.1", 0.0)).toDF("key", "pred")
     val model = KvIndexBuilder.buildFromKeyed(train, 2, Task.Classification)
-    val e: Types.KVEntry = model.entries.orderBy("key").head()
-    assert(e == Types.KVEntry("0.0", 1.0))
+    assert(model.kv.as[(String, Double)].collect().sorted.toSeq == Seq("0.0" -> 1.0, "0.1" -> 0.0))
     val lm = graft.models.LinearModel(Array(0.5, -1.0), 0.1)
     val cs = lm.coefEntries(spark).collect().sortBy(_.colId)
     assert(cs.toSeq == Seq(Types.Coef(0L, 0, 0.5, 0.1), Types.Coef(0L, 1, -1.0, 0.1)))

@@ -92,13 +92,13 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("LocalScorer.prefix == first-n-fields (substring_index semantics)") {
+  test("StringCascade.prefix == first-n-fields (substring_index semantics)") {
     (1 to 400).foreach { _ =>
       val k = Seq.fill(1 + rnd.nextInt(5))(rnd.nextInt(31)).mkString(".")
       val n = 1 + rnd.nextInt(6)
       val fields = k.split("\\.", -1)
       val want = if (fields.length <= n) k else fields.take(n).mkString(".")
-      assert(graft.core.LocalScorer.prefix(k, n) == want, s"for '$k' n=$n")
+      assert(graft.core.StringCascade.prefix(k, n) == want, s"for '$k' n=$n")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.TestSpark.bits
-import graft.core.{Aggregates, Keys, KvIndexBuilder, KvIndexState, KvModel, LocalScorer, Persist, Task, TmpDirs}
+import graft.core.{Aggregates, Keys, KvIndexBuilder, KvIndexState, KvModel, Persist, StringCascade, Task, TmpDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -212,19 +212,17 @@ class KvIndexStateSpec extends AnyFunSuite {
       val lens = m.index.select("len").collect().map(_.getInt(0)).toSeq
       assert(m.index.rdd.getNumPartitions == 1 && lens == lens.sorted.reverse, what)
       assert(m.kvCount == want.keys.count(_._1 == keyLen), what)
-      // every slot of the probe's key space, the unseen digits included
+      // every slot of the probe's key space, the unseen digits included,
+      // against the string cascade of the chain's rows
       val scorer = m.toLocalScorer
-      val reference = LocalScorer(
-        want.collect { case ((l, k), v) if l == keyLen => k -> java.lang.Double.longBitsToDouble(v) },
-        (keyLen - 1 to 1 by -1).map(l => l -> want.collect {
-          case ((`l`, k), v) => k -> java.lang.Double.longBitsToDouble(v)
-        }),
-        java.lang.Double.longBitsToDouble(want((0, ""))))
-      val slots = m.radices.foldLeft(Seq(Seq.empty[Int]))((acc, r) => acc.flatMap(p => (0 to r).map(p :+ _)))
+      val reference = StringCascade(keyLen,
+        want.toSeq.map { case ((l, k), v) => (l, k, java.lang.Double.longBitsToDouble(v)) })
+      val slots = m.radices.foldLeft(Seq(Seq.empty[Long]))((acc, r) => acc.flatMap(p => (0L to r).map(p :+ _)))
       assert(slots.length == m.radices.map(_ + 1).product, what)
       slots.foreach { s =>
         val k = s.mkString(".")
-        assert(bits(scorer.scoreKey(k)) == bits(reference.scoreKey(k)), s"$what slot $k")
+        val ref = bits(reference.scoreKey(k))
+        assert(bits(scorer.score(s.toArray)) == ref && bits(scorer.scoreKey(k)) == ref, s"$what slot $k")
       }
     }
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.TestSpark.bits
-import graft.core.{Keys, KvIndexBuilder, NumericBins, Task}
+import graft.core.{Keys, KvIndexBuilder, KvModel, NumericBins, StringCascade, Task}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -107,23 +107,28 @@ class KvProbeSpec extends AnyFunSuite {
     probe(binRows(rows), binKey(rows.head.length), "p").select("id", "p").collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1).map(_._2).toSeq
 
-  /** Which level of `scorer` answers `key`: keyLen = exact, keyLen-1 .. 1
-    * = prefix, 0 = global. */
-  private def level(scorer: graft.core.LocalScorer, keyLen: Int, key: String): Int =
-    if (scorer.kv.contains(key)) keyLen
-    else scorer.prefixes.collectFirst {
-      case (l, tbl) if tbl.contains(graft.core.LocalScorer.prefix(key, l)) => l
-    }.getOrElse(0)
-
   test("the lazy join cascade matches toLocalScorer at every level") {
     val scorer = cascade4.toLocalScorer
     val keys = cascadeBins.map(Keys.render)
-    assert(keys.map(level(scorer, 4, _)) == Seq(4, 3, 2, 1, 0), "fixture must cover every level")
+    assert(keys.map(StringCascade(cascade4).level) == Seq(4, 3, 2, 1, 0), "fixture must cover every level")
     val joined = probeValues(cascadeBins)(cascade4.joinProbe)
-    keys.zip(joined).foreach { case (k, v) =>
-      val local = scorer.scoreKey(k)
-      assert(bits(v) == bits(local), s"key $k: joined $v vs local $local")
+    cascadeBins.indices.foreach { i =>
+      val local = scorer.score(cascadeBins(i).toArray)
+      assert(bits(joined(i)) == bits(local) && bits(scorer.scoreKey(keys(i))) == bits(local),
+        s"key ${keys(i)}: joined ${joined(i)} vs local $local")
     }
+  }
+
+  test("scoreKey fails loudly on a key that is not keyLen integers, naming it") {
+    val scorer = model.toLocalScorer
+    // too few or too many fields must not serve a prefix's value
+    for (bad <- Seq("1.1", "1.1.1.1", "1", "", "1..1", "1.1.", ".1.1", "a.1.1", "1.1.x", "1.1.1.",
+        "1.1.99999999999999999999")) {
+      val e = intercept[IllegalArgumentException](scorer.scoreKey(bad))
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("3 '.'-separated"), e.getMessage)
+    }
+    // every key a keyColumn renders reads, the out-of-range bins included
+    assert(bits(scorer.scoreKey(s"${Long.MinValue}.-1.${Long.MaxValue}")) == bits(model.globalValue))
   }
 
   test("every prefix join probes with a key conditional on the longer levels missing") {
@@ -169,17 +174,17 @@ class KvProbeSpec extends AnyFunSuite {
       val compiled = probeValues(probeBins)(m.probe)
       val joined = probeValues(probeBins)(m.joinProbe)
       probeBins.indices.foreach { i =>
-        val k = Keys.render(probeBins(i))
-        val local = scorer.scoreKey(k)
+        val local = scorer.score(probeBins(i).toArray)
         assert(bits(compiled(i)) == bits(local) && bits(joined(i)) == bits(local),
-          s"$task key $k: compiled ${compiled(i)} joined ${joined(i)} local $local")
+          s"$task key ${probeBins(i)}: compiled ${compiled(i)} joined ${joined(i)} local $local")
       }
       // a NULL-only key has no entry of its own: it serves its prefix
-      assert(!scorer.kv.contains("1.1.1"), s"$task: NULL-only key must not get a kv entry")
+      val reference = StringCascade(m)
+      assert(!reference.kv.contains("1.1.1"), s"$task: NULL-only key must not get a kv entry")
       assert(bits(scorer.scoreKey("1.1.1")) == bits(scorer.scoreKey("1.1.2")), s"$task")
       // and the incremental state builds the same index as the fresh build
-      val fromState = graft.core.KvIndexState.build(keyed, keyLen = 3, task).toModel().toLocalScorer
-      assert(fromState.kv.view.mapValues(bits).toMap == scorer.kv.view.mapValues(bits).toMap, s"$task")
+      val fromState = StringCascade(graft.core.KvIndexState.build(keyed, keyLen = 3, task).toModel())
+      assert(fromState.kv.view.mapValues(bits).toMap == reference.kv.view.mapValues(bits).toMap, s"$task")
     }
   }
 
@@ -224,6 +229,31 @@ class KvProbeSpec extends AnyFunSuite {
 
   private def executedPlan(df: DataFrame): String = TestSpark.executedPlan(df).toString
 
+  /** A served frame's `p` by its `id`. */
+  private def byId(df: DataFrame): Map[Int, Double] =
+    df.select(col("id"), col("p")).collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+
+  /** Every row of `input` ([[binRows]]) served alike, bitwise: by each of
+    * `forms` (a serve's values by id), by `m`'s scorer from the row's
+    * bins (`score`) and from its key string (`scoreKey`), and by the
+    * [[StringCascade]] of `m`'s index rows. The levels that answered. */
+  private def assertOneCascade(m: KvModel, input: DataFrame, forms: Seq[(String, Map[Int, Double])],
+      what: String): Set[Int] = {
+    val n = m.keyLen
+    val scorer = m.toLocalScorer
+    val reference = StringCascade(m)
+    val rows = input.select(col("id") +: (0 until n).map(i => col(s"b$i")) :+ binKey(n): _*).collect()
+    forms.foreach { case (name, values) => assert(values.size == rows.length, s"$what $name") }
+    rows.map { r =>
+      val k = r.getString(n + 1)
+      val want = reference.scoreKey(k)
+      val got = Seq("score" -> scorer.score(Array.tabulate(n)(i => r.getLong(1 + i))),
+        "scoreKey" -> scorer.scoreKey(k)) ++ forms.map { case (name, values) => name -> values(r.getInt(0)) }
+      got.foreach { case (name, v) => assert(bits(v) == bits(want), s"$what key $k: $name $v vs reference $want") }
+      reference.level(k)
+    }.toSet
+  }
+
   test("dense probe equals joinProbe and scoreKey bitwise over the whole key space") {
     for ((ranges, task, seed) <- Seq(
         (Seq(3, 4, 2), Task.Classification, 1), (Seq(3, 4, 2), Task.MultiClass, 2),
@@ -239,26 +269,15 @@ class KvProbeSpec extends AnyFunSuite {
       assert(lens.count(_ == ranges.length) == m.kvCount && lens.count(_ == 0) == 1 &&
         lens.toSet == (0 to ranges.length).toSet, s"$ranges $task lens ${lens.distinct.sorted.toSeq}")
       assert(m.prefixes.map(_._1) == (ranges.length - 1 to 1 by -1), s"$ranges $task")
-      val scorer = m.toLocalScorer
       val input = extendedSpace(ranges)
       val dense = m.probe(input, key, "p")
       assert(executedPlan(dense).contains("kv_probe("), s"$ranges $task must serve dense")
-      def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
-        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val got = byId(dense)
-      val joined = byId(m.joinProbe(input, key, "p"))
       // the interpreted path: a local relation folds the projection at plan time
-      val folded = byId(m.probe(spark.createDataFrame(input.collect().toSeq.asJava, input.schema), key, "p"))
-      val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-      assert(got.size == keys.size && joined.size == keys.size && folded.size == keys.size)
-      keys.foreach { case (id, k) =>
-        val local = scorer.scoreKey(k)
-        assert(bits(got(id)) == bits(local) && bits(joined(id)) == bits(local) &&
-          bits(folded(id)) == bits(local),
-          s"$ranges $task key $k: dense ${got(id)} joined ${joined(id)} folded ${folded(id)} local $local")
-      }
+      val folded = m.probe(spark.createDataFrame(input.collect().toSeq.asJava, input.schema), key, "p")
+      val levels = assertOneCascade(m, input,
+        Seq("dense" -> byId(dense), "joined" -> byId(m.joinProbe(input, key, "p")), "folded" -> byId(folded)),
+        s"$ranges $task")
       // every level of the cascade answers some slot
-      val levels = keys.values.map(level(scorer, ranges.length, _)).toSet
       assert(levels == (0 to ranges.length).toSet, s"$ranges $task levels $levels")
     }
   }
@@ -284,10 +303,7 @@ class KvProbeSpec extends AnyFunSuite {
     for ((task, seed) <- Seq(Task.Classification -> 11, Task.MultiClass -> 12)) {
       val ranges = Seq(3, 2, 3, 3)
       val (m, key) = binModel(ranges, task, seed)
-      val scorer = m.toLocalScorer
       val input = extendedSpace(ranges, wide)
-      def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
-        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
       val packedJoin = m.joinProbe(input, key, "p")
       val joinKeys = TestSpark.executedPlan(packedJoin).collect {
         case j: BroadcastHashJoinExec => (j.leftKeys ++ j.rightKeys).map(_.dataType)
@@ -297,16 +313,8 @@ class KvProbeSpec extends AnyFunSuite {
       assert(executedPlan(dense).contains("kv_probe("), s"$task must serve dense")
       // the interpreted code: a local relation folds the projection at plan time
       val folded = m.joinProbe(spark.createDataFrame(input.collect().toSeq.asJava, input.schema), key, "p")
-      val forms = Seq("packed" -> packedJoin, "dense" -> dense, "folded" -> folded)
-        .map { case (name, df) => name -> byId(df) }
-      val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-      forms.foreach { case (name, values) => assert(values.size == keys.size, s"$task $name") }
-      keys.foreach { case (id, k) =>
-        val local = bits(scorer.scoreKey(k))
-        forms.foreach { case (name, values) =>
-          assert(bits(values(id)) == local, s"$task key $k: $name ${values(id)} vs local ${scorer.scoreKey(k)}")
-        }
-      }
+      assertOneCascade(m, input,
+        Seq("packed" -> byId(packedJoin), "dense" -> byId(dense), "folded" -> byId(folded)), s"$task")
     }
   }
 
@@ -379,15 +387,14 @@ class KvProbeSpec extends AnyFunSuite {
       .map(_.executeCollect().map(r => key(r.getLong(0))).toSeq.sorted)
   }
 
-  /** The exact keys of `scorer` whose value differs bitwise from the one
+  /** The exact keys of `index` whose value differs bitwise from the one
     * their first `s` fields fall through to, sorted: what the split
     * probe's first joined level broadcasts when it is the exact level. */
-  private def exceptions(scorer: graft.core.LocalScorer, s: Int): Seq[String] = {
-    def fallback(k: String) = scorer.prefixes.collectFirst {
-      case (l, tbl) if l <= s && tbl.contains(graft.core.LocalScorer.prefix(k, l)) =>
-        tbl(graft.core.LocalScorer.prefix(k, l))
-    }.getOrElse(scorer.globalValue)
-    scorer.kv.collect { case (k, v) if bits(v) != bits(fallback(k)) => k }.toSeq.sorted
+  private def exceptions(index: StringCascade, s: Int): Seq[String] = {
+    def fallback(k: String) = index.prefixes.collectFirst {
+      case (l, tbl) if l <= s && tbl.contains(StringCascade.prefix(k, l)) => tbl(StringCascade.prefix(k, l))
+    }.getOrElse(index.globalValue)
+    index.kv.collect { case (k, v) if bits(v) != bits(fallback(k)) => k }.toSeq.sorted
   }
 
   test("an over-cap key space takes the join form") {
@@ -419,6 +426,27 @@ class KvProbeSpec extends AnyFunSuite {
     assert(executedPlan(second.result).contains("kv_probe(") && broadcastJoins(second.result) == 1)
   }
 
+  test("a split above two joined levels serves every level alike on every path") {
+    import spark.implicits._
+    // 3,000 random cells of a 400 x 400 x 3 space: 401 x 401 slots are
+    // above the cap, so s* = 1 and levels 2 and 3 are joined
+    val rnd = new scala.util.Random(21)
+    val cells = ((399L, 399L, 2L) +: Seq.fill(3000)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong,
+      rnd.nextInt(3).toLong))).distinct
+    val m = KvIndexBuilder.buildFromKeyed(cells.map { case (a, b, c) => (s"$a.$b.$c", rnd.nextInt(7).toDouble) }
+      .toDF("key", "pred"), keyLen = 3, Task.Regression)
+    assert(m.radices == Seq(400, 400, 3) && m.split == 1, s"radices ${m.radices} split ${m.split}")
+    // each cell, and each with its last field, its last two fields or every
+    // field moved out of the index's range
+    val input = binRows(cells.flatMap { case (a, b, c) =>
+      Seq(Seq(a, b, c), Seq(a, b, 3L), Seq(a, (b + 1) % 401, -1L), Seq(a, 400L, c), Seq(-1L, b, c))
+    })
+    val key = binKey(3)
+    val levels = assertOneCascade(m, input,
+      Seq("split" -> byId(m.probe(input, key, "p")), "joined" -> byId(m.joinProbe(input, key, "p"))), "two joined")
+    assert(levels == Set(0, 1, 2, 3), s"levels $levels")
+  }
+
   /** `body` with whole-stage codegen off and every expression evaluated
     * by its interpreted `eval`; the settings are restored afterwards. */
   private def interpreted[T](body: => T): T = {
@@ -440,7 +468,6 @@ class KvProbeSpec extends AnyFunSuite {
     for ((task, seed) <- Seq(Task.Classification -> 13, Task.MultiClass -> 14)) {
       val (m, key) = binModel(ranges, task, seed)
       assert(m.radices == ranges && m.split == 2, s"$task radices ${m.radices} split ${m.split}")
-      val scorer = m.toLocalScorer
       val input = extendedSpace(ranges)
       val split = m.probe(input, key, "p")
       // the serve's own operators (the cached index's lineage is not one)
@@ -464,45 +491,24 @@ class KvProbeSpec extends AnyFunSuite {
       // the joined (exact) level broadcasts exactly the keys the table
       // does not already answer
       val broadcast = broadcastKeys(split, ranges.length)
-      val expected = exceptions(scorer, m.split)
+      val expected = exceptions(StringCascade(m), m.split)
       assert(broadcast == Seq(expected), s"$task broadcast ${broadcast.map(_.size)} vs ${expected.size}")
       assert(expected.nonEmpty && expected.size < m.kvCount, s"$task ${expected.size} of ${m.kvCount}")
-      def byId(df: DataFrame) = df.select(col("id"), col("p")).collect()
-        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      val forms = Seq(
+      val levels = assertOneCascade(m, input, Seq(
         "split" -> byId(split),
         "joined" -> byId(m.joinProbe(input, key, "p")),
-        "interpreted" -> interpreted(byId(m.probe(input, key, "p"))))
-      val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-      forms.foreach { case (name, values) => assert(values.size == keys.size, s"$task $name") }
-      keys.foreach { case (id, k) =>
-        val local = bits(scorer.scoreKey(k))
-        forms.foreach { case (name, values) =>
-          val got = bits(values(id))
-          assert(got == local, s"$task key $k: $name ${values(id)} vs local ${scorer.scoreKey(k)}")
-        }
-      }
+        "interpreted" -> interpreted(byId(m.probe(input, key, "p")))), s"$task")
       // every level of the cascade answers some slot, joined and compiled
-      val levels = keys.values.map(level(scorer, ranges.length, _)).toSet
       assert(levels == (0 to ranges.length).toSet, s"$task levels $levels")
     }
   }
 
-  /** The split serve's values over `input` against joinProbe's and
-    * `scoreKey`'s, bitwise, by id. */
-  private def assertServesLikeJoinProbe(m: graft.core.KvModel, input: DataFrame, what: String): Unit = {
-    def byId(df: DataFrame) = df.select(col("id"), col("p")).collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+  /** The split serve's values over `input` against joinProbe's, the
+    * scorer's and the reference's, bitwise, by id. */
+  private def assertServesLikeJoinProbe(m: KvModel, input: DataFrame, what: String): Unit = {
     val key = binKey(m.keyLen)
-    val split = byId(m.probe(input, key, "p"))
-    val joined = byId(m.joinProbe(input, key, "p"))
-    val scorer = m.toLocalScorer
-    val keys = input.select(col("id"), key).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    assert(split.size == keys.size && joined.size == keys.size, what)
-    keys.foreach { case (id, k) =>
-      val local = scorer.scoreKey(k)
-      assert(bits(split(id)) == bits(local) && bits(joined(id)) == bits(local),
-        s"$what key $k: split ${split(id)} joined ${joined(id)} local $local")
-    }
+    assertOneCascade(m, input,
+      Seq("split" -> byId(m.probe(input, key, "p")), "joined" -> byId(m.joinProbe(input, key, "p"))), what)
   }
 
   test("a signed zero or NaN the table does not answer bitwise stays in the broadcast") {
@@ -525,17 +531,18 @@ class KvProbeSpec extends AnyFunSuite {
       .toDF("len", "key", "value").coalesce(1).write.mode("overwrite").parquet(s"$dir/index")
     val m = InferDbPipeline.load(spark, dir).kv
     assert(m.radices == Seq(401, 401) && m.split == 1, s"${m.radices} split ${m.split}")
-    assert(bits(m.toLocalScorer.kv("0.0")) == bits(-0.0), "the load must keep -0.0")
+    assert(bits(StringCascade(m).kv("0.0")) == bits(-0.0), "the load must keep -0.0")
+    // every slot of the 401 x 401 space, the unseen digits included
+    assertServesLikeJoinProbe(m, extendedSpace(Seq(401, 401)), "signed zero and NaN")
     val grid = Seq(-1L, 0L, 1L, 2L, 3L, 399L, 400L, 401L)
     val input = binRows(for (a <- grid; b <- grid) yield Seq(a, b))
-    assertServesLikeJoinProbe(m, input, "signed zero and NaN")
     assert(broadcastKeys(m.probe(input, binKey(2), "p"), 2) == Seq(Seq("0.0", "1.2", "3.3", "400.400")))
   }
 
   test("an over-cap index whose every exact key repeats its prefix broadcasts nothing") {
     // 400 keys i.i, each the only key under its prefix i: the same value
     val m = wideModel()
-    assert(m.split == 1 && exceptions(m.toLocalScorer, 1).isEmpty)
+    assert(m.split == 1 && exceptions(StringCascade(m), 1).isEmpty)
     val input = binRows((0L to 401L).flatMap(i => Seq(Seq(i, i), Seq(i, i + 1), Seq(i, 0L))))
     assert(broadcastKeys(m.probe(input, binKey(2), "p"), 2) == Seq(Seq.empty))
     // values only: adaptive execution may drop a join whose build side is empty

@@ -254,7 +254,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(fitted.selected == Seq("cat") && fitted.bins("cat").numBins == 5)
     val nullRow = Seq(Option.empty[String]).toDF("cat")
     val key = nullRow.select(fitted.keyColumn).head().getString(0)
-    val kv = fitted.kv.toLocalScorer.kv
+    val kv = graft.core.StringCascade(fitted.kv).kv
     assert(kv.contains(key), s"NULL-category key $key missing from ${kv.keys.toSeq.sorted}")
     assert(fitted.transform(nullRow, "p").select("p").head().getDouble(0) == kv(key))
   }
@@ -282,10 +282,13 @@ class PipelineSpec extends AnyFunSuite {
     val selected = fitted.selected
     val probe = df.limit(1000)
     val cols = selected :+ "p"
-    fitted.transform(probe, "p").select(cols.map(col): _*).collect().foreach { r =>
-      val vals = selected.indices.map(i => r.get(i))
-      assert(scorer(vals) == r.getDouble(selected.length),
-        s"mismatch at ${vals.mkString(",")}")
+    val served = fitted.transform(probe, "p").select(cols.map(col): _*).collect()
+    assert(served.length == 1000)
+    // the 1,000 lookups start no Spark job
+    val local = GroupJobs(served.map(r => scorer(selected.indices.map(i => r.get(i)))))
+    assert(local.started.isEmpty, s"lookups started jobs ${local.started}")
+    served.zip(local.result).foreach { case (r, v) =>
+      assert(v == r.getDouble(selected.length), s"mismatch at ${r.mkString(",")}")
     }
     // dirty single row: NULL routes to the overflow bin -> same
     // fallback the distributed cascade takes
