@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.plans.{DenseAnswers, KvProbe}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, IndexLevel, Row}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
@@ -37,17 +37,20 @@ import org.apache.spark.sql.functions._
   *    code, lazy like the trie walk (a level computes its key and probes
   *    its table only for rows no longer level resolved) — fully
   *    parallel, and the only shuffle in the serve path is whatever the
-  *    caller's plan already needed.
+  *    caller's plan already needed. Each level's hash relation is
+  *    built and broadcast ONCE per model, at the first probe that joins
+  *    it ([[IndexLevel]]); a serve reuses it, so it adds no broadcast
+  *    job and no exchange, and its plan holds no index lineage.
   *
   * The final coalesce of the joined levels ends in the table's answer.
-  * So the first joined level, `s*+1`, broadcasts only its exceptions:
-  * a row whose value is bitwise the table's answer at its first `s*`
-  * digits repeats what every key under it falls through to anyway (its
-  * level-`s*` parent need not even be in the index), so the broadcast
-  * drops it and the served bits stay the same. On a 6-field index of
-  * 157k keys over 9^6 slots that leaves 7% of the exact level. The
-  * levels above `s*+1` keep every row: their parents are joined rows,
-  * and pruning them would need a self-join of the index.
+  * So the first joined level, `s*+1`, holds only its exceptions: a row
+  * whose value is bitwise the table's answer at its first `s*` digits
+  * repeats what every key under it falls through to anyway (its
+  * level-`s*` parent need not even be in the index), so the level drops
+  * it when it is built and the served bits stay the same. On a 6-field
+  * index of 157k keys over 9^6 slots that leaves 7% of the exact level.
+  * The levels above `s*+1` keep every row: their parents are joined
+  * rows, and pruning them would need a self-join of the index.
   *
   * `s* = keyLen` is the dense form (one projection, no join): every
   * index the shipped queries fit serves so. [[joinProbe]] is the other
@@ -55,7 +58,8 @@ import org.apache.spark.sql.functions._
   * split gives the same values bit for bit ([[KvProbeSpec]] pins them).
   *
   * Build it with [[KvIndexBuilder.buildFromKeyed]] or [[KvIndexState]];
-  * [[KvModel.materialize]] is the one place an index is cached.
+  * [[KvModel.materialize]] is the one place an index is cached, and
+  * [[release]] frees the cache and the level broadcasts.
   *
   * At 100 TB the probe side streams; the index side is bounded by the
   * key space (small by construction — that is the point of the paper).
@@ -81,36 +85,39 @@ final case class KvModel(
   /** Per-level string views of [[index]], longest first: len ->
     * (prefix string, value double) for `len = keyLen-1 .. 1`; the global
     * value is not a level. Built once per model, for readers of the
-    * saved string keys; the probe reads [[codeLevels]]. */
+    * saved string keys; the probe joins [[joinedLevel]]s. */
   @transient lazy val prefixes: Seq[(Int, DataFrame)] = levels.map { l =>
     l -> rowsAt(l).select(col("key").as("prefix"), col("value"))
   }
 
-  /** The join cascade's tables, longest first: len -> (code, value) for
-    * `len = keyLen .. 1`. Built once per model and reused by every serve
-    * that joins a level: fresh views per call re-analyzed the index's
-    * lineage and cost a 6-field cascade serve ~0.1 s (4 local cores). */
-  @transient private lazy val codeLevels: Seq[(Int, DataFrame)] = (keyLen +: levels).map { l =>
-    l -> rowsAt(l).select(col("code"), col("value"))
+  /** The join cascade's levels built so far, by (len, pruned). */
+  @transient private lazy val builtLevels = scala.collection.mutable.Map.empty[(Int, Boolean), IndexLevel]
+  @transient @volatile private var released = false
+
+  /** Level `l` of the join cascade, `(__p_l, __v_l)`: the index's
+    * `(code, value)` rows at `len = l`, built into a broadcast hash
+    * relation once per model, the first time a probe joins the level,
+    * and reused by every later serve. `pruned`, for [[probe]]'s first
+    * joined level `s*+1`, keeps only the rows whose value differs bitwise
+    * from the [[compiled]] table's answer at their first `s*` digits
+    * (a NULL value, which the coalesce skips anyway, is dropped too):
+    * the filter runs once, in the level's one collect. */
+  private def joinedLevel(l: Int, pruned: Boolean): IndexLevel = synchronized {
+    live()
+    builtLevels.getOrElseUpdate((l, pruned), {
+      val rows = rowsAt(l).select(col("code"), col("value"))
+      IndexLevel.build(
+        if (!pruned) rows
+        else rows.where(KvProbe.differs(col("value"), Keys.codeDigits(col("code"), l, keyLen, split), compiled.get)),
+        s"__p_$l", s"__v_$l")
+    })
   }
 
   /** The levels [[probe]] joins above the [[compiled]] table, longest
-    * first: the [[codeLevels]] above `s*`, the last of them (`s*+1`)
-    * filtered to the rows whose value differs bitwise from the table's
-    * answer at their first `s*` digits — the filter runs in the
-    * broadcast's own scan of the cached index, on every serve. A NULL
-    * value, which the coalesce skips anyway, is dropped too. Every level
-    * when there is no table. Built once per model, like [[codeLevels]]. */
-  @transient private lazy val splitLevels: Seq[(Int, DataFrame)] = compiled match {
-    case None => codeLevels
-    case Some(t) =>
-      val s = t.radices.length
-      codeLevels.takeWhile(_._1 > s).map {
-        case (l, tbl) if l == s + 1 =>
-          l -> tbl.where(KvProbe.differs(col("value"), Keys.codeDigits(col("code"), l, keyLen, s), t))
-        case level => level
-      }
-  }
+    * first: `keyLen .. s*+1`, the last of them pruned; every level when
+    * there is no table. */
+  private def splitLevels: Seq[(Int, IndexLevel)] =
+    (keyLen until split by -1).map(l => l -> joinedLevel(l, pruned = split > 0 && l == split + 1))
 
   /** `s*`, where [[probe]] splits the cascade: the longest prefix length
     * `s` with `Π_{i<s} (radices(i) + 1) <= MaxCompiledEntries` — only the
@@ -125,20 +132,25 @@ final case class KvModel(
     * its rows the table does not already answer), the rest from the
     * [[compiled]] table — the same values bit for bit at any split. */
   def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
-    val bins = intBins(input, key)
+    val bins = intBins(input, key, joins = split < keyLen)
     cascade(input, bins, compiled, splitLevels, predName)
   }
 
   /** The cascade with every level joined in full (`s* = 0`): the scale
     * path, and the reference every split of [[probe]] equals. */
   def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
-    cascade(input, intBins(input, key), None, codeLevels, predName)
+    cascade(input, intBins(input, key, joins = true), None,
+      (keyLen to 1 by -1).map(l => l -> joinedLevel(l, pruned = false)), predName)
 
   /** `key`'s bins: the one probe contract, checked by analysis (no job)
     * before any probe runs. `key` must be a [[Keys.keyColumn]] of
-    * `keyLen` bins that are non-nullable and integral in `input`;
-    * anything else throws `IllegalArgumentException`. */
-  private def intBins(input: DataFrame, key: Column): Seq[Column] = {
+    * `keyLen` bins that are non-nullable and integral in `input`, and
+    * when the cascade `joins` a level, `input`'s session must plan
+    * [[IndexLevel]]s (`graft.plans.GraftExtensions`); anything else throws
+    * `IllegalArgumentException`. A [[release]]d model throws
+    * `IllegalStateException`. */
+  private def intBins(input: DataFrame, key: Column, joins: Boolean): Seq[Column] = {
+    live()
     val bins = Keys.bins(key).getOrElse(
       throw new IllegalArgumentException(s"the probe key must be a Keys.keyColumn of bins, got $key"))
     require(bins.length == keyLen, s"the probe key has ${bins.length} bins, the index keys $keyLen: $key")
@@ -146,7 +158,24 @@ final case class KvModel(
       require(!f.nullable, s"probe key bin ${f.name} is nullable")
       require(KvProbe.bin(f.dataType), s"probe key bin ${f.name} is ${f.dataType.sql}, not integral")
     }
+    require(!joins || IndexLevel.planned(input.sparkSession), "the probe joins index levels, which only a " +
+      "session built with graft.plans.GraftExtensions plans (withExtensions or spark.sql.extensions)")
     bins
+  }
+
+  /** Throws once [[release]] has run. */
+  private def live(): Unit =
+    if (released) throw new IllegalStateException("this KvModel was freed by release(): its index and level " +
+      "broadcasts are gone, so it can no longer probe or score")
+
+  /** Free what this model holds on the cluster: [[index]]'s cache and
+    * every level broadcast its probes built. Any later [[probe]],
+    * [[joinProbe]] or [[toLocalScorer]] throws `IllegalStateException`. */
+  def release(): Unit = synchronized {
+    released = true
+    builtLevels.values.foreach(_.relation.destroy())
+    builtLevels.clear()
+    index.unpersist(blocking = true)
   }
 
   /** The cascade's answer over levels `0 .. s*` for every slot of the
@@ -167,7 +196,8 @@ final case class KvModel(
 
   /** The cascade over the Long [[Keys.code]] of `bins`: one broadcast
     * left join per level of `joined` (the levels above the table's
-    * fields, longest first), then `table`'s answer at the code's first
+    * fields, longest first), each reading its level's broadcast as the
+    * build side, then `table`'s answer at the code's first
     * digits, or the global value without a table. Level `l` probes with
     * [[Keys.codePrefix]] — Long-keyed hash relations, and no key string
     * built or cut per row. The table reads the digits of the code the
@@ -185,16 +215,16 @@ final case class KvModel(
     * one is NULL, and then it probes exactly the eager key — the final
     * coalesce, itself lazy, is bit-identical to probing every level. */
   private def cascade(input: DataFrame, bins: Seq[Column], table: Option[DenseAnswers],
-      joined: Seq[(Int, DataFrame)], predName: String): DataFrame =
+      joined: Seq[(Int, IndexLevel)], predName: String): DataFrame =
     joined match {
       case Seq() => input.withColumn(predName, KvProbe.column(bins, table.get))
       case _ =>
         val (cascaded, values) = joined.foldLeft((input.withColumn("__key", Keys.code(bins)), Seq.empty[String])) {
-          case ((df, resolved), (l, tbl)) =>
+          case ((df, resolved), (l, level)) =>
             val probeKey =
               if (l == keyLen) col("__key")
               else when(coalesce(resolved.map(col): _*).isNull, Keys.codePrefix(col("__key"), keyLen, l))
-            val next = df.join(broadcast(tbl.toDF(s"__p_$l", s"__v_$l")), probeKey === col(s"__p_$l"), "left")
+            val next = df.join(broadcast(IndexLevel.frame(df.sparkSession, level)), probeKey === col(s"__p_$l"), "left")
               .drop(s"__p_$l")
             (next, resolved :+ s"__v_$l")
         }
@@ -215,6 +245,7 @@ final case class KvModel(
     * `(len, code, value)` on the caller's thread, so its one job runs
     * under the caller's job group and description. */
   def toLocalScorer: LocalScorer = {
+    live()
     val (joinedRows, compiledRows) = index.select(col("len"), col("code"), col("value")).collect()
       .filter(_.getInt(0) > 0).partition(_.getInt(0) > split)
     val joined = joinedRows.groupBy(_.getInt(0)).toSeq.sortBy(-_._1).map { case (l, rows) =>
@@ -444,13 +475,13 @@ object KvModel {
 
   /** Cache `rows` (len, key, value, code) as the index of a [[KvModel]],
     * and read its kv count, its global value and its radices and check
-    * that every key packs in ONE pass, which also fills the cache every
-    * probe broadcasts from — shared by the build and [[Persist.load]], so
-    * the code is computed once per index and never per serve. `origin`
-    * names the rows in the error thrown when a key at `len >= 1` has no
-    * code (NULL, or not canonical decimals below the unseen digit), or
-    * when there is not exactly one `len = 0` row (none: an index nothing
-    * voted for). */
+    * that every key packs in ONE pass, which also fills the cache the
+    * probe's table and joined levels are built from — shared by the
+    * build and [[Persist.load]], so the code is computed once per index
+    * and never per serve. `origin` names the rows in the error thrown
+    * when a key at `len >= 1` has no code (NULL, or not canonical
+    * decimals below the unseen digit), or when there is not exactly one
+    * `len = 0` row (none: an index nothing voted for). */
   private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
     val index = rows.select(col("len"), col("key"), col("value"), col("code")).cache()
     val (kvCount, roots, unpacked, radices) = index

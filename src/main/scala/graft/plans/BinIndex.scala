@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Un
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.{GraftColumnBridge, IndexLevelStrategy}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Codegen'd supervised-bin lookup: `bin(v)` = index of the first split
@@ -97,7 +97,8 @@ object BinIndex {
 
 /** SparkSessionExtensions hook: registers `bin_index(expr, s1, s2, …)`
   * plus the text/vector kernels (`graft_dot`, `poly_hash`,
-  * `minhash_sig`, `simhash16`, `shingle_set`) for SQL use. Install with
+  * `minhash_sig`, `simhash16`, `shingle_set`) for SQL use, and plans the
+  * joined levels of a `KvModel` probe ([[IndexLevelStrategy]]). Install with
   * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
@@ -108,6 +109,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // bin_index(x) = k  →  range predicate on x (parquet-pushable);
     // see BinRangeRewrite
     ext.injectOptimizerRule(_ => BinRangeRewrite)
+    ext.injectPlannerStrategy(_ => IndexLevelStrategy)
   }
 }
 

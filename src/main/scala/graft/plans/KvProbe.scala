@@ -67,8 +67,9 @@ object DenseAnswers {
   * [[graft.core.KvModel.probe]] serves its compiled levels `1 .. s*`
   * (the first `s*` bins) from it: the whole cascade when `s*` is the key
   * length, else the last term of the coalesce after the broadcast joins
-  * of the longer levels, whose first one broadcasts only its rows that
-  * differ from it ([[KvProbe.differs]]). The table is filled from the
+  * of the longer levels, whose first one holds only its rows that
+  * differ from it ([[KvProbe.differs]], applied once per model, when the
+  * level is built and broadcast). The table is filled from the
   * index's codes and values ([[DenseAnswers.fill]]), copied, never
   * recomputed, so the values are the join cascade's bit for bit
   * (KvProbeSpec pins it over whole key spaces); it rides the task binary

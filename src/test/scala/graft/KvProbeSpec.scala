@@ -2,7 +2,9 @@ package graft
 
 import graft.TestSpark.bits
 import graft.core.{Keys, KvIndexBuilder, KvModel, NumericBins, StringCascade, Task}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, IndexLevel, IndexLevelExec, SparkSession}
+import org.apache.spark.sql.execution.joins.IndexLevelInternals
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -12,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * split must be bitwise identical to the all-join cascade on every path:
   * exact hit, each prefix length, global fallback, NULL-translated
   * keys — and must be the plan actually chosen: one projection for a
-  * small index, the table plus a join per over-cap level above it. Both
-  * serve one key: a `Keys.keyColumn` over non-nullable integral bins.
+  * small index, the table plus a join per over-cap level above it, each
+  * join reading the level's hash relation, broadcast once per model.
+  * Both serve one key: a `Keys.keyColumn` over non-nullable integral bins.
   */
 class KvProbeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -211,12 +214,12 @@ class KvProbeSpec extends AnyFunSuite {
   /** `rows` of bins as an RDD-backed frame (so the probe runs through
     * codegen, and building it starts no job) of non-nullable Long bin
     * columns b0..b(n-1) and the row's index as its id. */
-  private def binRows(rows: Seq[Seq[Long]]): DataFrame = {
+  private def binRows(rows: Seq[Seq[Long]], session: SparkSession = spark): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val schema = StructType(StructField("id", IntegerType, nullable = false) +:
       rows.head.indices.map(i => StructField(s"b$i", LongType, nullable = false)))
     val data = rows.zipWithIndex.map { case (r, i) => org.apache.spark.sql.Row.fromSeq(i +: r) }
-    spark.createDataFrame(spark.sparkContext.parallelize(data, 4), schema)
+    session.createDataFrame(session.sparkContext.parallelize(data, 4), schema)
   }
 
   /** Every slot of the extended key space as [[binRows]]: each field from
@@ -377,14 +380,48 @@ class KvProbeSpec extends AnyFunSuite {
     TestSpark.executedPlan(df).collect { case j: BroadcastHashJoinExec => j }.size
   }
 
-  /** The rows each broadcast of `df`'s plan builds its hash relation
-    * from, decoded as keys of an `n`-field index's exact level (the only
-    * level the split serves here join) and sorted. */
-  private def broadcastKeys(df: DataFrame, n: Int): Seq[Seq[String]] = {
+  /** Plan nodes, looking into adaptive plans and subqueries. */
+  private object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def joins(p: SparkPlan): Seq[BroadcastHashJoinExec] = collectWithSubqueries(p) { case j: BroadcastHashJoinExec => j }
+    def exchanges(p: SparkPlan): Seq[BroadcastExchangeExec] = collectWithSubqueries(p) { case e: BroadcastExchangeExec => e }
+    def levels(p: SparkPlan): Seq[IndexLevelExec] = collectWithSubqueries(p) { case l: IndexLevelExec => l }
+  }
+
+  /** The broadcast hash relation of each [[IndexLevel]] `df` joins. */
+  private def levelRelations(df: DataFrame): Seq[Broadcast[AnyRef]] =
+    df.queryExecution.analyzed.collect { case l: IndexLevel => l.relation }
+
+  /** The rows each joined level of `df` holds, read from its
+    * [[IndexLevel]]'s hash relation, decoded as keys of an `n`-field
+    * index's exact level (the only level the split serves here join)
+    * and sorted. */
+  private def broadcastKeys(df: DataFrame, n: Int): Seq[Seq[String]] = {
     def key(code: Long) = (0 until n).map(i => (code >>> Keys.codeWidth(n) * (n - 1 - i)) & Keys.unseen(n)).mkString(".")
-    TestSpark.executedPlan(df).collect { case b: BroadcastExchangeExec => b.child }
-      .map(_.executeCollect().map(r => key(r.getLong(0))).toSeq.sorted)
+    levelRelations(df).map(IndexLevelInternals.keys(_).map(key).sorted)
+  }
+
+  /** `serve()`'s plan holds `levels` broadcast hash joins, each building
+    * on an [[IndexLevelExec]], and no broadcast exchange: as planned with
+    * adaptive execution off, and as run (the final adaptive plan) with it
+    * on. `serve` makes a fresh frame for each plan. */
+  private def assertLevelJoins(serve: () => DataFrame, levels: Int, what: String): Unit = {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.InputAdapter
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val adaptive = TestSpark.adaptivePlan(serve())
+    assert(adaptive.isInstanceOf[AdaptiveSparkPlanExec], s"$what must plan adaptively:\n$adaptive")
+    for ((mode, plan) <- Seq("adaptive off" -> TestSpark.executedPlan(serve()), "adaptive on" -> adaptive)) {
+      val joins = Nodes.joins(plan)
+      assert(joins.size == levels, s"$what, $mode: one broadcast hash join per joined level:\n$plan")
+      assert(joins.forall(j => j.buildSide == BuildRight && (j.right match {
+        case InputAdapter(_: IndexLevelExec) | _: IndexLevelExec => true
+        case _ => false
+      })), s"$what, $mode: every join builds on its IndexLevelExec:\n$plan")
+      assert(Nodes.exchanges(plan).isEmpty, s"$what, $mode: no broadcast exchange:\n$plan")
+    }
   }
 
   /** The exact keys of `index` whose value differs bitwise from the one
@@ -417,30 +454,56 @@ class KvProbeSpec extends AnyFunSuite {
   test("the first split-form probe collects the compiled levels once, in the caller's job group") {
     val wide = wideModel()
     // the table over the first s* fields is filled from ONE collect of
-    // the index's rows at len <= s*, the first time a probe asks for it;
-    // the joined levels broadcast when the serve runs, not here
+    // the index's rows at len <= s*, and each joined level from ONE
+    // collect of its rows, then broadcast: the first time a probe asks
     val first = GroupJobs(wide.probe(wideInput, binKey(2), "p"))
-    assert(first.started.size == 1 && first.outside.isEmpty, s"first probe $first")
+    assert(first.started.size == 1 + (wide.keyLen - wide.split) && first.outside.isEmpty, s"first probe $first")
     val second = GroupJobs(wide.probe(wideInput, binKey(2), "p"))
     assert(second.started.isEmpty, s"second probe $second")
     assert(executedPlan(second.result).contains("kv_probe(") && broadcastJoins(second.result) == 1)
+    // a serve starts no broadcast job: its one job is the serve's own
+    val served = GroupJobs(wide.probe(wideInput, binKey(2), "p").collect())
+    assert(served.started.size == 1 && served.outside.isEmpty, s"served $served")
+    // joinProbe joins every level in full: the exact level unpruned is
+    // a level of its own, the prefix level is built once too
+    val joined = GroupJobs(wide.joinProbe(wideInput, binKey(2), "p"))
+    assert(joined.started.size == wide.keyLen && joined.outside.isEmpty, s"first joinProbe $joined")
+    assert(GroupJobs(wide.joinProbe(wideInput, binKey(2), "p")).started.isEmpty)
   }
 
-  test("a split above two joined levels serves every level alike on every path") {
+  test("each joined level is one broadcast hash join over its IndexLevelExec, with no exchange") {
+    val wide = wideModel()
+    assertLevelJoins(() => wide.probe(wideInput, binKey(2), "p"), 1, "split probe (s* = 1)")
+    assertLevelJoins(() => wide.joinProbe(wideInput, binKey(2), "p"), 2, "joinProbe")
+    // a serve that reads no prediction still joins: its level keeps the
+    // code alone, read from the same broadcast
+    assertLevelJoins(() => wide.probe(wideInput, binKey(2), "p").select("b0"), 1, "prediction dropped")
+    assert(Nodes.levels(TestSpark.executedPlan(wide.probe(wideInput, binKey(2), "p").select("b0")))
+      .map(_.output.map(_.name)) == Seq(Seq("__p_2")))
+    val (m, input) = (twoJoined, twoJoinedInput)
+    assertLevelJoins(() => m.probe(input, binKey(3), "p"), 2, "two-joined-level split")
+    assertLevelJoins(() => m.joinProbe(input, binKey(3), "p"), 3, "three-level joinProbe")
+  }
+
+  /** 3,000 random cells of a 400 x 400 x 3 space: 401 x 401 slots are
+    * above the cap, so s* = 1 and levels 2 and 3 are joined. The probe
+    * rows: each cell, and each with its last field, its last two fields
+    * or every field moved out of the index's range. */
+  private lazy val (twoJoined, twoJoinedInput) = {
     import spark.implicits._
-    // 3,000 random cells of a 400 x 400 x 3 space: 401 x 401 slots are
-    // above the cap, so s* = 1 and levels 2 and 3 are joined
     val rnd = new scala.util.Random(21)
     val cells = ((399L, 399L, 2L) +: Seq.fill(3000)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong,
       rnd.nextInt(3).toLong))).distinct
     val m = KvIndexBuilder.buildFromKeyed(cells.map { case (a, b, c) => (s"$a.$b.$c", rnd.nextInt(7).toDouble) }
       .toDF("key", "pred"), keyLen = 3, Task.Regression)
-    assert(m.radices == Seq(400, 400, 3) && m.split == 1, s"radices ${m.radices} split ${m.split}")
-    // each cell, and each with its last field, its last two fields or every
-    // field moved out of the index's range
-    val input = binRows(cells.flatMap { case (a, b, c) =>
+    (m, binRows(cells.flatMap { case (a, b, c) =>
       Seq(Seq(a, b, c), Seq(a, b, 3L), Seq(a, (b + 1) % 401, -1L), Seq(a, 400L, c), Seq(-1L, b, c))
-    })
+    }))
+  }
+
+  test("a split above two joined levels serves every level alike on every path") {
+    val (m, input) = (twoJoined, twoJoinedInput)
+    assert(m.radices == Seq(400, 400, 3) && m.split == 1, s"radices ${m.radices} split ${m.split}")
     val key = binKey(3)
     val levels = assertOneCascade(m, input,
       Seq("split" -> byId(m.probe(input, key, "p")), "joined" -> byId(m.joinProbe(input, key, "p"))), "two joined")
@@ -459,10 +522,8 @@ class KvProbeSpec extends AnyFunSuite {
 
   test("split probe equals joinProbe, interpreted and scoreKey bitwise over a space above the cap") {
     import org.apache.spark.sql.catalyst.expressions.{Coalesce, ConcatWs, Expression, SubstringIndex}
-    import org.apache.spark.sql.execution.FilterExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import graft.plans.{BitsDiffer, KvProbeScore}
+    import graft.plans.KvProbeScore
     // 71 x 71 x 31 slots is above 2^17; the first two fields' 71 x 71 fit
     val ranges = Seq(70, 70, 30)
     for ((task, seed) <- Seq(Task.Classification -> 13, Task.MultiClass -> 14)) {
@@ -470,26 +531,21 @@ class KvProbeSpec extends AnyFunSuite {
       assert(m.radices == ranges && m.split == 2, s"$task radices ${m.radices} split ${m.split}")
       val input = extendedSpace(ranges)
       val split = m.probe(input, key, "p")
-      // the serve's own operators (the cached index's lineage is not one)
+      // the serve's own operators: the joined level is its broadcast, so
+      // the plan holds no scan of the index
       val plan = TestSpark.executedPlan(split)
       val joins = plan.collect { case j: BroadcastHashJoinExec => j }
       assert(joins.size == ranges.length - m.split, s"$task one join per level above s*:\n$plan")
       def probes(es: Seq[Expression]) = es.flatMap(_.collect { case e: KvProbeScore => e })
-      // one kv_probe in the probe side's coalesce, one in the broadcast
-      // side's filter, compared by raw bits; no key string anywhere
+      // one kv_probe, in the probe side's coalesce; no key string anywhere
       val coalesces = plan.flatMap(_.expressions).flatMap(_.collect { case c: Coalesce => c })
       assert(probes(coalesces).size == 1, s"$task: the table ends the coalesce:\n$plan")
-      val filters = joins.head.right.collect { case f: FilterExec => f.condition }
-      assert(probes(filters).size == 1 && filters.exists(_.find(_.isInstanceOf[BitsDiffer]).isDefined),
-        s"$task: the broadcast side filters by the table's bits:\n$plan")
-      // (the cached scan's batch-pruning predicates restate the filter)
-      val nodes = plan.collect { case n if !n.isInstanceOf[InMemoryTableScanExec] => n }
-      val names = nodes.flatMap(_.expressions).flatMap(_.collect {
+      val names = plan.flatMap(_.expressions).flatMap(_.collect {
         case e @ (_: KvProbeScore | _: ConcatWs | _: SubstringIndex) => e.prettyName
       })
-      assert(names == Seq("kv_probe", "kv_probe"), s"$task: two kv_probes, no key string:\n$plan")
-      // the joined (exact) level broadcasts exactly the keys the table
-      // does not already answer
+      assert(names == Seq("kv_probe"), s"$task: one kv_probe, no key string:\n$plan")
+      // the joined (exact) level holds exactly the keys the table does
+      // not already answer, compared by raw bits when it was built
       val broadcast = broadcastKeys(split, ranges.length)
       val expected = exceptions(StringCascade(m), m.split)
       assert(broadcast == Seq(expected), s"$task broadcast ${broadcast.map(_.size)} vs ${expected.size}")
@@ -547,5 +603,102 @@ class KvProbeSpec extends AnyFunSuite {
     assert(broadcastKeys(m.probe(input, binKey(2), "p"), 2) == Seq(Seq.empty))
     // values only: adaptive execution may drop a join whose build side is empty
     assertServesLikeJoinProbe(m, input, "empty broadcast")
+  }
+
+  /** `df`'s `col` by its `id`. */
+  private def byId(df: DataFrame, c: String): Map[Int, Double] = byId(df.select(col("id"), col(c).as("p")))
+
+  test("two probes of one split model in one plan serve alike") {
+    val (m, input) = (twoJoined, twoJoinedInput)
+    val key = binKey(3)
+    // the same levels joined twice: each join reads its own instance
+    val twice = m.probe(m.probe(input, key, "p1"), key, "p2")
+    assert(levelRelations(twice).map(_.id).distinct.size == m.keyLen - m.split, "one broadcast per level")
+    assertLevelJoins(() => m.probe(m.probe(input, key, "p1"), key, "p2"), 2 * (m.keyLen - m.split), "two probes")
+    assertOneCascade(m, input, Seq("first" -> byId(twice, "p1"), "second" -> byId(twice, "p2")), "two probes")
+  }
+
+  test("a stream probed through a split model serves like the batch probe") {
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val m = wideModel()
+    val rows = (0L to 401L).flatMap(i => Seq(Seq(i, i), Seq(i, i + 1), Seq(i, 0L)))
+    val mem = MemoryStream[(Int, Long, Long)]
+    mem.addData(rows.zipWithIndex.map { case (r, i) => (i, r(0), r(1)) })
+    val name = s"kv_probe_split_stream_${System.nanoTime()}"
+    val q = m.probe(mem.toDF().toDF("id", "b0", "b1"), binKey(2), "p")
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    // planned by the stream's incremental execution, the level still
+    // joins as its broadcast
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    assert(Nodes.levels(plan).size == 1 && Nodes.exchanges(plan).isEmpty, s"stream plan:\n$plan")
+    val input = binRows(rows)
+    assertOneCascade(m, input,
+      Seq("stream" -> byId(spark.table(name)), "batch" -> byId(m.probe(input, binKey(2), "p"))), "stream")
+  }
+
+  test("a loaded split model serves like the in-memory one") {
+    val m = wideModel()
+    val dir = graft.core.TmpDirs.scratch("kv_probe_spec_split_load", sf)
+    InferDbPipeline.Fitted(InferDbPipeline.Config(features = Seq("f0", "f1"), target = "y"),
+      Map("f0" -> NumericBins(Array(0.5)), "f1" -> NumericBins(Array(0.5))), Seq("f0", "f1"), 0.0, m).save(dir)
+    val loaded = InferDbPipeline.load(spark, dir).kv
+    assert(loaded.split == 1 && loaded.radices == m.radices, s"${loaded.radices} split ${loaded.split}")
+    val input = binRows((0L to 401L).flatMap(i => Seq(Seq(i, i), Seq(i, i + 1), Seq(i, 0L), Seq(-1L, i))))
+    assertOneCascade(m, input, Seq("in-memory" -> byId(m.probe(input, binKey(2), "p")),
+      "loaded" -> byId(loaded.probe(input, binKey(2), "p"))), "loaded")
+    loaded.release()
+  }
+
+  test("a cloned session reuses the model's level broadcasts") {
+    val (m, rows) = (twoJoined, (0L until 400L).map(i => Seq(i, (i * 7) % 401, i % 4)))
+    val here = m.probe(binRows(rows), binKey(3), "p")
+    val other = spark.newSession()
+    val input = binRows(rows, other)
+    val there = GroupJobs(m.probe(input, binKey(3), "p"))
+    assert(there.started.isEmpty, s"the clone's probe built again: $there")
+    assert(levelRelations(there.result).map(_.id) == levelRelations(here).map(_.id))
+    assertOneCascade(m, input, Seq("session" -> byId(here), "clone" -> byId(there.result)), "clone")
+  }
+
+  test("a session that cannot plan index levels fails the joining probes by name, before any job") {
+    val bare = IndexLevelInternals.bareSession(spark)
+    val m = wideModel()
+    val input = binRows(Seq(Seq(1L, 1L), Seq(2L, 3L)), bare)
+    for ((form, probe) <- Seq[(String, (DataFrame, Column, String) => DataFrame)](
+        "probe" -> m.probe, "joinProbe" -> m.joinProbe)) {
+      val run = GroupJobs(intercept[IllegalArgumentException](probe(input, binKey(2), "p")))
+      assert(run.started.isEmpty, s"$form started jobs: $run")
+      assert(run.result.getMessage.contains("GraftExtensions"), s"$form: ${run.result.getMessage}")
+    }
+    // a dense probe joins nothing, so it serves there
+    val (dense, key) = binModel(Seq(3, 4, 2), Task.Classification, 5)
+    val denseInput = binRows(Seq(Seq(1L, 1L, 1L), Seq(9L, 0L, 0L)), bare)
+    assertOneCascade(dense, denseInput, Seq("bare" -> byId(dense.probe(denseInput, key, "p"))), "bare dense")
+  }
+
+  test("release frees the index cache and the level broadcasts, and the model then fails naming it") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val m = wideModel()
+    val cacheRdd = m.index.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id }.get
+    val served = m.probe(wideInput, binKey(2), "p")
+    served.collect()
+    val levels = levelRelations(served) ++ levelRelations(m.joinProbe(wideInput, binKey(2), "p"))
+    assert(levels.map(_.id).distinct.size == 3 && levels.forall(IndexLevelInternals.held))
+    assert(spark.sparkContext.getRDDStorageInfo.exists(_.id == cacheRdd), "the index must be cached")
+    m.release()
+    assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == cacheRdd), "release must drop the index's blocks")
+    eventually(timeout(30.seconds))(assert(!levels.exists(IndexLevelInternals.held), "release must destroy the levels"))
+    for ((form, call) <- Seq[(String, () => Any)]("probe" -> (() => m.probe(wideInput, binKey(2), "p")),
+        "joinProbe" -> (() => m.joinProbe(wideInput, binKey(2), "p")), "toLocalScorer" -> (() => m.toLocalScorer))) {
+      val run = GroupJobs(intercept[IllegalStateException](call()))
+      assert(run.started.isEmpty, s"$form started jobs: $run")
+      assert(run.result.getMessage.contains("release()"), s"$form: ${run.result.getMessage}")
+    }
   }
 }

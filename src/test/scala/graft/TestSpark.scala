@@ -34,6 +34,18 @@ object TestSpark {
     try df.queryExecution.executedPlan
     finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
+
+  /** `df`'s final adaptive plan: `df` collected with adaptive execution
+    * on, so its shell holds the plan that ran. The setting is restored
+    * afterwards. */
+  def adaptivePlan(df: DataFrame): SparkPlan = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      df.collect()
+      df.queryExecution.executedPlan
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
 }
 
 /** The Spark jobs a block of driver code starts, counted under a job
