@@ -100,14 +100,13 @@ object Keys {
   private[core] def codePrefix(code: Column, n: Int, l: Int): Column =
     shiftrightunsigned(code, codeWidth(n) * (n - l))
 
-  /** The first `l` fields of the code of a `len`-field key of an
-    * `n`-field index, field 0 first, as Long digits: each bin [[code]]
-    * packed as itself, any other as the unseen digit. A
-    * [[graft.plans.DenseAnswers]] table over an index's radices (each at
-    * most [[unseen]]`(n)`) answers these digits exactly as it answers the
-    * bins. */
-  private[core] def codeDigits(code: Column, len: Int, n: Int, l: Int): Seq[Column] =
-    (0 until l).map(i => shiftrightunsigned(code, codeWidth(n) * (len - 1 - i)).bitwiseAND(unseen(n)))
+  /** The first `l` fields of the [[code]] of `n` bins, field 0 first,
+    * as Long digits: each bin packed as itself, any other as the unseen
+    * digit. A [[graft.plans.DenseAnswers]] table over an index's radices
+    * (each at most [[unseen]]`(n)`) answers these digits exactly as it
+    * answers the bins. */
+  private[core] def codeDigits(code: Column, n: Int, l: Int): Seq[Column] =
+    (0 until l).map(i => shiftrightunsigned(code, codeWidth(n) * (n - 1 - i)).bitwiseAND(unseen(n)))
 
   /** The code of each index key: [[code]] of `key` at `len` fields of an
     * `n`-field index, NULL where it does not pack. */

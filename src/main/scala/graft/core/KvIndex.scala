@@ -4,6 +4,7 @@ import graft.plans.{DenseAnswers, KvProbe}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, IndexLevel, Row}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.{ArrayBuffer, LongMap}
 
 /** The learned key–value index: exact probe + field-wise prefix
   * fallback + global fallback (ref: src/inference_trie.py:60-98,
@@ -29,10 +30,10 @@ import org.apache.spark.sql.functions._
   *
   *  - **compiled levels** `1 .. s*`: a level's answer is a pure function
   *    of the key's first `s*` bins, so every such level and the global
-  *    value are filled once per model from the index's codes into ONE
-  *    mixed-radix answer table ([[DenseAnswers]]), loaded at the packed
-  *    bins inside the serve's whole-stage-codegen projection — no key
-  *    string, zero joins, zero exchanges;
+  *    value are filled once per model, on the driver, from the index's
+  *    codes into ONE mixed-radix answer table ([[DenseAnswers]]), loaded
+  *    at the packed bins inside the serve's whole-stage-codegen
+  *    projection — no key string, zero joins, zero exchanges;
   *  - **joined levels** `s*+1 .. keyLen`: BROADCAST hash joins on the
   *    code, lazy like the trie walk (a level computes its key and probes
   *    its table only for rows no longer level resolved) — fully
@@ -47,7 +48,8 @@ import org.apache.spark.sql.functions._
   * whose value is bitwise the table's answer at its first `s*` digits
   * repeats what every key under it falls through to anyway (its
   * level-`s*` parent need not even be in the index), so the level drops
-  * it when it is built and the served bits stay the same. On a 6-field
+  * it on the driver when it is built (the raw bits of its value against
+  * the table's answer) and the served bits stay the same. On a 6-field
   * index of 157k keys over 9^6 slots that leaves 7% of the exact level.
   * The levels above `s*+1` keep every row: their parents are joined
   * rows, and pruning them would need a self-join of the index.
@@ -58,23 +60,25 @@ import org.apache.spark.sql.functions._
   * split gives the same values bit for bit ([[KvProbeSpec]] pins them).
   *
   * Build it with [[KvIndexBuilder.buildFromKeyed]] or [[KvIndexState]];
-  * [[KvModel.materialize]] is the one place an index is cached, and
-  * [[release]] frees the cache and the level broadcasts.
+  * [[KvModel.materialize]] is the one place an index is cached and the
+  * one place its rows are read to the driver: ONE collect of its
+  * `(len, code, value)` rows, kept as `levels`, from which the model
+  * takes its fields, the table, each joined level's hash relation and
+  * [[toLocalScorer]]'s maps, so none of them starts a job. [[release]]
+  * frees the cache and the level broadcasts.
   *
   * At 100 TB the probe side streams; the index side is bounded by the
-  * key space (small by construction — that is the point of the paper).
+  * key space (small by construction — that is the point of the paper),
+  * and so is its one copy on the driver.
   */
 final case class KvModel(
     task: Task,
     keyLen: Int,
     index: DataFrame,    // (len int, key string, value double, code long), cached
     globalValue: Double, // the len = 0 row's value: the trie-root fallback
-    kvCount: Long,       // rows at len = keyLen, counted when the index was cached
+    kvCount: Long,       // rows at len = keyLen
     radices: Seq[Int]    // field i's radix: 1 + its largest digit over the index codes
-) {
-  /** Prefix lengths in cascade order, longest first. */
-  private def levels: Seq[Int] = keyLen - 1 to 1 by -1
-
+)(levels: IndexedSeq[LongMap[java.lang.Double]]) { // by len: the index's code -> value at len 1 .. keyLen
   private def rowsAt(l: Int): DataFrame = index.where(col("len") === l)
 
   /** The exact entries, (key string, value double): the rows at
@@ -86,7 +90,7 @@ final case class KvModel(
     * (prefix string, value double) for `len = keyLen-1 .. 1`; the global
     * value is not a level. Built once per model, for readers of the
     * saved string keys; the probe joins [[joinedLevel]]s. */
-  @transient lazy val prefixes: Seq[(Int, DataFrame)] = levels.map { l =>
+  @transient lazy val prefixes: Seq[(Int, DataFrame)] = (keyLen - 1 to 1 by -1).map { l =>
     l -> rowsAt(l).select(col("key").as("prefix"), col("value"))
   }
 
@@ -98,22 +102,20 @@ final case class KvModel(
     * `(code, value)` rows at `len = l`, built into a broadcast hash
     * relation once per model, the first time a probe joins the level,
     * and reused by every later serve. `pruned`, for [[probe]]'s first
-    * joined level `s*+1`, keeps only the rows whose value differs bitwise
-    * from the [[compiled]] table's answer at their first `s*` digits
-    * (a NULL value, which the coalesce skips anyway, is dropped too):
-    * the filter runs once, in the level's one collect. */
+    * joined level `s*+1`, keeps only the rows whose value differs in its
+    * raw bits from the [[table]]'s answer at their first `s*` digits. */
   private def joinedLevel(l: Int, pruned: Boolean): IndexLevel = synchronized {
     live()
     builtLevels.getOrElseUpdate((l, pruned), {
-      val rows = rowsAt(l).select(col("code"), col("value"))
-      IndexLevel.build(
-        if (!pruned) rows
-        else rows.where(KvProbe.differs(col("value"), Keys.codeDigits(col("code"), l, keyLen, split), compiled.get)),
-        s"__p_$l", s"__v_$l")
+      val rows = levels(l).toArray.filter { case (code, value) => !pruned ||
+        java.lang.Double.doubleToRawLongBits(value) !=
+          java.lang.Double.doubleToRawLongBits(table.answer(Keys.digits(code, l, keyLen).map(_.toLong)))
+      }
+      IndexLevel.build(index.sparkSession, rows.map(_._1), rows.map(_._2.doubleValue), s"__p_$l", s"__v_$l")
     })
   }
 
-  /** The levels [[probe]] joins above the [[compiled]] table, longest
+  /** The levels [[probe]] joins above the [[table]], longest
     * first: `keyLen .. s*+1`, the last of them pruned; every level when
     * there is no table. */
   private def splitLevels: Seq[(Int, IndexLevel)] =
@@ -130,10 +132,10 @@ final case class KvModel(
     * the global aggregate (trie-root DFS, inference_trie.py:91-98):
     * levels above [[split]] by broadcast joins (the first of them only
     * its rows the table does not already answer), the rest from the
-    * [[compiled]] table — the same values bit for bit at any split. */
+    * [[table]] — the same values bit for bit at any split. */
   def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
     val bins = intBins(input, key, joins = split < keyLen)
-    cascade(input, bins, compiled, splitLevels, predName)
+    cascade(input, bins, Option.when(split > 0)(table), splitLevels, predName)
   }
 
   /** The cascade with every level joined in full (`s* = 0`): the scale
@@ -179,25 +181,20 @@ final case class KvModel(
   }
 
   /** The cascade's answer over levels `0 .. s*` for every slot of the
-    * first [[split]] fields, filled once per model — the first time a
-    * probe asks for it — from ONE collect of the index's (len, code,
-    * value) rows at `len <= s*`; None when `s* = 0`. */
-  @transient private lazy val compiled: Option[DenseAnswers] = Option.when(split > 0)(
-    table(index.where(col("len").between(1, split)).select(col("len"), col("code"), col("value")).collect()))
-
-  /** The [[DenseAnswers]] table over the first [[split]] fields, filled
-    * from the index's `(len, code, value)` rows at `len = 1 .. s*` — the
-    * one fill behind [[compiled]] and [[toLocalScorer]]. Field `i`'s
-    * extra "unseen" digit is its radix, a digit no index key has in that
-    * field — exactly the cascade of any bin outside `[0, radix)`. */
-  private def table(rows: Array[Row]): DenseAnswers =
-    DenseAnswers.fill(radices.take(split).toArray, globalValue,
-      rows.map(r => Keys.digits(r.getLong(1), r.getInt(0), keyLen) -> r.getDouble(2)).toSeq)
+    * first [[split]] fields (over no field, so only the global value,
+    * when `s* = 0`), filled on the driver once per model, the first time
+    * a probe or [[toLocalScorer]] asks for it, from `levels` `1 .. s*`.
+    * Field `i`'s extra "unseen" digit is its radix, a digit no index key
+    * has in that field — exactly the cascade of any bin outside
+    * `[0, radix)`. */
+  @transient private lazy val table: DenseAnswers =
+    DenseAnswers.fill(radices.take(split).toArray, globalValue, (1 to split).flatMap(l =>
+      levels(l).iterator.map { case (code, value) => Keys.digits(code, l, keyLen) -> value.doubleValue }))
 
   /** The cascade over the Long [[Keys.code]] of `bins`: one broadcast
     * left join per level of `joined` (the levels above the table's
     * fields, longest first), each reading its level's broadcast as the
-    * build side, then `table`'s answer at the code's first
+    * build side, then `compiled`'s answer at the code's first
     * digits, or the global value without a table. Level `l` probes with
     * [[Keys.codePrefix]] — Long-keyed hash relations, and no key string
     * built or cut per row. The table reads the digits of the code the
@@ -214,10 +211,10 @@ final case class KvModel(
     * probe a NULL key). A level's value only counts when every earlier
     * one is NULL, and then it probes exactly the eager key — the final
     * coalesce, itself lazy, is bit-identical to probing every level. */
-  private def cascade(input: DataFrame, bins: Seq[Column], table: Option[DenseAnswers],
+  private def cascade(input: DataFrame, bins: Seq[Column], compiled: Option[DenseAnswers],
       joined: Seq[(Int, IndexLevel)], predName: String): DataFrame =
     joined match {
-      case Seq() => input.withColumn(predName, KvProbe.column(bins, table.get))
+      case Seq() => input.withColumn(predName, KvProbe.column(bins, compiled.get))
       case _ =>
         val (cascaded, values) = joined.foldLeft((input.withColumn("__key", Keys.code(bins)), Seq.empty[String])) {
           case ((df, resolved), (l, level)) =>
@@ -228,31 +225,23 @@ final case class KvModel(
               .drop(s"__p_$l")
             (next, resolved :+ s"__v_$l")
         }
-        val fallback = table.fold(lit(globalValue))(t =>
-          KvProbe.column(Keys.codeDigits(col("__key"), keyLen, keyLen, t.radices.length), t))
+        val fallback = compiled.fold(lit(globalValue))(t =>
+          KvProbe.column(Keys.codeDigits(col("__key"), keyLen, t.radices.length), t))
         cascaded
           .withColumn(predName, coalesce(values.map(col) :+ fallback: _*))
           .drop("__key" +: values: _*)
     }
 
-  /** Collect the (bounded-by-key-space) index ONCE into the driver-local
-    * form of [[probe]]'s cascade, for point lookups — the reference's
-    * standalone-trie single-row use case (transpiler.py:3117-3215;
-    * SURVEY §1.1): the [[compiled]] table's [[table]] over the rows at
-    * `len = 1 .. s*` (over no field, so only the global value, when
-    * `s* = 0`), and one Long-keyed map per level above `s*`, keyed by the
-    * code prefix that level's join probes with. One collect of
-    * `(len, code, value)` on the caller's thread, so its one job runs
-    * under the caller's job group and description. */
+  /** The driver-local form of [[probe]]'s cascade, for point lookups —
+    * the reference's standalone-trie single-row use case
+    * (transpiler.py:3117-3215; SURVEY §1.1): the [[table]], and the
+    * Long-keyed map of each level above `s*` (the model's own, unpruned),
+    * keyed by the code prefix that level's join probes with. Built from
+    * the model's driver copy of its index, so it starts no job. */
   def toLocalScorer: LocalScorer = {
     live()
-    val (joinedRows, compiledRows) = index.select(col("len"), col("code"), col("value")).collect()
-      .filter(_.getInt(0) > 0).partition(_.getInt(0) > split)
-    val joined = joinedRows.groupBy(_.getInt(0)).toSeq.sortBy(-_._1).map { case (l, rows) =>
-      Keys.codeWidth(keyLen) * (keyLen - l) ->
-        scala.collection.mutable.LongMap.from(rows.map(r => r.getLong(1) -> java.lang.Double.valueOf(r.getDouble(2))))
-    }
-    new LocalScorer(keyLen, joined, table(compiledRows))
+    new LocalScorer(keyLen, (keyLen until split by -1).map(l => Keys.codeWidth(keyLen) * (keyLen - l) -> levels(l)),
+      table)
   }
 }
 
@@ -263,7 +252,7 @@ final case class KvModel(
   * the compiled table's answer at the bins. */
 final class LocalScorer private[core] (
     keyLen: Int,
-    joined: Seq[(Int, scala.collection.mutable.LongMap[java.lang.Double])], // (shift, map), longest first
+    joined: Seq[(Int, LongMap[java.lang.Double])], // (shift, map), longest first
     table: DenseAnswers) {
   private val (shifts, levels) = joined.toArray.unzip
 
@@ -346,7 +335,8 @@ final case class KvIndexState(task: Task, keyLen: Int, stats: DataFrame) {
     * `least(value·ratio, 1)`, transpiler.py:3080-3081), each prefix's
     * value over the values of the keys under it (the same mode, or the
     * mean summed in code order) when its run ends, and the `len = 0` row
-    * (the global value). [[KvModel.materialize]] caches the rows.
+    * (the global value). [[KvModel.materialize]] caches the rows and
+    * reads them to the driver.
     * A fresh build finalizes a fresh state, so this is the one
     * definition of every index value. */
   def toModel(balanceRatio: Option[Double] = None): KvModel = {
@@ -436,7 +426,7 @@ object KvIndexState {
     val nodes = Array.fill(n + 1)(new Node(mode)) // the open node of each length
     val codes = Array.fill(n + 1)(-1L)            // and its code: -1 before the first key
     var key: String = null                        // the open key
-    val prefixRows = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Row]) // by len
+    val prefixRows = Array.fill(n)(ArrayBuffer.empty[Row]) // by len
     def prefix(code: Long, l: Int) = code >>> Keys.codeWidth(n) * (n - l)
     // close the open key and the open prefixes of length `from` and up
     def close(from: Int): Row = {
@@ -473,38 +463,42 @@ object KvModel {
     * small: 2^17 doubles is 1 MB. */
   val MaxCompiledEntries: Long = 1L << 17
 
-  /** Cache `rows` (len, key, value, code) as the index of a [[KvModel]],
-    * and read its kv count, its global value and its radices and check
-    * that every key packs in ONE pass, which also fills the cache the
-    * probe's table and joined levels are built from — shared by the
-    * build and [[Persist.load]], so the code is computed once per index
-    * and never per serve. `origin` names the rows in the error thrown
-    * when a key at `len >= 1` has no code (NULL, or not canonical
-    * decimals below the unseen digit), or when there is not exactly one
+  /** Cache `rows` (len, key, value, code) as the index of a [[KvModel]]
+    * and read it to the driver in ONE collect of its `(len, code,
+    * value)` rows (the key too where the code is NULL, for the error),
+    * which also fills the cache. Shared by the build and [[Persist.load]],
+    * so the code is computed once per index and never per serve. The
+    * model's kv count, global value and radices, its table, its joined
+    * levels and its local scorer all come from that one copy. `origin`
+    * names the rows in the error thrown when a key at `len >= 1` has no
+    * code (NULL, or not canonical decimals below the unseen digit), a
+    * value is NULL, a key has two rows, or there is not exactly one
     * `len = 0` row (none: an index nothing voted for). */
   private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
     val index = rows.select(col("len"), col("key"), col("value"), col("code")).cache()
-    val (kvCount, roots, unpacked, radices) = index
-      .select(col("len"), col("value"), when(col("len") > 0 && col("code").isNull, col("key")), col("code")).rdd
-      .aggregate((0L, List.empty[Double], Option.empty[Option[String]], new Array[Int](keyLen)))(
-        { case ((n, g, u, rs), r) =>
-          val len = r.getInt(0)
-          if (len > 0 && !r.isNullAt(3))
-            Keys.digits(r.getLong(3), len, keyLen).zipWithIndex.foreach { case (d, i) => rs(i) = math.max(rs(i), d + 1) }
-          (if (len == keyLen) n + 1 else n, if (len == 0) r.getDouble(1) :: g else g,
-            u.orElse(Option.when(len > 0 && r.isNullAt(3))(Option(r.getString(2)))), rs) },
-        { case ((n1, g1, u1, rs1), (n2, g2, u2, rs2)) =>
-          (n1 + n2, g1 ++ g2, u1.orElse(u2), rs1.zip(rs2).map { case (a, b) => math.max(a, b) }) })
-    if (roots.length != 1 || unpacked.isDefined) index.unpersist()
-    unpacked.foreach { k =>
-      throw new IllegalArgumentException(s"$origin has ${k.fold("a NULL key")(key => s"key '$key'")}, which does not " +
-        s"pack: a key must be its len (at most $keyLen) canonical decimals, each below " +
-        s"2^${Keys.codeWidth(keyLen)} - 1 = ${Keys.unseen(keyLen)}")
+    def reject(problem: String): Nothing = {
+      index.unpersist()
+      throw new IllegalArgumentException(s"$origin has $problem")
     }
-    require(roots.nonEmpty, s"$origin has no len = 0 (global value) row: no (key, prediction) " +
-      "row voted, so the input was empty or every prediction NULL")
-    require(roots.length == 1, s"$origin has ${roots.length} len = 0 (global value) rows; an index has exactly one")
-    KvModel(task, keyLen, index, roots.head, kvCount, radices.toSeq)
+    val levels = IndexedSeq.fill(keyLen + 1)(LongMap.empty[java.lang.Double])
+    val roots = ArrayBuffer.empty[Double]
+    val radices = new Array[Int](keyLen)
+    index.select(col("len"), col("code"), col("value"), when(col("code").isNull, col("key"))).collect().foreach { r =>
+      val len = r.getInt(0)
+      if (len < 0 || len > 0 && r.isNullAt(1))
+        reject(s"${Option(r.getString(3)).fold("a NULL key")(k => s"key '$k'")}, which does not pack: a key must be " +
+          s"its len (at most $keyLen) canonical decimals, each below 2^${Keys.codeWidth(keyLen)} - 1 = ${Keys.unseen(keyLen)}")
+      val digits = if (len == 0) Array.empty[Int] else Keys.digits(r.getLong(1), len, keyLen)
+      def what = if (len == 0) "the len = 0 (global value) row" else s"key '${digits.mkString(".")}'"
+      if (r.isNullAt(2)) reject(s"a NULL value at $what")
+      if (len == 0) roots += r.getDouble(2)
+      else if (levels(len).put(r.getLong(1), r.getDouble(2)).isDefined) reject(s"$what twice: a key has one row")
+      digits.indices.foreach(i => radices(i) = math.max(radices(i), digits(i) + 1))
+    }
+    if (roots.isEmpty) reject("no len = 0 (global value) row: no (key, prediction) row voted, so the input was " +
+      "empty or every prediction NULL")
+    if (roots.length > 1) reject(s"${roots.length} len = 0 (global value) rows; an index has exactly one")
+    KvModel(task, keyLen, index, roots.head, levels(keyLen).size.toLong, radices.toSeq)(levels)
   }
 }
 

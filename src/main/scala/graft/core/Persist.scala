@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions.col
   *              at len = key_len, the prefix levels, and the global
   *              value as its len = 0 row (the cached index's key codes
   *              are recomputed on load, never saved; a key without one,
-  *              NULL included, and a second len = 0 row are rejected
-  *              there, naming `<dir>/index`)
+  *              NULL included, a NULL value, a key's second row and a
+  *              second len = 0 row are rejected there, naming
+  *              `<dir>/index` and the key)
   *
   * [[load]] reads each relation with the fixed schema [[save]] writes
   * (no schema-inference job), and rejects any other layout (a missing
@@ -40,8 +41,9 @@ import org.apache.spark.sql.functions.col
   * the canonical NaN, which saves and loads unchanged; a payload NaN
   * handed to a write (a hand-built relation) is stored canonical.
   * At 100 TB the save is a handful of broadcast-sized writes; the load
-  * is three jobs: the meta row, the bins, and the index cached in one
-  * job, like a fresh build.
+  * is three jobs: the meta row, the bins, and the index cached and read
+  * to the driver in one job, like a fresh build; a first probe or a
+  * local scorer of the loaded model starts none.
   */
 object Persist {
   /** The layout this version writes and the only one it loads. */

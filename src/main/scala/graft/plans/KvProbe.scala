@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, EmptyBlock, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
@@ -16,6 +16,9 @@ import org.apache.spark.sql.types._
   * any other bin (negative, or above every bin the index has seen in
   * that field) is the "unseen" digit `radices(i)`. Slots pack field 0
   * first: `slot = (..(d0 * (r1+1) + d1) * (r2+1) ..) + d(k-1)`.
+  * [[answer]] is the same lookup on the driver: the last step of
+  * `graft.core.LocalScorer`, and the bitwise compare that prunes the
+  * first joined level of a split model.
   */
 final class DenseAnswers private (val radices: Array[Int], val answers: Array[Double])
     extends Serializable {
@@ -67,11 +70,12 @@ object DenseAnswers {
   * [[graft.core.KvModel.probe]] serves its compiled levels `1 .. s*`
   * (the first `s*` bins) from it: the whole cascade when `s*` is the key
   * length, else the last term of the coalesce after the broadcast joins
-  * of the longer levels, whose first one holds only its rows that
-  * differ from it ([[KvProbe.differs]], applied once per model, when the
-  * level is built and broadcast). The table is filled from the
-  * index's codes and values ([[DenseAnswers.fill]]), copied, never
-  * recomputed, so the values are the join cascade's bit for bit
+  * of the longer levels, whose first one holds only its rows whose
+  * value differs bitwise from the table's answer (compared on the
+  * driver, once per model, when the level is built and broadcast). The
+  * table is filled on the driver from the codes and values of the
+  * model's one collect of its index ([[DenseAnswers.fill]]), copied,
+  * never recomputed, so the values are the join cascade's bit for bit
   * (KvProbeSpec pins it over whole key spaces); it rides the task binary
   * like [[KnnRef]]/[[TreeEnsembleRef]] and is at most
   * `KvModel.MaxCompiledEntries` doubles.
@@ -115,29 +119,6 @@ case class KvProbeScore(children: Seq[Expression], table: DenseAnswers) extends 
   override def prettyName: String = "kv_probe"
 }
 
-/** Whether two doubles differ in their raw bits: unlike SQL `=`, `0.0`
-  * differs from `-0.0` and a NaN only equals a NaN of the same bits —
-  * exactly when serving one in place of the other changes the served
-  * bits. NULL when either side is NULL. */
-case class BitsDiffer(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == DoubleType && right.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"bits_differ takes two doubles, got ${left.dataType.sql}, ${right.dataType.sql}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Double.doubleToRawLongBits(a.asInstanceOf[Double]) != java.lang.Double.doubleToRawLongBits(b.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"java.lang.Double.doubleToRawLongBits($a) != java.lang.Double.doubleToRawLongBits($b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BitsDiffer =
-    copy(left = l, right = r)
-  override def prettyName: String = "bits_differ"
-}
-
 object KvProbe {
   /** The bin types [[KvProbeScore]] packs. */
   def bin(t: DataType): Boolean = t match {
@@ -147,10 +128,4 @@ object KvProbe {
 
   def column(bins: Seq[Column], table: DenseAnswers): Column =
     GraftColumnBridge.column(KvProbeScore(bins.map(GraftColumnBridge.expression), table))
-
-  /** Whether `value` differs bitwise ([[BitsDiffer]]) from `table`'s
-    * answer at `bins`, the answer evaluated once. */
-  def differs(value: Column, bins: Seq[Column], table: DenseAnswers): Column =
-    GraftColumnBridge.column(BitsDiffer(GraftColumnBridge.expression(value),
-      KvProbeScore(bins.map(GraftColumnBridge.expression), table)))
 }

@@ -4,11 +4,13 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, ExpressionSet,
+  UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastPartitioning, Partitioning}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** One joined level of a learned index's probe cascade as a relation of
@@ -21,10 +23,16 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   *
   * The code is non-nullable: a nullable one lets the optimizer infer an
   * `isnotnull(code)` filter over the leaf, and the planner then puts a
-  * broadcast exchange over the filter, which runs the leaf as rows. */
+  * broadcast exchange over the filter, which runs the leaf as rows. It
+  * is also unique (an index has one row per key), and the leaf says so
+  * ([[distinctKeys]]): a left join on it adds no rows, so the optimizer
+  * drops the join of a serve that reads none of the level's values. */
 case class IndexLevel(output: Seq[Attribute], relation: Broadcast[AnyRef], rows: Long)
     extends LeafNode with MultiInstanceRelation {
   override def newInstance(): IndexLevel = copy(output = output.map(_.newInstance()))
+
+  override lazy val distinctKeys: Set[ExpressionSet] =
+    if (conf.getConf(SQLConf.PROPAGATE_DISTINCT_KEYS_ENABLED)) Set(ExpressionSet(output.take(1))) else Set.empty
 
   override def computeStats(): Statistics =
     Statistics(sizeInBytes = BigInt(rows) * output.map(_.dataType.defaultSize).sum, rowCount = Some(BigInt(rows)))
@@ -47,9 +55,10 @@ case class IndexLevelExec(output: Seq[Attribute], relation: Broadcast[AnyRef]) e
 
 /** Plans [[IndexLevel]] as [[IndexLevelExec]]; `graft.plans.GraftExtensions`
   * injects it. A plan that needs only the code (the value pruned away
-  * over a join whose value no one reads) keeps it as the leaf's output:
-  * a project over the leaf would claim the broadcast but could not
-  * serve it. */
+  * over a join whose value no one reads, which the optimizer keeps when
+  * `spark.sql.optimizer.propagateDistinctKeys.enabled` is off) keeps it
+  * as the leaf's output: a project over the leaf would claim the
+  * broadcast but could not serve it. */
 object IndexLevelStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case IndexLevel(output, relation, _) => IndexLevelExec(output, relation) :: Nil
@@ -64,17 +73,16 @@ object IndexLevel {
     * first column, as the join binds it. */
   val Mode: HashedRelationBroadcastMode = HashedRelationBroadcastMode(Seq(BoundReference(0, LongType, nullable = false)))
 
-  /** The level of `rows`, `(code BIGINT, value DOUBLE)` with no NULL code,
-    * with output columns named `code` and `value`: ONE collect of the
-    * rows on the caller's thread (so under its job group), the hash
+  /** The level of `codes` and their `values`, row for row (each code
+    * once), with output columns named `code` and `value`: the hash
     * relation built on the driver, then broadcast. */
-  def build(rows: DataFrame, code: String, value: String): IndexLevel = {
+  def build(session: SparkSession, codes: Array[Long], values: Array[Double], code: String,
+      value: String): IndexLevel = {
     val toUnsafe = UnsafeProjection.create(Array[DataType](LongType, DoubleType))
-    val collected = rows.collect().map[InternalRow](r =>
-      toUnsafe(InternalRow(r.getLong(0), if (r.isNullAt(1)) null else r.getDouble(1))).copy())
-    val relation: AnyRef = Mode.transform(collected)
+    val relation: AnyRef =
+      Mode.transform(codes.indices.iterator.map(i => toUnsafe(InternalRow(codes(i), values(i)))), Some(codes.length))
     IndexLevel(Seq(AttributeReference(code, LongType, nullable = false)(), AttributeReference(value, DoubleType)()),
-      rows.sparkSession.sparkContext.broadcast(relation), collected.length)
+      session.sparkContext.broadcast(relation), codes.length)
   }
 
   /** `level` as a frame of `session`; planning it needs [[planned]]. */

@@ -139,8 +139,8 @@ class KvIndexStateSpec extends AnyFunSuite {
       val merged = st.append(rows.where(col("i") % 3 === 0).select("key", "pred"))
       // the delta's partial aggregate's map stage, the job that fills the
       // cache (the merge's map stage, then ONE task that merges, sorts by
-      // code and runs the sorted pass), then ONE job that reads the kv
-      // count and global value
+      // code and runs the sorted pass), then ONE job that collects the
+      // index's rows to the driver
       val run = GroupJobs(merged.toModel())
       assert(run.started.size == 3 && run.outside.isEmpty, s"$task toModel $run")
       run.result.index.unpersist()

@@ -76,13 +76,13 @@ class KvProbeSpec extends AnyFunSuite {
     Seq(Task.Classification, Task.MultiClass).foreach { task =>
       // the build, for every task: the partial aggregate's map stage,
       // the job that fills the cache (ONE task that merges the partials,
-      // sorts by code and runs the sorted pass), then ONE job that reads
-      // the kv count and global value
+      // sorts by code and runs the sorted pass), then ONE job that
+      // collects the index's rows to the driver
       val build = GroupJobs(KvIndexBuilder.buildFromKeyed(keyed, keyLen = 4, task))
       assert(build.started.size == 3 && build.outside.isEmpty, s"$task build $build")
-      // ONE collect of the one index relation
+      // the scorer is built from the model's driver copy of its index
       val scorer = GroupJobs(build.result.toLocalScorer)
-      assert(scorer.started.size == 1 && scorer.outside.isEmpty, s"$task toLocalScorer $scorer")
+      assert(scorer.started.isEmpty, s"$task toLocalScorer $scorer")
     }
   }
 
@@ -285,13 +285,13 @@ class KvProbeSpec extends AnyFunSuite {
     }
   }
 
-  test("the first dense probe collects the index once, in the caller's job group") {
+  test("the first dense probe starts no job") {
     val (m, key) = binModel(Seq(3, 4, 2), Task.MultiClass, 9)
     val input = extendedSpace(Seq(3, 4, 2))
-    // the table is filled from ONE collect of the index's codes, the
+    // the table is filled from the model's driver copy of its index, the
     // first time a probe asks for it, and then reused
     val first = GroupJobs(m.probe(input, key, "p"))
-    assert(first.started.size == 1 && first.outside.isEmpty, s"first probe $first")
+    assert(first.started.isEmpty, s"first probe $first")
     val second = GroupJobs(m.probe(input, key, "p"))
     assert(second.started.isEmpty, s"second probe $second")
     assert(executedPlan(second.result).contains("kv_probe("))
@@ -451,13 +451,13 @@ class KvProbeSpec extends AnyFunSuite {
     }
   }
 
-  test("the first split-form probe collects the compiled levels once, in the caller's job group") {
+  test("the first split-form probe starts no job, and a serve only its own") {
     val wide = wideModel()
-    // the table over the first s* fields is filled from ONE collect of
-    // the index's rows at len <= s*, and each joined level from ONE
-    // collect of its rows, then broadcast: the first time a probe asks
+    // the table over the first s* fields and each joined level's hash
+    // relation are built from the model's driver copy of its index, the
+    // first time a probe asks, and the relation broadcast
     val first = GroupJobs(wide.probe(wideInput, binKey(2), "p"))
-    assert(first.started.size == 1 + (wide.keyLen - wide.split) && first.outside.isEmpty, s"first probe $first")
+    assert(first.started.isEmpty, s"first probe $first")
     val second = GroupJobs(wide.probe(wideInput, binKey(2), "p"))
     assert(second.started.isEmpty, s"second probe $second")
     assert(executedPlan(second.result).contains("kv_probe(") && broadcastJoins(second.result) == 1)
@@ -467,7 +467,7 @@ class KvProbeSpec extends AnyFunSuite {
     // joinProbe joins every level in full: the exact level unpruned is
     // a level of its own, the prefix level is built once too
     val joined = GroupJobs(wide.joinProbe(wideInput, binKey(2), "p"))
-    assert(joined.started.size == wide.keyLen && joined.outside.isEmpty, s"first joinProbe $joined")
+    assert(joined.started.isEmpty, s"first joinProbe $joined")
     assert(GroupJobs(wide.joinProbe(wideInput, binKey(2), "p")).started.isEmpty)
   }
 
@@ -475,11 +475,23 @@ class KvProbeSpec extends AnyFunSuite {
     val wide = wideModel()
     assertLevelJoins(() => wide.probe(wideInput, binKey(2), "p"), 1, "split probe (s* = 1)")
     assertLevelJoins(() => wide.joinProbe(wideInput, binKey(2), "p"), 2, "joinProbe")
-    // a serve that reads no prediction still joins: its level keeps the
-    // code alone, read from the same broadcast
-    assertLevelJoins(() => wide.probe(wideInput, binKey(2), "p").select("b0"), 1, "prediction dropped")
-    assert(Nodes.levels(TestSpark.executedPlan(wide.probe(wideInput, binKey(2), "p").select("b0")))
-      .map(_.output.map(_.name)) == Seq(Seq("__p_2")))
+    // a serve that reads no prediction joins nothing: each level's code
+    // is unique, so its left join adds no rows and the optimizer drops it
+    for ((what, unread) <- Seq("prediction dropped" -> wide.probe(wideInput, binKey(2), "p").select("b0"),
+        "two levels dropped" -> twoJoined.probe(twoJoinedInput, binKey(3), "p").select("id"))) {
+      val plan = TestSpark.executedPlan(unread)
+      assert(Nodes.joins(plan).isEmpty && Nodes.levels(plan).isEmpty, s"$what:\n$plan")
+    }
+    // without distinct keys the join stays: its level keeps the code
+    // alone, read from the same broadcast (a fresh model, as a leaf reads
+    // the setting once)
+    withConf("spark.sql.optimizer.propagateDistinctKeys.enabled" -> "false") {
+      val fresh = wideModel()
+      val unread = () => fresh.probe(wideInput, binKey(2), "p").select("b0")
+      assertLevelJoins(unread, 1, "prediction dropped, no distinct keys")
+      assert(Nodes.levels(TestSpark.executedPlan(unread())).map(_.output.map(_.name)) == Seq(Seq("__p_2")))
+      assert(unread().collect().map(_.getLong(0)).sorted.toSeq == (0L until 500L))
+    }
     val (m, input) = (twoJoined, twoJoinedInput)
     assertLevelJoins(() => m.probe(input, binKey(3), "p"), 2, "two-joined-level split")
     assertLevelJoins(() => m.joinProbe(input, binKey(3), "p"), 3, "three-level joinProbe")
@@ -510,15 +522,18 @@ class KvProbeSpec extends AnyFunSuite {
     assert(levels == Set(0, 1, 2, 3), s"levels $levels")
   }
 
-  /** `body` with whole-stage codegen off and every expression evaluated
-    * by its interpreted `eval`; the settings are restored afterwards. */
-  private def interpreted[T](body: => T): T = {
-    val confs = Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+  /** `body` under the session settings `confs`, restored afterwards. */
+  private def withConf[T](confs: (String, String)*)(body: => T): T = {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** `body` with whole-stage codegen off and every expression evaluated
+    * by its interpreted `eval`. */
+  private def interpreted[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
 
   test("split probe equals joinProbe, interpreted and scoreKey bitwise over a space above the cap") {
     import org.apache.spark.sql.catalyst.expressions.{Coalesce, ConcatWs, Expression, SubstringIndex}

@@ -114,10 +114,16 @@ class PersistSpec extends AnyFunSuite {
     trained.save(dir)
     val saved = trained.kv.index.select("len", "key", "value")
     val n = trained.kv.keyLen
-    for ((what, extra, expected) <- Seq(
-        ("a NULL key", (n, null: String, 0.5), "has a NULL key"),
-        ("a NULL prefix", (n - 1, null: String, 0.5), "has a NULL key"),
-        ("a second root", (0, null: String, 1.0), "has 2 len = 0 (global value) rows"))) {
+    val (unseen, exact) = (Seq.fill(n)("99").mkString("."), saved.where(col("len") === n).head().getString(1))
+    val prefix = saved.where(col("len") === n - 1).head().getString(1)
+    for ((what, extra, expected) <- Seq[(String, (Int, String, java.lang.Double), String)](
+        ("a NULL key", (n, null, 0.5), "has a NULL key"),
+        ("a NULL prefix", (n - 1, null, 0.5), "has a NULL key"),
+        ("a second root", (0, null, 1.0), "has 2 len = 0 (global value) rows"),
+        ("a NULL value", (n, unseen, null), s"has a NULL value at key '$unseen'"),
+        ("a NULL root value", (0, "", null), "has a NULL value at the len = 0 (global value) row"),
+        ("a second exact row", (n, exact, 0.5), s"has key '$exact' twice"),
+        ("a second prefix row", (n - 1, prefix, 0.5), s"has key '$prefix' twice"))) {
       val bad = TmpDirs.scratch("persist_spec_null_key_bad", sf)
       Seq("meta", "bins").foreach(r => spark.read.parquet(s"$dir/$r").write.mode("overwrite").parquet(s"$bad/$r"))
       saved.unionByName(Seq(extra).toDF("len", "key", "value")).coalesce(1)
@@ -130,9 +136,10 @@ class PersistSpec extends AnyFunSuite {
   test("load runs pinned job counts under the caller's job group: no schema inference") {
     val dir = TmpDirs.scratch("persist_spec_load_jobs", sf)
     trained.save(dir)
-    // the meta row, the bins, then ONE job that caches the index, reads
-    // its kv count and global value and checks that its keys pack — each
-    // relation read with the schema save wrote, never inferred
+    // the meta row, the bins, then ONE job that caches the index and
+    // collects its rows to the driver, where the model's kv count, global
+    // value and key checks come from — each relation read with the
+    // schema save wrote, never inferred
     val load = GroupJobs(InferDbPipeline.load(spark, dir))
     assert(load.started.size == 3 && load.outside.isEmpty, s"load $load")
     assert(load.result.kv.kvCount == trained.kv.kvCount)
