@@ -68,7 +68,7 @@ object InferDbPipeline {
     }
 
     /** Exact (kv) entries in the index (the "index size" driver),
-      * counted once when the index was cached or loaded. */
+      * counted once when the index was built or loaded. */
     def indexEntries: Long = kv.kvCount
 
     /** Persist every serve-time artifact (the index relation, bin

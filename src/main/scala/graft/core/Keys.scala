@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * saves, and the packed Long [[code]] of its bins, the one key
   * [[KvModel.probe]] and [[LocalScorer]] serve:
   * it reads the bins back out of a [[keyColumn]] through [[bins]], and
-  * each index key is packed once, where the index is cached.
+  * each index key is packed once, where the index is read to the driver.
   */
 object Keys {
   /** Build the compound key from already-encoded (LongType) bin columns. */
@@ -183,7 +183,7 @@ private[core] final case class BinCode(children: Seq[Expression]) extends Expres
 }
 
 /** The node of [[Keys.indexCode]]: evaluated once per index row, where
-  * the index is cached. */
+  * the index is read to the driver. */
 private[core] final case class IndexKeyCode(left: Expression, right: Expression, n: Int)
     extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = LongType

@@ -1,17 +1,19 @@
 package graft.core
 
 import graft.plans.{DenseAnswers, KvProbe}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, IndexLevel, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, IndexLevel, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.{ArrayBuffer, LongMap}
+import scala.jdk.CollectionConverters._
 
 /** The learned key–value index: exact probe + field-wise prefix
   * fallback + global fallback (ref: src/inference_trie.py:60-98,
   * src/transpiler.py:1004-1099; SURVEY §2.9).
   *
   * Spark-first design: like the reference's trie, the index is ONE
-  * structure — a cached relation `index (len, key, value, code)`. Its rows at
+  * structure, held once on the driver, and the relation `index (len,
+  * key, value, code)` is a view of it. Its rows at
   * `len = keyLen` are the exact kv entries (the trie's leaves); every
   * field-wise prefix of every key is aggregated ONCE at build time into
   * the rows at `len = 1 .. keyLen-1` (the inner nodes); and the single
@@ -21,9 +23,9 @@ import scala.collection.mutable.{ArrayBuffer, LongMap}
   * pass over the keys in code order, where every inner node's leaves are
   * one contiguous run), like the reference's standalone backend builds
   * its trie in-process (inference_trie.py:3-58). Every key at
-  * `len >= 1` packs into a Long [[Keys.code]] (checked when the index is
-  * cached), and the probe serves that one encoding: a [[Keys.keyColumn]]
-  * over `keyLen` non-nullable integral bins, packed per row inside the
+  * `len >= 1` packs into a Long [[Keys.code]] (checked where the index
+  * is read to the driver), and the probe serves that one encoding: a
+  * [[Keys.keyColumn]] over `keyLen` non-nullable integral bins, packed per row inside the
   * serve's projection — any other key fails loudly. It is ONE cascade,
   * split at the level [[split]] (`s*`): the longest prefix length whose
   * fields' [[radices]] span at most [[KvModel.MaxCompiledEntries]] slots.
@@ -60,12 +62,12 @@ import scala.collection.mutable.{ArrayBuffer, LongMap}
   * split gives the same values bit for bit ([[KvProbeSpec]] pins them).
   *
   * Build it with [[KvIndexBuilder.buildFromKeyed]] or [[KvIndexState]];
-  * [[KvModel.materialize]] is the one place an index is cached and the
-  * one place its rows are read to the driver: ONE collect of its
-  * `(len, code, value)` rows, kept as `levels`, from which the model
-  * takes its fields, the table, each joined level's hash relation and
-  * [[toLocalScorer]]'s maps, so none of them starts a job. [[release]]
-  * frees the cache and the level broadcasts.
+  * [[KvModel.materialize]] is the one place its rows are read: ONE
+  * collect of its `(len, code, value)` rows, kept as `levels`, the
+  * model's only copy of its index. The model's fields, the table, each
+  * joined level's hash relation, [[toLocalScorer]]'s maps and the
+  * [[index]] view all come from it, so none of them starts a job.
+  * [[release]] frees the level broadcasts.
   *
   * At 100 TB the probe side streams; the index side is bounded by the
   * key space (small by construction — that is the point of the paper),
@@ -74,11 +76,23 @@ import scala.collection.mutable.{ArrayBuffer, LongMap}
 final case class KvModel(
     task: Task,
     keyLen: Int,
-    index: DataFrame,    // (len int, key string, value double, code long), cached
     globalValue: Double, // the len = 0 row's value: the trie-root fallback
     kvCount: Long,       // rows at len = keyLen
     radices: Seq[Int]    // field i's radix: 1 + its largest digit over the index codes
-)(levels: IndexedSeq[LongMap[java.lang.Double]]) { // by len: the index's code -> value at len 1 .. keyLen
+)(levels: IndexedSeq[LongMap[java.lang.Double]], // by len: the index's code -> value at len 1 .. keyLen
+    @transient spark: SparkSession) {
+  /** The whole index as a relation, `(len int, key string, value
+    * double, code long)`: the exact kv at `len = keyLen`, each prefix
+    * level, then the `len = 0` global value (key "", code 0), each len in
+    * code order. A local relation built once per model on the driver
+    * from `levels`, so it starts no job and caches nothing; a key is the
+    * canonical string of its code's digits, the string the build or the
+    * load accepted. */
+  @transient lazy val index: DataFrame = spark.createDataFrame((
+    (keyLen to 1 by -1).flatMap(l => levels(l).toSeq.sortBy(_._1).map { case (code, value) =>
+      Row(l, Keys.digits(code, l, keyLen).mkString("."), value.doubleValue, code)
+    }) :+ Row(0, "", globalValue, 0L)).asJava, KvModel.IndexRows)
+
   private def rowsAt(l: Int): DataFrame = index.where(col("len") === l)
 
   /** The exact entries, (key string, value double): the rows at
@@ -111,7 +125,7 @@ final case class KvModel(
         java.lang.Double.doubleToRawLongBits(value) !=
           java.lang.Double.doubleToRawLongBits(table.answer(Keys.digits(code, l, keyLen).map(_.toLong)))
       }
-      IndexLevel.build(index.sparkSession, rows.map(_._1), rows.map(_._2.doubleValue), s"__p_$l", s"__v_$l")
+      IndexLevel.build(spark, rows.map(_._1), rows.map(_._2.doubleValue), s"__p_$l", s"__v_$l")
     })
   }
 
@@ -167,17 +181,16 @@ final case class KvModel(
 
   /** Throws once [[release]] has run. */
   private def live(): Unit =
-    if (released) throw new IllegalStateException("this KvModel was freed by release(): its index and level " +
+    if (released) throw new IllegalStateException("this KvModel was freed by release(): its level " +
       "broadcasts are gone, so it can no longer probe or score")
 
-  /** Free what this model holds on the cluster: [[index]]'s cache and
-    * every level broadcast its probes built. Any later [[probe]],
-    * [[joinProbe]] or [[toLocalScorer]] throws `IllegalStateException`. */
+  /** Free what this model holds on the cluster: every level broadcast
+    * its probes built. Any later [[probe]], [[joinProbe]] or
+    * [[toLocalScorer]] throws `IllegalStateException`. */
   def release(): Unit = synchronized {
     released = true
     builtLevels.values.foreach(_.relation.destroy())
     builtLevels.clear()
-    index.unpersist(blocking = true)
   }
 
   /** The cascade's answer over levels `0 .. s*` for every slot of the
@@ -335,17 +348,20 @@ final case class KvIndexState(task: Task, keyLen: Int, stats: DataFrame) {
     * `least(value·ratio, 1)`, transpiler.py:3080-3081), each prefix's
     * value over the values of the keys under it (the same mode, or the
     * mean summed in code order) when its run ends, and the `len = 0` row
-    * (the global value). [[KvModel.materialize]] caches the rows and
-    * reads them to the driver.
+    * (the global value). [[KvModel.materialize]] reads the rows to the
+    * driver in the same job. A state row carries its key string into
+    * the sort only when the key does not pack, for the error.
     * A fresh build finalizes a fresh state, so this is the one
     * definition of every index value. */
   def toModel(balanceRatio: Option[Double] = None): KvModel = {
+    val vote = col(if (task == Task.MultiClass) "pred" else "sum")
     val sorted = stats
-      .select(Keys.indexCode(col("key"), lit(keyLen), keyLen).as("code"), col("key"),
-        col(if (task == Task.MultiClass) "pred" else "sum"), col("cnt"))
+      .select(Keys.indexCode(col("key"), lit(keyLen), keyLen).as("code"), col("key"), vote, col("cnt"))
+      .select(col("code"), when(col("code").isNull, col("key")).as("key"), vote, col("cnt"))
       .coalesce(1).sortWithinPartitions("code")
     KvModel.materialize(task, keyLen,
-      sorted.mapPartitions(KvIndexState.pass(task, keyLen, balanceRatio))(KvIndexState.IndexRows), "the index")
+      sorted.mapPartitions(KvIndexState.pass(task, keyLen, balanceRatio))(Encoders.row(KvModel.IndexRows)),
+      "the index")
   }
 }
 
@@ -374,9 +390,6 @@ object KvIndexState {
     case _ =>
       stats.groupBy("key").agg(sum("sum").as("sum"), sum("cnt").as("cnt"))
   }
-
-  /** The rows of a [[KvModel.index]]: (len, key, value, code). */
-  private val IndexRows = Encoders.row(StructType.fromDDL("len INT, key STRING, value DOUBLE, code BIGINT"))
 
   /** One node of the trie as its votes arrive: a key, voted by its
     * state rows (`pred, cnt` or `sum, cnt`), or a prefix, voted 1 by the
@@ -414,44 +427,39 @@ object KvIndexState {
 
   /** The sorted pass of [[KvIndexState#toModel]] over one partition of
     * `(code, key, pred or sum, cnt)` state rows sorted by code: every
-    * `index (len, key, value, code)` row, grouped by len, longest first,
-    * each len in code order. A key's row streams out when its run ends;
-    * a prefix's row is held until every key has passed, so the cached
-    * index's batches hold one len each and a scan of one level skips the
-    * others' batches. A key without a code (NULL, or one that does not
-    * pack) is passed through as its raw row, outside every prefix, for
-    * [[KvModel.materialize]] to reject by name. */
+    * index row, `(len, key, value, code)`. A key's row streams out when
+    * its run ends, each prefix's row when the run of keys under it ends,
+    * and the `len = 0` row last. A key without a code (NULL, or one that
+    * does not pack) is passed through as its raw row, with its key string
+    * and outside every prefix, for [[KvModel.materialize]] to reject by
+    * name; every other row's key is NULL. */
   private def pass(task: Task, n: Int, balanceRatio: Option[Double])(sorted: Iterator[Row]): Iterator[Row] = {
     val mode = task == Task.MultiClass
     val nodes = Array.fill(n + 1)(new Node(mode)) // the open node of each length
     val codes = Array.fill(n + 1)(-1L)            // and its code: -1 before the first key
-    var key: String = null                        // the open key
-    val prefixRows = Array.fill(n)(ArrayBuffer.empty[Row]) // by len
     def prefix(code: Long, l: Int) = code >>> Keys.codeWidth(n) * (n - l)
-    // close the open key and the open prefixes of length `from` and up
-    def close(from: Int): Row = {
+    // close the open key and the open prefixes of length `from` and up:
+    // their rows, the key's first, then the prefixes' longest first
+    def close(from: Int): Seq[Row] = {
       val raw = nodes(n).take()
       // the balance reweight least(raw * r, 1.0), where NaN sorts above 1.0
       val v = balanceRatio.fold(raw)(r => if ((raw * r).isNaN || raw * r > 1.0) 1.0 else raw * r)
       (0 until n).foreach(nodes(_).vote(v, 1L))
-      (from until n).foreach(l =>
-        prefixRows(l) += Row(l, Keys.digits(codes(l), l, n).mkString("."), nodes(l).take(), codes(l)))
-      Row(n, key, v, codes(n))
+      Row(n, null, v, codes(n)) +: (n - 1 to from by -1).map(l => Row(l, null, nodes(l).take(), codes(l)))
     }
     sorted.flatMap { r =>
-      val (k, v, cnt) = (r.getString(1), r.getDouble(2), r.getLong(3))
-      if (r.isNullAt(0)) Some(Row(n, k, v, null))
+      val (v, cnt) = (r.getDouble(2), r.getLong(3))
+      if (r.isNullAt(0)) Seq(Row(n, r.getString(1), v, null))
       else {
         val code = r.getLong(0)
         // the shortest open node this key is not under; n + 1: its own key
         val from = (0 to n).find(l => prefix(code, l) != codes(l)).getOrElse(n + 1)
-        val closed = if (codes(n) < 0 || from > n) None else Some(close(from))
+        val closed = if (codes(n) < 0 || from > n) Seq.empty else close(from)
         (from to n).foreach(l => codes(l) = prefix(code, l))
-        key = k
         nodes(n).vote(v, cnt)
         closed
       }
-    } ++ (if (codes(n) < 0) Iterator.empty else Iterator.single(close(0)) ++ prefixRows.reverseIterator.flatten)
+    } ++ (if (codes(n) < 0) Seq.empty else close(0))
   }
 }
 
@@ -463,27 +471,27 @@ object KvModel {
     * small: 2^17 doubles is 1 MB. */
   val MaxCompiledEntries: Long = 1L << 17
 
-  /** Cache `rows` (len, key, value, code) as the index of a [[KvModel]]
-    * and read it to the driver in ONE collect of its `(len, code,
-    * value)` rows (the key too where the code is NULL, for the error),
-    * which also fills the cache. Shared by the build and [[Persist.load]],
+  /** The columns of an index's rows: [[KvModel.index]] and the sorted
+    * pass's output. */
+  private[core] val IndexRows = StructType.fromDDL("len INT, key STRING, value DOUBLE, code BIGINT")
+
+  /** Read an index's `rows` (len, key, value, code) to the driver in
+    * ONE collect of their `(len, code, value)` (the key too where the
+    * code is NULL, for the error), and make them a [[KvModel]]: that
+    * copy is the model's index. Shared by the build and [[Persist.load]],
     * so the code is computed once per index and never per serve. The
     * model's kv count, global value and radices, its table, its joined
-    * levels and its local scorer all come from that one copy. `origin`
-    * names the rows in the error thrown when a key at `len >= 1` has no
-    * code (NULL, or not canonical decimals below the unseen digit), a
-    * value is NULL, a key has two rows, or there is not exactly one
-    * `len = 0` row (none: an index nothing voted for). */
+    * levels, its local scorer and its [[KvModel.index]] view all come
+    * from it. `origin` names the rows in the error thrown when a key at
+    * `len >= 1` has no code (NULL, or not canonical decimals below the
+    * unseen digit), a value is NULL, a key has two rows, or there is not
+    * exactly one `len = 0` row (none: an index nothing voted for). */
   private[core] def materialize(task: Task, keyLen: Int, rows: DataFrame, origin: String): KvModel = {
-    val index = rows.select(col("len"), col("key"), col("value"), col("code")).cache()
-    def reject(problem: String): Nothing = {
-      index.unpersist()
-      throw new IllegalArgumentException(s"$origin has $problem")
-    }
+    def reject(problem: String): Nothing = throw new IllegalArgumentException(s"$origin has $problem")
     val levels = IndexedSeq.fill(keyLen + 1)(LongMap.empty[java.lang.Double])
     val roots = ArrayBuffer.empty[Double]
     val radices = new Array[Int](keyLen)
-    index.select(col("len"), col("code"), col("value"), when(col("code").isNull, col("key"))).collect().foreach { r =>
+    rows.select(col("len"), col("code"), col("value"), when(col("code").isNull, col("key"))).collect().foreach { r =>
       val len = r.getInt(0)
       if (len < 0 || len > 0 && r.isNullAt(1))
         reject(s"${Option(r.getString(3)).fold("a NULL key")(k => s"key '$k'")}, which does not pack: a key must be " +
@@ -498,7 +506,7 @@ object KvModel {
     if (roots.isEmpty) reject("no len = 0 (global value) row: no (key, prediction) row voted, so the input was " +
       "empty or every prediction NULL")
     if (roots.length > 1) reject(s"${roots.length} len = 0 (global value) rows; an index has exactly one")
-    KvModel(task, keyLen, index, roots.head, levels(keyLen).size.toLong, radices.toSeq)(levels)
+    KvModel(task, keyLen, roots.head, levels(keyLen).size.toLong, radices.toSeq)(levels, rows.sparkSession)
   }
 }
 

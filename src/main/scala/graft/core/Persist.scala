@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions.col
   *              in-memory pipeline fitted.
   *   index/     the one (len, key, value) index relation: the exact kv
   *              at len = key_len, the prefix levels, and the global
-  *              value as its len = 0 row (the cached index's key codes
-  *              are recomputed on load, never saved; a key without one,
+  *              value as its len = 0 row (the index's key codes are
+  *              recomputed on load, never saved; a key without one,
   *              NULL included, a NULL value, a key's second row and a
   *              second len = 0 row are rejected there, naming
   *              `<dir>/index` and the key)
@@ -41,9 +41,10 @@ import org.apache.spark.sql.functions.col
   * the canonical NaN, which saves and loads unchanged; a payload NaN
   * handed to a write (a hand-built relation) is stored canonical.
   * At 100 TB the save is a handful of broadcast-sized writes; the load
-  * is three jobs: the meta row, the bins, and the index cached and read
-  * to the driver in one job, like a fresh build; a first probe or a
-  * local scorer of the loaded model starts none.
+  * is three jobs: the meta row, the bins, and the index read to the
+  * driver in one collect, the loaded model's only copy of it, as a fresh
+  * build's; a first probe or a local scorer of the loaded model starts
+  * none.
   */
 object Persist {
   /** The layout this version writes and the only one it loads. */

@@ -57,15 +57,6 @@ object Fns {
   def normSq(a: Column): Column =
     graft.plans.TextVectorExprs.dot(a, a)
 
-  def l2Norm(a: Column): Column = sqrt(normSq(a))
-
-  /** Cosine similarity between two array columns, 0 when either norm is 0. */
-  def cosineSim(a: Column, b: Column): Column = {
-    val d  = dotProduct(a, b)
-    val nn = l2Norm(a) * l2Norm(b)
-    when(nn === 0.0, lit(0.0)).otherwise(d / nn)
-  }
-
   /** Postgres-convention day of week: 0=Sunday..6=Saturday.
     * Spark's dayofweek is 1=Sunday..7=Saturday (SURVEY §7.4 risk #4).
     */

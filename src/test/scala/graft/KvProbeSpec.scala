@@ -1,7 +1,7 @@
 package graft
 
 import graft.TestSpark.bits
-import graft.core.{Keys, KvIndexBuilder, KvModel, NumericBins, StringCascade, Task}
+import graft.core.{Keys, KvIndexBuilder, KvIndexState, KvModel, NumericBins, StringCascade, Task, TmpDirs}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, IndexLevel, IndexLevelExec, SparkSession}
 import org.apache.spark.sql.execution.joins.IndexLevelInternals
@@ -75,11 +75,10 @@ class KvProbeSpec extends AnyFunSuite {
       .toDF("key", "pred")
     Seq(Task.Classification, Task.MultiClass).foreach { task =>
       // the build, for every task: the partial aggregate's map stage,
-      // the job that fills the cache (ONE task that merges the partials,
-      // sorts by code and runs the sorted pass), then ONE job that
-      // collects the index's rows to the driver
+      // then ONE job whose ONE task merges the partials, sorts by code,
+      // runs the sorted pass and hands the index's rows to the driver
       val build = GroupJobs(KvIndexBuilder.buildFromKeyed(keyed, keyLen = 4, task))
-      assert(build.started.size == 3 && build.outside.isEmpty, s"$task build $build")
+      assert(build.started.size == 2 && build.outside.isEmpty, s"$task build $build")
       // the scorer is built from the model's driver copy of its index
       val scorer = GroupJobs(build.result.toLocalScorer)
       assert(scorer.started.isEmpty, s"$task toLocalScorer $scorer")
@@ -152,8 +151,7 @@ class KvProbeSpec extends AnyFunSuite {
       s"all 3 prefix joins must skip resolved rows:\n$plan")
     assert(joins.forall(j => (j.leftKeys ++ j.rightKeys).forall(_.dataType == LongType)),
       s"every join key must be a Long code:\n$plan")
-    // and no key string built or cut by the serve's own operators (the
-    // cached index's lineage is not one of them)
+    // and no key string built or cut by the serve's own operators
     val keyStrings = plan.flatMap(_.expressions).flatMap(_.collect {
       case e @ (_: ConcatWs | _: SubstringIndex) => e.prettyName
     }).toSet
@@ -694,20 +692,37 @@ class KvProbeSpec extends AnyFunSuite {
     assertOneCascade(dense, denseInput, Seq("bare" -> byId(dense.probe(denseInput, key, "p"))), "bare dense")
   }
 
-  test("release frees the index cache and the level broadcasts, and the model then fails naming it") {
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+  test("no index leaves a persistent RDD: a build, an append's toModel and a load cache nothing") {
+    import spark.implicits._
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persistent
+    val keyed = (0 until 400).map(i => (s"$i.${i % 7}", (i % 2).toDouble)).toDF("key", "pred")
+    val built = KvIndexBuilder.buildFromKeyed(keyed, keyLen = 2, Task.Classification)
+    assert(persistent == before, "buildFromKeyed left a persistent RDD")
+    val appended = KvIndexState.build(keyed.where(col("pred") === 0.0), 2, Task.Classification)
+      .append(keyed.where(col("pred") === 1.0)).toModel()
+    assert(persistent == before, "an append's toModel left a persistent RDD")
+    val dir = TmpDirs.scratch("kv_probe_spec_no_cache", sf)
+    InferDbPipeline.Fitted(InferDbPipeline.Config(features = Seq("f0", "f1"), target = "y"),
+      Map("f0" -> NumericBins(Array(0.5)), "f1" -> NumericBins(Array(0.5))), Seq("f0", "f1"), 0.0, built).save(dir)
+    val loaded = InferDbPipeline.load(spark, dir).kv
+    assert(persistent == before, "InferDbPipeline.load left a persistent RDD")
+    // the three are one index, each read from its model's driver copy
+    def rows(m: KvModel) = m.index.select("len", "key", "value").collect().map(r => (r.getInt(0), r.getString(1),
+      bits(r.getDouble(2)))).toSet
+    assert(rows(appended) == rows(built) && rows(loaded) == rows(built))
+    assert(persistent == before, "reading the index view left a persistent RDD")
+  }
+
+  test("release frees the level broadcasts, and the model then fails naming it") {
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
     val m = wideModel()
-    val cacheRdd = m.index.queryExecution.withCachedData
-      .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id }.get
     val served = m.probe(wideInput, binKey(2), "p")
     served.collect()
     val levels = levelRelations(served) ++ levelRelations(m.joinProbe(wideInput, binKey(2), "p"))
     assert(levels.map(_.id).distinct.size == 3 && levels.forall(IndexLevelInternals.held))
-    assert(spark.sparkContext.getRDDStorageInfo.exists(_.id == cacheRdd), "the index must be cached")
     m.release()
-    assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == cacheRdd), "release must drop the index's blocks")
     eventually(timeout(30.seconds))(assert(!levels.exists(IndexLevelInternals.held), "release must destroy the levels"))
     for ((form, call) <- Seq[(String, () => Any)]("probe" -> (() => m.probe(wideInput, binKey(2), "p")),
         "joinProbe" -> (() => m.joinProbe(wideInput, binKey(2), "p")), "toLocalScorer" -> (() => m.toLocalScorer))) {

@@ -63,11 +63,14 @@ class PersistSpec extends AnyFunSuite {
     trained.save(dir)
     val rels = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(rels == Set("meta", "bins", "index"))
-    // the index is saved as exactly (len, key, value): the cached
-    // index's key codes never reach the directory
+    // the index is saved as exactly (len, key, value), the rows of the
+    // model's index view: its key codes never reach the directory
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
     assert(spark.read.parquet(s"$dir/index").schema.map(f => f.name -> f.dataType) ==
       Seq("len" -> IntegerType, "key" -> StringType, "value" -> DoubleType))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("len", "key", "value").collect()
+      .map(r => (r.getInt(0), r.getString(1), bits(r.getDouble(2)))).toSet
+    assert(rows(spark.read.parquet(s"$dir/index")) == rows(trained.kv.index))
     assert(spark.read.parquet(s"$dir/meta").head().getAs[String]("layout") == "index/3")
     val meta = spark.read.parquet(s"$dir/meta")
     // the per-length layout: meta without `layout`, kv/ and prefix_<l>/
@@ -136,13 +139,17 @@ class PersistSpec extends AnyFunSuite {
   test("load runs pinned job counts under the caller's job group: no schema inference") {
     val dir = TmpDirs.scratch("persist_spec_load_jobs", sf)
     trained.save(dir)
-    // the meta row, the bins, then ONE job that caches the index and
-    // collects its rows to the driver, where the model's kv count, global
-    // value and key checks come from — each relation read with the
-    // schema save wrote, never inferred
+    // the meta row, the bins, then ONE job that collects the index's rows
+    // to the driver, where the model's kv count, global value and key
+    // checks come from — each relation read with the schema save wrote,
+    // never inferred
     val load = GroupJobs(InferDbPipeline.load(spark, dir))
     assert(load.started.size == 3 && load.outside.isEmpty, s"load $load")
     assert(load.result.kv.kvCount == trained.kv.kvCount)
+    // the fitted-probe oracle reads the index view of the model's driver
+    // copy: a local relation, so no job
+    val oracle = GroupJobs(graft.queries.SqlGen.fittedProbeSql(load.result, "lineitem", Seq("l_orderkey"), Map.empty, "p"))
+    assert(oracle.started.isEmpty && oracle.outside.isEmpty && oracle.result.nonEmpty, s"fittedProbeSql $oracle")
   }
 
   test("a reloaded over-cap index keeps the split form and serves bit-identically") {

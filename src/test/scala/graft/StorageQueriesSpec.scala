@@ -68,7 +68,7 @@ class StorageQueriesSpec extends AnyFunSuite {
     // 22x/decade. The repartition(buckets, key) before the write pins
     // the layout at one file per bucket; this spec keeps it pinned.
     StorageQueries.defs("s2_bucketed_smb_join")(spark, sf).count() // ensure staged
-    val tmpO = graft.queries.StorageQueries.stagedPath(spark, sf, "bucket_o")
+    val tmpO = graft.queries.StorageQueries.staged.get((spark, sf, "bucket_o"))
     assert(tmpO.nonEmpty, "bucketed layout not staged")
     val buckets = graft.queries.StorageQueries.smbBucketCount(spark, sf)
     for (dir <- Seq(tmpO.get, tmpO.get.replace("bucket_o", "bucket_l"))) {

@@ -4,7 +4,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The code of a saved string key: the one place a key string is read
-  * back, once per cached index, so it must accept exactly the keys
+  * back, once per index built or loaded, so it must accept exactly the keys
   * `Keys.keyColumn` builds from non-negative bins (and pack them as
   * `Keys.code` packs the bins) and reject everything else. */
 class KeysCodeSpec extends AnyFunSuite {

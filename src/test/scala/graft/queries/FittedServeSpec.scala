@@ -96,7 +96,8 @@ class FittedServeSpec extends AnyFunSuite {
     val aDt = agreement("dt",
       graft.models.TreeServe.column(dtRoot, feats).cast("long"))
     assert(aDt >= 0.999, s"dt serve agreement $aDt")
-    val aGbt = agreement("gbt", LearnedQueries.gbtClassExpr(feats, gbtRoots, gbtWs))
+    // margin > 0: MLlib GBTClassifier's own decision rule
+    val aGbt = agreement("gbt", when(LearnedQueries.gbtRawExpr(feats, gbtRoots, gbtWs) > 0.0, 1L).otherwise(0L))
     assert(aGbt >= 0.999, s"gbt serve agreement $aGbt")
     av.unpersist()
   }
@@ -138,7 +139,8 @@ class FittedServeSpec extends AnyFunSuite {
     val av = new VectorAssembler()
       .setInputCols(Array("o_totalprice", "cust_mod")).setOutputCol("__fv")
       .transform(base)
-    val m = LearnedQueries.fittedMcModel(spark, sf)
+    val m = LearnedQueries.fittedMc(spark, sf).mlModel
+      .asInstanceOf[org.apache.spark.ml.classification.LogisticRegressionModel]
     val served = LearnedQueries.softmaxClassExpr(
       Seq(col("o_totalprice"), col("cust_mod")), coefs, bs)
     // BLAS gemv margins vs sequential column folds can flip exact
